@@ -1,0 +1,468 @@
+package graft.core
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.config.StageSpec
+import graft.ops.Profiling
+import graft.sink.{BucketedMergeSink, MergeSink}
+
+/** A table a load keeps in step with its bucketed target: the CDC
+  * outbox, a postings index, or a per-version profile. Each case
+  * carries exactly the parameters of its idempotent version-marker
+  * catch-up; [[Derived.Load]] holds every rule about WHEN those
+  * catch-ups run and what a load must satisfy first, once for all
+  * seven — `Runner.load` (the stage keys) and
+  * `Streams.streamingStage` (one load per micro-batch) both go
+  * through it. `stageKey` names the YAML key that declares the case. */
+sealed abstract class Derived(val stageKey: String) {
+  def path: String
+}
+
+object Derived {
+
+  /** The postings indexes: they replay per-version snapshot diffs
+    * paired on ONE id column, and compact with the target. */
+  sealed abstract class Index(stageKey: String) extends Derived(stageKey)
+
+  /** `change_feed:` — [[BucketedMergeSink.publishChangeFeed]].
+    * `outboxKeep > 0` log-compacts the outbox after each load
+    * ([[BucketedMergeSink.compactOutboxKeep]]). */
+  final case class ChangeFeed(path: String, outboxKeep: Int = 0)
+      extends Derived("change_feed")
+
+  /** `minhash_index:` — [[BucketedMergeSink.syncMinhashIndex]]; (k,
+    * bands, rowsPerBand, charGrams) are the index's identity and must
+    * match the probe side's. */
+  final case class MinhashIndex(
+      path: String,
+      textCol: String = "text",
+      k: Int = 3,
+      bands: Int = 8,
+      rowsPerBand: Int = 4,
+      charGrams: Boolean = false) extends Index("minhash_index")
+
+  /** `lsh_index:` — [[BucketedMergeSink.syncLshIndex]]; (tables, bits,
+    * dim) are the index's identity and must match the probe side's. */
+  final case class LshIndex(
+      path: String,
+      vecCol: String = "embedding",
+      tables: Int = 8,
+      bits: Int = 12,
+      dim: Int = 64) extends Index("lsh_index")
+
+  /** `semantic_index:` — [[BucketedMergeSink.syncSemanticIndex]]:
+    * centroids train once at the index's bootstrap and freeze at
+    * `<path>.centroids` — on a stream created empty, on its first
+    * micro-batch alone, so bootstrap the index from a batch load first
+    * when the first batches are unrepresentative of the corpus.
+    * `probeCells = 0` is AUTO (`Similarity.resolveProbes`): the SAME
+    * default the query-side entry points resolve, so an index built and
+    * queried on defaults has one probe width on both sides of the index
+    * join. */
+  final case class SemanticIndex(
+      path: String,
+      vecCol: String = "embedding",
+      nlist: Int = 0,
+      iters: Int = 3,
+      trainPerCell: Int = 256,
+      probeCells: Int = 0) extends Index("semantic_index")
+
+  /** `profile:` — [[Profiling.syncProfile]]. `maxPsi > 0` arms the PSI
+    * circuit breaker against the newest stored row. */
+  final case class Profile(
+      path: String,
+      column: String,
+      lo: Double,
+      hi: Double,
+      nbins: Int = 64,
+      maxPsi: Double = 0.0) extends Derived("profile")
+
+  /** `kll_profile:` — [[Profiling.syncKllProfile]], the no-declared-range
+    * quantile twin of `profile:`: it shares its shape contracts, with
+    * no lo/hi/bins because a KLL sketch needs none (that is the point
+    * of the key). `maxKs > 0` arms the KS circuit breaker against the
+    * newest non-empty stored sketch. */
+  final case class KllProfile(
+      path: String,
+      column: String,
+      k: Int = graft.functions.KllSketch.DefaultK,
+      maxKs: Double = 0.0) extends Derived("kll_profile")
+
+  /** `exemplar_profile:` — [[Profiling.syncExemplarProfile]], the
+    * drill-down sibling: per-version example ROWS rather than a
+    * distribution summary, bottom-k by md5 of `keyCol`; shares the
+    * bucketed-target and no-scd2 shape contracts. */
+  final case class ExemplarProfile(
+      path: String,
+      keyCol: String,
+      k: Int = 20) extends Derived("exemplar_profile")
+
+  /** A stage's derived list, built from its stage keys with table names
+    * resolved by `targetPath` — the same defaults the stage keys have
+    * always had (index signers at their sync defaults). A key that
+    * tunes an artifact the stage does not declare is refused here,
+    * before any write. */
+  def of(stage: StageSpec, targetPath: String => String): Seq[Derived] = {
+    require(stage.outboxKeep == 0 || stage.changeFeed.nonEmpty,
+      s"stage ${stage.name}: outbox_keep bounds a change_feed outbox — " +
+        "set change_feed, or drop outbox_keep")
+    require(stage.profileMaxPsi == 0.0 || stage.profileTable.nonEmpty,
+      s"stage ${stage.name}: profile_max_psi needs profile: " +
+        "(the stored profile is the drift baseline)")
+    require(stage.kllProfileMaxKs == 0.0 || stage.kllProfileTable.nonEmpty,
+      s"stage ${stage.name}: kll_profile_max_ks needs kll_profile: " +
+        "(the stored sketch is the drift baseline)")
+    require(stage.exemplarKey.isEmpty || stage.exemplarProfileTable.nonEmpty,
+      s"stage ${stage.name}: exemplar_key needs exemplar_profile: " +
+        "(it names the hash column of the stored sample)")
+    def at(table: String) = Option.when(table.nonEmpty)(targetPath(table))
+    Seq(
+      at(stage.changeFeed).map(ChangeFeed(_, stage.outboxKeep)),
+      at(stage.minhashIndex).map(MinhashIndex(_, stage.minhashIndexText)),
+      at(stage.lshIndex).map(LshIndex(_, stage.lshIndexVec)),
+      at(stage.semanticIndex).map(SemanticIndex(_, stage.semanticIndexVec)),
+      at(stage.profileTable).map(Profile(_, stage.profileColumn,
+        stage.profileLo, stage.profileHi, stage.profileBins, stage.profileMaxPsi)),
+      at(stage.kllProfileTable).map(KllProfile(_, stage.kllProfileColumn,
+        stage.kllProfileK, stage.kllProfileMaxKs)),
+      at(stage.exemplarProfileTable).map(ExemplarProfile(_, stage.exemplarKey,
+        stage.exemplarK))).flatten
+  }
+
+  /** One load into the target at `path` and the derived list it
+    * maintains. `who` names the load in refusals; `deleteWhere` is an
+    * already-hydrated purge predicate; `compactMaxFiles` is set when
+    * the load compacts (`compact: true`). */
+  private[graft] final case class Load(
+      who: String,
+      path: String,
+      key: Seq[String],
+      identifier: String,
+      loadType: String,
+      excluded: Seq[String],
+      numBuckets: Int,
+      retainVersions: Int,
+      derived: Seq[Derived],
+      scd2Ts: String = "",
+      deleteWhere: String = "",
+      compactMaxFiles: Option[Int] = None) {
+
+    // scd2 feeds pair rows on (key, valid_from) — in the publish and in
+    // the outbox_keep rebase fold alike
+    private val feedKey = if (loadType == "scd2") Seq("valid_from") else Nil
+
+    /** Every refusal, against the target as it is now and a batch with
+      * `columns` — call before any write. */
+    def validate(spark: SparkSession, columns: Seq[String]): Unit =
+      check(spark, columns, BucketedMergeSink.isBucketed(spark, path))
+
+    /** Validate, catch up, guard, merge, purge, compact, catch up again
+      * and bound the outbox. Returns whether the target is bucketed
+      * after the load. */
+    def run(spark: SparkSession, batch: DataFrame): Boolean = {
+      val wasBucketed = BucketedMergeSink.isBucketed(spark, path)
+      check(spark, batch.columns.toSeq, wasBucketed)
+      // CATCH UP BEFORE THE LOAD: versions left pending by a previous
+      // run's crash between its load and its catch-up are
+      // published/synced FIRST, while their predecessors are still
+      // retained — committing this run's versions first could slide
+      // the retention window past the pending version, turning the
+      // self-healing catch-up into a hard refusal (and leaving a
+      // profile gap).
+      if (wasBucketed) derived.foreach(catchUp(spark, _))
+      // the drift guards are opt-in because they evaluate the batch
+      // plan once more than the merge alone — the batch is persisted
+      // across the check + merge so the extract never runs twice;
+      // try/finally so a merge/maintenance failure can't leak the
+      // persisted batch in the block manager
+      val guarded = derived.exists(armed)
+      if (guarded) batch.persist()
+      try {
+        derived.foreach(guard(spark, batch, _))
+        if (numBuckets > 0)
+          BucketedMergeSink.merge(spark, batch, path, loadType, key,
+            identifier, excluded, numBuckets = numBuckets,
+            // persisted into the layout at creation; on an existing
+            // target a non-zero value must match the layout's (sink
+            // contract)
+            retainVersions = retainVersions, scd2Ts = scd2Ts)
+        else
+          // retention rides along: the target may already BE a bucketed
+          // layout (validated when retainVersions != 0), and
+          // mergeIntoParquet delegates to the bucketed sink in that case
+          // — dropping the value here would silently shrink the
+          // retention window the caller configured
+          MergeSink.mergeIntoParquet(spark, batch, path, loadType, key,
+            identifier, excluded, retainVersions = retainVersions,
+            scd2Ts = scd2Ts)
+      } finally if (guarded) batch.unpersist()
+      // `delete_where:` purges matching target rows right after the
+      // load — row-level TTL / GDPR erasure as a load property (the
+      // hydrated predicate lets a retention cutoff ride placeholders).
+      // Runs BEFORE compaction and the catch-ups so the purge lands in
+      // the same maintenance pass and its version is fed/synced like
+      // any other — sound because the retention validation guarantees
+      // the window holds every version this load commits plus one.
+      if (deleteWhere.nonEmpty) MergeSink.deleteWhere(spark, path, deleteWhere)
+      // `compact: true` runs the bucketed layout's small-file
+      // maintenance after the load (validated before the merge — a flat
+      // target fails loudly BEFORE its write, not silently and not after)
+      compactMaxFiles.foreach(m =>
+        BucketedMergeSink.compact(spark, path, maxFiles = m): Unit)
+      // catch-up AFTER the load, delete_where and compaction (each
+      // commits a version; a compact's feed is an empty diff): every
+      // retained version without a published partition / applied
+      // marker / profile row gets one, so a crash anywhere in this pass
+      // self-heals on the next load's catch-up-BEFORE-load. The
+      // profiles snapshot this load's delete_where/compact versions too.
+      derived.foreach(catchUp(spark, _))
+      // `compact: true` extends to the postings indexes — their
+      // per-version sync merges fragment index buckets exactly like
+      // loads fragment the target's. AFTER the catch-up (compacting
+      // first would miss the sync's own fragments); compacting an index
+      // commits a version on the INDEX layout only, so the target
+      // retention math is untouched
+      for (m <- compactMaxFiles; i <- derived.collect { case i: Index => i })
+        BucketedMergeSink.compact(spark, i.path, maxFiles = m): Unit
+      // `outbox_keep: N` log-compacts the outbox after this load's
+      // publishes: only the newest N batch partitions survive, the
+      // oldest survivor rebased into a marked all-inserts base — the
+      // outbox stays O(N) partitions for the life of the pipeline
+      // instead of one per version forever (validated: N covers this
+      // load's publishes). scd2 feeds carry no deletes, so their
+      // composite (key, valid_from) fold is fully supported.
+      derived.foreach {
+        case ChangeFeed(feed, keep) if keep > 0 =>
+          BucketedMergeSink.compactOutboxKeep(spark, feed, keep,
+            key = key ++ feedKey): Unit
+        case _ =>
+      }
+      numBuckets > 0 || wasBucketed
+    }
+
+    private def check(spark: SparkSession, columns: Seq[String],
+        wasBucketed: Boolean): Unit = {
+      // validated BEFORE the merge so a misconfigured load fails before
+      // doing its full write, not after. First-load case: `buckets: N`
+      // means the load itself will establish the layout, so an absent
+      // target is fine there.
+      val bucketed = numBuckets > 0 || wasBucketed
+      def needsBucketed(what: String): Unit =
+        require(bucketed, s"$who: $what needs a bucketed target " +
+          "(set buckets: N, or point at an existing bucketed layout)")
+      // compaction needs a bucketed layout; retention is likewise a
+      // bucketed-layout capability — a flat target has no snapshots to
+      // retain, so a retain_versions on one is a misconfiguration to
+      // surface, not ignore
+      if (compactMaxFiles.nonEmpty) needsBucketed("compact: true")
+      if (retainVersions != 0) needsBucketed("retain_versions")
+      // change_feed / *_index replay per-version snapshot diffs, so they
+      // need a bucketed layout AND a retention window covering every
+      // version this load commits PLUS its predecessor: the load commits
+      // one version for the merge and one more for each of delete_where
+      // and compact, and the feeds/indexes catch up once at the end. The
+      // index families also need a single-column merge key (postings
+      // pair on one id). Validate BEFORE the merge: a misconfigured
+      // outbox must not cost a write.
+      val commits = 1 + (if (deleteWhere.nonEmpty) 1 else 0) +
+        (if (compactMaxFiles.nonEmpty) 1 else 0)
+      // the retention this load runs under: a non-zero request must
+      // equal the layout's (the sink refuses any other), 0 means the
+      // layout's own
+      lazy val retain =
+        if (retainVersions != 0 || !wasBucketed) retainVersions
+        else BucketedMergeSink.retention(spark, path)
+      // at a window of exactly `commits`, a delete_where load would GC
+      // the merge version's predecessor before the feed ever diffs it,
+      // silently losing that batch from the outbox
+      def retained(d: Derived): Unit =
+        require(retain >= commits + 1,
+          s"$who: ${d.stageKey} needs retain_versions >= ${commits + 1} " +
+            s"(this load commits up to $commits versions — the merge" +
+            (if (deleteWhere.nonEmpty) ", delete_where" else "") +
+            (if (compactMaxFiles.nonEmpty) ", compact" else "") +
+            " — and each one's predecessor must still be retained when " +
+            s"the feed/index catches up), got $retain")
+      // scd2 history is fine for the feed (it pairs on (key,
+      // valid_from)); an index is undefined over it (multiple versions
+      // per key), and a profile would count CLOSED history rows
+      // alongside current ones — a distribution of bookkeeping, not of
+      // the data
+      def noScd2(d: Derived): Unit =
+        require(loadType != "scd2",
+          s"$who: ${d.stageKey} over an scd2 target would mix closed " +
+            "history rows with current ones — build it from the current " +
+            "view in a downstream stage instead")
+      derived.foreach { d =>
+        needsBucketed(d.stageKey)
+        d match {
+          case ChangeFeed(_, keep) =>
+            retained(d)
+            // a rebase window shallower than one load's own publishes
+            // would strand even a same-pipeline consumer running right
+            // after it (its cursor lags exactly `commits` batches)
+            require(keep == 0 || keep >= commits,
+              s"$who: outbox_keep must be >= $commits (this load " +
+                s"publishes up to $commits batches; a shallower window " +
+                "rebases past every consumer, including one in this very " +
+                s"pipeline), got $keep")
+            // the rebase fold routes delete ops by a single identifier
+            // column — an outbox_keep load that can EMIT deletes (type:
+            // delete, or a delete_where purge) with a composite non-scd2
+            // key would only fail inside compactOutbox, AFTER the load
+            // already committed; validate-before-write means refusing it
+            // here (scd2 feeds never carry deletes — their composite
+            // (key, valid_from) fold is fine)
+            require(keep == 0 || loadType == "scd2" || key.size == 1 ||
+                (loadType != "delete" && deleteWhere.isEmpty),
+              s"$who: outbox_keep's rebase fold routes deletes by a " +
+                s"single key column, but the key is composite " +
+                s"(${key.mkString(",")}) and the load can emit delete ops " +
+                (if (loadType == "delete") "(type: delete)" else "(delete_where)") +
+                " — use a single-column key or drop outbox_keep")
+          case _: Index =>
+            retained(d)
+            require(key.size == 1,
+              s"$who: ${d.stageKey} needs a single-column key (postings " +
+                s"pair on one id), got ${key.mkString(",")}")
+            noScd2(d)
+          case p: Profile =>
+            // a profile snapshots each retained version directly
+            // (readVersion, no predecessor diffs), so it needs a
+            // bucketed layout but no extra retention beyond the
+            // layout's own
+            noScd2(d)
+            require(p.column.nonEmpty, s"$who: profile needs " +
+              "profile_column (the numeric column to bin)")
+            require(p.hi > p.lo, s"$who: profile needs profile_hi > " +
+              s"profile_lo, got [${p.lo}, ${p.hi})")
+            require(p.nbins >= 1,
+              s"$who: profile_bins must be >= 1, got ${p.nbins}")
+            require(p.maxPsi >= 0.0,
+              s"$who: profile_max_psi must be >= 0, got ${p.maxPsi}")
+          case p: KllProfile =>
+            noScd2(d)
+            require(p.column.nonEmpty, s"$who: kll_profile needs " +
+              "kll_profile_column (the numeric column to sketch)")
+            require(p.k >= 8 && p.k <= 65535,
+              s"$who: kll_profile_k must be in [8, 65535], got ${p.k}")
+            require(p.maxKs >= 0.0 && p.maxKs <= 1.0,
+              s"$who: kll_profile_max_ks must be in [0, 1] (a KS " +
+                s"distance), got ${p.maxKs}")
+          case p: ExemplarProfile =>
+            noScd2(d)
+            require(p.keyCol.nonEmpty, s"$who: exemplar_profile needs " +
+              "exemplar_key (the row-identity column hashed for the sample)")
+            require(p.k >= 1 && p.k <= 100000,
+              s"$who: exemplar_k must be in [1, 100000], got ${p.k}")
+        }
+        neededColumn(d).foreach { case (knob, c, why) =>
+          require(columns.contains(c),
+            s"$who: $knob needs column $c but the extract does not " +
+              s"produce it — refusing to load ($why)")
+        }
+      }
+    }
+
+    // an armed drift guard; delete batches carry ids, not a
+    // distribution, and never trip
+    private def armed(d: Derived): Boolean = loadType != "delete" && (d match {
+      case p: Profile => p.maxPsi > 0.0
+      case p: KllProfile => p.maxKs > 0.0
+      case _ => false
+    })
+
+    // (knob, column, why) of a batch column the load cannot do without.
+    // A guarded load whose extract DROPPED the profiled column is
+    // exactly the corrupted-extract scenario the breaker exists for —
+    // skipping the gate silently would wave it straight through; the
+    // exemplar sync hashes its key from the TARGET snapshot, so an
+    // extract that dropped it would fail AFTER the merge committed.
+    private def neededColumn(d: Derived): Option[(String, String, String)] = {
+      val disarm = "a drift guard must not silently disarm when the " +
+        "profiled column vanishes"
+      d match {
+        case p: Profile if armed(p) => Some(("profile_max_psi", p.column, disarm))
+        case p: KllProfile if armed(p) =>
+          Some(("kll_profile_max_ks", p.column, disarm))
+        case p: ExemplarProfile if loadType != "delete" => Some(("exemplar_profile",
+          p.keyCol, "the sample sync would fail after the merge"))
+        case _ => None
+      }
+    }
+
+    // the bad-data circuit breakers (`profile_max_psi:`,
+    // `kll_profile_max_ks:`): refuse the load BEFORE any write when the
+    // batch's distribution drifts past the bound vs the NEWEST stored
+    // profile (a corrupted extract should not reach the table; the
+    // operator raises the bound or drops the key to override). A first
+    // load has no stored profile and never trips.
+    private def guard(spark: SparkSession, batch: DataFrame, d: Derived): Unit =
+      if (armed(d)) d match {
+        case p: Profile =>
+          // the gate bins the batch with the configured edges — refuse
+          // when the stored reference was built under a different binning
+          Profiling.requireBinningMatch(spark, p.path, p.lo, p.hi, p.nbins)
+          for ((refV, ref) <- Profiling.latestProfile(spark, p.path);
+               psi <- Profiling.batchDrift(batch, p.column, p.lo, p.hi,
+                 p.nbins, ref) if psi > p.maxPsi)
+            throw new IllegalStateException(
+              f"$who: incoming batch drifts PSI=$psi%.4f > " +
+                f"profile_max_psi=${p.maxPsi}%.4f vs stored profile " +
+                s"version $refV of ${p.path} (column ${p.column}) — " +
+                "refusing to load; inspect the extract, or raise/remove " +
+                "profile_max_psi")
+        case p: KllProfile =>
+          // the reference is the newest NON-EMPTY stored sketch: an
+          // empty profile version (purged snapshot, all-null first
+          // batch) must neither disarm the gate forever (null KS vs an
+          // empty CDF) nor brick the pipeline by refusing every load —
+          // drift is judged against the last distribution actually
+          // seen, and with no non-empty baseline ever the gate waits
+          // exactly like the first load
+          for ((refV, ref) <- Profiling.latestNonEmptyKllProfile(spark, p.path)) {
+            val (batchN, ks) = Profiling.batchKsDrift(batch, p.column, p.k, ref)
+            // null KS must not read as "nothing to judge" when the batch
+            // HAS rows: a profiled column that sketches to n=0 (every
+            // value null/NaN/cast-to-null) is the same corrupted-extract
+            // class the column-presence check refuses loudly — the
+            // breaker disarming silently here would wave it through (the
+            // reference side is non-empty by construction)
+            if (batchN == 0L && !batch.isEmpty)
+              throw new IllegalStateException(
+                s"$who: kll_profile_max_ks guards column ${p.column} but " +
+                  "the incoming batch has rows whose profiled values are " +
+                  "ALL null/NaN (sketch n=0) against a non-empty stored " +
+                  s"profile (version $refV of ${p.path}) — refusing to " +
+                  "load; inspect the extract, or remove kll_profile_max_ks")
+            ks.filter(_ > p.maxKs).foreach { ks =>
+              throw new IllegalStateException(
+                f"$who: incoming batch drifts KS=$ks%.4f > " +
+                  f"kll_profile_max_ks=${p.maxKs}%.4f vs stored profile " +
+                  s"version $refV of ${p.path} (column ${p.column}) — " +
+                  "refusing to load; inspect the extract, or " +
+                  "raise/remove kll_profile_max_ks")
+            }
+          }
+        case _ =>
+      }
+
+    /** The artifact's idempotent catch-up: every retained target
+      * version it has not published/synced/profiled yet gets applied
+      * ([[BucketedMergeSink]]'s publish/sync contract). */
+    private def catchUp(spark: SparkSession, d: Derived): Unit = d match {
+      case ChangeFeed(feed, _) =>
+        BucketedMergeSink.publishChangeFeed(spark, path, feed, feedKey): Unit
+      case i: MinhashIndex => BucketedMergeSink.syncMinhashIndex(spark, path, i): Unit
+      case i: LshIndex => BucketedMergeSink.syncLshIndex(spark, path, i): Unit
+      case i: SemanticIndex =>
+        BucketedMergeSink.syncSemanticIndex(spark, path, i): Unit
+      case Profile(prof, column, lo, hi, nbins, _) =>
+        Profiling.syncProfile(spark, path, prof, column, lo, hi, nbins): Unit
+      case KllProfile(prof, column, k, _) =>
+        Profiling.syncKllProfile(spark, path, prof, column, k): Unit
+      case ExemplarProfile(prof, keyCol, k) =>
+        Profiling.syncExemplarProfile(spark, path, prof, keyCol, k): Unit
+    }
+  }
+}

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.slf4j.LoggerFactory
 
 import graft.config.{PipelineSpec, StageSpec}
-import graft.sink.MergeSink
 import graft.sources.Sources
 
 /** Per-stage metrics, the analogue of the reference's per-batch debug log
@@ -212,20 +211,17 @@ final class Runner(
       s"stage ${stage.name}: subscribe_feed is a consumer stage — the " +
         "outbox IS its input; extract_query/transformers/sources don't apply " +
         "(transform on the producer side, or in a stage reading the replica)")
-    Seq("change_feed" -> stage.changeFeed,
-      "minhash_index" -> stage.minhashIndex, "lsh_index" -> stage.lshIndex,
-      "semantic_index" -> stage.semanticIndex, "profile" -> stage.profileTable,
-      "kll_profile" -> stage.kllProfileTable,
-      "exemplar_profile" -> stage.exemplarProfileTable,
-      "delete_where" -> stage.deleteWhere, "scd2_ts" -> stage.scd2Ts,
-      "outbox_keep" -> (if (stage.outboxKeep != 0) stage.outboxKeep.toString
-                        else ""))
-      .foreach { case (k, v) =>
-        require(v.isEmpty,
-          s"stage ${stage.name}: subscribe_feed cannot combine with $k — " +
-            "derived feeds/indexes/purges belong to a producer stage " +
-            "(point one at the replica as its target if needed)")
-      }
+    def refuse(keys: Seq[String]): Unit =
+      require(keys.isEmpty,
+        s"stage ${stage.name}: subscribe_feed cannot combine with " +
+          s"${keys.mkString(", ")} — derived feeds/indexes/purges belong " +
+          "to a producer stage (point one at the replica as its target if needed)")
+    // the plain producer keys first: Derived.of's own refusals would
+    // steer an outbox_keep toward setting a change_feed here
+    refuse(Seq("delete_where" -> stage.deleteWhere.nonEmpty,
+      "scd2_ts" -> stage.scd2Ts.nonEmpty,
+      "outbox_keep" -> (stage.outboxKeep != 0)).collect { case (k, true) => k })
+    refuse(Derived.of(stage, targetPath).map(_.stageKey))
     val t0 = System.nanoTime()
     val replica = targetPath(stage.targetTable)
     graft.sink.BucketedMergeSink.subscribeFeed(
@@ -265,418 +261,32 @@ final class Runner(
   private def load(stage: StageSpec, df: DataFrame, ph: Map[String, String]): Long = {
     if (stage.targetTable.isEmpty) return df.count()
     val path = targetPath(stage.targetTable)
-    // `compact: true` needs a bucketed layout — validate BEFORE the merge
-    // so a misconfigured stage fails before doing its full write, not
-    // after. First-load case: `buckets: N` means the load itself will
-    // establish the layout, so an absent target is fine there.
-    if (stage.compact)
-      require(stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path),
-        s"stage ${stage.name}: compact: true needs a bucketed target " +
-          "(set buckets: N, or point at an existing bucketed layout)")
-    // retention is likewise a bucketed-layout capability — a flat target
-    // has no snapshots to retain, so a retain_versions on one is a
-    // misconfiguration to surface, not ignore
-    if (stage.retainVersions != 0)
-      require(stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path),
-        s"stage ${stage.name}: retain_versions needs a bucketed target " +
-          "(set buckets: N, or point at an existing bucketed layout)")
-    // change_feed / *_index replay per-version snapshot diffs, so they
-    // need a bucketed layout AND a retention window covering every
-    // version this run commits PLUS its predecessor: the run commits
-    // one version for the merge and one more for each of delete_where
-    // and compact, and the feeds/indexes catch up once at the end — at
-    // the old minimum of 2, a delete_where stage GC'd the merge
-    // version's predecessor before the feed ever diffed it, silently
-    // losing that batch from the outbox. The index families also need a
-    // single-column merge key (postings pair on one id). Validate
-    // BEFORE the merge: a misconfigured outbox must not cost a write.
-    require(stage.outboxKeep == 0 || stage.changeFeed.nonEmpty,
-      s"stage ${stage.name}: outbox_keep bounds a change_feed outbox — " +
-        "set change_feed, or drop outbox_keep")
-    // the rebase fold routes delete ops by a single identifier column —
-    // an outbox_keep stage that can EMIT deletes (type: delete, or a
-    // delete_where purge) with a composite non-scd2 key would only fail
-    // inside compactOutbox, AFTER this run's load already committed;
-    // validate-before-write means refusing it here (scd2 feeds never
-    // carry deletes — their composite (key, valid_from) fold is fine)
-    require(stage.outboxKeep == 0 || stage.loadType == "scd2" ||
-        stage.key.size == 1 ||
-        (stage.loadType != "delete" && stage.deleteWhere.isEmpty),
-      s"stage ${stage.name}: outbox_keep's rebase fold routes deletes by " +
-        s"a single key column, but the key is composite " +
-        s"(${stage.key.mkString(",")}) and the stage can emit delete ops " +
-        (if (stage.loadType == "delete") "(type: delete)" else "(delete_where)") +
-        " — use a single-column key or drop outbox_keep")
-    // `profile:` snapshots each retained version directly (readVersion,
-    // no predecessor diffs), so it needs a bucketed layout but no extra
-    // retention beyond the layout's own; config errors fail BEFORE the
-    // merge like every other maintenance key
-    if (stage.profileTable.nonEmpty) {
-      require(stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path),
-        s"stage ${stage.name}: profile needs a bucketed target " +
-          "(set buckets: N, or point at an existing bucketed layout)")
-      require(stage.profileColumn.nonEmpty,
-        s"stage ${stage.name}: profile needs profile_column " +
-          "(the numeric column to bin)")
-      require(stage.profileHi > stage.profileLo,
-        s"stage ${stage.name}: profile needs profile_hi > profile_lo, " +
-          s"got [${stage.profileLo}, ${stage.profileHi})")
-      require(stage.profileBins >= 1,
-        s"stage ${stage.name}: profile_bins must be >= 1, " +
-          s"got ${stage.profileBins}")
-      // same contract as Streams.streamingMergeWithProfile: a profile
-      // over scd2 snapshots would count CLOSED history rows alongside
-      // current ones — a distribution of bookkeeping, not of the data
-      require(stage.loadType != "scd2",
-        s"stage ${stage.name}: profile over an scd2 target would " +
-          "double-count closed history rows — profile the current view " +
-          "in a downstream stage instead")
-    }
-    require(stage.profileMaxPsi == 0.0 || stage.profileTable.nonEmpty,
-      s"stage ${stage.name}: profile_max_psi needs profile: " +
-        "(the stored profile is the drift baseline)")
-    require(stage.profileMaxPsi >= 0.0,
-      s"stage ${stage.name}: profile_max_psi must be >= 0, " +
-        s"got ${stage.profileMaxPsi}")
-    // `kll_profile:` — the no-declared-range quantile twin of
-    // `profile:` — shares its shape contracts; no lo/hi/bins because a
-    // KLL sketch needs none (that is the point of the key)
-    if (stage.kllProfileTable.nonEmpty) {
-      require(stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path),
-        s"stage ${stage.name}: kll_profile needs a bucketed target " +
-          "(set buckets: N, or point at an existing bucketed layout)")
-      require(stage.kllProfileColumn.nonEmpty,
-        s"stage ${stage.name}: kll_profile needs kll_profile_column " +
-          "(the numeric column to sketch)")
-      require(stage.kllProfileK >= 8 && stage.kllProfileK <= 65535,
-        s"stage ${stage.name}: kll_profile_k must be in [8, 65535], " +
-          s"got ${stage.kllProfileK}")
-      require(stage.loadType != "scd2",
-        s"stage ${stage.name}: kll_profile over an scd2 target would " +
-          "double-count closed history rows — profile the current view " +
-          "in a downstream stage instead")
-    }
-    require(stage.kllProfileMaxKs == 0.0 || stage.kllProfileTable.nonEmpty,
-      s"stage ${stage.name}: kll_profile_max_ks needs kll_profile: " +
-        "(the stored sketch is the drift baseline)")
-    require(stage.kllProfileMaxKs >= 0.0 && stage.kllProfileMaxKs <= 1.0,
-      s"stage ${stage.name}: kll_profile_max_ks must be in [0, 1] " +
-        s"(a KS distance), got ${stage.kllProfileMaxKs}")
-    // `exemplar_profile:` — the drill-down sibling: per-version example
-    // ROWS rather than a distribution summary (see Profiling
-    // .syncExemplarProfile); shares the bucketed-target and no-scd2
-    // shape contracts
-    if (stage.exemplarProfileTable.nonEmpty) {
-      require(stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path),
-        s"stage ${stage.name}: exemplar_profile needs a bucketed target " +
-          "(set buckets: N, or point at an existing bucketed layout)")
-      require(stage.exemplarKey.nonEmpty,
-        s"stage ${stage.name}: exemplar_profile needs exemplar_key " +
-          "(the row-identity column hashed for the deterministic sample)")
-      require(stage.exemplarK >= 1 && stage.exemplarK <= 100000,
-        s"stage ${stage.name}: exemplar_k must be in [1, 100000], " +
-          s"got ${stage.exemplarK}")
-      require(stage.loadType != "scd2",
-        s"stage ${stage.name}: exemplar_profile over an scd2 target " +
-          "would sample closed history rows alongside current ones — " +
-          "sample the current view in a downstream stage instead")
-    }
-    require(stage.exemplarKey.isEmpty || stage.exemplarProfileTable.nonEmpty,
-      s"stage ${stage.name}: exemplar_key needs exemplar_profile: " +
-        "(it names the hash column of the stored sample)")
-    val derived = Seq(
-      ("change_feed", stage.changeFeed, false),
-      ("minhash_index", stage.minhashIndex, true),
-      ("lsh_index", stage.lshIndex, true),
-      ("semantic_index", stage.semanticIndex, true)).filter(_._2.nonEmpty)
-    if (derived.nonEmpty) {
-      val bucketed =
-        stage.buckets > 0 || graft.sink.BucketedMergeSink.isBucketed(spark, path)
-      val retain =
-        if (graft.sink.BucketedMergeSink.isBucketed(spark, path))
-          math.max(stage.retainVersions,
-            graft.sink.BucketedMergeSink.retention(spark, path))
-        else stage.retainVersions
-      val commitsPerRun = 1 + (if (stage.deleteWhere.nonEmpty) 1 else 0) +
-        (if (stage.compact) 1 else 0)
-      // a rebase window shallower than one run's own publishes would
-      // strand even a same-pipeline consumer running right after this
-      // stage (its cursor lags exactly commitsPerRun batches)
-      require(stage.outboxKeep == 0 || stage.outboxKeep >= commitsPerRun,
-        s"stage ${stage.name}: outbox_keep must be >= $commitsPerRun " +
-          s"(this stage publishes up to $commitsPerRun batches per run; " +
-          "a shallower window rebases past every consumer, including one " +
-          s"in this very pipeline), got ${stage.outboxKeep}")
-      derived.foreach { case (kind, _, singleKey) =>
-        require(bucketed,
-          s"stage ${stage.name}: $kind needs a bucketed target " +
-            "(set buckets: N, or point at an existing bucketed layout)")
-        require(retain >= commitsPerRun + 1,
-          s"stage ${stage.name}: $kind needs retain_versions >= " +
-            s"${commitsPerRun + 1} (this stage commits up to " +
-            s"$commitsPerRun versions per run — the merge" +
-            (if (stage.deleteWhere.nonEmpty) ", delete_where" else "") +
-            (if (stage.compact) ", compact" else "") +
-            " — and each one's predecessor must still be retained when " +
-            s"the feed/index catches up), got $retain")
-        if (singleKey) {
-          require(stage.key.size == 1,
-            s"stage ${stage.name}: $kind needs a single-column key, " +
-              s"got ${stage.key.mkString(",")}")
-          require(stage.loadType != "scd2",
-            s"stage ${stage.name}: $kind is undefined over scd2 " +
-              "history targets (multiple versions per key)")
-        }
-      }
-      // CATCH UP BEFORE THE LOAD: versions left pending by a previous
-      // run's crash between its load and its catch-up are
-      // published/synced FIRST, while their predecessors are still
-      // retained — committing this run's versions first could slide
-      // the retention window past the pending version, turning the
-      // self-healing catch-up into a hard refusal.
-      if (graft.sink.BucketedMergeSink.isBucketed(spark, path))
-        catchUpDerived(stage, path)
-    }
     // `buckets: N` in the stage YAML stores the target hash-bucketed on
     // the merge key (graft.sink.BucketedMergeSink): an incremental load
     // reads and rewrites only the bucket dirs its keys touch instead of
     // the whole target — the config-level switch for the 100 TB load
     // shape. Without it, mergeIntoParquet still auto-delegates when the
     // path already holds a bucketed layout, so a stage can't silently
-    // flatten a target created with buckets.
-    // `profile_max_psi:` — the bad-data circuit breaker: refuse the
-    // load BEFORE any write when the incoming batch's profile_column
-    // distribution drifts past the bound vs the NEWEST stored profile
-    // row (a corrupted extract should not reach the table; the operator
-    // raises the bound or drops the key to override). Opt-in because it
-    // evaluates the batch plan once more than the merge alone — the
-    // batch is persisted across the check + merge so the extract never
-    // runs twice. First load (no stored profile) and delete batches
-    // (ids, no distribution) never trip.
-    val driftGuard = stage.profileTable.nonEmpty &&
-      stage.profileMaxPsi > 0.0 && stage.loadType != "delete"
-    // `kll_profile_max_ks:` — the same circuit breaker for the
-    // no-declared-range profile: KS distance of the batch vs the
-    // NEWEST stored sketch, refused before any write
-    val ksGuard = stage.kllProfileTable.nonEmpty &&
-      stage.kllProfileMaxKs > 0.0 && stage.loadType != "delete"
-    // a guarded load whose extract DROPPED the profiled column is
-    // exactly the corrupted-extract scenario the breaker exists for —
-    // skipping the gate silently would wave it straight through
-    if (driftGuard)
-      require(df.columns.contains(stage.profileColumn),
-        s"stage ${stage.name}: profile_max_psi guards column " +
-          s"${stage.profileColumn} but the extract does not produce it — " +
-          "refusing to load (a drift guard must not silently disarm when " +
-          "the profiled column vanishes)")
-    if (ksGuard)
-      require(df.columns.contains(stage.kllProfileColumn),
-        s"stage ${stage.name}: kll_profile_max_ks guards column " +
-          s"${stage.kllProfileColumn} but the extract does not produce " +
-          "it — refusing to load (a drift guard must not silently disarm " +
-          "when the profiled column vanishes)")
-    // same refusal shape for the exemplar key: the maintenance sync
-    // hashes it from the TARGET snapshot, so an extract that dropped it
-    // would fail AFTER the merge committed — refuse up front instead
-    if (stage.exemplarProfileTable.nonEmpty && stage.loadType != "delete")
-      require(df.columns.contains(stage.exemplarKey),
-        s"stage ${stage.name}: exemplar_profile hashes column " +
-          s"${stage.exemplarKey} but the extract does not produce it — " +
-          "refusing to load (the sample sync would fail after the merge)")
-    // the batch is persisted across the drift check + merge so the
-    // extract never runs twice; try/finally so a merge/maintenance
-    // failure can't leak the persisted batch in the block manager
-    if (driftGuard || ksGuard) df.persist()
-    try {
-      if (ksGuard) {
-        graft.ops.Profiling
-          // the reference is the newest NON-EMPTY stored sketch: an
-          // empty profile version (purged snapshot, all-null first
-          // batch) must neither disarm the gate forever (null KS vs an
-          // empty CDF) nor brick the pipeline by refusing every load —
-          // drift is judged against the last distribution actually
-          // seen, and with no non-empty baseline ever the gate waits
-          // exactly like the first load
-          .latestNonEmptyKllProfile(spark, targetPath(stage.kllProfileTable))
-          .foreach { case (refV, ref) =>
-            val (batchN, ksOpt) = graft.ops.Profiling.batchKsDrift(
-              df, stage.kllProfileColumn, stage.kllProfileK, ref)
-            // null KS must not read as "nothing to judge" when the batch
-            // HAS rows: a non-empty batch whose profiled column sketches
-            // to n=0 (every value null/NaN/cast-to-null) is the same
-            // corrupted-extract class the column-presence check above
-            // refuses loudly — the breaker disarming silently here would
-            // wave it through (r16 advice; the reference side is
-            // non-empty by construction)
-            if (batchN == 0L && !df.isEmpty)
-              throw new IllegalStateException(
-                s"stage ${stage.name}: kll_profile_max_ks guards column " +
-                  s"${stage.kllProfileColumn} but the incoming batch has " +
-                  "rows whose profiled values are ALL null/NaN (sketch " +
-                  "n=0) against a non-empty stored profile (version " +
-                  s"$refV of ${stage.kllProfileTable}) — refusing to " +
-                  "load; inspect the extract, or remove kll_profile_max_ks")
-            ksOpt
-              .foreach { ks =>
-                if (ks > stage.kllProfileMaxKs) {
-                  throw new IllegalStateException(
-                    f"stage ${stage.name}: incoming batch drifts KS=$ks%.4f" +
-                      f" > kll_profile_max_ks=${stage.kllProfileMaxKs}%.4f " +
-                      s"vs stored profile version $refV of " +
-                      s"${stage.kllProfileTable} (column " +
-                      s"${stage.kllProfileColumn}) — refusing to load; " +
-                      "inspect the extract, or raise/remove " +
-                      "kll_profile_max_ks")
-                }
-              }
-          }
-      }
-      if (driftGuard) {
-        // the gate bins the batch with the STAGE's edges — refuse when
-        // the stored reference was built under a different binning
-        graft.ops.Profiling.requireBinningMatch(
-          spark, targetPath(stage.profileTable),
-          stage.profileLo, stage.profileHi, stage.profileBins)
-        graft.ops.Profiling
-          .latestProfile(spark, targetPath(stage.profileTable))
-          .foreach { case (refV, ref) =>
-            graft.ops.Profiling.batchDrift(df, stage.profileColumn,
-              stage.profileLo, stage.profileHi, stage.profileBins, ref)
-              .foreach { psi =>
-                if (psi > stage.profileMaxPsi) {
-                  throw new IllegalStateException(
-                    f"stage ${stage.name}: incoming batch drifts PSI=$psi%.4f" +
-                      f" > profile_max_psi=${stage.profileMaxPsi}%.4f vs " +
-                      s"stored profile version $refV of " +
-                      s"${stage.profileTable} (column " +
-                      s"${stage.profileColumn}) — refusing to load; inspect " +
-                      "the extract, or raise/remove profile_max_psi")
-                }
-              }
-          }
-      }
-      if (stage.buckets > 0)
-        graft.sink.BucketedMergeSink.merge(
-          spark, df, path, stage.loadType, stage.key, stage.identifier,
-          stage.fieldsExcludedFromUpdate, numBuckets = stage.buckets,
-          // persisted into the layout at creation; on an existing target a
-          // non-zero value must match the layout's (sink contract)
-          retainVersions = stage.retainVersions,
-          // scd2_ts hydrates like the extract: an incremental scd2 pipeline
-          // passes each run's batch timestamp as a placeholder — a
-          // hardcoded literal would stamp every run's versions identically
-          scd2Ts = Hydrate(stage.scd2Ts, ph))
-      else
-        // retention rides along: the target may already BE a bucketed
-        // layout (validated above when retain_versions != 0), and
-        // mergeIntoParquet delegates to the bucketed sink in that case —
-        // dropping the stage's value here would silently shrink the
-        // retention window the user configured
-        MergeSink.mergeIntoParquet(
-          spark, df, path, stage.loadType, stage.key, stage.identifier,
-          stage.fieldsExcludedFromUpdate, retainVersions = stage.retainVersions,
-          scd2Ts = Hydrate(stage.scd2Ts, ph))
-    } finally {
-      if (driftGuard || ksGuard) df.unpersist()
-    }
-    // `delete_where:` purges matching target rows right after the load —
-    // row-level TTL / GDPR erasure as a stage property (the hydrated
-    // predicate lets a retention cutoff ride placeholders). Runs BEFORE
-    // compaction and the outbox/index catch-ups so the purge lands in
-    // the same maintenance pass and its version is fed/synced like any
-    // other — sound because the retention validation above guarantees
-    // the window holds every version this run commits plus one.
-    if (stage.deleteWhere.nonEmpty)
-      MergeSink.deleteWhere(spark, path, Hydrate(stage.deleteWhere, ph))
-    // `compact: true` runs the bucketed layout's small-file maintenance
-    // after the load (validated before the merge above — a flat target
-    // fails loudly BEFORE its write, not silently and not after)
-    if (stage.compact)
-      graft.sink.BucketedMergeSink.compact(spark, path,
-        maxFiles = stage.compactMaxFiles)
-    // outbox/index catch-up AFTER the load, delete_where and compaction
-    // (each commits a version; a compact's feed is an empty diff):
-    // every retained version without a published partition / applied
-    // marker gets one, so a crash anywhere in this pass self-heals on
-    // the next run's catch-up-BEFORE-load
-    if (derived.nonEmpty) catchUpDerived(stage, path)
-    // `compact: true` extends to the stage's postings indexes — their
-    // per-version sync merges fragment index buckets exactly like loads
-    // fragment the target's. AFTER the catch-up (compacting first would
-    // miss the sync's own fragments); compacting an index commits a
-    // version on the INDEX layout only, so the target retention math
-    // above is untouched
-    if (stage.compact)
-      Seq(stage.minhashIndex, stage.lshIndex, stage.semanticIndex)
-        .filter(_.nonEmpty).foreach(idx =>
-          graft.sink.BucketedMergeSink.compact(spark, targetPath(idx),
-            maxFiles = stage.compactMaxFiles))
-    // `outbox_keep: N` log-compacts the outbox after this run's
-    // publishes: only the newest N batch partitions survive, the oldest
-    // survivor rebased into a marked all-inserts base — the outbox stays
-    // O(N) partitions for the life of the pipeline instead of one per
-    // version forever (validated above: N covers this run's publishes)
-    if (stage.outboxKeep > 0)
-      graft.sink.BucketedMergeSink.compactOutboxKeep(
-        spark, targetPath(stage.changeFeed), stage.outboxKeep,
-        // scd2 feeds pair rows on (key, valid_from) — same convention as
-        // the publish side (catchUpDerived's extraKey); scd2 feeds carry
-        // no deletes, so the composite-key fold is fully supported
-        key = if (stage.loadType == "scd2") stage.key :+ "valid_from"
-              else stage.key): Unit
-    // `profile:` runs LAST in the maintenance pass so the rows it
-    // snapshots include this run's delete_where/compact versions too;
-    // it is its own idempotent catch-up (version-marker), so a crash
-    // anywhere above self-heals on the next run
-    if (stage.profileTable.nonEmpty)
-      graft.ops.Profiling.syncProfile(
-        spark, path, targetPath(stage.profileTable), stage.profileColumn,
-        stage.profileLo, stage.profileHi, stage.profileBins): Unit
-    // `kll_profile:` runs in the same last slot for the same reason
-    if (stage.kllProfileTable.nonEmpty)
-      graft.ops.Profiling.syncKllProfile(
-        spark, path, targetPath(stage.kllProfileTable),
-        stage.kllProfileColumn, stage.kllProfileK): Unit
-    // `exemplar_profile:` likewise — the stored drill-down rows should
-    // reflect this run's purges/compaction
-    if (stage.exemplarProfileTable.nonEmpty)
-      graft.ops.Profiling.syncExemplarProfile(
-        spark, path, targetPath(stage.exemplarProfileTable),
-        stage.exemplarKey, stage.exemplarK): Unit
+    // flatten a target created with buckets. Every derived artifact,
+    // refusal and guard rides the shared load path (Derived.Load).
+    val bucketed = Derived.Load(s"stage ${stage.name}", path, stage.key,
+      stage.identifier, stage.loadType, stage.fieldsExcludedFromUpdate,
+      stage.buckets, stage.retainVersions, Derived.of(stage, targetPath),
+      // scd2_ts and delete_where hydrate like the extract: an
+      // incremental pipeline passes each run's batch timestamp / TTL
+      // cutoff as a placeholder — a hardcoded literal would stamp every
+      // run's versions identically
+      scd2Ts = Hydrate(stage.scd2Ts, ph),
+      deleteWhere = Hydrate(stage.deleteWhere, ph),
+      compactMaxFiles = Option.when(stage.compact)(stage.compactMaxFiles))
+      .run(spark, df)
     val result =
-      if (graft.sink.BucketedMergeSink.isBucketed(spark, path))
-        graft.sink.BucketedMergeSink.read(spark, path)
+      if (bucketed) graft.sink.BucketedMergeSink.read(spark, path)
       else spark.read.parquet(path)
     result.createOrReplaceTempView(stage.targetTable)
     // metrics row count comes from the WRITTEN parquet (a footer-metadata
     // count) — counting `df` here would re-run the whole extract+transform
     // plan a second time just for the log line, doubling stage cost
     result.count()
-  }
-
-  /** Publish/sync every retained target version the stage's CDC outbox
-    * and near-dup indexes have not applied yet — each call is an
-    * idempotent catch-up ([[graft.sink.BucketedMergeSink]]'s
-    * publish/sync contract). Invoked BEFORE the load (healing a
-    * previous run's crash while the pending version's predecessor is
-    * still retained) and again AFTER it (applying this run's
-    * versions). */
-  private def catchUpDerived(stage: StageSpec, path: String): Unit = {
-    if (stage.changeFeed.nonEmpty)
-      graft.sink.BucketedMergeSink.publishChangeFeed(
-        spark, path, targetPath(stage.changeFeed),
-        extraKey = if (stage.loadType == "scd2") Seq("valid_from") else Nil): Unit
-    if (stage.minhashIndex.nonEmpty)
-      graft.sink.BucketedMergeSink.syncMinhashIndex(
-        spark, path, targetPath(stage.minhashIndex),
-        textCol = stage.minhashIndexText): Unit
-    if (stage.lshIndex.nonEmpty)
-      graft.sink.BucketedMergeSink.syncLshIndex(
-        spark, path, targetPath(stage.lshIndex),
-        vecCol = stage.lshIndexVec): Unit
-    if (stage.semanticIndex.nonEmpty)
-      graft.sink.BucketedMergeSink.syncSemanticIndex(
-        spark, path, targetPath(stage.semanticIndex),
-        vecCol = stage.semanticIndexVec): Unit
   }
 }

@@ -122,6 +122,23 @@ object Profiling {
       .sorted
   }
 
+  /** The retained target versions `profilePath` holds no row for, in
+    * order, and the drift baseline: the newest version the PROFILE
+    * TABLE holds below the first pending one (None when nothing is
+    * pending, so an up-to-date catch-up reads no stored row). The
+    * profile's history outlives the target's retention window (that is
+    * what it is FOR), so the baseline comes from the stored rows, not
+    * the manifest. */
+  private def pendingVersions(
+      spark: org.apache.spark.sql.SparkSession,
+      targetPath: String,
+      profilePath: String): (Seq[Long], Option[Long]) = {
+    val profiled = profiledVersions(spark, profilePath)
+    val pending = graft.sink.BucketedMergeSink
+      .manifestVersions(spark, targetPath).sorted.filterNot(profiled.toSet)
+    (pending, pending.headOption.flatMap(first => profiled.filter(_ < first).lastOption))
+  }
+
   // stored profile maps are tiny — <= nbins+2 entries
   private def readStoredHist(
       spark: org.apache.spark.sql.SparkSession,
@@ -237,19 +254,10 @@ object Profiling {
     // a profile table is one binning's history — a silent edge change
     // would splice incomparable bin indices into the same table
     requireBinningMatch(spark, profilePath, lo, hi, nbins)
-    val versions = BucketedMergeSink.manifestVersions(spark, targetPath).sorted
-    val profiledSet = profiledVersions(spark, profilePath).toSet
-    val pending = versions.filterNot(profiledSet)
+    val (pending, baseline) = pendingVersions(spark, targetPath, profilePath)
     def readHist(v: Long): Map[Int, Long] =
       readStoredHist(spark, profilePath, v)
-    // drift baseline: the newest version the PROFILE TABLE holds below
-    // the first pending one — the profile's history outlives the
-    // target's retention window (that is what it is FOR), so the
-    // baseline must come from the stored rows, not the manifest
-    var prev: Option[Map[Int, Long]] =
-      profiledVersions(spark, profilePath)
-        .filter(v => pending.headOption.forall(v < _))
-        .lastOption.map(readHist)
+    var prev: Option[Map[Int, Long]] = baseline.map(readHist)
     pending.foreach { v =>
       val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
       val profile = histSketch(snap, column, lo, hi, nbins, Seq.empty)
@@ -280,15 +288,6 @@ object Profiling {
       v: Long): Array[Byte] =
     spark.read.parquet(s"$profilePath/version=$v")
       .select("sk").head().getAs[Array[Byte]](0)
-
-  /** The NEWEST stored KLL profile row, as (version, sketch bytes) —
-    * the reference a KS drift gate compares an incoming batch against.
-    * None while the profile table is empty (first load, no baseline). */
-  def latestKllProfile(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String): Option[(Long, Array[Byte])] =
-    profiledVersions(spark, profilePath).lastOption
-      .map(v => v -> readStoredKll(spark, profilePath, v))
 
   /** The newest stored KLL profile row whose sketch is NON-EMPTY — the
     * drift-gate reference. An empty stored sketch (a legitimately
@@ -358,16 +357,9 @@ object Profiling {
       k: Int): Seq[Long] = {
     import graft.functions.KllSketch
     import graft.sink.BucketedMergeSink
-    val versions = BucketedMergeSink.manifestVersions(spark, targetPath).sorted
-    val profiledSet = profiledVersions(spark, profilePath).toSet
-    val pending = versions.filterNot(profiledSet)
-    // drift baseline from the STORED rows (the profile's history
-    // outlives the target's retention window — same rationale as
-    // syncProfile)
+    val (pending, baseline) = pendingVersions(spark, targetPath, profilePath)
     var prev: Option[Array[Byte]] =
-      profiledVersions(spark, profilePath)
-        .filter(v => pending.headOption.forall(v < _))
-        .lastOption.map(readStoredKll(spark, profilePath, _))
+      baseline.map(readStoredKll(spark, profilePath, _))
     pending.foreach { v =>
       val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
       // ONE aggregation job collects the sketch bytes; n, ks_prev, the
@@ -450,9 +442,7 @@ object Profiling {
       keyCol: String,
       k: Int): Seq[Long] = {
     import graft.sink.BucketedMergeSink
-    val versions = BucketedMergeSink.manifestVersions(spark, targetPath).sorted
-    val profiledSet = profiledVersions(spark, profilePath).toSet
-    val pending = versions.filterNot(profiledSet)
+    val (pending, _) = pendingVersions(spark, targetPath, profilePath)
     pending.foreach { v =>
       val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
       val row = snap.agg(

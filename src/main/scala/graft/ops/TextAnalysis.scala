@@ -134,15 +134,6 @@ object TextAnalysis {
         ipv4Pattern, "<IP>"),
       phonePattern, "<PHONE>")
 
-  /** Non-distinct word bigrams ("a b", "b c", ...); empty for 0/1-token
-    * docs. The repetition unit for Gopher-style quality filtering. */
-  def wordBigrams(text: Column): Column = {
-    val toks = tokens(text)
-    transform(
-      slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-      (_, i) => concat_ws(" ", slice(toks, i + 1, lit(2))))
-  }
-
   /** Intra-document repetition profile (the Gopher repetition signals):
     * for each doc, the total bigram count, the count of its single most
     * frequent bigram, and their ratio — high ratios flag boilerplate /
@@ -384,15 +375,5 @@ object TextAnalysis {
         when(host.isNotNull, substring_index(lower(host), ".", -2)))
       .withColumn("path", try_parse_url(col(urlCol), lit("PATH")))
       .withColumn("query", try_parse_url(col(urlCol), lit("QUERY")))
-  }
-
-  /** Full analysis frame over a documents table. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val base = df
-      .withColumn("n_tokens", tokenCount(col(textCol)))
-      .withColumn("n_bpeish", bpeishCount(col(textCol)))
-      .withColumn("quality", qualityScore(col(textCol)))
-      .withColumn("fingerprint", fingerprint(col(textCol)))
-    withLangId(base, textCol)
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Derived
+
 /** Bucket-partitioned MERGE target with MANIFEST commits: the
   * incremental-load shape that holds at 100 TB, with all-or-nothing
   * batch visibility.
@@ -494,7 +496,7 @@ object BucketedMergeSink {
   /** Keep a persisted MinHash band index ([[graft.ops.Dedup.minhashBandIndex]],
     * rows `(id, band, bucket)`) in lockstep with this bucketed target:
     * every retained manifest version the index has not applied yet is
-    * replayed as a merge into `indexPath`, signing ONLY that version's
+    * replayed as a merge into `index.path`, signing ONLY that version's
     * delta rows — so after each load the index is current and
     * [[graft.ops.Dedup.incrementalMinhashPairs]] can vet the NEXT ingest
     * without ever re-signing the corpus. Returns the versions applied.
@@ -509,7 +511,7 @@ object BucketedMergeSink {
     *
     * Idempotence & crash-safety, same contract as [[publishChangeFeed]]:
     * progress is recorded as `v<NNN>` markers in the SIBLING dir
-    * `<indexPath>.applied` AFTER the version's merges land (a sibling
+    * `<index.path>.applied` AFTER the version's merges land (a sibling
     * because the index dir's contents are manifest-managed — a foreign
     * file inside it would be swept by the layout's own GC; markers of a
     * vanished index are reset on the next sync); a crash in between
@@ -531,17 +533,13 @@ object BucketedMergeSink {
   def syncMinhashIndex(
       spark: SparkSession,
       path: String,
-      indexPath: String,
-      textCol: String = "text",
-      k: Int = 3,
-      bands: Int = 8,
-      rowsPerBand: Int = 4,
-      charGrams: Boolean = false): Seq[Long] =
-    syncIndexCore(spark, path, indexPath, "minhash index", textCol,
-      bootstrap = (df, id) => graft.ops.Dedup.minhashBandIndex(
-        df, k, bands, rowsPerBand, id, textCol, charGrams),
-      sign = (df, id) => graft.ops.Dedup.minhashBandIndex(
-        df, k, bands, rowsPerBand, id, textCol, charGrams))
+      index: Derived.MinhashIndex): Seq[Long] = {
+    import index.{bands, charGrams, k, rowsPerBand, textCol}
+    def sign(df: DataFrame, id: String) = graft.ops.Dedup.minhashBandIndex(
+      df, k, bands, rowsPerBand, id, textCol, charGrams)
+    syncIndexCore(spark, path, index.path, "minhash index", textCol,
+      bootstrap = sign, sign = sign)
+  }
 
   /** [[syncMinhashIndex]]'s embedding twin: keep a persisted cosine-LSH
     * bucket index ([[graft.ops.Similarity.lshBucketIndex]], rows
@@ -551,30 +549,27 @@ object BucketedMergeSink {
     * ingest without re-signing the corpus. Same replay core, same
     * marker/bootstrap/refusal contract, same nested one-row-per-id
     * layout (read back flat via [[readPostings]]); (tables, bits, dim)
-    * are the index's identity and must match the probe side's. A
-    * re-sign UPSERT replaces a doc's whole signature row; a null
-    * `vecCol` unsigns. */
+    * are the index's identity ([[Derived.LshIndex]]) and must match the
+    * probe side's. A re-sign UPSERT replaces a doc's whole signature
+    * row; a null `vecCol` unsigns. */
   def syncLshIndex(
       spark: SparkSession,
       path: String,
-      indexPath: String,
-      vecCol: String = "embedding",
-      tables: Int = 8,
-      bits: Int = 12,
-      dim: Int = 64): Seq[Long] =
-    syncIndexCore(spark, path, indexPath, "lsh index", vecCol,
-      bootstrap = (df, id) => graft.ops.Similarity.lshBucketIndex(
-        df, tables, bits, dim, id, vecCol),
-      sign = (df, id) => graft.ops.Similarity.lshBucketIndex(
-        df, tables, bits, dim, id, vecCol))
+      index: Derived.LshIndex): Seq[Long] = {
+    import index.{bits, dim, tables, vecCol}
+    def sign(df: DataFrame, id: String) = graft.ops.Similarity.lshBucketIndex(
+      df, tables, bits, dim, id, vecCol)
+    syncIndexCore(spark, path, index.path, "lsh index", vecCol,
+      bootstrap = sign, sign = sign)
+  }
 
   /** [[syncMinhashIndex]]'s SemDeDup twin: keep a persisted semantic
     * cell index ([[graft.ops.Similarity.semanticCellIndex]]) in
     * lockstep with this bucketed target, so
     * [[graft.ops.Similarity.incrementalSemanticDupPairs]] can vet each
     * ingest against frozen centroids. Two persisted pieces: postings
-    * `(id, pcell)` at `indexPath`, and the centroid model at the
-    * SIBLING `<indexPath>.centroids` (`(cell, centv)` parquet).
+    * `(id, pcell)` at `index.path`, and the centroid model at the
+    * SIBLING `<index.path>.centroids` (`(cell, centv)` parquet).
     * Centroids are TRAINED ONCE at bootstrap on the oldest retained
     * snapshot and FROZEN from then on — the coarse-quantizer contract
     * ([[graft.ops.Similarity.ivfTopK]]): per-ingest retraining would
@@ -589,15 +584,9 @@ object BucketedMergeSink {
   def syncSemanticIndex(
       spark: SparkSession,
       path: String,
-      indexPath: String,
-      vecCol: String = "embedding",
-      nlist: Int = 0,
-      iters: Int = 3,
-      trainPerCell: Int = 256,
-      // 0 = AUTO (Similarity.resolveProbes): the SAME default the
-      // query-side entry points resolve, so an index built and queried
-      // on defaults has one probe width on both sides of the index join
-      probeCells: Int = 0): Seq[Long] = {
+      index: Derived.SemanticIndex): Seq[Long] = {
+    import index.{iters, nlist, probeCells, trainPerCell, vecCol}
+    val indexPath = index.path
     val centsPath = indexPath.stripSuffix("/") + ".centroids"
     syncIndexCore(spark, path, indexPath, "semantic index", vecCol,
       bootstrap = (df, id) => {

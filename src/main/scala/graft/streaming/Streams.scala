@@ -602,267 +602,55 @@ object Streams {
           consumerName = consumerName): Unit
       }
 
-  /** [[streamingMerge]] against a BUCKETED target that also keeps a
-    * near-dup MinHash postings index
-    * ([[graft.sink.BucketedMergeSink.syncMinhashIndex]]) in lockstep per
-    * micro-batch — continuous ingest whose corpus stays incrementally
-    * near-dup-queryable ([[graft.ops.Dedup.incrementalMinhashPairs]])
-    * without ever re-signing it.
+  /** [[streamingMerge]] into a BUCKETED target that keeps any
+    * combination of derived artifacts — change feed, postings indexes,
+    * profiles ([[graft.core.Derived]]) — in lockstep per micro-batch:
+    * continuous ingest whose corpus stays incrementally
+    * near-dup-queryable, profiled and replicable without ever
+    * re-signing or re-scanning it. Each micro-batch is one load of the
+    * same code path a pipeline stage runs (`Derived.Load`): catch-up,
+    * drift guards, merge, catch-up again, `outboxKeep` compaction — so
+    * it commits exactly one target version.
     *
-    * Exactly-once index application under at-least-once foreachBatch,
-    * with no extra machinery: sync catch-up is keyed on the TARGET's
+    * Exactly-once application under at-least-once foreachBatch, with
+    * no extra machinery: every catch-up is keyed on the TARGET's
     * deterministic manifest versions, not on batchId — a replayed
-    * micro-batch re-merges idempotently (content-identical new version),
-    * its snapshot diff is empty, and versions the index already applied
-    * are marker-skipped. A crash between merge and sync self-heals on
-    * the next trigger's catch-up, exactly like the batch Runner's
-    * `minhash_index:` stage key.
+    * micro-batch re-merges idempotently (content-identical new
+    * version), its snapshot diff is empty, and versions already
+    * applied are marker-skipped. A crash between a trigger's merge and
+    * its catch-up self-heals at the next trigger, BEFORE that
+    * trigger's merge can slide the retention window past the pending
+    * version. The feed here is version-keyed (`batch_id=<version>`),
+    * unlike [[streamingMergeWithFeed]]'s micro-batch-keyed one.
     *
-    * `retainVersions` (>= 2, required by the diff replay) is persisted
-    * into the layout when the first micro-batch creates it; scd2 streams
-    * are refused for the same reason as the batch stage key (multiple
-    * history rows per key have no single posting set). */
-  def streamingMergeWithIndex(
+    * Refusals land at construction, far from the first micro-batch:
+    * the target must be bucketed (`numBuckets > 0`, or an existing
+    * layout), feeds and indexes need `retainVersions >= 2`, indexes a
+    * single-column key, and scd2 streams are refused (no deterministic
+    * version timestamp). `retainVersions` is persisted into the layout
+    * when the first micro-batch creates it. */
+  def streamingStage(
       stream: DataFrame,
       path: String,
-      indexPath: String,
       key: Seq[String],
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2,
-      textCol: String = "text",
-      k: Int = 3,
-      bands: Int = 8,
-      rowsPerBand: Int = 4,
-      charGrams: Boolean = false): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    indexedMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, family = "minhash", (spark: SparkSession) =>
-        graft.sink.BucketedMergeSink.syncMinhashIndex(
-          spark, path, indexPath, textCol, k, bands, rowsPerBand, charGrams): Unit)
-
-  /** [[streamingMergeWithIndex]]'s embedding twin: continuous ingest
-    * whose cosine-LSH bucket index
-    * ([[graft.sink.BucketedMergeSink.syncLshIndex]]) tracks the target
-    * per micro-batch, so
-    * [[graft.ops.Similarity.incrementalCosineDupPairs]] can vet each
-    * arriving slice without re-signing the corpus. Same exactly-once /
-    * self-heal contract as the MinHash variant (the sync core is
-    * shared); (tables, bits, dim) are the index's identity and must
-    * match the probe side's. */
-  def streamingMergeWithLshIndex(
-      stream: DataFrame,
-      path: String,
-      indexPath: String,
-      key: Seq[String],
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2,
-      vecCol: String = "embedding",
-      tables: Int = 8,
-      bits: Int = 12,
-      dim: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    indexedMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, family = "lsh", (spark: SparkSession) =>
-        graft.sink.BucketedMergeSink.syncLshIndex(
-          spark, path, indexPath, vecCol, tables, bits, dim): Unit)
-
-  /** [[streamingMergeWithIndex]]'s SemDeDup twin: continuous ingest
-    * whose semantic cell index
-    * ([[graft.sink.BucketedMergeSink.syncSemanticIndex]]) tracks the
-    * target per micro-batch, feeding
-    * [[graft.ops.Similarity.incrementalSemanticDupPairs]]. Centroids
-    * train ONCE when the first micro-batch bootstraps the index (on the
-    * oldest retained snapshot — for a stream created empty, that first
-    * batch) and freeze at `<indexPath>.centroids`; every later trigger
-    * assigns its delta under the frozen model (coarse-quantizer
-    * contract — re-cluster offline and rebuild when drift warrants).
-    * Streams whose very first batches are unrepresentative of the
-    * eventual corpus should bootstrap the index from a batch load
-    * first, then attach the stream. */
-  def streamingMergeWithSemanticIndex(
-      stream: DataFrame,
-      path: String,
-      indexPath: String,
-      key: Seq[String],
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2,
-      vecCol: String = "embedding",
-      nlist: Int = 0,
-      iters: Int = 3,
-      trainPerCell: Int = 256,
-      // 0 = AUTO — the query-side default, so streaming-built indexes
-      // resolve the same probe width their readers do
-      probeCells: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    indexedMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, family = "semantic", (spark: SparkSession) =>
-        graft.sink.BucketedMergeSink.syncSemanticIndex(
-          spark, path, indexPath, vecCol, nlist, iters, trainPerCell,
-          probeCells): Unit)
-
-  /** The indexed-ingest pattern applied to MONITORING instead of an
-    * index: continuous ingest whose per-version corpus profile
-    * ([[graft.ops.Profiling.syncProfile]] — `(n, hist, psi_prev)` rows,
-    * the streaming twin of the Runner's `profile:` stage key) tracks
-    * the target per micro-batch. Same idempotent `_SUCCESS`-marker
-    * catch-up and same catch-up-BEFORE-merge ordering as the index
-    * variants — here not because falling behind hard-refuses (an
-    * unprofiled version that leaves retention is a monitoring gap, not
-    * an error) but because catching pending versions up BEFORE this
-    * batch's merge slides the retention window is what keeps that gap
-    * empty. Unlike the index variants a composite key is fine —
-    * the profile snapshots whole versions, it never joins on the key. */
-  def streamingMergeWithProfile(
-      stream: DataFrame,
-      path: String,
-      profilePath: String,
-      key: Seq[String],
-      column: String,
-      lo: Double,
-      hi: Double,
-      nbins: Int = 64,
+      derived: Seq[graft.core.Derived],
       loadType: String = "upsert",
       excluded: Seq[String] = Nil,
       numBuckets: Int = 64,
       retainVersions: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(hi > lo, s"profile needs hi > lo, got [$lo, $hi)")
-    require(nbins >= 1, s"nbins must be >= 1, got $nbins")
-    profileMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, spark => graft.ops.Profiling.syncProfile(
-        spark, path, profilePath, column, lo, hi, nbins): Unit)
-  }
-
-  /** The shared trigger core of the three profile-tracking ingest twins
-    * ([[streamingMergeWithProfile]] / [[streamingMergeWithKllProfile]] /
-    * [[streamingMergeWithExemplarProfile]]) — the profile analogue of
-    * [[indexedMergeStream]]: per micro-batch, catch the profile up
-    * BEFORE the merge (healing a previous trigger's crash between merge
-    * and sync while the orphaned version is still retained), merge,
-    * then sync this batch's version. At-least-once micro-batch replay
-    * is absorbed by the sync's idempotent version markers. */
-  private def profileMergeStream(
-      stream: DataFrame,
-      path: String,
-      key: Seq[String],
-      loadType: String,
-      excluded: Seq[String],
-      numBuckets: Int,
-      retainVersions: Int,
-      sync: SparkSession => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    require(key.nonEmpty, "streamingStage needs at least one key column")
     require(Set("upsert", "update", "delete")(loadType),
       s"unknown load type: $loadType (expected upsert/update/delete; " +
-        "profile rows snapshot CURRENT versions — scd2 history would " +
-        "double-count closed rows)")
-    require(numBuckets > 0,
-      "a profiled merge stream needs a bucketed target (the profile " +
-        "snapshots manifest versions) — pass numBuckets > 0")
+        "scd2 streams need a replay-stable version timestamp — use streamingMerge)")
+    require(loadType != "delete" || key.size == 1,
+      "delete streams key on exactly ONE identifier column " +
+        s"(MergeSink.delete matches a single id), got ${key.mkString(", ")}")
+    val load = graft.core.Derived.Load("streamingStage", path, key,
+      identifier = key.head, loadType, excluded, numBuckets, retainVersions,
+      derived)
+    load.validate(stream.sparkSession, stream.columns.toSeq)
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      if (graft.sink.BucketedMergeSink.isBucketed(spark, path)) sync(spark)
-      graft.sink.BucketedMergeSink.merge(spark, batch, path, loadType, key,
-        identifier = key.head, excluded = excluded, numBuckets = numBuckets,
-        retainVersions = retainVersions)
-      sync(spark)
-    }
-  }
-
-  /** [[streamingMergeWithProfile]]'s KLL twin — continuous ingest whose
-    * per-version QUANTILE profile (`kll_profile:`'s table shape:
-    * n exact, sketch bytes, ks_prev) tracks the target per micro-batch
-    * with the same catch-up-BEFORE-merge ordering, for metrics whose
-    * value range nobody declared at stream-start (the fixed-bin twin
-    * requires [lo, hi) up front). Crash between a trigger's merge and
-    * its profile heals on the next trigger, before that trigger's own
-    * merge can slide the retention window past the pending version. */
-  def streamingMergeWithKllProfile(
-      stream: DataFrame,
-      path: String,
-      profilePath: String,
-      key: Seq[String],
-      column: String,
-      k: Int = graft.functions.KllSketch.DefaultK,
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(k >= 8 && k <= 65535, s"kll k must be in [8, 65535], got $k")
-    profileMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, spark => graft.ops.Profiling.syncKllProfile(
-        spark, path, profilePath, column, k): Unit)
-  }
-
-  /** [[streamingMergeWithProfile]]/[[streamingMergeWithKllProfile]]'s
-    * exemplar sibling — continuous ingest whose per-version DRILL-DOWN
-    * sample ([[graft.ops.Profiling.syncExemplarProfile]]: k bottom-k-
-    * by-md5(keyCol) example rows + exact n) tracks the bucketed target
-    * per micro-batch, completing the family symmetry (every persisted
-    * profile family has a streaming-merge twin). Same catch-up-BEFORE-
-    * merge ordering as the indexed-ingest variants: a crash between a
-    * previous batch's merge and its profile sync heals at the next
-    * trigger, and at-least-once micro-batch replay is absorbed by the
-    * sync's idempotent version markers. */
-  def streamingMergeWithExemplarProfile(
-      stream: DataFrame,
-      path: String,
-      profilePath: String,
-      key: Seq[String],
-      exemplarKey: String,
-      k: Int = 20,
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(k >= 1 && k <= 100000,
-      s"exemplar k must be in [1, 100000], got $k")
-    profileMergeStream(stream, path, key, loadType, excluded, numBuckets,
-      retainVersions, spark => graft.ops.Profiling.syncExemplarProfile(
-        spark, path, profilePath, exemplarKey, k): Unit)
-  }
-
-  /** The shared merge-plus-index trigger loop behind the three indexed
-    * ingest variants — validation and the catch-up-BEFORE-merge
-    * ordering live here once; `sync` is the family's idempotent
-    * version-replay catch-up ([[graft.sink.BucketedMergeSink]]'s
-    * syncMinhashIndex / syncLshIndex / syncSemanticIndex, closed over
-    * the family's signer parameters). */
-  private def indexedMergeStream(
-      stream: DataFrame,
-      path: String,
-      key: Seq[String],
-      loadType: String,
-      excluded: Seq[String],
-      numBuckets: Int,
-      retainVersions: Int,
-      family: String,
-      sync: SparkSession => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(key.size == 1,
-      s"an indexed merge stream needs a single-column key (postings pair " +
-        s"on one id), got ${key.mkString(", ")}")
-    require(Set("upsert", "update", "delete")(loadType),
-      s"unknown load type: $loadType (expected upsert/update/delete; " +
-        s"a $family index over scd2 history is undefined)")
-    require(numBuckets > 0,
-      "an indexed merge stream needs a bucketed target (the index sync " +
-        "replays manifest snapshot diffs) — pass numBuckets > 0")
-    require(retainVersions >= 2,
-      s"the index sync diffs consecutive retained snapshots — " +
-        s"retainVersions must be >= 2, got $retainVersions")
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      // catch up versions a previous trigger left unsynced BEFORE this
-      // batch's merge: a crash between a trigger's merge and its sync
-      // otherwise lets this merge slide the retention window past the
-      // pending version, turning the self-healing catch-up into the
-      // hard "Rebuild the index" refusal at the minimum retention — the
-      // same ordering the Runner's batch stage keys use
-      if (graft.sink.BucketedMergeSink.isBucketed(spark, path)) sync(spark)
-      graft.sink.BucketedMergeSink.merge(spark, batch, path, loadType, key,
-        identifier = key.head, excluded = excluded, numBuckets = numBuckets,
-        retainVersions = retainVersions)
-      sync(spark)
+      load.run(batch.sparkSession, batch): Unit
     }
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Derived
 import graft.sink.{BucketedMergeSink, MergeSink}
 
 /** Bucket-partitioned merge targets with manifest commits: identical
@@ -725,7 +726,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       docs(1L -> "alpha beta gamma delta", 2L -> "eps zeta eta theta",
         3L -> "alpha beta gamma delta eps"),
       path, "upsert", Seq("doc_id"), numBuckets = 4, retainVersions = 4) // v1
-    assert(BucketedMergeSink.syncMinhashIndex(spark, path, idx) == Seq(1L))
+    assert(BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx)) == Seq(1L))
     assert(stored(idx) == fresh(path), "bootstrap = full signing of v1")
     // v2: update 1's text, insert 4, null-out 2's text (postings must go)
     BucketedMergeSink.merge(spark,
@@ -735,13 +736,13 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     // v3: delete 3
     BucketedMergeSink.merge(spark, Seq(3L).toDF("doc_id"), path,
       "delete", identifier = "doc_id") // v3
-    assert(BucketedMergeSink.syncMinhashIndex(spark, path, idx) == Seq(2L, 3L))
+    assert(BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx)) == Seq(2L, 3L))
     assert(stored(idx) == fresh(path),
       "delta replay = re-sign of the current state (update/insert/null/delete)")
     assert(!stored(idx).exists(_._1 == 2L), "null-text doc carries no postings")
     assert(!stored(idx).exists(_._1 == 3L), "deleted doc carries no postings")
     // idempotent: nothing new, nothing changed
-    assert(BucketedMergeSink.syncMinhashIndex(spark, path, idx).isEmpty)
+    assert(BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx)).isEmpty)
     assert(stored(idx) == fresh(path))
     // markers are pruned to the newest as each version lands (the
     // sibling dir stays O(1) files, never one per version forever)
@@ -755,7 +756,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     // and re-sync; the version replays (idempotent merges) and converges
     new File(applied, "v000000002").createNewFile()
     new File(applied, "v000000003").delete()
-    assert(BucketedMergeSink.syncMinhashIndex(spark, path, idx) == Seq(3L))
+    assert(BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx)) == Seq(3L))
     assert(stored(idx) == fresh(path))
     // gap refusal: two more loads with the index left behind, then shrink
     // the window by GC'ing v3 away via retention — simulate by loading
@@ -767,7 +768,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     BucketedMergeSink.merge(spark,
       docs(7L -> "final batch of words"), path, "upsert", Seq("doc_id")) // v6: retains v3..v6
     // index is at v3 which is still retained — catches up fine
-    assert(BucketedMergeSink.syncMinhashIndex(spark, path, idx) ==
+    assert(BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx)) ==
       Seq(4L, 5L, 6L))
     assert(stored(idx) == fresh(path))
     // now fall PAST the window: three loads, index stays at v6
@@ -780,7 +781,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     BucketedMergeSink.merge(spark,
       docs(11L -> "w11"), path, "upsert", Seq("doc_id")) // v10: retains v7..v10
     val e = intercept[IllegalArgumentException] {
-      BucketedMergeSink.syncMinhashIndex(spark, path, idx)
+      BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx))
     }
     assert(e.getMessage.contains("Rebuild the index"),
       s"gap must refuse loudly, got: ${e.getMessage}")
@@ -917,8 +918,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
         .as[(Long, Int, Long)].collect().toSet
     val path = tmpTarget()
     val idx = tmpTarget() + "-lsh"
-    def sync() = BucketedMergeSink.syncLshIndex(spark, path, idx,
-      tables = 4, bits = 6, dim = 4)
+    def sync() = BucketedMergeSink.syncLshIndex(spark, path,
+      Derived.LshIndex(idx, tables = 4, bits = 6, dim = 4))
     BucketedMergeSink.merge(spark,
       vecs(1L -> Seq(1.0, 0.0, 0.0, 0.0), 2L -> Seq(0.0, 1.0, 0.0, 0.0),
         3L -> Seq(0.9, 0.1, 0.0, 0.0)),
@@ -947,8 +948,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       rows.toDF("vec_id", "embedding")
     val path = tmpTarget()
     val idx = tmpTarget() + "-sem"
-    def sync() = BucketedMergeSink.syncSemanticIndex(spark, path, idx,
-      nlist = 2, probeCells = 1)
+    def sync() = BucketedMergeSink.syncSemanticIndex(spark, path,
+      Derived.SemanticIndex(idx, nlist = 2, probeCells = 1))
     // two clean clusters around e1 and e2
     BucketedMergeSink.merge(spark,
       vecs(1L -> Seq(1.0, 0.0), 2L -> Seq(0.9, 0.1),
@@ -999,14 +1000,14 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     BucketedMergeSink.merge(spark, docs, path, "upsert", Seq("doc_id"),
       numBuckets = n, retainVersions = 4)
-    BucketedMergeSink.syncMinhashIndex(spark, path, idx)
+    BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx))
     val before = (0 until n).map(b => b -> bucketState(idx, b)).toMap
     // one doc's text changes → exactly one nested posting row moves,
     // and it lives in bucket hash(id) of the INDEX layout
     BucketedMergeSink.merge(spark,
       Seq((7L, "completely different text for doc seven")).toDF("doc_id", "text"),
       path, "upsert", Seq("doc_id"))
-    BucketedMergeSink.syncMinhashIndex(spark, path, idx)
+    BucketedMergeSink.syncMinhashIndex(spark, path, Derived.MinhashIndex(idx))
     val b7 = Seq(7L).toDF("id")
       .select(BucketedMergeSink.bucketExpr(Seq("id"), n)).as[Int].head()
     for (b <- 0 until n if b != b7)

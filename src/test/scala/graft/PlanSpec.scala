@@ -528,7 +528,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       Seq((1L, "alpha beta gamma delta"), (2L, "eps zeta eta theta"))
         .toDF("doc_id", "text"),
       path, "upsert", Seq("doc_id"), numBuckets = 2, retainVersions = 2)
-    graft.sink.BucketedMergeSink.syncMinhashIndex(spark, path, idx)
+    graft.sink.BucketedMergeSink.syncMinhashIndex(spark, path,
+      graft.core.Derived.MinhashIndex(idx))
     val df = graft.sink.BucketedMergeSink.readPostings(spark, idx)
     val exec = df.queryExecution.executedPlan
     val exchanges = exec.collect {

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Derived
 import graft.streaming.Streams
 import graft.streaming.Streams.{Event, SessionAgg}
 
@@ -584,6 +585,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(out == Seq((1L, "a", 10L), (2L, "B", 25L), (3L, "c", 30L)))
   }
 
+  // the six per-artifact tests below keep the names of the stream
+  // functions `streamingStage` replaced; each runs its artifact alone
   test("streamingMergeWithIndex: the near-dup postings index tracks the " +
     "target across micro-batches (insert, text update, delete)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-smi-src").toString
@@ -602,8 +605,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithIndex(
-      stream, target, idx, Seq("doc_id"), numBuckets = 4)
+    val q = Streams.streamingStage(stream, target, Seq("doc_id"),
+      Seq(Derived.MinhashIndex(idx)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -616,13 +619,6 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(stored == expected,
       "after the stream drains, the index must equal a fresh signing of the target")
     assert(stored.exists(_._1 == 4L))
-    // construction-time refusals, far from the first micro-batch
-    intercept[IllegalArgumentException](Streams.streamingMergeWithIndex(
-      stream, target, idx, Seq("doc_id", "text")))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithIndex(
-      stream, target, idx, Seq("doc_id"), numBuckets = 0))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithIndex(
-      stream, target, idx, Seq("doc_id"), retainVersions = 1))
     // self-heal at the minimum retention: simulate a trigger that
     // crashed between its merge and its sync — the target gains a
     // version the index never applied. The NEXT trigger must catch that
@@ -633,8 +629,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       target, "upsert", Seq("doc_id"))
     writeSourceBatch(dir,
       Seq((6L, "post crash batch words")).toDF("doc_id", "text"), 2)
-    val q2 = Streams.streamingMergeWithIndex(
-      stream, target, idx, Seq("doc_id"), numBuckets = 4)
+    val q2 = Streams.streamingStage(stream, target, Seq("doc_id"),
+      Seq(Derived.MinhashIndex(idx)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -666,8 +662,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, v DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 0, 100, 10, numBuckets = 4)
+    val q = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.Profile(prof, "v", 0, 100, 10)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -692,23 +688,14 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(rows.last._4.exists(_ > 0.0),
       s"overflow mass must show as PSI drift: ${rows.last._4}")
-    // construction-time refusals
-    intercept[IllegalArgumentException](Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 0, 100, numBuckets = 0))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 100, 100))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 0, 100, nbins = 0))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 0, 100, loadType = "scd2"))
     // crash between a trigger's merge and its profile: the target gains
     // a version with no profile row; the next trigger heals it BEFORE
     // its own merge can slide the retention window past it
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, 50.0)).toDF("id", "v"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, 60.0)).toDF("id", "v"), 2)
-    val q2 = Streams.streamingMergeWithProfile(
-      stream, target, prof, Seq("id"), "v", 0, 100, 10, numBuckets = 4)
+    val q2 = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.Profile(prof, "v", 0, 100, 10)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -739,8 +726,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, v DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithKllProfile(
-      stream, target, prof, Seq("id"), "v", numBuckets = 4)
+    val q = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.KllProfile(prof, "v")), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -769,21 +756,14 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.head._4.isEmpty, "first profiled version has no baseline")
     assert(rows.last._4.exists(ks => ks > 0.0 && ks <= 1.0),
       s"the out-of-band update must show as KS drift: ${rows.last._4}")
-    // construction-time refusals
-    intercept[IllegalArgumentException](Streams.streamingMergeWithKllProfile(
-      stream, target, prof, Seq("id"), "v", numBuckets = 0))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithKllProfile(
-      stream, target, prof, Seq("id"), "v", k = 4))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithKllProfile(
-      stream, target, prof, Seq("id"), "v", loadType = "scd2"))
     // crash between a trigger's merge and its profile: the target gains
     // a version with no profile row; the next trigger heals it BEFORE
     // its own merge can slide the retention window past it
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, 50.0)).toDF("id", "v"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, 60.0)).toDF("id", "v"), 2)
-    val q2 = Streams.streamingMergeWithKllProfile(
-      stream, target, prof, Seq("id"), "v", numBuckets = 4)
+    val q2 = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.KllProfile(prof, "v")), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -813,8 +793,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithExemplarProfile(
-      stream, target, prof, Seq("id"), "id", k = 2, numBuckets = 4)
+    val q = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.ExemplarProfile(prof, "id", k = 2)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -836,23 +816,13 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       assert(stored.forall(_._3 == snap.count()),
         s"v$v: n must be the snapshot's exact count")
     }
-    // construction-time refusals
-    intercept[IllegalArgumentException](
-      Streams.streamingMergeWithExemplarProfile(
-        stream, target, prof, Seq("id"), "id", numBuckets = 0))
-    intercept[IllegalArgumentException](
-      Streams.streamingMergeWithExemplarProfile(
-        stream, target, prof, Seq("id"), "id", k = 0))
-    intercept[IllegalArgumentException](
-      Streams.streamingMergeWithExemplarProfile(
-        stream, target, prof, Seq("id"), "id", loadType = "scd2"))
     // crash between a trigger's merge and its sample sync: the next
     // trigger heals BEFORE its own merge slides retention past it
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, "e")).toDF("id", "text"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, "f")).toDF("id", "text"), 2)
-    val q2 = Streams.streamingMergeWithExemplarProfile(
-      stream, target, prof, Seq("id"), "id", k = 2, numBuckets = 4)
+    val q2 = Streams.streamingStage(stream, target, Seq("id"),
+      Seq(Derived.ExemplarProfile(prof, "id", k = 2)), numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -917,9 +887,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithLshIndex(
-      stream, target, idx, Seq("vec_id"), numBuckets = 4,
-      tables = 4, bits = 6, dim = 4)
+    val q = Streams.streamingStage(stream, target, Seq("vec_id"),
+      Seq(Derived.LshIndex(idx, tables = 4, bits = 6, dim = 4)),
+      numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -936,11 +906,6 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(stored.count(_._1 == 1L) == 4,
       "the updated vector carries exactly `tables` postings — its " +
         "pre-rotation signature was replaced, not shadowed")
-    // shared-core refusals surface identically through this wrapper
-    intercept[IllegalArgumentException](Streams.streamingMergeWithLshIndex(
-      stream, target, idx, Seq("vec_id", "embedding")))
-    intercept[IllegalArgumentException](Streams.streamingMergeWithLshIndex(
-      stream, target, idx, Seq("vec_id"), retainVersions = 1))
   }
 
   test("streamingMergeWithSemanticIndex: cell postings track the target " +
@@ -963,9 +928,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingMergeWithSemanticIndex(
-      stream, target, idx, Seq("vec_id"), numBuckets = 4,
-      nlist = 2, probeCells = 1)
+    val q = Streams.streamingStage(stream, target, Seq("vec_id"),
+      Seq(Derived.SemanticIndex(idx, nlist = 2, probeCells = 1)),
+      numBuckets = 4)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -983,6 +948,70 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(stored.count(_._1 == 2L) == 1,
       "the moved vector's stale posting was deleted, not shadowed")
     assert(stored.exists(_._1 == 5L))
+  }
+
+  test("streamingStage: one stream keeps a change feed, a MinHash index " +
+    "and a KLL profile in lockstep with the target across micro-batches") {
+    import graft.functions.KllSketch
+    import graft.sink.BucketedMergeSink
+    import org.apache.spark.sql.functions.{col, lit}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val dir = tmp("graft-ss-src")
+    val target = tmp("graft-ss-tgt") + "/t"
+    val feed = tmp("graft-ss-feed") + "/f"
+    val idx = tmp("graft-ss-idx") + "/i"
+    val prof = tmp("graft-ss-pr") + "/p"
+    // b0 inserts docs 1-3; b1 rewrites doc 1 (text and value) and
+    // inserts doc 4
+    val batches = Seq(
+      Seq((1L, "alpha beta gamma delta", 10.0), (2L, "eps zeta eta theta", 20.0),
+        (3L, "alpha beta gamma delta eps", 30.0)),
+      Seq((1L, "completely different words now", 500.0),
+        (4L, "alpha beta gamma", 40.0)))
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      writeSourceBatch(dir, rows.toDF("doc_id", "text", "v"), i)
+    }
+    val stream = spark.readStream
+      .schema("doc_id LONG, text STRING, v DOUBLE")
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+    val q = Streams.streamingStage(stream, target, Seq("doc_id"),
+      Seq(Derived.ChangeFeed(feed), Derived.MinhashIndex(idx),
+        Derived.KllProfile(prof, "v")),
+      numBuckets = 4)
+      .option("checkpointLocation", tmp("graft-ss-ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val versions = BucketedMergeSink.manifestVersions(spark, target).sorted
+    assert(versions == Seq(1L, 2L), s"one version per micro-batch: $versions")
+    // the outbox replays to the target
+    val replica = tmp("graft-ss-rep") + "/r"
+    BucketedMergeSink.subscribeFeed(spark, feed, replica, Seq("doc_id"),
+      numBuckets = 4): Unit
+    def rows(p: String) = BucketedMergeSink.read(spark, p)
+      .as[(Long, String, Double)].collect().toSet
+    assert(rows(replica) == rows(target), "outbox replay must equal the target")
+    // the postings equal a fresh signing of the target
+    val stored = BucketedMergeSink.readPostings(spark, idx)
+      .select("id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
+    val fresh = graft.ops.Dedup.minhashBandIndex(
+      BucketedMergeSink.read(spark, target), idCol = "doc_id")
+      .as[(Long, Int, Long)].collect().toSet
+    assert(stored == fresh, "the index must equal a fresh signing of the target")
+    // one KLL row per retained version, each equal to a fresh sketch of
+    // that version (exact regime: same n, KS distance 0)
+    val kll = spark.read.parquet(prof)
+      .select(col("version").cast("long"), col("n"), col("sk"))
+      .orderBy("version").as[(Long, Long, Array[Byte])].collect().toSeq
+    assert(kll.map(_._1) == versions, s"one KLL row per version: ${kll.map(_._1)}")
+    kll.foreach { case (v, n, sk) =>
+      val (freshN, ks) = BucketedMergeSink.readVersion(spark, target, v)
+        .agg(KllSketch.kllSketch(col("v")).as("f"))
+        .select(KllSketch.kllN(col("f")), KllSketch.kllKs(col("f"), lit(sk)))
+        .as[(Long, Double)].head()
+      assert(n == freshN && ks == 0.0,
+        s"v$v: stored sketch must equal a fresh sketch (n $n vs $freshN, KS $ks)")
+    }
   }
 
   test("streamingMergeWithFeed: each micro-batch materializes its CDC " +
