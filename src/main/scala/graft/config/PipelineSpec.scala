@@ -217,42 +217,57 @@ object PipelineSpec {
     PipelineSpec(pipelines, stages)
   }
 
+  /** One YAML mapping, read key by key: `done(result)` returns the
+    * parsed result only if every key was asked for, so a typo such as
+    * `outbox_kep: 3` fails loudly at parse time instead of being
+    * dropped silently. */
+  private final class Fields(what: String, c: collection.Map[String, Object]) {
+    private val asked = collection.mutable.Set.empty[String]
+    // flatMap(Option(_)): a YAML key with an EMPTY value parses to null —
+    // treat it as absent instead of NPE-ing with no stage context
+    def get(k: String): Option[Object] = { asked += k; c.get(k).flatMap(Option(_)) }
+    def done[A](result: A): A = {
+      val unknown = c.keySet.diff(asked).toSeq.sorted
+      require(unknown.isEmpty, s"$what has unknown key(s): ${unknown.mkString(", ")}")
+      result
+    }
+  }
+
   /** `sources: {viewName: {format: csv, path: ..., schema: ...,
     * options: {k: v}}}` — per-stage declared inputs, registered as temp
     * views before the extract query runs (SURVEY Layer B "Scans"). */
-  private def parseSources(c: Map[String, Object]): Map[String, graft.sources.SourceSpec] =
+  private def parseSources(c: Fields): Map[String, graft.sources.SourceSpec] =
     c.get("sources") match {
       case Some(m: ju.Map[_, _]) =>
         m.asScala.map { case (view, cfg) =>
-          val sc = cfg.asInstanceOf[ju.Map[String, Object]].asScala
+          val sc = new Fields(s"source '$view'",
+            cfg.asInstanceOf[ju.Map[String, Object]].asScala)
           val opts = sc.get("options") match {
             case Some(om: ju.Map[_, _]) =>
               om.asScala.map { case (k, v) => k.toString -> v.toString }.toMap
             case _ => Map.empty[String, String]
           }
-          view.toString -> graft.sources.SourceSpec(
+          view.toString -> sc.done(graft.sources.SourceSpec(
             format = sc.get("format").map(_.toString).getOrElse(
               throw new IllegalArgumentException(
                 s"source '$view' is missing the required 'format' field")),
             path = sc.get("path").map(_.toString).getOrElse(""),
             schema = sc.get("schema").map(_.toString).getOrElse(""),
-            options = opts)
+            options = opts))
         }.toMap
       case _ => Map.empty
     }
 
-  private def parseStage(name: String, c: Map[String, Object]): StageSpec = {
-    // flatMap(Option(_)): a YAML key with an EMPTY value parses to null —
-    // treat it as absent instead of NPE-ing with no stage context
-    def str(k: String, d: String) =
-      c.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    def strs(k: String): Seq[String] = c.get(k).flatMap(Option(_)) match {
+  private def parseStage(name: String, m: Map[String, Object]): StageSpec = {
+    val c = new Fields(s"pype '$name'", m)
+    def str(k: String, d: String) = c.get(k).map(_.toString).getOrElse(d)
+    def strs(k: String): Seq[String] = c.get(k) match {
       case Some(l: ju.List[_]) =>
         l.asScala.toSeq.flatMap(x => Option(x)).map(_.toString)
       case Some(s) => Seq(s.toString)
       case None    => Nil
     }
-    StageSpec(
+    c.done(StageSpec(
       name = name,
       extractQuery = str("extract_query", ""),
       sources = parseSources(c),
@@ -260,7 +275,7 @@ object PipelineSpec {
       targetTable = str("target_table", ""),
       loadType = str("type", "upsert"),
       scd2Ts = str("scd2_ts", ""),
-      key = if (c.contains("key")) strs("key") else Seq("id"),
+      key = if (m.contains("key")) strs("key") else Seq("id"),
       identifier = str("identifier", "id"),
       fieldsExcludedFromUpdate = strs("fields_excluded_from_update"),
       postQuery = str("post_query", ""),
@@ -293,6 +308,6 @@ object PipelineSpec {
       deleteWhere = str("delete_where", ""),
       subscribeFeed = str("subscribe_feed", ""),
       consumerName = str("consumer_name", ""),
-      debug = str("debug", "false").toBoolean)
+      debug = str("debug", "false").toBoolean))
   }
 }

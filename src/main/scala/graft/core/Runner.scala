@@ -60,6 +60,12 @@ final class Runner(
   private def targetPath(table: String): String =
     if (targetRoot.isEmpty) table else s"$targetRoot/$table"
 
+  /** Where a derived or consumed table named in a stage lives: its name
+    * hydrates like the extract (`change_feed: "outbox_{run}"`), so the
+    * producer and consumer of one outbox resolve the same path. */
+  private def tablePath(ph: Map[String, String])(table: String): String =
+    targetPath(Hydrate(table, ph))
+
   /** Run every stage of `pipeline` in order; placeholder overrides follow
     * the reference rule (run-time placeholders replace ctor ones when
     * non-empty, Pypeline.py:27-28). Returns per-stage metrics.
@@ -95,8 +101,8 @@ final class Runner(
       // a consumer catching up WHILE its producer publishes races the
       // outbox listing (and the producer's own rebase) — the
       // producer→consumer chain is inherently sequential. Compare
-      // HYDRATED values: the consumer hydrates subscribe_feed at use,
-      // so a placeholder-bearing feed name must not dodge the guard
+      // HYDRATED values: both stages hydrate the outbox name at use
+      // (tablePath), so a placeholder-bearing name must not dodge the guard
       val feedRace = stages.map(s => Hydrate(s.subscribeFeed, ph))
         .filter(_.nonEmpty).toSet
         .intersect(
@@ -221,11 +227,11 @@ final class Runner(
     refuse(Seq("delete_where" -> stage.deleteWhere.nonEmpty,
       "scd2_ts" -> stage.scd2Ts.nonEmpty,
       "outbox_keep" -> (stage.outboxKeep != 0)).collect { case (k, true) => k })
-    refuse(Derived.of(stage, targetPath).map(_.stageKey))
+    refuse(Derived.of(stage, tablePath(ph)).map(_.stageKey))
     val t0 = System.nanoTime()
     val replica = targetPath(stage.targetTable)
     graft.sink.BucketedMergeSink.subscribeFeed(
-      spark, targetPath(Hydrate(stage.subscribeFeed, ph)), replica,
+      spark, tablePath(ph)(stage.subscribeFeed), replica,
       key = stage.key,
       numBuckets = if (stage.buckets > 0) stage.buckets else 64,
       retainVersions = stage.retainVersions,
@@ -271,7 +277,7 @@ final class Runner(
     // refusal and guard rides the shared load path (Derived.Load).
     val bucketed = Derived.Load(s"stage ${stage.name}", path, stage.key,
       stage.identifier, stage.loadType, stage.fieldsExcludedFromUpdate,
-      stage.buckets, stage.retainVersions, Derived.of(stage, targetPath),
+      stage.buckets, stage.retainVersions, Derived.of(stage, tablePath(ph)),
       // scd2_ts and delete_where hydrate like the extract: an
       // incremental pipeline passes each run's batch timestamp / TTL
       // cutoff as a placeholder — a hardcoded literal would stamp every

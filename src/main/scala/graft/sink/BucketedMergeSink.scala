@@ -277,15 +277,27 @@ object BucketedMergeSink {
     * data, because GC only removes dirs unreferenced by EVERY retained
     * manifest. */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
+    val mapping = retainedManifest(spark, path, version)
+    readDirs(spark, path, readMeta(spark, path), mapping, mapping.keys.toSeq)
+  }
+
+  /** The bucket -> commit-dir mapping of retained manifest `version`. */
+  private def retainedManifest(
+      spark: SparkSession, path: String, version: Long): Map[Int, String] = {
     val fs = fsOf(spark, path)
-    val meta = readMeta(spark, path)
     val p = new Path(new Path(path, manifestDir), f"v$version%09d")
     require(fs.exists(p),
       s"manifest version $version is not retained at $path " +
         s"(have: ${manifestVersions(spark, path).mkString(",")})")
-    val mapping = parseManifest(fs, p)
-    val dirs = mapping.toSeq.sortBy(_._1)
-      .map { case (b, c) => leafDir(path, c, b).toString }
+    parseManifest(fs, p)
+  }
+
+  /** The rows of `buckets` under `mapping`, read with the layout schema
+    * from their leaf dirs alone (an empty frame when none holds rows). */
+  private def readDirs(spark: SparkSession, path: String, meta: Meta,
+      mapping: Map[Int, String], buckets: Seq[Int]): DataFrame = {
+    val dirs = buckets.distinct.sorted.flatMap(b =>
+      mapping.get(b).map(c => leafDir(path, c, b).toString))
     if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
     else spark.read.schema(meta.schema).parquet(dirs: _*)
@@ -325,29 +337,16 @@ object BucketedMergeSink {
       opCol: String = "_op"): DataFrame = {
     require(fromVersion < toVersion,
       s"changesBetween wants fromVersion < toVersion, got v$fromVersion >= v$toVersion")
-    val fs = fsOf(spark, path)
     val meta = readMeta(spark, path)
     require(!meta.schema.fieldNames.contains(opCol),
       s"layout already has a '$opCol' column — pass a different opCol")
     val cols = meta.schema.fieldNames.toSeq
-    val mapOf: Long => Map[Int, String] = { v =>
-      val p = new Path(new Path(path, manifestDir), f"v$v%09d")
-      require(fs.exists(p),
-        s"manifest version $v is not retained at $path " +
-          s"(have: ${manifestVersions(spark, path).mkString(",")})")
-      parseManifest(fs, p)
-    }
-    val mFrom = mapOf(fromVersion)
-    val mTo = mapOf(toVersion)
+    val mFrom = retainedManifest(spark, path, fromVersion)
+    val mTo = retainedManifest(spark, path, toVersion)
     // manifest-diff prune: same commit dir ⇒ same bytes ⇒ no changes
-    val touched = (mFrom.keySet ++ mTo.keySet).toSeq.sorted
+    val touched = (mFrom.keySet ++ mTo.keySet).toSeq
       .filter(b => mFrom.get(b) != mTo.get(b))
-    def slice(m: Map[Int, String]): DataFrame = {
-      val dirs = touched.flatMap(b => m.get(b).map(c => leafDir(path, c, b).toString))
-      if (dirs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-      else spark.read.schema(meta.schema).parquet(dirs: _*)
-    }
+    def slice(m: Map[Int, String]) = readDirs(spark, path, meta, m, touched)
     val k = meta.key ++ extraKey
     val t = slice(mFrom).withColumn("__t", lit(true)).alias("t")
     val b = slice(mTo).withColumn("__b", lit(true)).alias("b")
@@ -412,7 +411,7 @@ object BucketedMergeSink {
       extraKey: Seq[String] = Nil): Seq[Long] = {
     val fs = fsOf(spark, feedPath)
     val vs = manifestVersions(spark, path)
-    def partDir(v: Long) = new Path(feedPath, s"batch_id=$v")
+    def partDir(v: Long) = outboxPart(feedPath, v)
     // idempotence gate is COMMIT SUCCESS, not directory existence: the
     // parquet job creates the dir first and `_SUCCESS` last, so a crash
     // mid-write leaves a dir holding only `_temporary/` or partial part
@@ -427,16 +426,13 @@ object BucketedMergeSink {
         Some(v)
       }
     }
-    def insertAll(v: Long): DataFrame = {
+    // the all-inserts base of retained version v
+    def base(v: Long): Option[Long] = writeFeedBase(fs, partDir(v)) { staged =>
       val t = readVersion(spark, path, v)
       t.select((lit("insert").as("_op") +: t.columns.toSeq.map(col)): _*)
+        .write.mode("overwrite").parquet(staged)
     }
-    val existing: Seq[Long] =
-      if (!fs.exists(new Path(feedPath))) Nil
-      else fs.listStatus(new Path(feedPath)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong).sorted
-    val feedStarted = existing.nonEmpty
+    val existing = outboxBatches(fs, feedPath)
     // a marked-base OLDEST partition is a [[compactOutbox]] rebase
     // point: every partition at or below it was DELIBERATELY pruned.
     // Publish must respect that floor — the retention window can be
@@ -451,7 +447,7 @@ object BucketedMergeSink {
     val rebasedAt: Option[Long] = existing.headOption.filter(b =>
       fs.exists(new Path(partDir(b), baseMarker)))
     val bootstrap =
-      if (!feedStarted)
+      if (existing.isEmpty)
         // empty feed: all-inserts base at the oldest retained version
         // (v1's base and a mid-life base are the same construction);
         // marked _base so a consumer can tell a true base from a
@@ -461,17 +457,13 @@ object BucketedMergeSink {
         // crash window where the partition is committed but unmarked —
         // re-publish would skip it ("already published") and every fresh
         // consumer would refuse the feed forever as a pruned prefix.
-        vs.headOption.flatMap(v => writeFeedBase(fs, partDir(v)) {
-          staged => insertAll(v).write.mode("overwrite").parquet(staged)
-        })
+        vs.headOption.flatMap(base)
       else if (rebasedAt.isEmpty && vs.head == 1L)
         // started, never rebased, v1 retained: batch 1 should exist as
         // the marked base — writeFeedBase is a no-op when it does and
         // heals a hand-pruned or legacy-unmarked one while v1 can still
         // be reconstructed
-        writeFeedBase(fs, partDir(1L)) { staged =>
-          insertAll(1L).write.mode("overwrite").parquet(staged)
-        }
+        base(1L)
       else if (vs.head > rebasedAt.getOrElse(0L) && !fs.exists(partDir(vs.head)))
         throw new IllegalStateException(
           s"change feed at $feedPath has no partition for v${vs.head}, the " +
@@ -756,35 +748,40 @@ object BucketedMergeSink {
   /** The CONSUMER side of the CDC outbox at the TABLE level: apply every
     * not-yet-applied `batch_id=<N>` partition of the outbox at
     * `feedPath` ([[publishChangeFeed]]'s layout) to the replica target
-    * at `replicaPath`, in batch order — downstream replication as one
-    * idempotent catch-up call, the same contract shape as the index
-    * syncs. Returns the batch ids applied.
+    * at `replicaPath` — downstream replication as one idempotent
+    * catch-up call, the same contract shape as the index syncs. Returns
+    * the batch ids applied.
     *
-    * Per batch: `insert`/`update_post` rows UPSERT (their key's old row
-    * is replaced — `update_pre` rows carry no extra information and are
-    * skipped), `delete` rows delete by key. Net-change feeds give each
-    * key at most one op per batch, so the two merges commute. Against a
-    * bucketed replica both legs cost O(touched buckets); a fresh
-    * replica's first application is the outbox's base partition (which
-    * [[publishChangeFeed]] guarantees is a self-contained all-inserts
-    * snapshot), establishing the layout with `numBuckets`.
+    * The pending partitions apply as ONE net change ([[foldOutbox]]):
+    * each key's newest `insert`/`update_post` row UPSERTs (its old row is
+    * replaced), a key whose newest op is `delete` is deleted by key — at
+    * most one delete merge and one upsert merge per call, however many
+    * batches are pending. When a pending partition is a marked base (the
+    * bootstrap, or a [[compactOutbox]] rebase point) the fold starts
+    * there and its result is a full snapshot: ONE merge replaces the
+    * replica wholesale. Upserting into the existing replica would strand
+    * rows deleted between this consumer's cursor and the rebase point
+    * (their delete ops were pruned with the old partitions). Against a
+    * bucketed replica both legs cost O(touched buckets); a fresh replica
+    * is established with `numBuckets`.
     *
     * Progress lives in the sibling marker dir `<replicaPath>.applied`
-    * (markers of a vanished replica reset on the next call); markers
-    * land AFTER a batch's merges, so a crash in between replays the
-    * batch — idempotent, like the index syncs. An outbox whose oldest
-    * retained partition has moved past the replica's cursor (someone
-    * pruned the outbox) refuses loudly: the missing deltas are
-    * unreconstructable, rebuild the replica. SCD2 outboxes pair rows on
-    * (key, valid_from) — pass that composite `key`; composite keys are
-    * fine for the upsert leg, and scd2 feeds never carry deletes.
+    * (markers of a vanished replica reset on the next call); the marker
+    * of the last applied batch lands AFTER the merges, so a crash in
+    * between replays the same net change — idempotent, like the index
+    * syncs. An outbox whose oldest retained partition has moved past the
+    * replica's cursor (someone pruned the outbox) refuses loudly: the
+    * missing deltas are unreconstructable, rebuild the replica. SCD2
+    * outboxes pair rows on (key, valid_from) — pass that composite
+    * `key`; composite keys are fine for the upsert leg, and scd2 feeds
+    * never carry deletes.
     *
     * A partition WITHOUT `_SUCCESS` is a publish still in flight (or a
-    * producer crash's torn leftover): the catch-up STOPS there without
-    * marking — applying whatever part files happen to be visible would
-    * commit a half-batch and advance the cursor past it, permanent
-    * silent divergence. The next call picks up where the producer's
-    * rewrite left a committed partition; this is what makes the
+    * producer crash's torn leftover): the catch-up STOPS there — applying
+    * whatever part files happen to be visible would commit a half-batch
+    * and advance the cursor past it, permanent silent divergence. The
+    * next call picks up where the producer's rewrite left a committed
+    * partition; this is what makes the
     * [[graft.streaming.Streams.subscribeFeedStream]] daemon safe to run
     * concurrently with its producer.
     *
@@ -808,9 +805,80 @@ object BucketedMergeSink {
     val feedFs = fsOf(spark, feedPath)
     require(feedFs.exists(new Path(feedPath)),
       s"no outbox at $feedPath — publish a change feed there first")
-    val batches = feedFs.listStatus(new Path(feedPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
+    val batches = outboxBatches(feedFs, feedPath)
+    val fs = fsOf(spark, replicaPath)
+    val appliedDir = new Path(replicaPath.stripSuffix("/") + ".applied")
+    // markers without a replica = a rebuilt/deleted replica; start fresh
+    if (fs.exists(appliedDir) && !fs.exists(new Path(replicaPath)))
+      fs.delete(appliedDir, true)
+    val last = lastApplied(fs, appliedDir)
+    val pending = pendingRun(feedFs, feedPath, batches, last, upTo)
+    require(last == 0L || last >= batches.head - 1,
+      s"replica at $replicaPath last applied batch $last but the " +
+        s"outbox's oldest partition is batch ${batches.head}: the " +
+        "intermediate deltas were pruned and cannot be replayed. " +
+        "Rebuild the replica (delete it and its .applied dir).")
+    if (pending.isEmpty) return Nil
+    val (net, fromBase) = foldOutbox(spark, feedFs, feedPath, pending, key)
+    net.foreach { rows =>
+      // both legs read the fold: compute it once
+      rows.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // a fold from a base is a full snapshot: it replaces the replica;
+        // a composite key's fold carries no deletes (refused in the fold)
+        if (fromBase) fs.delete(new Path(replicaPath), true)
+        else if (key.size == 1)
+          merge(spark, rows.filter(col("_op") === "delete").select(key.head),
+            replicaPath, "delete", identifier = key.head,
+            numBuckets = numBuckets, retainVersions = retainVersions)
+        merge(spark, rows.filter(col("_op") =!= "delete").drop("_op"),
+          replicaPath, "upsert", key = key, identifier = key.head,
+          numBuckets = numBuckets, retainVersions = retainVersions)
+      } finally rows.unpersist(false)
+    }
+    markApplied(fs, appliedDir, pending.last)
+    if (consumerName.nonEmpty)
+      markApplied(feedFs, new Path(consumersDir(feedPath), consumerName),
+        pending.last)
+    pending
+  }
+
+  /** Marker file inside a base outbox partition: its rows are a full
+    * all-inserts SNAPSHOT (the bootstrap, or a [[compactOutbox]] rebase
+    * point), not a delta. Underscore prefix keeps parquet readers from
+    * treating it as data. */
+  private val baseMarker = "_base"
+
+  /** A feed partition counts as PUBLISHED only once the parquet job's
+    * `_SUCCESS` commit marker exists — the dir itself appears first and
+    * the marker last, so bare existence spans the whole crash window. An
+    * empty delta (a compact's no-op diff) is published too: it has
+    * `_SUCCESS` and zero part files. */
+  private def isPublished(fs: FileSystem, partDir: Path): Boolean =
+    fs.exists(new Path(partDir, "_SUCCESS"))
+
+  private def outboxPart(feedPath: String, batch: Long): Path =
+    new Path(feedPath, s"batch_id=$batch")
+
+  /** The batch ids of the outbox at `feedPath`, ascending; empty when
+    * the outbox does not exist. The one listing every producer, consumer
+    * and compactor of an outbox goes through. */
+  private[graft] def outboxBatches(fs: FileSystem, feedPath: String): Seq[Long] = {
+    val dir = new Path(feedPath)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch_id="))
       .map(_.stripPrefix("batch_id=").toLong).sorted
+  }
+
+  /** The run of `batches` (the outbox's ids) a consumer at cursor `last`
+    * (0 = fresh) applies: every batch in (last, upTo], in order, STOPPING
+    * (not skipping) at the first unpublished partition — batches are
+    * ordered deltas, so applying past a torn one would replay history
+    * out of order even after the producer repairs it. Refuses an outbox
+    * no consumer can replay. */
+  private def pendingRun(fs: FileSystem, feedPath: String, batches: Seq[Long],
+      last: Long, upTo: Long): Seq[Long] = {
     require(batches.nonEmpty, s"outbox at $feedPath has no batch partitions")
     require(batches.head >= 1,
       s"outbox at $feedPath starts at batch_id=${batches.head} — " +
@@ -822,102 +890,70 @@ object BucketedMergeSink {
     require(batches == (batches.head to batches.last),
       s"outbox at $feedPath has gaps in its batch ids " +
         s"(${batches.mkString(",")}) — a pruned outbox cannot be replayed")
-    val fs = fsOf(spark, replicaPath)
-    val appliedDir = new Path(replicaPath.stripSuffix("/") + ".applied")
-    // markers without a replica = a rebuilt/deleted replica; start fresh
-    if (fs.exists(appliedDir) && !fs.exists(new Path(replicaPath)))
-      fs.delete(appliedDir, true)
-    val last = lastApplied(fs, appliedDir)
-    require(last == 0L || last >= batches.head - 1,
-      s"replica at $replicaPath last applied batch $last but the " +
-        s"outbox's oldest partition is batch ${batches.head}: the " +
-        "intermediate deltas were pruned and cannot be replayed. " +
-        "Rebuild the replica (delete it and its .applied dir).")
     // a FRESH consumer needs the oldest partition to be a base — batch 1
     // (delta from empty) or a marked all-inserts snapshot. A consecutive
     // run of deltas whose base was hand-pruned outside compactOutbox
     // would replay into a silently incomplete replica.
     require(last != 0L || batches.head == 1L ||
-        feedFs.exists(new Path(
-          new Path(feedPath, s"batch_id=${batches.head}"), baseMarker)),
+        fs.exists(new Path(outboxPart(feedPath, batches.head), baseMarker)),
       s"outbox at $feedPath has no base: its oldest partition " +
         s"(batch ${batches.head}) is an unmarked delta — the base was " +
         "pruned outside compactOutbox. Rebase the outbox (compactOutbox) " +
         "or start a fresh feed before subscribing new replicas.")
-    val done = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def applyBatch(b: Long): Unit = {
-      val partDir = new Path(feedPath, s"batch_id=$b")
-      // an EMPTY delta (a compact's no-op diff) may have been written
-      // with zero part files — only _SUCCESS — and a parquet read of
-      // that dir fails schema inference; it applies as a no-op
-      val hasData = feedFs.listStatus(partDir).exists(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      if (!hasData) return
-      val part = spark.read.parquet(partDir.toString)
-      if (feedFs.exists(new Path(partDir, baseMarker)) &&
-          fs.exists(new Path(replicaPath))) {
-        // a REBASED partition ([[compactOutbox]]): its all-inserts rows
-        // are a full snapshot, not a delta — replace the replica
-        // wholesale. Upserting into the existing replica would strand
-        // rows deleted between this consumer's cursor and the rebase
-        // point (their delete ops were pruned with the old partitions).
-        val rows = part.filter(col("_op") === "insert").drop("_op")
-        fs.delete(new Path(replicaPath), true)
-        merge(spark, rows, replicaPath, "upsert", key = key,
-          identifier = key.head, numBuckets = numBuckets,
-          retainVersions = retainVersions)
-        return
-      }
-      // ONE op-count job decides both legs (r18: the two isEmpty probes
-      // were two extra executions of the partition scan per batch —
-      // guide §1.2: don't compute things you throw away)
-      val ops = part.groupBy("_op").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (ops.getOrElse("delete", 0L) > 0L) {
-        require(key.size == 1,
-          s"outbox at $feedPath carries delete ops in batch $b but the " +
-            s"replica key is composite (${key.mkString(",")}) — deletes " +
-            "route by a single identifier column")
-        val dels = part.filter(col("_op") === "delete")
-          .select(col(key.head)).distinct()
-        merge(spark, dels, replicaPath, "delete", identifier = key.head,
-          numBuckets = numBuckets, retainVersions = retainVersions)
-      }
-      if (ops.getOrElse("insert", 0L) + ops.getOrElse("update_post", 0L) > 0L)
-        merge(spark,
-          part.filter(col("_op").isin("insert", "update_post")).drop("_op"),
-          replicaPath, "upsert", key = key,
-          identifier = key.head, numBuckets = numBuckets,
-          retainVersions = retainVersions)
-    }
-    // stop (don't skip) at the first unpublished partition: batches are
-    // ordered deltas, so applying past a torn one would replay history
-    // out of order even after the producer repairs it
-    val pending = batches.filter(b => b > last && b <= upTo)
-      .takeWhile(b => isPublished(feedFs, new Path(feedPath, s"batch_id=$b")))
-    for (b <- pending) {
-      applyBatch(b)
-      markApplied(fs, appliedDir, b)
-      if (consumerName.nonEmpty)
-        markApplied(feedFs,
-          new Path(consumersDir(feedPath), consumerName), b)
-      done += b
-    }
-    done.toSeq
+    batches.filter(b => b > last && b <= upTo)
+      .takeWhile(b => isPublished(fs, outboxPart(feedPath, b)))
   }
 
-  /** Marker file inside a rebased outbox partition: its rows are a full
-    * all-inserts SNAPSHOT ([[compactOutbox]]), not a delta. Underscore
-    * prefix keeps parquet readers from treating it as data. */
-  private val baseMarker = "_base"
+  /** Column the fold tags each outbox row with its batch id. Reserved:
+    * each partition is read on its own rather than through partition
+    * discovery, so a table column named `batch_id` keeps its own values. */
+  private val outboxBatchCol = "__outbox_batch"
 
-  /** A feed partition counts as PUBLISHED only once the parquet job's
-    * `_SUCCESS` commit marker exists — the dir itself appears first and
-    * the marker last, so bare existence spans the whole crash window. An
-    * empty delta (a compact's no-op diff) is published too: it has
-    * `_SUCCESS` and zero part files. */
-  private def isPublished(fs: FileSystem, partDir: Path): Boolean =
-    fs.exists(new Path(partDir, "_SUCCESS"))
+  /** The NET change of the published outbox partitions `run`: each
+    * partition read on its own, tagged with its batch id and unioned into
+    * one plan; the result is each key's newest `insert`/`update_post`/
+    * `delete` row, `_op` included. Within one batch an upsert row
+    * outranks a delete row (the order a batch-by-batch replay applied
+    * them in); `update_pre` rows carry nothing. A marked base in the run
+    * is a snapshot that supersedes every older partition, so the fold
+    * starts at the newest one and says so (`fromBase`: the rows are a
+    * full snapshot). Applying the net change leaves the table a
+    * batch-by-batch replay would; [[subscribeFeed]] applies it and
+    * [[compactOutbox]] writes it as a base, so apply and rebase
+    * semantics cannot drift. The result is a plan, not data: a caller
+    * that reads it twice persists it.
+    *
+    * No rows (None) when no partition holds data: an EMPTY delta (a
+    * compact's no-op diff) may have been written with zero part files,
+    * and a parquet read of such a dir fails schema inference. Deletes
+    * route by a single identifier column, so a composite key refuses
+    * when any folded batch carries a delete row, as the batch-by-batch
+    * replay did. */
+  private def foldOutbox(spark: SparkSession, fs: FileSystem, feedPath: String,
+      run: Seq[Long], key: Seq[String]): (Option[DataFrame], Boolean) = {
+    val base = run.lastIndexWhere(b =>
+      fs.exists(new Path(outboxPart(feedPath, b), baseMarker)))
+    val parts = run.drop(math.max(base, 0)).filter(b =>
+      fs.listStatus(outboxPart(feedPath, b)).exists(s => s.isFile &&
+        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
+    val feed = Option.when(parts.nonEmpty)(parts.map { b =>
+      val part = spark.read.parquet(outboxPart(feedPath, b).toString)
+      require(!part.columns.contains(outboxBatchCol),
+        s"outbox at $feedPath has a '$outboxBatchCol' column, reserved for the fold")
+      part.withColumn(outboxBatchCol, lit(b))
+    }.reduce(_ unionByName _).filter(col("_op") =!= "update_pre"))
+    for (f <- feed if key.size > 1;
+         del <- Option(f.filter(col("_op") === "delete").agg(min(outboxBatchCol)).head().get(0)))
+      throw new IllegalArgumentException(
+        s"outbox at $feedPath carries delete ops in batch $del but " +
+          s"the replica key is composite (${key.mkString(",")}) — deletes " +
+          "route by a single identifier column")
+    val net = feed.map(f => f.groupBy(key.map(col): _*)
+      .agg(max_by(struct(f.columns.toSeq.map(col): _*),
+        struct(col(outboxBatchCol), col("_op") =!= "delete")).as("r"))
+      .select("r.*").drop(outboxBatchCol))
+    (net, base >= 0)
+  }
 
   /** Sibling dir holding one cursor-marker dir per REGISTERED consumer
     * of the outbox at `feedPath` ([[subscribeFeed]]'s `consumerName`) —
@@ -946,6 +982,9 @@ object BucketedMergeSink {
     fs.delete(new Path(consumersDir(feedPath), name), true)
   }
 
+  private def baseStage(partDir: Path): Path =
+    new Path(partDir.getParent, "." + partDir.getName + ".base-stage")
+
   /** Publish an all-inserts BASE partition atomically: write into a
     * staged sibling dir (`writeStaged` receives its path), stamp the
     * [[baseMarker]] there, then rename over `partDir` — partition
@@ -954,15 +993,16 @@ object BucketedMergeSink {
     * exists is a finished stage from a crashed run (marker is written
     * last): the swap is completed without rewriting. Returns the batch
     * id published, or None when the partition is already a marked,
-    * committed base (idempotent catch-up). Shared by
-    * [[publishChangeFeed]]'s bootstrap and the streaming producer's
-    * ([[graft.streaming.Streams.streamingMergeWithFeed]]). */
+    * committed base (idempotent catch-up). Every base goes through
+    * here: [[publishChangeFeed]]'s bootstrap, the streaming producer's
+    * ([[graft.streaming.Streams.streamingMergeWithFeed]]) and
+    * [[compactOutbox]]'s rebase. */
   private[graft] def writeFeedBase(fs: FileSystem, partDir: Path)(
       writeStaged: String => Unit): Option[Long] = {
     if (isPublished(fs, partDir) && fs.exists(new Path(partDir, baseMarker)))
       None
     else {
-      val staged = new Path(partDir.getParent, "." + partDir.getName + ".base-stage")
+      val staged = baseStage(partDir)
       if (!fs.exists(new Path(staged, baseMarker))) {
         writeStaged(staged.toString) // mode("overwrite") cleans torn stages
         fs.create(new Path(staged, baseMarker), true).close()
@@ -991,69 +1031,53 @@ object BucketedMergeSink {
     *     unreconstructable) — pick `upTo` no newer than your laggiest
     *     consumer's cursor + 1.
     *
-    * The snapshot is folded through the consumer machinery itself (a
-    * scratch replica under `<feedPath>.rebase-tmp`), so base semantics
-    * can never drift from apply semantics. Single-writer like the
-    * producer side; a crash mid-rebase leaves either the old layout
-    * (re-run) or a visible gap that consumers refuse loudly — never a
-    * silently wrong feed. */
+    * The snapshot is the net change of every partition up to `upTo`
+    * ([[foldOutbox]], the fold [[subscribeFeed]] applies), so base
+    * semantics can never drift from apply semantics; it is published
+    * with [[writeFeedBase]] before anything is pruned. Single-writer
+    * like the producer side; a crash mid-rebase leaves either the old
+    * layout (re-run) or a visible gap that consumers refuse loudly and
+    * a re-run heals — never a silently wrong feed. */
   def compactOutbox(
       spark: SparkSession,
       feedPath: String,
       upTo: Long,
-      key: Seq[String] = Seq("id"),
-      numBuckets: Int = 16): Seq[Long] = {
+      key: Seq[String] = Seq("id")): Seq[Long] = {
     val fs = fsOf(spark, feedPath)
-    // heal a crash between the swap's delete and rename: the staged base
-    // is complete (marker written last), finish the rename and continue
-    val stagedPrev = new Path(feedPath, s".rebase-part-$upTo")
-    if (fs.exists(stagedPrev) &&
-        fs.exists(new Path(stagedPrev, baseMarker)) &&
-        !fs.exists(new Path(feedPath, s"batch_id=$upTo")))
-      require(fs.rename(stagedPrev, new Path(feedPath, s"batch_id=$upTo")),
-        s"rebase heal failed: could not rename $stagedPrev")
-    val batches = fs.listStatus(new Path(feedPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).sorted
+    val partDir = outboxPart(feedPath, upTo)
+    // heal a crash between writeFeedBase's delete and rename: the staged
+    // base is complete (marker written last), so this only renames it
+    if (!fs.exists(partDir) && fs.exists(new Path(baseStage(partDir), baseMarker)))
+      writeFeedBase(fs, partDir)(_ => ()): Unit
+    val batches = outboxBatches(fs, feedPath)
     require(batches.contains(upTo),
       s"outbox at $feedPath has no batch $upTo (batches: ${batches.mkString(",")})")
     val prune = batches.filter(_ < upTo)
-    val partDir = new Path(feedPath, s"batch_id=$upTo")
     if (prune.isEmpty && fs.exists(new Path(partDir, baseMarker)))
       return Nil // already rebased here
-    // fold state-as-of-upTo through subscribeFeed itself
-    val tmp = feedPath.stripSuffix("/") + ".rebase-tmp"
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(tmp + ".applied"), true)
-    val folded = subscribeFeed(spark, feedPath, tmp, key, numBuckets, upTo = upTo)
     // the fold STOPS at an unpublished (torn) partition; rebasing there
     // would stamp a partial state as a full base — refuse instead
-    require(folded.lastOption.contains(upTo),
+    val run = pendingRun(fs, feedPath, batches, 0L, upTo)
+    require(run.lastOption.contains(upTo),
       s"outbox at $feedPath has an unpublished partition at or below " +
         s"batch $upTo (a producer publish crashed or is in flight) — " +
         "run the producer's catch-up to repair it before compacting")
-    val state = read(spark, tmp)
-    val base = state.select(
-      (lit("insert").as("_op") +: state.columns.toSeq.map(col)): _*)
-    // stage the base OUTSIDE the partition, then swap: a consumer must
-    // never observe a half-written base without its marker
-    val staged = new Path(feedPath, s".rebase-part-$upTo")
-    fs.delete(staged, true)
-    base.write.mode("overwrite").parquet(staged.toString)
-    fs.create(new Path(staged, baseMarker), true).close()
-    fs.delete(partDir, true)
-    require(fs.rename(staged, partDir),
-      s"rebase swap failed: could not rename $staged over $partDir")
-    prune.foreach(b => fs.delete(new Path(feedPath, s"batch_id=$b"), true))
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(tmp + ".applied"), true)
+    val (net, _) = foldOutbox(spark, fs, feedPath, run, key)
+    require(net.nonEmpty,
+      s"outbox at $feedPath holds no rows up to batch $upTo to rebase")
+    writeFeedBase(fs, partDir) { staged =>
+      net.get.filter(col("_op") =!= "delete")
+        .withColumn("_op", lit("insert")).write.mode("overwrite").parquet(staged)
+    }: Unit
+    prune.foreach(b => fs.delete(outboxPart(feedPath, b), true))
     prune
   }
 
   /** [[compactOutbox]] by RETENTION COUNT: keep only the newest `keep`
-    * batch partitions, rebasing at the oldest survivor. No-op while the
-    * outbox holds `keep` or fewer. The policy knob behind the
-    * `outbox_keep:` stage key.
+    * batch partitions, rebasing at the oldest survivor — its base is the
+    * net change of every partition up to it, the fold [[subscribeFeed]]
+    * applies. No-op while the outbox holds `keep` or fewer. The policy
+    * knob behind the `outbox_keep:` stage key.
     *
     * REGISTERED consumers ([[subscribeFeed]]'s `consumerName`) hold the
     * rebase back: the rebase point is clamped to the laggiest registered
@@ -1067,14 +1091,10 @@ object BucketedMergeSink {
       spark: SparkSession,
       feedPath: String,
       keep: Int,
-      key: Seq[String] = Seq("id"),
-      numBuckets: Int = 16): Seq[Long] = {
+      key: Seq[String] = Seq("id")): Seq[Long] = {
     require(keep >= 1, s"outbox_keep must be >= 1, got $keep")
     val fs = fsOf(spark, feedPath)
-    if (!fs.exists(new Path(feedPath))) return Nil
-    val batches = fs.listStatus(new Path(feedPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).sorted
+    val batches = outboxBatches(fs, feedPath)
     if (batches.size <= keep) return Nil
     val requested = batches(batches.size - keep)
     // clamp to the laggiest REGISTERED consumer's cursor + 1 (a consumer
@@ -1088,7 +1108,7 @@ object BucketedMergeSink {
     val rebaseAt = laggiest.fold(requested)(c =>
       math.max(batches.head, math.min(requested, c + 1)))
     if (rebaseAt <= batches.head) Nil // nothing older to prune
-    else compactOutbox(spark, feedPath, rebaseAt, key, numBuckets)
+    else compactOutbox(spark, feedPath, rebaseAt, key)
   }
 
   /** Test seam for the concurrent-writer spec: invoked between a
@@ -1196,13 +1216,7 @@ object BucketedMergeSink {
     * explicit leaf dirs — untouched buckets are never even listed
     * (path-level pruning; pinned in BucketedMergeSinkSpec). */
   def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): DataFrame = {
-    val meta = readMeta(spark, path)
-    val mapping = readManifest(spark, path)
-    val dirs = buckets.distinct.sorted.flatMap(b =>
-      mapping.get(b).map(c => leafDir(path, c, b).toString))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    else spark.read.schema(meta.schema).parquet(dirs: _*)
+    readDirs(spark, path, readMeta(spark, path), readManifest(spark, path), buckets)
   }
 
   /** Point-lookup / keyed read: prune to the buckets the given key rows

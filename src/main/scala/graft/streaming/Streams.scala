@@ -532,10 +532,7 @@ object Streams {
       // feed. Gated on "no batch partitions at all", so a later
       // compactOutbox pruning batch 1 never re-triggers it; atomic via
       // the shared stage-and-rename.
-      val feedStarted = fs.exists(new org.apache.hadoop.fs.Path(feedPath)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(feedPath))
-          .exists(_.getPath.getName.startsWith("batch_id="))
-      if (!feedStarted) {
+      if (sink.outboxBatches(fs, feedPath).isEmpty) {
         // base needs the WHOLE pre-attach target, not the keyed slice
         val pre =
           if (sink.isBucketed(spark, path)) sink.read(spark, path)

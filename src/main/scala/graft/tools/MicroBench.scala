@@ -22,24 +22,6 @@ object MicroBench {
     val docs = graft.Tables.load(spark, sfDir, "documents")
     import graft.ops.Dedup
 
-    // expose the private charShingles/shingles shapes inline (same exprs)
-    def normalize(c: org.apache.spark.sql.Column) =
-      regexp_replace(lower(trim(c)), "\\s+", " ")
-    def charShingles(text: org.apache.spark.sql.Column, k: Int = 5) =
-      array_distinct(
-        when(length(text) < k, array(text))
-          .otherwise(transform(
-            sequence(lit(1), length(text) - (k - 1)),
-            i => text.substr(i, lit(k)))))
-    def wordShingles(text: org.apache.spark.sql.Column, k: Int = 3) = {
-      val toks = split(text, " ")
-      array_distinct(
-        when(size(toks) < k, array(concat_ws(" ", toks)))
-          .otherwise(transform(
-            slice(toks, lit(1), greatest(size(toks) - (k - 1), lit(1))),
-            (_, i) => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-    }
-
     val wide = docs.repartition(spark.sparkContext.defaultParallelism)
 
     def run(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
@@ -53,24 +35,16 @@ object MicroBench {
     }
 
     which match {
-      case "char_shingle_hof" =>
-        run("charShingles HOF sizes")(
-          wide.select(size(charShingles(normalize(col("text")))).as("n")))
-      case "char_shingle_hof_full" =>
-        run("charShingles HOF full arrays")(
-          wide.select(charShingles(normalize(col("text"))).as("sh")))
-      case "word_shingle_hof" =>
-        run("wordShingles HOF sizes")(
-          wide.select(size(wordShingles(normalize(col("text")))).as("n")))
       case "char_signer" =>
         run("charGramMinhash native")(
           wide.select(graft.functions.SketchExprs
-            .charGramMinhash(normalize(col("text")), 5, 32).as("sig")))
+            .charGramMinhash(Dedup.normalize(col("text")), 5, 32).as("sig")))
       case "intersect" =>
         // candidate-pair-shaped intersect workload: all pairs of the
         // first 200 docs by id (~20k pairs), char shingle sets
         val sh = wide.filter(col("doc_id") < 200)
-          .select(col("doc_id").as("id"), charShingles(normalize(col("text"))).as("sh"))
+          .select(col("doc_id").as("id"),
+            Dedup.charShingles(Dedup.normalize(col("text"))).as("sh"))
           .localCheckpoint(true)
         val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
         val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))

@@ -1160,7 +1160,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     BucketedMergeSink.merge(spark, seed(3), path, "upsert", Seq("id"),
       numBuckets = 4, retainVersions = 4) // v1
     BucketedMergeSink.publishChangeFeed(spark, path, feed): Unit // base @1
-    BucketedMergeSink.compactOutboxKeep(spark, feed, 1, numBuckets = 4): Unit
+    BucketedMergeSink.compactOutboxKeep(spark, feed, 1): Unit
     assert(batchIds() == Seq(1L))
     // six Runner-shaped cycles: catch-up BEFORE load, load, catch-up
     // AFTER, outbox_keep 1 compaction. Retention (4) stays deeper than
@@ -1179,7 +1179,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
         path, "upsert", Seq("id")) // v_i
       assert(BucketedMergeSink.publishChangeFeed(spark, path, feed)
         == Seq(i), s"run $i publishes exactly its own delta")
-      BucketedMergeSink.compactOutboxKeep(spark, feed, 1, numBuckets = 4): Unit
+      BucketedMergeSink.compactOutboxKeep(spark, feed, 1): Unit
       assert(batchIds() == Seq(i) &&
         new File(new File(feed, s"batch_id=$i"), "_base").exists(),
         s"run $i: keep=1 leaves exactly the rebased head")
@@ -1224,7 +1224,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     // reconstruct the crash window: staged base complete (marker last),
     // original partition deleted, rename never ran
     BucketedMergeSink.compactOutbox(spark, feed, 2L)
-    val staged = new File(feed, ".rebase-part-2")
+    val staged = new File(feed, ".batch_id=2.base-stage")
     val part = new File(feed, "batch_id=2")
     assert(part.renameTo(staged), "set up: move the base back to staged")
     // a consumer now sees only the unmarked delta at batch 3 (batch 1
@@ -1484,6 +1484,128 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       BucketedMergeSink.subscribeFeed(spark, feed, tmpTarget() + "-r1",
         numBuckets = 4))
     assert(e1.getMessage.contains("no base"), e1.getMessage)
+  }
+
+  test("subscribeFeed folds many pending batches into one net change: " +
+    "one call, batch-by-batch calls and the target agree; the rebase " +
+    "base is the all-inserts snapshot") {
+    import spark.implicits._
+    val path = tmpTarget()
+    val feed = tmpTarget() + "-feed"
+    def rep(n: String) = tmpTarget() + s"-rep$n"
+    def rows(p: String) = BucketedMergeSink.read(spark, p)
+      .as[(Long, String, Long)].collect().toSet
+    def upsert(rs: (Long, String, Long)*): Unit =
+      BucketedMergeSink.merge(spark, rs.toDF("id", "name", "v"), path,
+        "upsert", Seq("id"))
+    def delete(ids: Long*): Unit =
+      BucketedMergeSink.merge(spark, ids.toDF("id"), path, "delete",
+        identifier = "id")
+    BucketedMergeSink.merge(spark, seed(6), path, "upsert", Seq("id"),
+      numBuckets = 4, retainVersions = 8) // v1; keys 4..6 stay untouched
+    upsert((100L, "a", 1L)) // v2: key 100 inserted
+    upsert((100L, "b", 2L), (2L, "TWO", 22L)) // v3: 100 and 2 updated
+    delete(100L, 3L) // v4: 100 and 3 deleted
+    upsert((100L, "c", 3L)) // v5: 100 re-inserted
+    assert(BucketedMergeSink.publishChangeFeed(spark, path, feed) == (1L to 5L))
+    // one call from scratch: the base starts the fold, one replacing merge
+    val one = rep("one")
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, one, numBuckets = 4)
+      == (1L to 5L))
+    assert(rows(one) == rows(path))
+    assert(BucketedMergeSink.manifestVersions(spark, one) == Seq(1L),
+      "a replacing fold commits exactly one version")
+    // batch by batch via upTo
+    val each = rep("each")
+    (1L to 5L).foreach(b => assert(BucketedMergeSink.subscribeFeed(spark,
+      feed, each, numBuckets = 4, upTo = b) == Seq(b)))
+    assert(rows(each) == rows(path))
+    // the base, then the four pending deltas in one call: one delete
+    // merge (key 3) and one upsert merge (keys 2 and 100), not four rounds
+    val caught = rep("caught")
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, caught,
+      numBuckets = 4, upTo = 1L) == Seq(1L))
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, caught,
+      numBuckets = 4) == (2L to 5L))
+    assert(rows(caught) == rows(path))
+    assert(rows(caught).contains((100L, "c", 3L)) &&
+      rows(caught).contains((2L, "TWO", 22L)) && !rows(caught).exists(_._1 == 3L))
+    assert(BucketedMergeSink.manifestVersions(spark, caught).last == 3L,
+      "base + one delete merge + one upsert merge")
+    // a composite-key replica with a pending delete still refuses
+    val comp = rep("comp")
+    BucketedMergeSink.subscribeFeed(spark, feed, comp, key = Seq("id", "name"),
+      numBuckets = 4, upTo = 1L): Unit
+    val e = intercept[IllegalArgumentException](BucketedMergeSink
+      .subscribeFeed(spark, feed, comp, key = Seq("id", "name"), numBuckets = 4))
+    assert(e.getMessage.contains("deletes route by a single identifier column"),
+      e.getMessage)
+    // while v4 is retained, the rebase base at 4 is its all-inserts form
+    assert(BucketedMergeSink.compactOutbox(spark, feed, 4L) == (1L to 3L))
+    def opRows(df: DataFrame) = df.select("_op", "id", "name", "v")
+      .as[(String, Long, String, Long)].collect().toSet
+    assert(opRows(spark.read.parquet(s"$feed/batch_id=4")) ==
+      opRows(BucketedMergeSink.readVersion(spark, path, 4L)
+        .withColumn("_op", lit("insert"))))
+    // and a fresh consumer of the rebased outbox still reaches the target
+    val fresh = rep("fresh")
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, fresh, numBuckets = 4)
+      == Seq(4L, 5L))
+    assert(rows(fresh) == rows(path))
+  }
+
+  test("the outbox fold keeps a table column named batch_id; a composite " +
+    "key refuses any pending delete, also one a later batch undoes") {
+    import spark.implicits._
+    val path = tmpTarget()
+    val feed = tmpTarget() + "-feed"
+    def rep(n: String) = tmpTarget() + s"-rep$n"
+    def rows(p: String) = BucketedMergeSink.read(spark, p)
+      .select("id", "batch_id", "v").as[(Long, Long, Long)].collect().toSet
+    def upsert(rs: (Long, Long, Long)*): Unit =
+      BucketedMergeSink.merge(spark, rs.toDF("id", "batch_id", "v"), path,
+        "upsert", Seq("id"))
+    BucketedMergeSink.merge(spark,
+      Seq((1L, 10L, 1L), (2L, 20L, 2L), (3L, 30L, 3L)).toDF("id", "batch_id", "v"),
+      path, "upsert", Seq("id"), numBuckets = 4, retainVersions = 8) // v1
+    upsert((1L, 11L, 5L)) // v2: the row's own batch_id changes
+    BucketedMergeSink.merge(spark, Seq(3L).toDF("id"), path, "delete",
+      identifier = "id") // v3
+    upsert((3L, 33L, 3L)) // v4: key 3 back, same (id, v)
+    assert(BucketedMergeSink.publishChangeFeed(spark, path, feed) == (1L to 4L))
+    val want = Set((1L, 11L, 5L), (2L, 20L, 2L), (3L, 33L, 3L))
+    assert(rows(path) == want)
+    // a fresh replica (replacing fold) and an existing one (upsert leg)
+    val one = rep("one")
+    BucketedMergeSink.subscribeFeed(spark, feed, one, numBuckets = 4): Unit
+    assert(rows(one) == want)
+    val caught = rep("caught")
+    BucketedMergeSink.subscribeFeed(spark, feed, caught, numBuckets = 4,
+      upTo = 1L): Unit
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, caught,
+      numBuckets = 4) == (2L to 4L))
+    assert(rows(caught) == want)
+    // composite key (id, v): (3, 3) is deleted in batch 3 and re-inserted
+    // in batch 4; stopping at 3 and spanning both refuse alike
+    val comp = rep("comp")
+    BucketedMergeSink.subscribeFeed(spark, feed, comp, key = Seq("id", "v"),
+      numBuckets = 4, upTo = 2L): Unit
+    for (upTo <- Seq(3L, Long.MaxValue)) {
+      val e = intercept[IllegalArgumentException](BucketedMergeSink
+        .subscribeFeed(spark, feed, comp, key = Seq("id", "v"),
+          numBuckets = 4, upTo = upTo))
+      assert(e.getMessage.contains("carries delete ops in batch 3") &&
+        e.getMessage.contains("deletes route by a single identifier column"),
+        e.getMessage)
+    }
+    // the rebase base keeps the column too
+    assert(BucketedMergeSink.compactOutbox(spark, feed, 4L) == (1L to 3L))
+    assert(spark.read.parquet(s"$feed/batch_id=4")
+      .select("id", "batch_id", "v").as[(Long, Long, Long)].collect().toSet == want)
+    val fresh = rep("fresh")
+    assert(BucketedMergeSink.subscribeFeed(spark, feed, fresh, numBuckets = 4)
+      == Seq(4L))
+    assert(rows(fresh) == want)
   }
 
   test("subscribeFeed: a consumer arriving mid-life starts from the " +

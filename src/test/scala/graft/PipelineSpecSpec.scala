@@ -127,6 +127,31 @@ class PipelineSpecSpec extends AnyFunSuite {
     assert(spec.stages("s").key == Seq("id"))
   }
 
+  test("an unknown stage or source key refuses at parse time, naming " +
+    "the stage and the key") {
+    val e = intercept[IllegalArgumentException](PipelineSpec.fromYaml(
+      """pypes:
+        |  s:
+        |    extract_query: "SELECT 1"
+        |    change_feed: out
+        |    outbox_kep: 3
+        |""".stripMargin))
+    assert(e.getMessage.contains("pype 's'") &&
+      e.getMessage.contains("outbox_kep"), e.getMessage)
+    val es = intercept[IllegalArgumentException](PipelineSpec.fromYaml(
+      """pypes:
+        |  s:
+        |    sources:
+        |      v: {format: csv, path: /x, optons: {header: "true"}}
+        |    extract_query: "SELECT 1"
+        |""".stripMargin))
+    assert(es.getMessage.contains("source 'v'") &&
+      es.getMessage.contains("optons"), es.getMessage)
+    // every key the parser reads stays accepted, the reference-parity
+    // bulk_size and debug included (stage_a above sets both)
+    assert(PipelineSpec.fromYaml(yaml).stages("stage_a").bulkSize == 500)
+  }
+
   test("empty yaml is rejected") {
     intercept[IllegalArgumentException] { PipelineSpec.fromYaml("") }
   }

@@ -1136,6 +1136,41 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       ep.getMessage)
   }
 
+  test("a placeholder-bearing outbox name hydrates the same way at the " +
+    "producer's change_feed and the consumer's subscribe_feed") {
+    Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+      .toDF("id", "name", "v").createOrReplaceTempView("ph_src")
+    val root = Files.createTempDirectory("graft-runner-ph").toString
+    val ry =
+      s"""pypelines:
+         |  p: [producer, consumer]
+         |pypes:
+         |  producer:
+         |    extract_query: "SELECT id, name, v FROM ph_src WHERE id <= {maxid}"
+         |    target_table: tgt_ph
+         |    type: upsert
+         |    key: [id]
+         |    buckets: 4
+         |    retain_versions: 2
+         |    change_feed: "tgt_ph_outbox_{run}"
+         |  consumer:
+         |    subscribe_feed: "tgt_ph_outbox_{run}"
+         |    target_table: tgt_ph_replica
+         |    key: [id]
+         |    buckets: 4
+         |""".stripMargin
+    new Runner(spark, PipelineSpec.fromYaml(ry),
+      placeholders = Map("maxid" -> "3", "run" -> "7"), targetRoot = root)
+      .run("p")
+    import spark.implicits._
+    def rows(p: String) = graft.sink.BucketedMergeSink.read(spark, s"$root/$p")
+      .as[(Long, String, Long)].collect().toSet
+    assert(new java.io.File(s"$root/tgt_ph_outbox_7").isDirectory)
+    assert(!new java.io.File(s"$root/tgt_ph_outbox_{run}").exists(),
+      "the producer must not publish under the literal placeholder")
+    assert(rows("tgt_ph_replica") == rows("tgt_ph"))
+  }
+
   test("a compact: true producer's empty-diff version flows through the " +
     "outbox and applies as a no-op batch at the consumer") {
     Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
