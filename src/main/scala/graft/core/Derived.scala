@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.StageSpec
@@ -158,8 +159,10 @@ object Derived {
 
     /** Validate, catch up, guard, merge, purge, compact, catch up again
       * and bound the outbox. Returns whether the target is bucketed
-      * after the load. */
-    def run(spark: SparkSession, batch: DataFrame): Boolean = {
+      * after the load, or None when the load left no target (a delete
+      * against an absent one): then there is nothing to purge, compact
+      * or catch up. */
+    def run(spark: SparkSession, batch: DataFrame): Option[Boolean] = {
       val wasBucketed = BucketedMergeSink.isBucketed(spark, path)
       check(spark, batch.columns.toSeq, wasBucketed)
       // CATCH UP BEFORE THE LOAD: versions left pending by a previous
@@ -196,6 +199,14 @@ object Derived {
             identifier, excluded, retainVersions = retainVersions,
             scd2Ts = scd2Ts)
       } finally if (guarded) batch.unpersist()
+      // a delete against an absent target creates none, and every step
+      // below reads the target
+      val bucketed = numBuckets > 0 || wasBucketed
+      val exists =
+        if (bucketed) wasBucketed || BucketedMergeSink.isBucketed(spark, path)
+        else new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(new Path(path))
+      if (!exists) return None
       // `delete_where:` purges matching target rows right after the
       // load — row-level TTL / GDPR erasure as a load property (the
       // hydrated predicate lets a retention cutoff ride placeholders).
@@ -237,7 +248,7 @@ object Derived {
             key = key ++ feedKey): Unit
         case _ =>
       }
-      numBuckets > 0 || wasBucketed
+      Some(bucketed)
     }
 
     private def check(spark: SparkSession, columns: Seq[String],

@@ -275,7 +275,7 @@ final class Runner(
     // path already holds a bucketed layout, so a stage can't silently
     // flatten a target created with buckets. Every derived artifact,
     // refusal and guard rides the shared load path (Derived.Load).
-    val bucketed = Derived.Load(s"stage ${stage.name}", path, stage.key,
+    Derived.Load(s"stage ${stage.name}", path, stage.key,
       stage.identifier, stage.loadType, stage.fieldsExcludedFromUpdate,
       stage.buckets, stage.retainVersions, Derived.of(stage, tablePath(ph)),
       // scd2_ts and delete_where hydrate like the extract: an
@@ -286,13 +286,18 @@ final class Runner(
       deleteWhere = Hydrate(stage.deleteWhere, ph),
       compactMaxFiles = Option.when(stage.compact)(stage.compactMaxFiles))
       .run(spark, df)
-    val result =
-      if (bucketed) graft.sink.BucketedMergeSink.read(spark, path)
-      else spark.read.parquet(path)
-    result.createOrReplaceTempView(stage.targetTable)
-    // metrics row count comes from the WRITTEN parquet (a footer-metadata
-    // count) — counting `df` here would re-run the whole extract+transform
-    // plan a second time just for the log line, doubling stage cost
-    result.count()
+      // a delete against an absent target loads nothing and registers
+      // no view
+      .fold(0L) { bucketed =>
+        val result =
+          if (bucketed) graft.sink.BucketedMergeSink.read(spark, path)
+          else spark.read.parquet(path)
+        result.createOrReplaceTempView(stage.targetTable)
+        // metrics row count comes from the WRITTEN parquet (a
+        // footer-metadata count) — counting `df` here would re-run the
+        // whole extract+transform plan a second time just for the log
+        // line, doubling stage cost
+        result.count()
+      }
   }
 }

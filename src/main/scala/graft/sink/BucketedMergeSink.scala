@@ -34,27 +34,26 @@ import graft.core.Derived
   *   path/data/c<commit>/gbucket=7/ ...
   * }}}
   *
-  * Data directories are IMMUTABLE once written: a batch writes its
-  * touched buckets under a fresh `data/c<uuid>/` dir, then commits by
-  * creating the next manifest version (`fs.create(..., overwrite =
-  * false)` — one atomic file creation) that remaps the touched buckets
-  * to the new dir. Readers resolve the highest manifest version into
-  * explicit leaf-dir paths, so
+  * Data directories are IMMUTABLE once written. Every version — a
+  * creation, merge, compaction or predicate delete — is made by ONE
+  * commit step, [[rewriteBuckets]]: it writes the rewritten buckets
+  * under a fresh `data/c<uuid>/` dir, then creates the next manifest
+  * version (`fs.create(..., overwrite = false)` — one atomic file
+  * creation, [[commitManifest]]) that remaps those buckets to the new
+  * dir. Readers resolve the highest manifest version into explicit
+  * leaf-dir paths, so
   *
   *   - a batch is ALL-OR-NOTHING visible: before the manifest file
   *     exists, readers resolve the old mapping (the new data dir is an
   *     invisible orphan); after, the new one. There is no intermediate
   *     state, unlike the v1 bucket-at-a-time directory swap, and no
   *     rename of live data at all;
-  *   - a crash mid-write leaves only an orphan `data/c*` dir, GC'd at
-  *     the start of the next merge/compact. Retention is a LAYOUT
-  *     property persisted at creation
-  *     (pass `retainVersions = N` to the creating merge; change later
-  *     with [[setRetention]]) and honored by every merge/compact: with
-  *     the default of 1 a concurrent reader holding a superseded
-  *     manifest may find its dirs GC'd and fail loudly, never read
-  *     mixed data; with N the last N manifests AND every dir any of
-  *     them references are kept, so readers get N-deep snapshot
+  *   - a crash mid-write leaves only an orphan `data/c*` dir, GC'd by
+  *     the next write's [[snapshot]]. Retention is a LAYOUT property
+  *     ([[Meta]], [[setRetention]]): with 1 a concurrent reader holding
+  *     a superseded manifest may find its dirs GC'd and fail loudly,
+  *     never read mixed data; with N the last N manifests AND every dir
+  *     any of them references are kept, so readers get N-deep snapshot
   *     isolation ([[readVersion]] time travel) at the cost of retained
   *     storage;
   *   - bucket pruning is PATH-level: a touched-slice or keyed read
@@ -74,16 +73,17 @@ import graft.core.Derived
   * target. Across processes nothing can enforce it, so a violation is
   * DETECTED and fails loudly instead of corrupting:
   *
-  *   - every merge/compact records the manifest version its reads
-  *     resolved against and commits `v(base+1)` optimistically; if
-  *     another writer advanced the manifest in between — or wins the
-  *     `create(overwrite = false)` of the same version by a hair — the
-  *     loser throws [[ConcurrentWriteException]], publishes NOTHING
-  *     (its data dir is deleted on the spot; a crash before that
-  *     leaves an invisible orphan for the next write's GC), and the
-  *     winner's committed state is untouched. The error is RETRYABLE:
-  *     re-running the losing merge re-reads the winner's state and
-  *     re-merges correctly.
+  *   - every write reads its slice through one [[snapshot]] — the
+  *     manifest version its reads resolve against, and that version's
+  *     mapping — and [[rewriteBuckets]] commits `v(base+1)`
+  *     optimistically; if another writer advanced the manifest in
+  *     between — or wins the `create(overwrite = false)` of the same
+  *     version by a hair — the loser throws [[ConcurrentWriteException]],
+  *     publishes NOTHING (its data dir is deleted on the spot; a crash
+  *     before that leaves an invisible orphan for the next write's GC),
+  *     and the winner's committed state is untouched. The error is
+  *     RETRYABLE: re-running the losing merge, compaction or purge
+  *     re-reads the winner's state and redoes its work correctly.
   *   - the write-path GC can remove a VIOLATING concurrent writer's
   *     not-yet-committed data dir (it is indistinguishable from a
   *     crashed batch's orphan); that writer then fails at write or
@@ -194,22 +194,6 @@ object BucketedMergeSink {
   /** The retention the layout promises readers at `path`. */
   def retention(spark: SparkSession, path: String): Int =
     readMeta(spark, path).retainVersions
-
-  /** Resolve a caller's `retainVersions` argument against the layout's
-    * persisted value: 0 (the default) = the layout's; a positive value
-    * must MATCH it — silently honoring a different value would either
-    * delete promised snapshots (smaller) or silently change the
-    * contract (larger). */
-  private def resolveRetention(requested: Int, meta: Meta, path: String): Int = {
-    if (requested == 0) meta.retainVersions
-    else {
-      require(requested == meta.retainVersions,
-        s"retainVersions=$requested conflicts with the layout's persisted " +
-          s"retention ${meta.retainVersions} at $path — retention is a " +
-          "layout property; change it with BucketedMergeSink.setRetention")
-      requested
-    }
-  }
 
   private def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -1111,9 +1095,50 @@ object BucketedMergeSink {
     else compactOutbox(spark, feedPath, rebaseAt, key)
   }
 
+  /** What a write reads and commits against: the current manifest
+    * version (0 for an empty target) and the mapping parsed from THAT
+    * file — not a re-listed current, so base and mapping cannot straddle
+    * an interleaved commit — after GC'ing a previous crash's orphans. */
+  private def snapshot(fs: FileSystem, path: String): (Long, Map[Int, String]) = {
+    val baseFile = currentManifestFile(fs, path)
+    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, String])
+    gcUnreferenced(fs, path)
+    (baseFile.map(versionOf).getOrElse(0L), mapping)
+  }
+
+  /** The one commit step: every version of a bucketed target is made
+    * here. Writes `rows` (already carrying [[bucketCol]]) under a fresh
+    * `data/c<uuid>/` dir and commits `(mapping -- rewritten) ++ produced`
+    * as `v(base+1)` — a rewritten bucket that produced no rows drops out
+    * of the manifest. Rows in a bucket outside `rewritten` are a routing
+    * bug and refused. The dir is deleted when the write fails, on that
+    * refusal and on a lost commit race ([[ConcurrentWriteException]]),
+    * so a failed write leaves nothing beyond what a crash would; after
+    * the commit, dirs no retained manifest references are GC'd. */
+  private def rewriteBuckets(fs: FileSystem, path: String, rows: DataFrame,
+      rewritten: Set[Int], base: Long, mapping: Map[Int, String], retain: Int): Unit = {
+    val commit = "c" + UUID.randomUUID().toString
+    val commitPath = new Path(new Path(path, dataDir), commit)
+    try rows.write.partitionBy(bucketCol).parquet(commitPath.toString)
+    catch { case e: Throwable => fs.delete(commitPath, true); throw e }
+    val produced = fs.listStatus(commitPath).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(bucketCol + "="))
+      .map(_.stripPrefix(bucketCol + "=").toInt)
+    val stray = produced.filterNot(rewritten)
+    if (stray.nonEmpty) {
+      fs.delete(commitPath, true)
+      throw new IllegalStateException(
+        s"merge produced rows in untouched buckets ${stray.mkString(",")} — routing bug")
+    }
+    try commitManifest(fs, path, (mapping -- rewritten) ++ produced.map(_ -> commit),
+      retain, expectedBase = base)
+    catch { case e: ConcurrentWriteException => fs.delete(commitPath, true); throw e }
+    gcUnreferenced(fs, path)
+  }
+
   /** Test seam for the concurrent-writer spec: invoked between a
-    * merge/compact's last read of the manifest and its commit attempt,
-    * so BucketedMergeSinkSpec can interleave a competing writer's commit
+    * write's [[snapshot]] and its commit attempt, so
+    * BucketedMergeSinkSpec can interleave a competing writer's commit
     * at the exact moment a real race would land it. Production value is
     * a no-op. */
   private[graft] var interleaveBeforeCommit: () => Unit = () => ()
@@ -1136,8 +1161,8 @@ object BucketedMergeSink {
     *      already-exists failure is rethrown as the same retryable
     *      [[ConcurrentWriteException]].
     * Either way the losing batch publishes NOTHING (its data dir stays
-    * an invisible orphan, removed by the caller and by the next write's
-    * GC) and the winning batch is untouched.
+    * an invisible orphan, removed by [[rewriteBuckets]] and by the next
+    * write's GC) and the winning batch is untouched.
     *
     * Afterwards only the newest `retain` versions are kept: superseded
     * manifests beyond the retention window point at dirs the GC may
@@ -1242,8 +1267,9 @@ object BucketedMergeSink {
     * layout on first use. Same semantics as
     * [[MergeSink.mergeIntoParquet]] (it routes through the same
     * upsert/update/delete), different physical cost: only the buckets
-    * the batch's keys hash to are read and rewritten, and the batch
-    * becomes visible atomically at the manifest commit.
+    * the batch's keys hash to are read (through the [[snapshot]]'s
+    * mapping) and rewritten, and the batch becomes visible atomically at
+    * the one commit step, [[rewriteBuckets]] — creation included.
     *
     * `numBuckets` is only consulted at creation; later calls read it
     * from the layout metadata. Upsert/update must use the layout's key
@@ -1279,25 +1305,20 @@ object BucketedMergeSink {
         s"$path exists but is not a bucketed target (no $metaFile) — " +
           "refusing to overwrite a flat layout; use MergeSink.mergeIntoParquet there")
       require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
+      val rows = loadType match {
+        case "delete" => return // nothing to delete from
+        // update-only against an absent target affects zero rows, but it
+        // DOES establish the layout (schema + key), like
+        // mergeIntoParquet's limit(0) write
+        case "update" => MergeSink.dedupeBatch(batch, key).limit(0)
+        case "upsert" => MergeSink.dedupeBatch(batch, key)
+        // SCD2 bootstrap (MergeSink.openVersions): the layout's schema
+        // includes the sink-managed version columns from day one
+        case "scd2" => MergeSink.openVersions(batch, key, to_timestamp(lit(scd2Ts)))
+      }
       // creation is where a retention request becomes the LAYOUT's
       // retention (0 = the historical default of 1)
-      val createRetain = if (retainVersions == 0) 1 else retainVersions
-      loadType match {
-        case "delete" => return // nothing to delete from
-        case "update" =>
-          // update-only against an absent target affects zero rows, but
-          // it DOES establish the layout (schema + key), like
-          // mergeIntoParquet's limit(0) write
-          createTarget(spark, MergeSink.dedupeBatch(batch, key).limit(0), path, key, numBuckets, createRetain)
-        case "upsert" =>
-          createTarget(spark, MergeSink.dedupeBatch(batch, key), path, key, numBuckets, createRetain)
-        case "scd2" =>
-          // SCD2 bootstrap (MergeSink.openVersions): the layout's schema
-          // includes the sink-managed version columns from day one
-          createTarget(spark,
-            MergeSink.openVersions(batch, key, to_timestamp(lit(scd2Ts))),
-            path, key, numBuckets, createRetain)
-      }
+      createTarget(spark, rows, path, key, numBuckets, if (retainVersions == 0) 1 else retainVersions)
       return
     }
 
@@ -1306,8 +1327,13 @@ object BucketedMergeSink {
     val mergeKey = if (loadType == "delete") Seq(identifier) else key
     // a conflicting retainVersions must fail HERE, not at commit time
     // after the whole extract→route→write job has run (same placement
-    // rationale as the schema check below)
-    val retention = resolveRetention(retainVersions, meta, path)
+    // rationale as the schema check below): silently honoring a
+    // different value would delete promised snapshots or change the
+    // contract
+    require(retainVersions == 0 || retainVersions == meta.retainVersions,
+      s"retainVersions=$retainVersions conflicts with the layout's persisted " +
+        s"retention ${meta.retainVersions} at $path — retention is a " +
+        "layout property; change it with BucketedMergeSink.setRetention")
     // schema-evolution contract (MergeSink.validateBatchSchema scaladoc):
     // checked BEFORE any routing/persist work — the routing cast below
     // must never be the thing that silently narrows a batch column
@@ -1325,15 +1351,9 @@ object BucketedMergeSink {
         s"bucketed target $path is keyed on ${meta.key.mkString(",")} — " +
           s"cannot ${loadType} on ${key.mkString(",")} (rows are routed by the layout key)")
 
-    // the manifest version this batch's reads resolve against — the
-    // optimistic-commit base (object scaladoc "Concurrent writers");
-    // parse THAT file, not a re-listed current, so base and mapping
-    // cannot straddle an interleaved commit
-    val baseFile = currentManifestFile(fs, path)
-    val base = baseFile.map(versionOf).getOrElse(0L)
-    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, String])
-    // clean up any previous crash's orphan data dirs before writing ours
-    gcUnreferenced(fs, path)
+    // the optimistic-commit base and the mapping every read below
+    // resolves through (object scaladoc "Concurrent writers")
+    val (base, mapping) = snapshot(fs, path)
     val existing = mapping.keys.toSeq
     // which buckets does this batch touch? a delete prunes when the
     // TARGET column it matches is the layout key (a target row with
@@ -1370,7 +1390,7 @@ object BucketedMergeSink {
       if (loadType == "delete" && touchedExisting.isEmpty) return // nothing to delete
 
       // the touched slice of the target: only its leaf dirs are listed
-      val target = readBuckets(spark, path, touchedExisting)
+      val target = readDirs(spark, path, meta, mapping, touchedExisting)
 
       val bcast = MergeSink.fitsBroadcast(batch)
       val merged = loadType match {
@@ -1382,37 +1402,13 @@ object BucketedMergeSink {
             broadcastBatch = bcast)
       }
       // re-derive each output row's bucket from the LAYOUT key (surviving
-      // target rows keep their bucket; inserts hash to a touched one)
-      val routed = merged.withColumn(bucketCol, bucketExpr(meta.key, n))
-
-      val commit = "c" + UUID.randomUUID().toString
-      val commitPath = new Path(new Path(path, dataDir), commit)
-      try routed.write.partitionBy(bucketCol).parquet(commitPath.toString)
-      catch { case e: Throwable => fs.delete(commitPath, true); throw e }
-      // sanity: the merge can only have produced rows in touched buckets
-      val produced = fs.listStatus(commitPath).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith(bucketCol + "="))
-        .map(_.stripPrefix(bucketCol + "=").toInt)
-      val stray = produced.filterNot(touched.contains)
-      if (stray.nonEmpty) {
-        fs.delete(commitPath, true)
-        throw new IllegalStateException(
-          s"merge produced rows in untouched buckets ${stray.mkString(",")} — routing bug")
-      }
-      // new mapping: touched buckets move to this commit (those merged
-      // to zero rows simply drop out); for a delete, buckets the batch
-      // hashes to but that never existed stay absent
-      val rewritten = (if (loadType == "delete") touchedExisting else touched).toSet
-      val newMapping = (mapping -- rewritten) ++
-        produced.filter(rewritten.contains).map(_ -> commit)
-      // the batch becomes visible HERE (retention resolved pre-job); a
-      // lost commit race rolls our data dir back before rethrowing — the
-      // loser must leave nothing behind beyond what a crash would
-      try commitManifest(fs, path, newMapping, retention, expectedBase = base)
-      catch { case e: ConcurrentWriteException =>
-        fs.delete(commitPath, true); throw e
-      }
-      gcUnreferenced(fs, path)
+      // target rows keep their bucket; inserts hash to a touched one).
+      // Touched buckets move to the new commit (those merged to zero rows
+      // drop out); for a delete, buckets the batch hashes to but that
+      // never existed stay absent
+      rewriteBuckets(fs, path, merged.withColumn(bucketCol, bucketExpr(meta.key, n)),
+        (if (loadType == "delete") touchedExisting else touched).toSet,
+        base, mapping, meta.retainVersions)
     } finally if (ownPersist) batch.unpersist(false)
   }
 
@@ -1432,28 +1428,17 @@ object BucketedMergeSink {
     * Buckets with more than `maxFiles` data files are rewritten as ONE
     * job into a fresh commit dir — `repartition($"gbucket")` so each
     * bucket lands in exactly one task (→ exactly one output file per
-    * bucket) — and published with the same atomic manifest commit as a
-    * merge: readers see the target fully fragmented or fully compacted,
-    * never half. Content is row-identical. Fragmentation discovery
-    * lists only referenced leaf dirs, in parallel across a bounded
-    * thread pool — one driver-side listing per bucket was a serial
-    * bottleneck at 1k+ buckets. Returns the compacted bucket ids. */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      maxFiles: Int = 1,
-      retainVersions: Int = 0): Seq[Int] = {
+    * bucket) — and published by the same commit step as a merge,
+    * [[rewriteBuckets]]: readers see the target fully fragmented or
+    * fully compacted, never half. Content is row-identical.
+    * Fragmentation discovery lists only referenced leaf dirs, in
+    * parallel across a bounded thread pool — one driver-side listing
+    * per bucket was a serial bottleneck at 1k+ buckets. Returns the
+    * compacted bucket ids. */
+  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Int] = {
     val fs = fsOf(spark, path)
     val meta = readMeta(spark, path)
-    // conflicting retention fails before the discovery listing and the
-    // rewrite job, not after them at commit time (merge does the same)
-    val retention = resolveRetention(retainVersions, meta, path)
-    // same optimistic-commit base discipline as merge (scaladoc
-    // "Concurrent writers"): mapping parsed from the base file itself
-    val baseFile = currentManifestFile(fs, path)
-    val base = baseFile.map(versionOf).getOrElse(0L)
-    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, String])
-    gcUnreferenced(fs, path)
+    val (base, mapping) = snapshot(fs, path)
     val fragmented = listParallel(mapping.toSeq) { case (b, c) =>
       val files = fs.listStatus(leafDir(path, c, b))
         .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
@@ -1461,19 +1446,11 @@ object BucketedMergeSink {
       if (files > maxFiles) Some(b) else None
     }.flatten.sorted
     if (fragmented.isEmpty) return Nil
-    val slice = readBuckets(spark, path, fragmented)
-      .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
-    val commit = "c" + UUID.randomUUID().toString
-    val commitPath = new Path(new Path(path, dataDir), commit)
-    try slice.repartition(col(bucketCol))
-      .write.partitionBy(bucketCol).parquet(commitPath.toString)
-    catch { case e: Throwable => fs.delete(commitPath, true); throw e }
-    val newMapping = mapping ++ fragmented.map(_ -> commit)
-    try commitManifest(fs, path, newMapping, retention, expectedBase = base)
-    catch { case e: ConcurrentWriteException =>
-      fs.delete(commitPath, true); throw e
-    }
-    gcUnreferenced(fs, path)
+    rewriteBuckets(fs, path,
+      readDirs(spark, path, meta, mapping, fragmented)
+        .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
+        .repartition(col(bucketCol)),
+      fragmented.toSet, base, mapping, meta.retainVersions)
     fragmented
   }
 
@@ -1485,26 +1462,18 @@ object BucketedMergeSink {
     * arbitrary predicates (TTL) it covers every live bucket with
     * parquet row-group statistics pruning inside — then
     * only those buckets rewrite — O(touched buckets), the same
-    * asymmetry as the merge; a bucket the purge empties drops from the
-    * manifest (and its dir is GC'd) exactly like an id-based delete
-    * that empties it. Commits one manifest version under the same
-    * optimistic single-writer detection as merge/compact. Returns the
-    * rewritten bucket ids (empty = nothing matched, no version
-    * committed). */
-  def deleteWhere(
-      spark: SparkSession,
-      path: String,
-      condition: String,
-      retainVersions: Int = 0): Seq[Int] = {
+    * asymmetry as the merge. Both scans read through one [[snapshot]],
+    * and the rewrite commits one version through [[rewriteBuckets]], the
+    * same commit step as merge/compact: a bucket the purge empties drops
+    * from the manifest (and its dir is GC'd) exactly like an id-based
+    * delete that empties it. Returns the rewritten bucket ids (empty =
+    * nothing matched, no version committed). */
+  def deleteWhere(spark: SparkSession, path: String, condition: String): Seq[Int] = {
     val fs = fsOf(spark, path)
     val meta = readMeta(spark, path)
-    val retention = resolveRetention(retainVersions, meta, path)
-    val baseFile = currentManifestFile(fs, path)
-    val base = baseFile.map(versionOf).getOrElse(0L)
-    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, String])
-    gcUnreferenced(fs, path)
+    val (base, mapping) = snapshot(fs, path)
     if (mapping.isEmpty) return Nil
-    val pred = expr(condition)
+    val pred = coalesce(expr(condition), lit(false))
     // which buckets hold matching rows? re-derive the routing bucket on
     // the filtered scan — bounded output (<= numBuckets distinct ids).
     // The scan itself prunes to the key's buckets when the predicate
@@ -1513,33 +1482,18 @@ object BucketedMergeSink {
     // row-group stats pruning inside where the predicate allows.
     val discovery = purgeDiscoveryBuckets(
       spark, meta, mapping.keys.toSeq, condition)
-    val touched = readBuckets(spark, path, discovery)
-      .filter(coalesce(pred, lit(false)))
+    val touched = readDirs(spark, path, meta, mapping, discovery)
+      .filter(pred)
       .select(bucketExpr(meta.key, meta.numBuckets).as("__b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return Nil
     // rewrite the touched buckets without their matching rows (null
     // predicate = not a match = survives, SQL DELETE semantics)
-    val slice = readBuckets(spark, path, touched)
-      .filter(!coalesce(pred, lit(false)))
-      .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
-    val commit = "c" + UUID.randomUUID().toString
-    val commitPath = new Path(new Path(path, dataDir), commit)
-    try slice.repartition(col(bucketCol))
-      .write.partitionBy(bucketCol).parquet(commitPath.toString)
-    catch { case e: Throwable => fs.delete(commitPath, true); throw e }
-    // a fully-purged bucket writes no partition dir: drop it from the
-    // manifest rather than point at a missing leaf
-    val written = fs.listStatus(commitPath).toSeq
-      .map(_.getPath.getName).filter(_.startsWith(s"$bucketCol="))
-      .map(_.stripPrefix(s"$bucketCol=").toInt).toSet
-    val newMapping = (mapping -- touched) ++
-      touched.filter(written).map(_ -> commit)
-    try commitManifest(fs, path, newMapping, retention, expectedBase = base)
-    catch { case e: ConcurrentWriteException =>
-      fs.delete(commitPath, true); throw e
-    }
-    gcUnreferenced(fs, path)
+    rewriteBuckets(fs, path,
+      readDirs(spark, path, meta, mapping, touched).filter(!pred)
+        .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
+        .repartition(col(bucketCol)),
+      touched.toSet, base, mapping, meta.retainVersions)
     touched
   }
 
@@ -1651,30 +1605,18 @@ object BucketedMergeSink {
       retainVersions: Int): Unit = {
     key.foreach(k => require(rows.columns.contains(k),
       s"key column '$k' missing from batch (${rows.columns.mkString(",")})"))
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // meta FIRST: from here the target exists (empty) and every later
     // state is consistent — a crash before the manifest commit leaves an
     // established empty layout plus an invisible orphan, and replaying
     // the same batch converges (meta-last would instead strand a
     // half-created path that the flat-layout guard then refuses forever)
     writeMeta(spark, path, Meta(numBuckets, key, rows.schema, retainVersions))
-    val commit = "c" + UUID.randomUUID().toString
-    val commitPath = new Path(new Path(path, dataDir), commit)
-    try rows.withColumn(bucketCol, bucketExpr(key, numBuckets))
-      .write.partitionBy(bucketCol).parquet(commitPath.toString)
-    catch { case e: Throwable => fs.delete(commitPath, true); throw e }
-    val buckets = fs.listStatus(commitPath).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(bucketCol + "="))
-      .map(_.stripPrefix(bucketCol + "=").toInt)
     // creation commits v1 from an empty manifest: two processes racing to
     // CREATE the same target tie-break on the v1 create — the loser gets
     // the same retryable ConcurrentWriteException (and on retry converges,
     // since the winner established the layout)
-    try commitManifest(fs, path, buckets.map(_ -> commit).toMap, retainVersions,
-      expectedBase = 0L)
-    catch { case e: ConcurrentWriteException =>
-      fs.delete(commitPath, true); throw e
-    }
+    rewriteBuckets(fsOf(spark, path), path,
+      rows.withColumn(bucketCol, bucketExpr(key, numBuckets)),
+      (0 until numBuckets).toSet, 0L, Map.empty, retainVersions)
   }
 }

@@ -354,13 +354,10 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       numBuckets = 4, retainVersions = 2)
     val versionsBefore = BucketedMergeSink.manifestVersions(spark, path)
     val commitsBefore = new File(path, "data").listFiles().count(_.isDirectory)
-    for (op <- Seq(
-        () => BucketedMergeSink.merge(spark, seed(3), path, "upsert", Seq("id"),
-          retainVersions = 5),
-        () => BucketedMergeSink.compact(spark, path, retainVersions = 5))) {
-      val e = intercept[IllegalArgumentException](op())
-      assert(e.getMessage.contains("retention is a layout property"), e.getMessage)
-    }
+    val e = intercept[IllegalArgumentException](
+      BucketedMergeSink.merge(spark, seed(3), path, "upsert", Seq("id"),
+        retainVersions = 5))
+    assert(e.getMessage.contains("retention is a layout property"), e.getMessage)
     assert(BucketedMergeSink.manifestVersions(spark, path) == versionsBefore,
       "a refused call must not have committed anything")
     assert(new File(path, "data").listFiles().count(_.isDirectory) == commitsBefore,
@@ -551,6 +548,40 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(canon(BucketedMergeSink.read(spark, path)) == want)
     BucketedMergeSink.compact(spark, path)
     assert(canon(BucketedMergeSink.read(spark, path)) == want)
+  }
+
+  test("concurrent writer: a merge interleaved into a deleteWhere fails the " +
+    "purge, leaves no data dir behind, and a retry converges") {
+    val path = tmpTarget()
+    // retention 1: the interleaved merge's GC keeps only the dirs of its
+    // own version, so nothing older can mask a leftover of the purge
+    BucketedMergeSink.merge(spark, seed(40), path, "upsert", Seq("id"), numBuckets = 4)
+    assert(BucketedMergeSink.retention(spark, path) == 1)
+    // the merge moves id 30 out of the predicate and lands a new match
+    val batch = Seq((30L, "mid-purge", 5L), (41L, "late", 999L)).toDF("id", "name", "v")
+    var fired = false
+    BucketedMergeSink.interleaveBeforeCommit = () => {
+      if (!fired) { fired = true
+        BucketedMergeSink.merge(spark, batch, path, "upsert", Seq("id"))
+      }
+    }
+    val pre = localized(BucketedMergeSink.read(spark, path))
+    try intercept[graft.sink.ConcurrentWriteException] {
+      BucketedMergeSink.deleteWhere(spark, path, "v > 250")
+    } finally BucketedMergeSink.interleaveBeforeCommit = () => ()
+    assert(fired)
+    // the failed purge published nothing: content is the interleaved
+    // merge alone, and data/ holds only manifest-referenced commit dirs
+    val afterMerge = localized(MergeSink.upsert(pre, batch, Seq("id")))
+    assert(canon(BucketedMergeSink.read(spark, path)) == canon(afterMerge))
+    val live = BucketedMergeSink.manifest(spark, path).values.toSet
+    val dirs = new File(path, "data").listFiles().filter(_.isDirectory)
+      .map(_.getName).toSet
+    assert(dirs == live, s"the purge left a data dir behind: $dirs vs live $live")
+    // the retry purges against the merge's state
+    assert(BucketedMergeSink.deleteWhere(spark, path, "v > 250").nonEmpty)
+    assert(canon(BucketedMergeSink.read(spark, path)) ==
+      canon(afterMerge.filter(!(col("v") > 250))))
   }
 
   test("the commit tie-break primitive: create(overwrite=false) admits " +

@@ -106,6 +106,35 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       .toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("type: delete against an absent target loads nothing: 0 rows, no " +
+    "view, no target, no purge, compaction or catch-up (flat, bucketed, " +
+    "bucketed with an index)") {
+    val root = Files.createTempDirectory("graft-runner-del").toString
+    for ((table, stanza) <- Seq(
+        "tgt_del_flat" -> "",
+        "tgt_del_bkt" -> "    buckets: 4\n    compact: true\n    delete_where: \"id > 100\"",
+        "tgt_del_mi" -> ("    buckets: 4\n    retain_versions: 2\n" +
+          "    minhash_index: tgt_del_mi_minhash"))) {
+      val y =
+        s"""pypelines:
+           |  d: [sd]
+           |pypes:
+           |  sd:
+           |    extract_query: "SELECT CAST(4 AS BIGINT) AS id"
+           |    target_table: $table
+           |    type: delete
+           |    identifier: id
+           |    key: [id]
+           |$stanza
+           |""".stripMargin
+      val Seq(m) = new Runner(spark, PipelineSpec.fromYaml(y), Map.empty, root).run("d")
+      assert(m.rows == 0L, s"$table: ${m.rows} rows")
+      assert(!spark.catalog.tableExists(table), s"$table: a view was registered")
+      assert(new java.io.File(root).list().isEmpty,
+        s"$table: the load left ${new java.io.File(root).list().mkString(", ")}")
+    }
+  }
+
   test("retain_versions: 2 in stage YAML persists into the layout; a bucketed " +
     "source pinned to version N reads the pre-batch snapshot") {
     Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v")
