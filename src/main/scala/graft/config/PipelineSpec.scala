@@ -5,6 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.yaml.snakeyaml.{LoaderOptions, Yaml}
 import org.yaml.snakeyaml.constructor.SafeConstructor
 
+import graft.core.Derived
+import graft.core.Derived._
+
 /** One ETL stage — the Spark-native analogue of a reference "pype"
   * (reference: pypeline/Pype.py:12-29, defaults at Pype.py:14-21).
   *
@@ -44,100 +47,12 @@ final case class StageSpec(
                              // persisted into the layout at creation (0 =
                              // layout default of 1); readers pin a retained
                              // snapshot via a `bucketed` source's `version`
-    changeFeed: String = "", // bucketed targets only (retention >= 2):
-                             // CDC outbox name — after each load, publish
-                             // the not-yet-published per-version change
-                             // feeds there (BucketedMergeSink
-                             // .publishChangeFeed; idempotent catch-up)
-    outboxKeep: Int = 0, // with change_feed: >0 log-compacts the outbox
-                         // after each publish, keeping only the newest N
-                         // batch partitions (BucketedMergeSink
-                         // .compactOutboxKeep — older history collapses
-                         // into a marked all-inserts base). Size above
-                         // the laggiest consumer's worst lag: a consumer
-                         // more than N-1 batches behind refuses loudly
-    minhashIndex: String = "", // bucketed targets only (retention >= 2,
-                               // single-column key): near-dup index name —
-                               // after each load, bring the persisted
-                               // MinHash band postings there in lockstep
-                               // with the target by signing only the
-                               // load's delta (BucketedMergeSink
-                               // .syncMinhashIndex; idempotent catch-up)
-    minhashIndexText: String = "text", // column the index signs
-    lshIndex: String = "", // bucketed targets only (retention like
-                           // minhash_index, single-column key):
-                           // embedding near-dup index name — after each
-                           // load, keep the persisted cosine-LSH bucket
-                           // postings in lockstep with the target by
-                           // signing only the load's delta
-                           // (BucketedMergeSink.syncLshIndex)
-    lshIndexVec: String = "embedding", // column the LSH index signs
-    semanticIndex: String = "", // bucketed targets only (same
-                                // requirements): SemDeDup cell index
-                                // name — postings tracked per load
-                                // under centroids FROZEN at the index's
-                                // bootstrap (BucketedMergeSink
-                                // .syncSemanticIndex; the model lives
-                                // at <index>.centroids)
-    semanticIndexVec: String = "embedding", // column the cell index signs
-    profileTable: String = "", // bucketed targets only: corpus-profile
-                               // table name — after each load, every
-                               // retained target version without a
-                               // profile row gets (n, hist, psi_prev)
-                               // under version=<v>
-                               // (Profiling.syncProfile: idempotent
-                               // version-marker catch-up; a version
-                               // dropped before it was ever profiled
-                               // is a monitoring gap, not an error)
-    profileColumn: String = "", // numeric column the profile bins
-    profileLo: Double = 0.0, // fixed bin range [profile_lo, profile_hi)
-    profileHi: Double = 0.0, // — fixed edges are what make stored
-                             // profiles exactly mergeable/comparable
-    profileBins: Int = 64,
-    profileMaxPsi: Double = 0.0, // > 0: a bad-data circuit breaker —
-                                 // refuse the load BEFORE any write when
-                                 // the incoming batch's profile_column
-                                 // distribution drifts past this PSI vs
-                                 // the NEWEST stored profile row
-                                 // (requires profile:; 0 = off; first
-                                 // load has no baseline and never trips)
-    kllProfileTable: String = "", // bucketed targets only: KLL quantile
-                                  // profile table name — like profile:
-                                  // but for metrics with NO declared
-                                  // value range: every retained target
-                                  // version without a row gets
-                                  // (n, sk, ks_prev) under version=<v>
-                                  // (Profiling.syncKllProfile; same
-                                  // idempotent version-marker catch-up).
-                                  // No binning stamp needed: KLL bytes
-                                  // are self-describing and sketches
-                                  // with different k stay comparable
-                                  // (each side's rank error rides the
-                                  // KS threshold), unlike fixed bins
-    kllProfileColumn: String = "", // numeric column the profile sketches
-    kllProfileK: Int = 200, // sketch accuracy (rank error ≈1.65% at 200)
-    kllProfileMaxKs: Double = 0.0, // > 0: bad-data circuit breaker — refuse
-                                   // the load BEFORE any write when the
-                                   // batch's KS distance vs the NEWEST
-                                   // stored sketch exceeds this (requires
-                                   // kll_profile:; 0 = off; first load
-                                   // has no baseline and never trips)
-    exemplarProfileTable: String = "", // bucketed targets only: exemplar
-                                       // sample table name — the drill-
-                                       // down sibling of profile:/
-                                       // kll_profile:: every retained
-                                       // target version without rows gets
-                                       // its k bottom-k-by-md5(key)
-                                       // example rows (h, payload, n)
-                                       // under version=<v> (Profiling
-                                       // .syncExemplarProfile; same
-                                       // idempotent version-marker
-                                       // catch-up). Deterministic — a
-                                       // pure function of the key set —
-                                       // and exactly mergeable across
-                                       // versions (mergedExemplars)
-    exemplarKey: String = "", // row-identity column hashed for the sample
-    exemplarK: Int = 20, // exemplar rows stored per version
+    derived: Seq[Derived] = Nil, // the tables each load keeps in step
+                                 // with the target (change_feed:,
+                                 // *_index:, profile:, kll_profile:,
+                                 // exemplar_profile: and their tuning
+                                 // keys — graft.core.Derived), table
+                                 // names as written: Runner resolves them
     deleteWhere: String = "", // post-load predicate purge on the TARGET
                               // (row-level TTL / GDPR erasure): every
                               // target row matching this SQL boolean is
@@ -258,6 +173,55 @@ object PipelineSpec {
       case _ => Map.empty
     }
 
+  /** A derived table key and the tuning keys of its [[Derived]] case:
+    * the case is built from the table name at its own defaults, then
+    * each tuning key present sets one field. `role` says what the
+    * tuning keys configure, for the refusal of one without its table. */
+  private final class Artifact[D <: Derived](val table: String,
+      val role: String, build: String => D, knobs: (String, (D, String) => D)*) {
+    def keys: Seq[String] = knobs.map(_._1)
+    def parse(tableName: String, get: String => Option[String]): D =
+      knobs.foldLeft(build(tableName)) { case (d, (k, set)) =>
+        get(k).fold(d)(set(d, _)) }
+  }
+
+  private val artifacts: Seq[Artifact[_ <: Derived]] = Seq(
+    new Artifact[ChangeFeed]("change_feed", "bounds a change_feed outbox",
+      ChangeFeed(_), ("outbox_keep", (d, v) => d.copy(outboxKeep = v.toInt))),
+    new Artifact[MinhashIndex]("minhash_index", "tunes the MinHash postings",
+      MinhashIndex(_), ("minhash_index_text", (d, v) => d.copy(textCol = v))),
+    new Artifact[LshIndex]("lsh_index", "tunes the LSH postings",
+      LshIndex(_), ("lsh_index_vec", (d, v) => d.copy(vecCol = v))),
+    new Artifact[SemanticIndex]("semantic_index", "tunes the cell postings",
+      SemanticIndex(_), ("semantic_index_vec", (d, v) => d.copy(vecCol = v))),
+    new Artifact[Profile]("profile", "configures the stored profile",
+      Profile(_),
+      ("profile_column", (d, v) => d.copy(column = v)),
+      ("profile_lo", (d, v) => d.copy(lo = v.toDouble)),
+      ("profile_hi", (d, v) => d.copy(hi = v.toDouble)),
+      ("profile_bins", (d, v) => d.copy(nbins = v.toInt)),
+      ("profile_max_psi", (d, v) => d.copy(maxPsi = v.toDouble))),
+    new Artifact[KllProfile]("kll_profile", "configures the stored sketch",
+      KllProfile(_),
+      ("kll_profile_column", (d, v) => d.copy(column = v)),
+      ("kll_profile_k", (d, v) => d.copy(k = v.toInt)),
+      ("kll_profile_max_ks", (d, v) => d.copy(maxKs = v.toDouble))),
+    new Artifact[ExemplarProfile]("exemplar_profile",
+      "configures the stored sample", ExemplarProfile(_),
+      ("exemplar_key", (d, v) => d.copy(keyCol = v)),
+      ("exemplar_k", (d, v) => d.copy(k = v.toInt))))
+
+  /** The stage's derived cases. A tuning key whose table key is absent
+    * refuses, naming both (the orphan rule). */
+  private def parseDerived(name: String, get: String => Option[String]): Seq[Derived] =
+    artifacts.flatMap { a =>
+      val table = get(a.table)
+      for (k <- a.keys.find(get(_).nonEmpty) if table.isEmpty)
+        throw new IllegalArgumentException(s"pype '$name': $k needs " +
+          s"${a.table}: ($k ${a.role}) — set ${a.table}, or drop $k")
+      table.map(a.parse(_, get))
+    }
+
   private def parseStage(name: String, m: Map[String, Object]): StageSpec = {
     val c = new Fields(s"pype '$name'", m)
     def str(k: String, d: String) = c.get(k).map(_.toString).getOrElse(d)
@@ -266,6 +230,23 @@ object PipelineSpec {
         l.asScala.toSeq.flatMap(x => Option(x)).map(_.toString)
       case Some(s) => Seq(s.toString)
       case None    => Nil
+    }
+    // a key counts when its value is non-empty
+    val get = (k: String) => c.get(k).map(_.toString).filter(_.nonEmpty)
+    // the consumer rule, before the orphan rule: a stray outbox_keep on
+    // a consumer must not be steered toward setting a change_feed there
+    if (get("subscribe_feed").nonEmpty) {
+      require(get("target_table").nonEmpty,
+        s"pype '$name': subscribe_feed needs a target_table (the replica)")
+      val producer = (Seq("extract_query", "transformers", "sources") ++
+        artifacts.flatMap(a => a.table +: a.keys) ++
+        Seq("delete_where", "scd2_ts")).filter(get(_).nonEmpty)
+      require(producer.isEmpty,
+        s"pype '$name': subscribe_feed cannot combine with " +
+          s"${producer.mkString(", ")} — a consumer stage's input is its " +
+          "outbox; extracts, transforms and derived feeds/indexes/purges " +
+          "belong to a producer stage (point one at the replica as its " +
+          "target if needed)")
     }
     c.done(StageSpec(
       name = name,
@@ -284,27 +265,7 @@ object PipelineSpec {
       compact = str("compact", "false").toBoolean,
       compactMaxFiles = str("compact_max_files", "1").toInt,
       retainVersions = str("retain_versions", "0").toInt,
-      changeFeed = str("change_feed", ""),
-      outboxKeep = str("outbox_keep", "0").toInt,
-      minhashIndex = str("minhash_index", ""),
-      minhashIndexText = str("minhash_index_text", "text"),
-      lshIndex = str("lsh_index", ""),
-      lshIndexVec = str("lsh_index_vec", "embedding"),
-      semanticIndex = str("semantic_index", ""),
-      semanticIndexVec = str("semantic_index_vec", "embedding"),
-      profileTable = str("profile", ""),
-      profileColumn = str("profile_column", ""),
-      profileLo = str("profile_lo", "0").toDouble,
-      profileHi = str("profile_hi", "0").toDouble,
-      profileBins = str("profile_bins", "64").toInt,
-      profileMaxPsi = str("profile_max_psi", "0").toDouble,
-      kllProfileTable = str("kll_profile", ""),
-      kllProfileColumn = str("kll_profile_column", ""),
-      kllProfileK = str("kll_profile_k", "200").toInt,
-      kllProfileMaxKs = str("kll_profile_max_ks", "0").toDouble,
-      exemplarProfileTable = str("exemplar_profile", ""),
-      exemplarKey = str("exemplar_key", ""),
-      exemplarK = str("exemplar_k", "20").toInt,
+      derived = parseDerived(name, get),
       deleteWhere = str("delete_where", ""),
       subscribeFeed = str("subscribe_feed", ""),
       consumerName = str("consumer_name", ""),

@@ -3,7 +3,6 @@ package graft.core
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.config.StageSpec
 import graft.ops.Profiling
 import graft.sink.{BucketedMergeSink, MergeSink}
 
@@ -14,9 +13,23 @@ import graft.sink.{BucketedMergeSink, MergeSink}
   * catch-ups run and what a load must satisfy first, once for all
   * seven — `Runner.load` (the stage keys) and
   * `Streams.streamingStage` (one load per micro-batch) both go
-  * through it. `stageKey` names the YAML key that declares the case. */
+  * through it. `stageKey` names the YAML key that declares the case;
+  * `PipelineSpec` parses that key and its tuning keys straight into
+  * the case, so each default below is the YAML default too. */
 sealed abstract class Derived(val stageKey: String) {
   def path: String
+
+  /** The case with its table name (as written in the stage) resolved
+    * to a path. */
+  def at(resolve: String => String): Derived = this match {
+    case d: Derived.ChangeFeed => d.copy(path = resolve(d.path))
+    case d: Derived.MinhashIndex => d.copy(path = resolve(d.path))
+    case d: Derived.LshIndex => d.copy(path = resolve(d.path))
+    case d: Derived.SemanticIndex => d.copy(path = resolve(d.path))
+    case d: Derived.Profile => d.copy(path = resolve(d.path))
+    case d: Derived.KllProfile => d.copy(path = resolve(d.path))
+    case d: Derived.ExemplarProfile => d.copy(path = resolve(d.path))
+  }
 }
 
 object Derived {
@@ -72,9 +85,9 @@ object Derived {
     * circuit breaker against the newest stored row. */
   final case class Profile(
       path: String,
-      column: String,
-      lo: Double,
-      hi: Double,
+      column: String = "",
+      lo: Double = 0.0,
+      hi: Double = 0.0,
       nbins: Int = 64,
       maxPsi: Double = 0.0) extends Derived("profile")
 
@@ -85,7 +98,7 @@ object Derived {
     * newest non-empty stored sketch. */
   final case class KllProfile(
       path: String,
-      column: String,
+      column: String = "",
       k: Int = graft.functions.KllSketch.DefaultK,
       maxKs: Double = 0.0) extends Derived("kll_profile")
 
@@ -95,40 +108,8 @@ object Derived {
     * bucketed-target and no-scd2 shape contracts. */
   final case class ExemplarProfile(
       path: String,
-      keyCol: String,
+      keyCol: String = "",
       k: Int = 20) extends Derived("exemplar_profile")
-
-  /** A stage's derived list, built from its stage keys with table names
-    * resolved by `targetPath` — the same defaults the stage keys have
-    * always had (index signers at their sync defaults). A key that
-    * tunes an artifact the stage does not declare is refused here,
-    * before any write. */
-  def of(stage: StageSpec, targetPath: String => String): Seq[Derived] = {
-    require(stage.outboxKeep == 0 || stage.changeFeed.nonEmpty,
-      s"stage ${stage.name}: outbox_keep bounds a change_feed outbox — " +
-        "set change_feed, or drop outbox_keep")
-    require(stage.profileMaxPsi == 0.0 || stage.profileTable.nonEmpty,
-      s"stage ${stage.name}: profile_max_psi needs profile: " +
-        "(the stored profile is the drift baseline)")
-    require(stage.kllProfileMaxKs == 0.0 || stage.kllProfileTable.nonEmpty,
-      s"stage ${stage.name}: kll_profile_max_ks needs kll_profile: " +
-        "(the stored sketch is the drift baseline)")
-    require(stage.exemplarKey.isEmpty || stage.exemplarProfileTable.nonEmpty,
-      s"stage ${stage.name}: exemplar_key needs exemplar_profile: " +
-        "(it names the hash column of the stored sample)")
-    def at(table: String) = Option.when(table.nonEmpty)(targetPath(table))
-    Seq(
-      at(stage.changeFeed).map(ChangeFeed(_, stage.outboxKeep)),
-      at(stage.minhashIndex).map(MinhashIndex(_, stage.minhashIndexText)),
-      at(stage.lshIndex).map(LshIndex(_, stage.lshIndexVec)),
-      at(stage.semanticIndex).map(SemanticIndex(_, stage.semanticIndexVec)),
-      at(stage.profileTable).map(Profile(_, stage.profileColumn,
-        stage.profileLo, stage.profileHi, stage.profileBins, stage.profileMaxPsi)),
-      at(stage.kllProfileTable).map(KllProfile(_, stage.kllProfileColumn,
-        stage.kllProfileK, stage.kllProfileMaxKs)),
-      at(stage.exemplarProfileTable).map(ExemplarProfile(_, stage.exemplarKey,
-        stage.exemplarK))).flatten
-  }
 
   /** One load into the target at `path` and the derived list it
     * maintains. `who` names the load in refusals; `deleteWhere` is an

@@ -105,8 +105,8 @@ final class Runner(
       // (tablePath), so a placeholder-bearing name must not dodge the guard
       val feedRace = stages.map(s => Hydrate(s.subscribeFeed, ph))
         .filter(_.nonEmpty).toSet
-        .intersect(
-          stages.map(s => Hydrate(s.changeFeed, ph)).filter(_.nonEmpty).toSet)
+        .intersect(stages.flatMap(_.derived)
+          .collect { case f: Derived.ChangeFeed => Hydrate(f.path, ph) }.toSet)
       require(feedRace.isEmpty,
         s"parallel pipeline '$pipeline' runs a subscribe_feed consumer " +
           s"concurrently with the producer publishing that outbox: " +
@@ -155,25 +155,28 @@ final class Runner(
       stage: StageSpec,
       ph: Map[String, String],
       peakTaskMem: java.util.concurrent.atomic.AtomicLong): StageMetrics = {
-    if (stage.subscribeFeed.nonEmpty) return runSubscribeStage(stage, ph, peakTaskMem)
-    // reject collisions up front: createOrReplaceTempView would overwrite
-    // an existing warehouse/target view and the stage-local drop below
-    // would then DELETE it (temp views don't layer — a drop can't
-    // un-shadow). Also a source view named like this stage's own target
-    // would drop the target view registered during load.
-    stage.sources.keys.foreach { v =>
-      require(v != stage.targetTable,
-        s"stage '${stage.name}': source view '$v' collides with its target table")
-      require(!spark.catalog.tableExists(v),
-        s"stage '${stage.name}': source view '$v' collides with an existing table/view")
-    }
     val t0 = System.nanoTime()
-    val extracted = extract(stage, ph)
-    val t1 = System.nanoTime()
-    val transformed = TransformerRegistry.applyChain(
-      extracted, TransformerRegistry.loadChain(stage.transformers))
-    val t2 = System.nanoTime()
-    val rows = load(stage, transformed, ph)
+    val (t1, t2, rows) =
+      if (stage.subscribeFeed.nonEmpty) (t0, t0, subscribe(stage, ph))
+      else {
+        // reject collisions up front: createOrReplaceTempView would
+        // overwrite an existing warehouse/target view and the
+        // stage-local drop below would then DELETE it (temp views don't
+        // layer — a drop can't un-shadow). Also a source view named like
+        // this stage's own target would drop the target view registered
+        // during load.
+        stage.sources.keys.foreach { v =>
+          require(v != stage.targetTable,
+            s"stage '${stage.name}': source view '$v' collides with its target table")
+          require(!spark.catalog.tableExists(v),
+            s"stage '${stage.name}': source view '$v' collides with an existing table/view")
+        }
+        val extracted = extract(stage, ph)
+        val t1 = System.nanoTime()
+        val transformed = TransformerRegistry.applyChain(
+          extracted, TransformerRegistry.loadChain(stage.transformers))
+        (t1, System.nanoTime(), load(stage, transformed, ph))
+      }
     if (stage.postQuery.nonEmpty)
       // count(), NOT collect(): the reference's post-hook is side-effect
       // SQL (Pype.py:80,164-168) whose result is discarded — a user
@@ -194,8 +197,8 @@ final class Runner(
     m
   }
 
-  /** A `subscribe_feed:` CONSUMER stage: no extract/transform — the
-    * stage's input is a CDC outbox (another stage's `change_feed:`
+  /** A `subscribe_feed:` CONSUMER stage's load: no extract/transform —
+    * the stage's input is a CDC outbox (another stage's `change_feed:`
     * target, or any [[graft.sink.BucketedMergeSink.publishChangeFeed]]
     * layout), and its load applies every not-yet-applied batch to the
     * replica at `target_table`, in order, with marker-tracked progress
@@ -203,32 +206,12 @@ final class Runner(
     * replication from config: the producer pipeline ships feeds, the
     * consumer pipeline replays them — never snapshots. `compact: true`
     * is honored (per-batch merges fragment the replica exactly like any
-    * other incremental load); the producer-side stage keys are refused
-    * — a replica derives its own feeds/indexes from its OWN pipeline
-    * stage if needed, pointed at the replica as a target. */
-  private def runSubscribeStage(
-      stage: StageSpec,
-      ph: Map[String, String],
-      peakTaskMem: java.util.concurrent.atomic.AtomicLong): StageMetrics = {
-    require(stage.targetTable.nonEmpty,
-      s"stage ${stage.name}: subscribe_feed needs a target_table (the replica)")
-    require(stage.extractQuery.isEmpty && stage.transformers.isEmpty &&
-        stage.sources.isEmpty,
-      s"stage ${stage.name}: subscribe_feed is a consumer stage — the " +
-        "outbox IS its input; extract_query/transformers/sources don't apply " +
-        "(transform on the producer side, or in a stage reading the replica)")
-    def refuse(keys: Seq[String]): Unit =
-      require(keys.isEmpty,
-        s"stage ${stage.name}: subscribe_feed cannot combine with " +
-          s"${keys.mkString(", ")} — derived feeds/indexes/purges belong " +
-          "to a producer stage (point one at the replica as its target if needed)")
-    // the plain producer keys first: Derived.of's own refusals would
-    // steer an outbox_keep toward setting a change_feed here
-    refuse(Seq("delete_where" -> stage.deleteWhere.nonEmpty,
-      "scd2_ts" -> stage.scd2Ts.nonEmpty,
-      "outbox_keep" -> (stage.outboxKeep != 0)).collect { case (k, true) => k })
-    refuse(Derived.of(stage, tablePath(ph)).map(_.stageKey))
-    val t0 = System.nanoTime()
+    * other incremental load); the extract and every producer-side
+    * stage key are refused when the stage is parsed — a replica derives
+    * its own feeds/indexes from its OWN pipeline stage if needed,
+    * pointed at the replica as a target. Returns the replica's row
+    * count. */
+  private def subscribe(stage: StageSpec, ph: Map[String, String]): Long = {
     val replica = targetPath(stage.targetTable)
     graft.sink.BucketedMergeSink.subscribeFeed(
       spark, tablePath(ph)(stage.subscribeFeed), replica,
@@ -239,16 +222,7 @@ final class Runner(
     if (stage.compact)
       graft.sink.BucketedMergeSink.compact(spark, replica,
         maxFiles = stage.compactMaxFiles)
-    val result = graft.sink.BucketedMergeSink.read(spark, replica)
-    result.createOrReplaceTempView(stage.targetTable)
-    val rows = result.count()
-    if (stage.postQuery.nonEmpty)
-      spark.sql(Hydrate(stage.postQuery, ph)).count()
-    val t1 = System.nanoTime()
-    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
-    val rt = Runtime.getRuntime
-    StageMetrics(stage.name, rows, 0.0, 0.0, (t1 - t0) / 1e9,
-      peakTaskMem.get(), rt.totalMemory() - rt.freeMemory())
+    register(stage, bucketed = true)
   }
 
   /** The extract is declarative SQL over registered views — the engine-side
@@ -277,7 +251,7 @@ final class Runner(
     // refusal and guard rides the shared load path (Derived.Load).
     Derived.Load(s"stage ${stage.name}", path, stage.key,
       stage.identifier, stage.loadType, stage.fieldsExcludedFromUpdate,
-      stage.buckets, stage.retainVersions, Derived.of(stage, tablePath(ph)),
+      stage.buckets, stage.retainVersions, stage.derived.map(_.at(tablePath(ph))),
       // scd2_ts and delete_where hydrate like the extract: an
       // incremental pipeline passes each run's batch timestamp / TTL
       // cutoff as a placeholder — a hardcoded literal would stamp every
@@ -288,16 +262,20 @@ final class Runner(
       .run(spark, df)
       // a delete against an absent target loads nothing and registers
       // no view
-      .fold(0L) { bucketed =>
-        val result =
-          if (bucketed) graft.sink.BucketedMergeSink.read(spark, path)
-          else spark.read.parquet(path)
-        result.createOrReplaceTempView(stage.targetTable)
-        // metrics row count comes from the WRITTEN parquet (a
-        // footer-metadata count) — counting `df` here would re-run the
-        // whole extract+transform plan a second time just for the log
-        // line, doubling stage cost
-        result.count()
-      }
+      .fold(0L)(register(stage, _))
+  }
+
+  /** Register the loaded target as a view named like the table and
+    * count it. The metrics row count comes from the WRITTEN parquet (a
+    * footer-metadata count) — counting the batch instead would re-run
+    * the whole extract+transform plan a second time just for the log
+    * line, doubling stage cost. */
+  private def register(stage: StageSpec, bucketed: Boolean): Long = {
+    val path = targetPath(stage.targetTable)
+    val result =
+      if (bucketed) graft.sink.BucketedMergeSink.read(spark, path)
+      else spark.read.parquet(path)
+    result.createOrReplaceTempView(stage.targetTable)
+    result.count()
   }
 }

@@ -114,11 +114,10 @@ object Profiling {
     val root = new org.apache.hadoop.fs.Path(profilePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("version=") =>
-        s.stripPrefix("version=").toLong }
-      .filter(v => fs.exists(
-        new org.apache.hadoop.fs.Path(root, s"version=$v/_SUCCESS")))
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("version=") &&
+        graft.sink.BucketedMergeSink.isPublished(fs, p))
+      .map(_.getName.stripPrefix("version=").toLong)
       .sorted
   }
 

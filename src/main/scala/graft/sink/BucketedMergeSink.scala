@@ -208,25 +208,21 @@ object BucketedMergeSink {
 
   // ----------------------------------------------------------- manifest
 
-  /** Current bucket -> commit-dir mapping of the target (empty for an
-    * empty target) — the introspection surface for tests and tooling. */
-  def manifest(spark: SparkSession, path: String): Map[Int, String] =
-    readManifest(spark, path)
-
-  /** Absolute path of the live data dir for `bucket`, if it holds rows. */
-  def bucketDataDir(spark: SparkSession, path: String, bucket: Int): Option[String] =
-    readManifest(spark, path).get(bucket)
-      .map(c => leafDir(path, c, bucket).toString)
-
-  /** bucket -> commit-dir name (e.g. 3 -> "c1f2..."), empty for an
-    * empty target. */
-  private[sink] def readManifest(spark: SparkSession, path: String): Map[Int, String] = {
+  /** Current bucket -> commit-dir name mapping of the target (e.g. 3 ->
+    * "c1f2..."), empty for an empty target — one read of the newest
+    * manifest file. */
+  def manifest(spark: SparkSession, path: String): Map[Int, String] = {
     val fs = fsOf(spark, path)
     currentManifestFile(fs, path) match {
       case None => Map.empty
       case Some(p) => parseManifest(fs, p)
     }
   }
+
+  /** Absolute path of the live data dir for `bucket`, if it holds rows. */
+  def bucketDataDir(spark: SparkSession, path: String, bucket: Int): Option[String] =
+    manifest(spark, path).get(bucket)
+      .map(c => leafDir(path, c, bucket).toString)
 
   private def parseManifest(fs: FileSystem, p: Path): Map[Int, String] =
     readSmallFile(fs, p).linesIterator.filter(_.nonEmpty).map { l =>
@@ -260,10 +256,14 @@ object BucketedMergeSink {
     * reader holding a retained version never sees mixed or vanished
     * data, because GC only removes dirs unreferenced by EVERY retained
     * manifest. */
-  def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val mapping = retainedManifest(spark, path, version)
+  def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
+    readMapping(spark, path, retainedManifest(spark, path, version))
+
+  /** Every bucket `mapping` holds: one manifest version's rows, with
+    * buckets and dirs from that one parsed file. */
+  private def readMapping(
+      spark: SparkSession, path: String, mapping: Map[Int, String]): DataFrame =
     readDirs(spark, path, readMeta(spark, path), mapping, mapping.keys.toSeq)
-  }
 
   /** The bucket -> commit-dir mapping of retained manifest `version`. */
   private def retainedManifest(
@@ -833,12 +833,14 @@ object BucketedMergeSink {
     * treating it as data. */
   private val baseMarker = "_base"
 
-  /** A feed partition counts as PUBLISHED only once the parquet job's
-    * `_SUCCESS` commit marker exists — the dir itself appears first and
-    * the marker last, so bare existence spans the whole crash window. An
-    * empty delta (a compact's no-op diff) is published too: it has
-    * `_SUCCESS` and zero part files. */
-  private def isPublished(fs: FileSystem, partDir: Path): Boolean =
+  /** A partition dir — an outbox batch, a profile version — counts as
+    * PUBLISHED only once the parquet job's `_SUCCESS` commit marker
+    * exists — the dir itself appears first and the marker last, so bare
+    * existence spans the whole crash window. An empty delta (a compact's
+    * no-op diff) is published too: it has `_SUCCESS` and zero part
+    * files. The one "partition is committed" rule of every
+    * version-marker catch-up. */
+  private[graft] def isPublished(fs: FileSystem, partDir: Path): Boolean =
     fs.exists(new Path(partDir, "_SUCCESS"))
 
   private def outboxPart(feedPath: String, batch: Long): Path =
@@ -1235,14 +1237,16 @@ object BucketedMergeSink {
     * column). An empty target still has a schema — it is part of the
     * layout metadata. */
   def read(spark: SparkSession, path: String): DataFrame =
-    readBuckets(spark, path, readManifest(spark, path).keys.toSeq)
+    // ONE manifest read: a commit landing between two reads would mix
+    // one version's bucket set with the next one's dirs, a state no
+    // version held
+    readMapping(spark, path, manifest(spark, path))
 
   /** The given buckets of the target, resolved through the manifest into
     * explicit leaf dirs — untouched buckets are never even listed
     * (path-level pruning; pinned in BucketedMergeSinkSpec). */
-  def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): DataFrame = {
-    readDirs(spark, path, readMeta(spark, path), readManifest(spark, path), buckets)
-  }
+  def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): DataFrame =
+    readDirs(spark, path, readMeta(spark, path), manifest(spark, path), buckets)
 
   /** Point-lookup / keyed read: prune to the buckets the given key rows
     * hash to — the read-side twin of the write-side pruning. `keys` must

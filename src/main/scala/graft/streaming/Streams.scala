@@ -545,7 +545,7 @@ object Streams {
             .write.mode("overwrite").parquet(staged)
         }: Unit
       }
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+      if (!sink.isPublished(fs, dir)) {
         val feed: DataFrame = (readTarget, loadType) match {
           case (None, "upsert") => // bootstrap: the whole batch inserts
             graft.sink.MergeSink.dedupeBatch(batch, key)

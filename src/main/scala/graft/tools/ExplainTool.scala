@@ -7,9 +7,9 @@ package graft.tools
   * plan a bench pass actually executes.
   *
   * Usage: `runMain graft.tools.ExplainTool <outDir> <suffix> [q1,q2,...]`
-  * (no query list = every battery entry). Reads `SPARK_GRAFT_SF_DIR` /
-  * `SPARK_GRAFT_CPUS` like the bench. Not part of any driver contract —
-  * a measurement tool only.
+  * (no query list = every battery entry). Reads `SPARK_GRAFT_SF_DIR`
+  * like the bench; the session is [[ToolSession]]'s. Not part of any
+  * driver contract — a measurement tool only.
   */
 object ExplainTool {
   def main(args: Array[String]): Unit = {
@@ -20,12 +20,7 @@ object ExplainTool {
       if (args.length > 2) args(2).split(",").toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession.create(configure = b => b
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession("ERROR")
     names.foreach { name =>
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -7,18 +7,14 @@ import org.apache.spark.sql.functions._
   * session so a change can be attributed to the exact expression it
   * targets (ProfileTool attributes to jobs; this attributes within a
   * job). Measurement-only — not part of any driver contract. Usage:
-  * `MicroBench <case> [passes]`; env like the bench. */
+  * `MicroBench <case> [passes]`; `SPARK_GRAFT_SF_DIR` like the bench,
+  * session from [[ToolSession]]. */
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val which = args(0)
     val passes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.create(configure = b => b
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession("ERROR")
     val docs = graft.Tables.load(spark, sfDir, "documents")
     import graft.ops.Dedup
 

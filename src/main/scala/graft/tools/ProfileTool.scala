@@ -6,19 +6,15 @@ package graft.tools
   * attributes a harness query's wall to its sequential actions (merge
   * passes, manifest commits, streaming micro-batches), which per-query
   * wall/cpu totals cannot. Usage:
-  * `ProfileTool <query> [passes]`; env like the bench. Not part of any
+  * `ProfileTool <query> [passes]`; `SPARK_GRAFT_SF_DIR` like the bench,
+  * session from [[ToolSession]]. Not part of any
   * driver contract — a measurement tool only. */
 object ProfileTool {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val passes = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession.create(configure = b => b
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession("ERROR")
     final case class J(id: Int, t0: Long, desc: String,
         var tasks: Int = 0, var t1: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()

@@ -43,6 +43,39 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
   }
 
+  test("read resolves meta, buckets and dirs from ONE manifest read: a " +
+    "merge committed right as the reader opens the manifest leaves it " +
+    "with exactly one version's rows") {
+    val path = tmpTarget()
+    BucketedMergeSink.merge(spark, seed(3), path, "upsert", Seq("id"),
+      numBuckets = 8, retainVersions = 2)
+    // the racing merge updates key 1 and inserts a key hashing to a
+    // bucket the target leaves empty
+    val used = BucketedMergeSink.manifest(spark, path).keySet
+    val fresh = (4L to 200L).toDF("id")
+      .select(col("id"), BucketedMergeSink.bucketExpr(Seq("id"), 8).as("b"))
+      .as[(Long, Int)].collect().find(r => !used(r._2)).get._1
+    val racing = Seq((1L, "name1b", 11L), (fresh, "fresh", 0L))
+      .toDF("id", "name", "v")
+    def rows(df: DataFrame) = df.as[(Long, String, Long)].collect().toSet
+    val before = rows(BucketedMergeSink.read(spark, path))
+    HookedFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    var fired = false
+    HookedFileSystem.onceBeforeOpen(p =>
+      p.getParent.getName == "_graft_manifest" && p.getName.startsWith("v")) {
+      BucketedMergeSink.merge(spark, racing, path, "upsert", Seq("id"))
+      fired = true
+    }
+    val got =
+      try rows(BucketedMergeSink.read(spark, HookedFileSystem.path(path)))
+      finally HookedFileSystem.clear()
+    assert(fired, "the racing merge must run inside the read")
+    val after = rows(BucketedMergeSink.read(spark, path))
+    assert(after != before && after.exists(_._1 == fresh))
+    assert(got == before || got == after,
+      s"read returned a state no version held: $got")
+  }
+
   test("upsert/update/delete match the flat MergeSink semantics exactly") {
     val path = tmpTarget()
     val target = seed(50)

@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.PipelineSpec
+import graft.core.Derived
+import graft.core.Derived._
 
 /** YAML registry parsing + eager validation (reference:
   * Pypeline.py:15-19,37-50; the unknown-pype check at Pypeline.py:43 is
@@ -68,8 +70,9 @@ class PipelineSpecSpec extends AnyFunSuite {
         |    retain_versions: 2
         |    change_feed: tgt_changes
         |""".stripMargin
-    assert(PipelineSpec.fromYaml(y).stages("s").changeFeed == "tgt_changes")
-    assert(PipelineSpec.fromYaml(yaml).stages("stage_a").changeFeed == "")
+    assert(PipelineSpec.fromYaml(y).stages("s").derived ==
+      Seq(Derived.ChangeFeed("tgt_changes")))
+    assert(PipelineSpec.fromYaml(yaml).stages("stage_a").derived.isEmpty)
   }
 
   test("parses scd2 load type with scd2_ts (default empty)") {
@@ -150,6 +153,126 @@ class PipelineSpecSpec extends AnyFunSuite {
     // every key the parser reads stays accepted, the reference-parity
     // bulk_size and debug included (stage_a above sets both)
     assert(PipelineSpec.fromYaml(yaml).stages("stage_a").bulkSize == 500)
+  }
+
+  private def stage(keys: String*) = PipelineSpec.fromYaml(
+    ("pypes:" +: "  s:" +: "    extract_query: \"SELECT 1\"" +:
+      keys.map("    " + _)).mkString("\n")).stages("s")
+
+  // each derived table key with its tuning keys, one sample value each
+  private val tuning = Seq(
+    "change_feed" -> Seq("outbox_keep: 3"),
+    "minhash_index" -> Seq("minhash_index_text: body"),
+    "lsh_index" -> Seq("lsh_index_vec: v"),
+    "semantic_index" -> Seq("semantic_index_vec: v"),
+    "profile" -> Seq("profile_column: n", "profile_lo: 1", "profile_hi: 9",
+      "profile_bins: 16", "profile_max_psi: 0.5"),
+    "kll_profile" -> Seq("kll_profile_column: n", "kll_profile_k: 100",
+      "kll_profile_max_ks: 0.25"),
+    "exemplar_profile" -> Seq("exemplar_key: id", "exemplar_k: 5"))
+
+  test("each derived table key parses into its Derived case, at the " +
+    "case's own defaults when no tuning key is set") {
+    val defaults = Seq[Derived](ChangeFeed("t"), MinhashIndex("t"),
+      LshIndex("t"), SemanticIndex("t"), Profile("t"), KllProfile("t"),
+      ExemplarProfile("t"))
+    tuning.map(_._1).zip(defaults).foreach { case (table, expected) =>
+      assert(stage(s"$table: t").derived == Seq(expected), table)
+    }
+    assert(MinhashIndex("t").textCol == "text")
+    assert(LshIndex("t").vecCol == "embedding")
+    assert(Profile("t").nbins == 64)
+    assert(KllProfile("t").k == graft.functions.KllSketch.DefaultK)
+    assert(ExemplarProfile("t").k == 20)
+    // every tuning key sets its field; cases come in the fixed order of
+    // the seven table keys
+    val all = stage(tuning.flatMap { case (t, ks) => s"$t: ${t}_tbl" +: ks }: _*)
+    assert(all.derived == Seq(ChangeFeed("change_feed_tbl", 3),
+      MinhashIndex("minhash_index_tbl", textCol = "body"),
+      LshIndex("lsh_index_tbl", vecCol = "v"),
+      SemanticIndex("semantic_index_tbl", vecCol = "v"),
+      Profile("profile_tbl", "n", 1.0, 9.0, 16, 0.5),
+      KllProfile("kll_profile_tbl", "n", 100, 0.25),
+      ExemplarProfile("exemplar_profile_tbl", "id", 5)))
+  }
+
+  test("a tuning key without its table key refuses at parse time, naming " +
+    "both keys") {
+    for ((table, keys) <- tuning; key <- keys) {
+      val e = intercept[IllegalArgumentException](stage("buckets: 4", key))
+      val knob = key.takeWhile(_ != ':')
+      assert(e.getMessage.contains(s"pype 's': $knob needs $table:"),
+        e.getMessage)
+    }
+  }
+
+  test("a subscribe_feed stage refuses every producer key with the " +
+    "consumer-stage message") {
+    val producer = Seq("extract_query: \"SELECT 1\"", "transformers: [a.B]",
+      "sources: {v: {format: csv, path: /x}}") ++
+      tuning.flatMap { case (t, ks) => s"$t: x" +: ks } ++
+      Seq("delete_where: \"v > 0\"", "scd2_ts: \"2024-01-01 00:00:00\"")
+    producer.foreach { key =>
+      val e = intercept[IllegalArgumentException](PipelineSpec.fromYaml(
+        s"""pypes:
+           |  c:
+           |    subscribe_feed: outbox
+           |    target_table: replica
+           |    $key
+           |""".stripMargin))
+      assert(e.getMessage.contains("subscribe_feed cannot combine with " +
+        key.takeWhile(_ != ':')) && e.getMessage.contains("consumer stage"),
+        e.getMessage)
+    }
+    // the consumer's own keys still parse
+    val c = PipelineSpec.fromYaml(
+      """pypes:
+        |  c:
+        |    subscribe_feed: outbox
+        |    consumer_name: replica_main
+        |    target_table: replica
+        |    key: [id]
+        |    buckets: 4
+        |    compact: true
+        |""".stripMargin).stages("c")
+    assert(c.subscribeFeed == "outbox" && c.derived.isEmpty)
+  }
+
+  test("a cdc_ingest-style producer and consumer pair parses") {
+    val spec = PipelineSpec.fromYaml(
+      """pypelines:
+        |  ingest: [producer, consumer]
+        |pypes:
+        |  producer:
+        |    sources:
+        |      changes: {format: parquet, path: "/x"}
+        |    extract_query: "SELECT doc_id, text, n_chars, epoch FROM changes"
+        |    target_table: docs
+        |    type: upsert
+        |    key: [doc_id]
+        |    buckets: 4
+        |    retain_versions: 4
+        |    change_feed: docs_outbox
+        |    outbox_keep: 3
+        |    minhash_index: docs_minhash
+        |    kll_profile: docs_kll
+        |    kll_profile_column: n_chars
+        |    kll_profile_max_ks: 0.3
+        |    delete_where: "epoch < {ttl_epoch}"
+        |    compact: true
+        |  consumer:
+        |    subscribe_feed: docs_outbox
+        |    consumer_name: replica
+        |    target_table: docs_replica
+        |    key: [doc_id]
+        |    buckets: 4
+        |""".stripMargin)
+    val p = spec.stages("producer")
+    assert(p.derived == Seq(ChangeFeed("docs_outbox", 3),
+      MinhashIndex("docs_minhash"),
+      KllProfile("docs_kll", "n_chars", maxKs = 0.3)))
+    assert(p.deleteWhere == "epoch < {ttl_epoch}" && p.compact)
+    assert(spec.stages("consumer").consumerName == "replica")
   }
 
   test("empty yaml is rejected") {

@@ -8,11 +8,7 @@ package graft
 object QRecall {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = GraftSession.create(configure = _
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.ToolSession()
     // warmup: parquet footers + codegen compiler init off the clock
     Seq("documents", "embeddings").foreach(t =>
       Tables.load(spark, dir, t).groupBy().count()

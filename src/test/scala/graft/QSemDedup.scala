@@ -14,10 +14,7 @@ object QSemDedup {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val thr = if (args.length > 1) args(1).toDouble else 0.4
     val probe = if (args.length > 2) args(2).toInt else 1
-    val spark = GraftSession.create(configure = _
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.ToolSession()
     val e = Tables.load(spark, dir, "embeddings")
     val t0 = System.nanoTime()
     val sem = Similarity.semanticDupPairs(e, thr, probeCells = probe).select("id_a", "id_b").cache()

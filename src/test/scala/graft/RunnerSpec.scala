@@ -1165,6 +1165,58 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       ep.getMessage)
   }
 
+  test("debug: true logs the Pype line for a subscribe_feed consumer " +
+    "stage like any other stage") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "name", "v")
+      .createOrReplaceTempView("dbg_src")
+    val root = Files.createTempDirectory("graft-runner-dbg").toString
+    val ry =
+      s"""pypelines:
+         |  p: [producer, consumer]
+         |pypes:
+         |  producer:
+         |    extract_query: "SELECT id, name, v FROM dbg_src"
+         |    target_table: tgt_dbg
+         |    key: [id]
+         |    buckets: 4
+         |    retain_versions: 2
+         |    change_feed: tgt_dbg_outbox
+         |    debug: true
+         |  consumer:
+         |    subscribe_feed: tgt_dbg_outbox
+         |    target_table: tgt_dbg_replica
+         |    key: [id]
+         |    buckets: 4
+         |    debug: true
+         |""".stripMargin
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("runner-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val name = classOf[Runner].getName
+    val logger = LoggerContext.getContext(false).getLogger(name)
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    Configurator.setLevel(name, Level.INFO)
+    try new Runner(spark, PipelineSpec.fromYaml(ry), Map.empty, root).run("p")
+    finally {
+      logger.removeAppender(capture)
+      Configurator.setLevel(name, level)
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val pype = lines.asScala.toSeq.filter(_.startsWith("Pype: "))
+    assert(pype.exists(_.startsWith("Pype: producer, 2 items")), pype)
+    assert(pype.exists(_.startsWith("Pype: consumer, 2 items")), pype)
+  }
+
   test("a placeholder-bearing outbox name hydrates the same way at the " +
     "producer's change_feed and the consumer's subscribe_feed") {
     Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
