@@ -153,7 +153,7 @@ object Derived {
       // the retention window past the pending version, turning the
       // self-healing catch-up into a hard refusal (and leaving a
       // profile gap).
-      if (wasBucketed) derived.foreach(catchUp(spark, _))
+      if (wasBucketed) catchUp(spark)
       // the drift guards are opt-in because they evaluate the batch
       // plan once more than the merge alone — the batch is persisted
       // across the check + merge so the extract never runs twice;
@@ -207,7 +207,7 @@ object Derived {
       // marker / profile row gets one, so a crash anywhere in this pass
       // self-heals on the next load's catch-up-BEFORE-load. The
       // profiles snapshot this load's delete_where/compact versions too.
-      derived.foreach(catchUp(spark, _))
+      catchUp(spark)
       // `compact: true` extends to the postings indexes — their
       // per-version sync merges fragment index buckets exactly like
       // loads fragment the target's. AFTER the catch-up (compacting
@@ -439,16 +439,23 @@ object Derived {
         case _ =>
       }
 
-    /** The artifact's idempotent catch-up: every retained target
+    /** Every artifact's idempotent catch-up: each retained target
       * version it has not published/synced/profiled yet gets applied
-      * ([[BucketedMergeSink]]'s publish/sync contract). */
-    private def catchUp(spark: SparkSession, d: Derived): Unit = d match {
+      * ([[BucketedMergeSink]]'s publish/sync contract). The outbox and
+      * the indexes read each version's delta from one shared, persisted
+      * diff, dropped when the pass ends. */
+    private def catchUp(spark: SparkSession): Unit =
+      BucketedMergeSink.withDeltas(spark, path, feedKey) { deltas =>
+        derived.foreach(catchUp(spark, deltas, _))
+      }
+
+    private def catchUp(spark: SparkSession, deltas: BucketedMergeSink.Deltas,
+        d: Derived): Unit = d match {
       case ChangeFeed(feed, _) =>
-        BucketedMergeSink.publishChangeFeed(spark, path, feed, feedKey): Unit
-      case i: MinhashIndex => BucketedMergeSink.syncMinhashIndex(spark, path, i): Unit
-      case i: LshIndex => BucketedMergeSink.syncLshIndex(spark, path, i): Unit
-      case i: SemanticIndex =>
-        BucketedMergeSink.syncSemanticIndex(spark, path, i): Unit
+        BucketedMergeSink.publishChangeFeed(spark, feed, deltas): Unit
+      // indexes refuse scd2 loads, so `feedKey` is empty whenever one is
+      // declared and the feed's diffs are the index's too
+      case i: Index => BucketedMergeSink.syncIndex(spark, deltas, i): Unit
       case Profile(prof, column, lo, hi, nbins, _) =>
         Profiling.syncProfile(spark, path, prof, column, lo, hi, nbins): Unit
       case KllProfile(prof, column, k, _) =>

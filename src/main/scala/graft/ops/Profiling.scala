@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField, StructType}
 
 /** Mergeable fixed-bin histogram sketches — the persisted-profile
   * warehouse pattern for DISTRIBUTIONS (the numeric sibling of the
@@ -280,12 +281,18 @@ object Profiling {
     pending
   }
 
+  // the stored KLL profile row's fixed schema: a read that states it
+  // skips the schema-inference job a bare parquet read launches
+  private val storedKllSchema = StructType(Seq(
+    StructField("n", LongType), StructField("sk", BinaryType),
+    StructField("ks_prev", DoubleType)))
+
   // the newest stored KLL profile row's sketch bytes (one tiny row)
   private def readStoredKll(
       spark: org.apache.spark.sql.SparkSession,
       profilePath: String,
       v: Long): Array[Byte] =
-    spark.read.parquet(s"$profilePath/version=$v")
+    spark.read.schema(storedKllSchema).parquet(s"$profilePath/version=$v")
       .select("sk").head().getAs[Array[Byte]](0)
 
   /** The newest stored KLL profile row whose sketch is NON-EMPTY — the

@@ -321,6 +321,7 @@ object BucketedMergeSink {
       opCol: String = "_op"): DataFrame = {
     require(fromVersion < toVersion,
       s"changesBetween wants fromVersion < toVersion, got v$fromVersion >= v$toVersion")
+    onDiff(path, fromVersion, toVersion)
     val meta = readMeta(spark, path)
     require(!meta.schema.fieldNames.contains(opCol),
       s"layout already has a '$opCol' column — pass a different opCol")
@@ -348,6 +349,37 @@ object BucketedMergeSink {
           .otherwise(org.apache.spark.sql.functions.slice(
             array(rowOf("insert", "b")), 1, 0))).as("__r"))
       .select((opCol +: cols).map(c => col(s"__r.$c").as(c)): _*)
+  }
+
+  /** Test seam: invoked on every [[changesBetween]] call with its
+    * target and version pair, so a spec can count how often a load
+    * diffs each pair. Production value is a no-op. */
+  private[graft] var onDiff: (String, Long, Long) => Unit = (_, _, _) => ()
+
+  /** The per-version diffs of the target at `path`, shared by every
+    * catch-up of one load: [[changesBetween]] of each version pair asked
+    * for runs once and is persisted, so the outbox publish and the index
+    * syncs read one copy instead of each diffing the pair again.
+    * `extraKey` as in [[changesBetween]]. Only [[withDeltas]] makes one,
+    * and it unpersists every diff when its block ends. */
+  private[graft] final class Deltas private[BucketedMergeSink] (
+      spark: SparkSession, val path: String, val extraKey: Seq[String]) {
+    private val diffs = scala.collection.mutable.Map.empty[(Long, Long), DataFrame]
+
+    def apply(from: Long, to: Long): DataFrame =
+      diffs.getOrElseUpdate((from, to),
+        changesBetween(spark, path, from, to, extraKey)
+          .persist(StorageLevel.MEMORY_AND_DISK))
+
+    private[BucketedMergeSink] def close(): Unit = diffs.values.foreach(_.unpersist(false))
+  }
+
+  /** Run `f` with a fresh [[Deltas]] of the target at `path`; its
+    * persisted diffs are dropped when `f` returns or throws. */
+  private[graft] def withDeltas[A](spark: SparkSession, path: String,
+      extraKey: Seq[String])(f: Deltas => A): A = {
+    val deltas = new Deltas(spark, path, extraKey)
+    try f(deltas) finally deltas.close()
   }
 
   /** CDC outbox catch-up: publish, under `feedPath/batch_id=<v>/`, the
@@ -392,7 +424,14 @@ object BucketedMergeSink {
       spark: SparkSession,
       path: String,
       feedPath: String,
-      extraKey: Seq[String] = Nil): Seq[Long] = {
+      extraKey: Seq[String] = Nil): Seq[Long] =
+    withDeltas(spark, path, extraKey)(publishChangeFeed(spark, feedPath, _))
+
+  /** [[publishChangeFeed]] of `deltas.path`, reading each version's
+    * delta from `deltas`. */
+  private[graft] def publishChangeFeed(
+      spark: SparkSession, feedPath: String, deltas: Deltas): Seq[Long] = {
+    val path = deltas.path
     val fs = fsOf(spark, feedPath)
     val vs = manifestVersions(spark, path)
     def partDir(v: Long) = outboxPart(feedPath, v)
@@ -461,40 +500,40 @@ object BucketedMergeSink {
     // deltas at or below the rebase floor were compacted away — never
     // re-publish them (a compacted outbox must not re-grow)
     val floor = rebasedAt.getOrElse(0L)
-    val deltas = vs.sliding(2).flatMap {
-      case Seq(a, b) if b > floor =>
-        publish(b)(changesBetween(spark, path, a, b, extraKey))
+    val published = vs.sliding(2).flatMap {
+      case Seq(a, b) if b > floor => publish(b)(deltas(a, b))
       case _ => None
     }
-    (bootstrap.toSeq ++ deltas).sorted
+    (bootstrap.toSeq ++ published).sorted
   }
 
   /** Keep a persisted MinHash band index ([[graft.ops.Dedup.minhashBandIndex]],
     * rows `(id, band, bucket)`) in lockstep with this bucketed target:
-    * every retained manifest version the index has not applied yet is
-    * replayed as a merge into `index.path`, signing ONLY that version's
-    * delta rows — so after each load the index is current and
-    * [[graft.ops.Dedup.incrementalMinhashPairs]] can vet the NEXT ingest
-    * without ever re-signing the corpus. Returns the versions applied.
+    * the retained manifest versions the index has not applied yet fold
+    * into one net change that one commit applies to `index.path`,
+    * signing ONLY the changed docs — so after each load the index is
+    * current and [[graft.ops.Dedup.incrementalMinhashPairs]] can vet the
+    * NEXT ingest without ever re-signing the corpus. Returns the versions
+    * applied.
     *
-    * Mechanics per version (from [[changesBetween]]'s feed, which costs
-    * O(touched buckets)): inserted/updated docs re-sign and UPSERT their
-    * postings (key = (id, band) — a doc always carries exactly `bands`
-    * rows, so the upsert replaces its whole signature); deleted docs —
-    * and docs whose text became null, which sign to nothing — DELETE
-    * theirs. A fresh index bootstraps by signing the oldest retained
-    * snapshot in full (the one unavoidable corpus pass).
+    * Mechanics (from [[changesBetween]]'s per-version feeds, which cost
+    * O(touched buckets)): every doc the pending versions changed loses
+    * its postings, and each one whose newest row is an insert or update
+    * with non-null text re-signs and gets them back; a doc deleted — or
+    * whose text became null, which signs to nothing — keeps none. A
+    * fresh index bootstraps by signing the newest retained snapshot in
+    * full (the one unavoidable corpus pass).
     *
     * Idempotence & crash-safety, same contract as [[publishChangeFeed]]:
     * progress is recorded as `v<NNN>` markers in the SIBLING dir
-    * `<index.path>.applied` AFTER the version's merges land (a sibling
-    * because the index dir's contents are manifest-managed — a foreign
-    * file inside it would be swept by the layout's own GC; markers of a
-    * vanished index are reset on the next sync); a crash in between
-    * replays the version, and replaying a merge batch is idempotent. If
-    * the index falls more than the retention window behind (its next
-    * delta is GC'd), the sync refuses loudly — delete the index dir to
-    * rebuild — rather than silently resyncing from a gapped feed.
+    * `<index.path>.applied` AFTER the commit lands (a sibling because the
+    * index dir's contents are manifest-managed — a foreign file inside it
+    * would be swept by the layout's own GC; markers of a vanished index
+    * are reset on the next sync); a crash in between refolds the same
+    * versions, and applying a net change again is idempotent. If the
+    * index falls more than the retention window behind (its next delta
+    * is GC'd), the sync refuses loudly — delete the index dir to rebuild
+    * — rather than silently resyncing from a gapped feed.
     * Sync-after-every-load (the `minhash_index:` stage key) never hits
     * this with retention >= 2.
     *
@@ -502,42 +541,32 @@ object BucketedMergeSink {
     * and bucketed like its target, holding ONE nested row per doc
     * (`id, postings: array<struct<band,bucket>>`, read back flat via
     * [[readPostings]]) — so each sync rewrites O(touched buckets) of
-    * postings, an upsert replaces a doc's whole signature atomically,
-    * and a delete prunes to the doc's own bucket. A flat posting-per-row
-    * index would pay a full-index rewrite on EVERY sync (the flat
-    * sink's atomic-swap shape), which dominates at corpus scale. */
+    * postings and replaces a doc's whole signature atomically. A flat
+    * posting-per-row index would pay a full-index rewrite on EVERY sync
+    * (the flat sink's atomic-swap shape), which dominates at corpus
+    * scale. */
   def syncMinhashIndex(
       spark: SparkSession,
       path: String,
-      index: Derived.MinhashIndex): Seq[Long] = {
-    import index.{bands, charGrams, k, rowsPerBand, textCol}
-    def sign(df: DataFrame, id: String) = graft.ops.Dedup.minhashBandIndex(
-      df, k, bands, rowsPerBand, id, textCol, charGrams)
-    syncIndexCore(spark, path, index.path, "minhash index", textCol,
-      bootstrap = sign, sign = sign)
-  }
+      index: Derived.MinhashIndex): Seq[Long] =
+    withDeltas(spark, path, Nil)(syncIndex(spark, _, index))
 
   /** [[syncMinhashIndex]]'s embedding twin: keep a persisted cosine-LSH
     * bucket index ([[graft.ops.Similarity.lshBucketIndex]], rows
     * `(id, band, bucket)` — band is the hyperplane table, bucket its
     * sign signature) in lockstep with this bucketed target, so
     * [[graft.ops.Similarity.incrementalCosineDupPairs]] can vet each
-    * ingest without re-signing the corpus. Same replay core, same
+    * ingest without re-signing the corpus. Same fold-and-apply core, same
     * marker/bootstrap/refusal contract, same nested one-row-per-id
     * layout (read back flat via [[readPostings]]); (tables, bits, dim)
     * are the index's identity ([[Derived.LshIndex]]) and must match the
-    * probe side's. A re-sign UPSERT replaces a doc's whole signature
-    * row; a null `vecCol` unsigns. */
+    * probe side's. A re-signed doc's row replaces its whole signature;
+    * a null `vecCol` unsigns. */
   def syncLshIndex(
       spark: SparkSession,
       path: String,
-      index: Derived.LshIndex): Seq[Long] = {
-    import index.{bits, dim, tables, vecCol}
-    def sign(df: DataFrame, id: String) = graft.ops.Similarity.lshBucketIndex(
-      df, tables, bits, dim, id, vecCol)
-    syncIndexCore(spark, path, index.path, "lsh index", vecCol,
-      bootstrap = sign, sign = sign)
-  }
+      index: Derived.LshIndex): Seq[Long] =
+    withDeltas(spark, path, Nil)(syncIndex(spark, _, index))
 
   /** [[syncMinhashIndex]]'s SemDeDup twin: keep a persisted semantic
     * cell index ([[graft.ops.Similarity.semanticCellIndex]]) in
@@ -546,83 +575,109 @@ object BucketedMergeSink {
     * ingest against frozen centroids. Two persisted pieces: postings
     * `(id, pcell)` at `index.path`, and the centroid model at the
     * SIBLING `<index.path>.centroids` (`(cell, centv)` parquet).
-    * Centroids are TRAINED ONCE at bootstrap on the oldest retained
+    * Centroids are TRAINED ONCE at bootstrap on the newest retained
     * snapshot and FROZEN from then on — the coarse-quantizer contract
     * ([[graft.ops.Similarity.ivfTopK]]): per-ingest retraining would
     * silently shift every assignment; re-cluster offline when drift
     * warrants and rebuild (delete the index dir — bootstrap retrains
     * and overwrites the sibling). Unlike the fixed-cardinality MinHash/
     * LSH signatures, an updated doc's cell SET can change arbitrarily —
-    * harmless under the nested layout, where the re-sign UPSERT
-    * replaces the doc's whole posting row (old cells can't linger).
+    * harmless under the nested layout, where a re-signed doc's row
+    * replaces its whole posting set (old cells can't linger).
     * The bootstrap snapshot must be non-empty (there is nothing to
     * train on otherwise). */
   def syncSemanticIndex(
       spark: SparkSession,
       path: String,
-      index: Derived.SemanticIndex): Seq[Long] = {
-    import index.{iters, nlist, probeCells, trainPerCell, vecCol}
-    val indexPath = index.path
-    val centsPath = indexPath.stripSuffix("/") + ".centroids"
-    syncIndexCore(spark, path, indexPath, "semantic index", vecCol,
-      bootstrap = (df, id) => {
-        val (postings, cents) = graft.ops.Similarity.semanticCellIndex(
-          df, nlist, iters, trainPerCell, probeCells, id, vecCol)
-        cents.write.mode("overwrite").parquet(centsPath)
-        postings
-      },
-      sign = (df, id) => {
-        require(fsOf(spark, centsPath).exists(new Path(centsPath)),
-          s"semantic index at $indexPath has no centroid model at " +
-            s"$centsPath — rebuild the index (delete its dir) to retrain")
-        graft.ops.Similarity.assignBatchCells(
-          df, spark.read.parquet(centsPath), probeCells, id, vecCol)
-      })
-  }
+      index: Derived.SemanticIndex): Seq[Long] =
+    withDeltas(spark, path, Nil)(syncIndex(spark, _, index))
 
-  /** The shared version-marker replay core behind [[syncMinhashIndex]] /
+  /** The sync of any postings index of `deltas.path` — the family's
+    * bootstrap and signing closures around [[syncIndexCore]]. */
+  private[graft] def syncIndex(
+      spark: SparkSession, deltas: Deltas, index: Derived.Index): Seq[Long] =
+    index match {
+      case i: Derived.MinhashIndex =>
+        import i.{bands, charGrams, k, rowsPerBand, textCol}
+        def sign(df: DataFrame, id: String) = graft.ops.Dedup.minhashBandIndex(
+          df, k, bands, rowsPerBand, id, textCol, charGrams)
+        syncIndexCore(spark, deltas, i.path, "minhash index", textCol,
+          bootstrap = sign, sign = sign)
+      case i: Derived.LshIndex =>
+        import i.{bits, dim, tables, vecCol}
+        def sign(df: DataFrame, id: String) = graft.ops.Similarity.lshBucketIndex(
+          df, tables, bits, dim, id, vecCol)
+        syncIndexCore(spark, deltas, i.path, "lsh index", vecCol,
+          bootstrap = sign, sign = sign)
+      case i: Derived.SemanticIndex =>
+        import i.{iters, nlist, probeCells, trainPerCell, vecCol}
+        val centsPath = i.path.stripSuffix("/") + ".centroids"
+        syncIndexCore(spark, deltas, i.path, "semantic index", vecCol,
+          bootstrap = (df, id) => {
+            val (postings, cents) = graft.ops.Similarity.semanticCellIndex(
+              df, nlist, iters, trainPerCell, probeCells, id, vecCol)
+            cents.write.mode("overwrite").parquet(centsPath)
+            postings
+          },
+          sign = (df, id) => {
+            require(fsOf(spark, centsPath).exists(new Path(centsPath)),
+              s"semantic index at ${i.path} has no centroid model at " +
+                s"$centsPath — rebuild the index (delete its dir) to retrain")
+            graft.ops.Similarity.assignBatchCells(
+              df, spark.read.parquet(centsPath), probeCells, id, vecCol)
+          })
+    }
+
+  /** The shared fold-and-apply core behind [[syncMinhashIndex]] /
     * [[syncLshIndex]] / [[syncSemanticIndex]] — everything about
     * KEEPING a derived postings index in lockstep with the target that
     * does not depend on what the postings ARE:
     *
     *   - `.applied` sibling markers record the last manifest version
-    *     replayed into the index (a sibling because a flat index
-    *     target's atomic full-rewrite swap would wipe anything stored
-    *     inside it); markers of a vanished index reset on the next
-    *     sync. Only the NEWEST marker is ever consulted, so older ones
-    *     are pruned as each new one lands — the dir stays O(1) files
-    *     instead of one empty file per version forever (the r11 ADVICE
-    *     listing-degradation finding).
-    *   - a fresh index bootstraps by signing the oldest retained
+    *     applied to the index (a sibling because the index dir's
+    *     contents are manifest-managed); markers of a vanished index
+    *     reset on the next sync. Only the NEWEST marker is ever
+    *     consulted, so older ones are pruned as each new one lands — the
+    *     dir stays O(1) files instead of one empty file per version
+    *     forever (the r11 ADVICE listing-degradation finding).
+    *   - a fresh index bootstraps by signing the newest retained
     *     snapshot in full (the one unavoidable corpus pass), via the
     *     family's `bootstrap` closure (which may also train/persist a
-    *     model — the semantic family does).
-    *   - each later retained version replays as [[changesBetween]]'s
-    *     delta: ids whose op is delete — or update_post with a null
-    *     `signCol`, which sign to nothing — DELETE their postings;
-    *     inserted/updated rows re-sign through the family's `sign`
-    *     closure and UPSERT on `mergeKey`. With `replaceOnUpdate` an
-    *     updated id's old postings are deleted FIRST (families whose
-    *     per-id posting KEY SET can change between signings — the
-    *     semantic cells — would otherwise strand stale rows; the
-    *     fixed-cardinality families skip the extra delete pass).
-    *   - idempotence & crash-safety, same contract as
-    *     [[publishChangeFeed]]: markers land AFTER the version's merges,
-    *     a crash in between replays the version, and replaying a merge
-    *     batch is idempotent. An index that fell more than the
-    *     retention window behind refuses loudly rather than silently
+    *     model — the semantic family does), and counts every retained
+    *     version applied. A layout left without a marker by a crash in
+    *     the bootstrap is replaced whole by the next bootstrap.
+    *   - a synced index's pending versions' consecutive deltas (from `deltas`, shared
+    *     with the load's other catch-ups) fold into one net row per id
+    *     under [[newestPerKey]], the outbox fold's rule. Never one
+    *     [[changesBetween]] over the whole run: after a crash between an
+    *     apply and its marker the index already holds a later state than
+    *     its marker, and a doc reverted since (A→B→A) would diff to
+    *     nothing and keep B's postings. Every id of the net change drops
+    *     its postings; a net row that is not a delete and whose
+    *     `signCol` is non-null re-signs through the family's `sign`
+    *     closure — a delete or a null `signCol` (it signs to nothing)
+    *     unsigns, whatever the op. A posting key set that changes between
+    *     signings (the semantic cells) thus never strands stale rows.
+    *   - the bootstrap or the net change applies in ONE commit
+    *     ([[applyNet]]) and ONE marker, for the last version, lands
+    *     after it; a crash in between refolds the same run, and applying
+    *     a net change again is idempotent. An index that fell more than
+    *     the retention window behind refuses loudly rather than silently
     *     resyncing from a gapped feed — and the Runner's
     *     catch-up-BEFORE-load ordering plus its retention validation
     *     (>= 1 + versions committed per run) keep the config-driven
     *     paths from ever manufacturing that state. */
   private def syncIndexCore(
       spark: SparkSession,
-      path: String,
+      deltas: Deltas,
       indexPath: String,
       family: String,
       signCol: String,
       bootstrap: (DataFrame, String) => DataFrame,
       sign: (DataFrame, String) => DataFrame): Seq[Long] = {
+    val path = deltas.path
+    require(deltas.extraKey.isEmpty,
+      s"$family sync pairs rows on the layout key alone, got extra key ${deltas.extraKey}")
     val fs = fsOf(spark, indexPath)
     val meta = readMeta(spark, path)
     require(meta.key.size == 1,
@@ -632,66 +687,49 @@ object BucketedMergeSink {
       s"$path has no '$signCol' column to sign")
     // The index is itself a bucketed layout keyed on `id`, sized like
     // its target, holding one NESTED row per doc: the family's flat
-    // postings collapse to `postings: array<struct>`. That single-row
-    // shape is what keeps every sync leg bucket-pruned — the upsert
-    // replaces a doc's complete posting set atomically (no stale rows
-    // can linger when a posting KEY SET changes, e.g. semantic cells),
-    // and the delete leg's id-list prunes to the ids' own buckets.
+    // postings collapse to `postings: array<struct>`, so one row
+    // replaces a doc's complete posting set and every apply prunes to
+    // the ids' own buckets.
     def nest(flat: DataFrame): DataFrame = {
       val pcols = flat.columns.filterNot(_ == "id").toSeq
       flat.groupBy("id").agg(
-        // sort for a deterministic array order — replaying a version
-        // must produce byte-identical posting rows
+        // sort for a deterministic array order — applying a net change
+        // again must produce byte-identical posting rows
         sort_array(collect_list(struct(pcols.map(col): _*))).as("postings"))
     }
-    def put(flat: DataFrame): Unit =
-      merge(spark, nest(flat), indexPath, "upsert", key = Seq("id"),
-        identifier = "id", numBuckets = meta.numBuckets)
     val vs = manifestVersions(spark, path)
     val appliedDir = new Path(indexPath.stripSuffix("/") + ".applied")
     // markers without an index = a rebuilt/deleted index; start fresh
     if (fs.exists(appliedDir) && !fs.exists(new Path(indexPath)))
       fs.delete(appliedDir, true)
-    def mark(v: Long): Unit = markApplied(fs, appliedDir, v)
-    val done = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var last = lastApplied(fs, appliedDir)
+    val last = lastApplied(fs, appliedDir)
     if (last == 0L) {
-      val v0 = vs.head
-      put(bootstrap(readVersion(spark, path, v0), idCol))
-      mark(v0); done += v0; last = v0
+      // a layout with no marker is a crashed bootstrap: replaced whole
+      val stale = Option.when(isBucketed(spark, indexPath))(
+        read(spark, indexPath).select("id"))
+      applyNet(spark, nest(bootstrap(readVersion(spark, path, vs.last), idCol)),
+        stale, indexPath, Seq("id"), meta.numBuckets, 0)
+      markApplied(fs, appliedDir, vs.last)
+      return vs
     }
     require(last >= vs.head,
       s"$family at $indexPath last applied v$last but the oldest " +
         s"retained version of $path is v${vs.head}: the intermediate " +
         "deltas are GC'd. Rebuild the index (delete its dir) or raise " +
         "retain_versions so sync never falls behind the window.")
-    for (Seq(a, b) <- vs.sliding(2) if a >= last && b > last) {
-      // the delta is consumed up to four times below (two emptiness
-      // decisions + two merges, each of which executes the plan) and
-      // changesBetween is a touched-bucket diff join — persist it once
-      // and decide both legs from ONE aggregate job (r18; guide §1.2)
-      val delta = changesBetween(spark, path, a, b)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val unsignCond = col("_op") === "delete" ||
-          (col("_op") === "update_post" && col(signCol).isNull)
-        val resignCond =
-          col("_op").isin("insert", "update_post") && col(signCol).isNotNull
-        val legs = delta.agg(
-          count(when(unsignCond, 1)).as("unsign"),
-          count(when(resignCond, 1)).as("resign")).head()
-        // unsign deleted ids and ids whose sign column became null (they
-        // sign to nothing); an id updated to a NEW signature needs no
-        // delete — the nested upsert below replaces its whole posting row
-        if (legs.getLong(0) > 0L)
-          merge(spark,
-            delta.filter(unsignCond).select(col(idCol).as("id")).distinct(),
-            indexPath, "delete", identifier = "id")
-        if (legs.getLong(1) > 0L) put(sign(delta.filter(resignCond), idCol))
-      } finally delta.unpersist(false)
-      mark(b); done += b
-    }
-    done.toSeq
+    val pairs = vs.sliding(2).collect { case Seq(a, b) if a >= last => (a, b) }.toSeq
+    if (pairs.isEmpty) return Nil
+    val net = newestPerKey(pairs.map { case (a, b) =>
+      deltas(a, b).withColumn(foldSeqCol, lit(b))
+    }.reduce(_ unionByName _), Seq(idCol))
+    // the ids, the re-signing and the apply all read the fold
+    net.persist(StorageLevel.MEMORY_AND_DISK)
+    try applyNet(spark,
+      nest(sign(net.filter(col("_op") =!= "delete" && col(signCol).isNotNull), idCol)),
+      Some(net.select(col(idCol).as("id"))), indexPath, Seq("id"), meta.numBuckets, 0)
+    finally net.unpersist(false)
+    markApplied(fs, appliedDir, pairs.last._2)
+    pairs.map(_._2)
   }
 
   /** Last `v<NNN>` progress marker in a sibling `.applied` dir (0 =
@@ -738,20 +776,20 @@ object BucketedMergeSink {
     *
     * The pending partitions apply as ONE net change ([[foldOutbox]]):
     * each key's newest `insert`/`update_post` row UPSERTs (its old row is
-    * replaced), a key whose newest op is `delete` is deleted by key — at
-    * most one delete merge and one upsert merge per call, however many
-    * batches are pending. When a pending partition is a marked base (the
-    * bootstrap, or a [[compactOutbox]] rebase point) the fold starts
-    * there and its result is a full snapshot: ONE merge replaces the
-    * replica wholesale. Upserting into the existing replica would strand
-    * rows deleted between this consumer's cursor and the rebase point
-    * (their delete ops were pruned with the old partitions). Against a
-    * bucketed replica both legs cost O(touched buckets); a fresh replica
-    * is established with `numBuckets`.
+    * replaced), a key whose newest op is `delete` is deleted by key —
+    * one commit per call ([[applyNet]]), however many batches are
+    * pending. When a pending partition is a marked base (the bootstrap,
+    * or a [[compactOutbox]] rebase point) the fold starts there and its
+    * result is a full snapshot: that one commit replaces the replica
+    * wholesale. Upserting into the existing replica would strand rows
+    * deleted between this consumer's cursor and the rebase point (their
+    * delete ops were pruned with the old partitions). Against a bucketed
+    * replica the commit costs O(touched buckets); a fresh replica is
+    * established with `numBuckets`.
     *
     * Progress lives in the sibling marker dir `<replicaPath>.applied`
     * (markers of a vanished replica reset on the next call); the marker
-    * of the last applied batch lands AFTER the merges, so a crash in
+    * of the last applied batch lands AFTER the commit, so a crash in
     * between replays the same net change — idempotent, like the index
     * syncs. An outbox whose oldest retained partition has moved past the
     * replica's cursor (someone pruned the outbox) refuses loudly: the
@@ -805,19 +843,17 @@ object BucketedMergeSink {
     if (pending.isEmpty) return Nil
     val (net, fromBase) = foldOutbox(spark, feedFs, feedPath, pending, key)
     net.foreach { rows =>
-      // both legs read the fold: compute it once
+      // the upserts and the delete keys both read the fold: compute it once
       rows.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        // a fold from a base is a full snapshot: it replaces the replica;
-        // a composite key's fold carries no deletes (refused in the fold)
+        // a fold from a base is a full snapshot: it replaces the replica
+        // (the commit then creates it, with nothing to delete from); a
+        // composite key's fold carries no deletes (refused in the fold)
         if (fromBase) fs.delete(new Path(replicaPath), true)
-        else if (key.size == 1)
-          merge(spark, rows.filter(col("_op") === "delete").select(key.head),
-            replicaPath, "delete", identifier = key.head,
-            numBuckets = numBuckets, retainVersions = retainVersions)
-        merge(spark, rows.filter(col("_op") =!= "delete").drop("_op"),
-          replicaPath, "upsert", key = key, identifier = key.head,
-          numBuckets = numBuckets, retainVersions = retainVersions)
+        applyNet(spark, rows.filter(col("_op") =!= "delete").drop("_op"),
+          Option.when(key.size == 1)(
+            rows.filter(col("_op") === "delete").select(key.head)),
+          replicaPath, key, numBuckets, retainVersions)
       } finally rows.unpersist(false)
     }
     markApplied(fs, appliedDir, pending.last)
@@ -890,17 +926,34 @@ object BucketedMergeSink {
       .takeWhile(b => isPublished(fs, outboxPart(feedPath, b)))
   }
 
-  /** Column the fold tags each outbox row with its batch id. Reserved:
-    * each partition is read on its own rather than through partition
-    * discovery, so a table column named `batch_id` keeps its own values. */
-  private val outboxBatchCol = "__outbox_batch"
+  /** Column a fold tags each change row with its sequence number (the
+    * outbox batch id, or the target version of an index's delta).
+    * Reserved: each outbox partition is read on its own rather than
+    * through partition discovery, so a table column named `batch_id`
+    * keeps its own values. */
+  private val foldSeqCol = "__fold_seq"
+
+  /** THE newest-op rule of every fold: each key's newest row of
+    * `changes` (rows tagged with [[foldSeqCol]], `_op` included; the
+    * tag is dropped). Newest means the highest sequence number, and
+    * within one sequence number an upsert row outranks a delete row
+    * (the order a one-by-one replay applied them in); `update_pre` rows
+    * carry nothing. [[foldOutbox]] and the index sync both call it, so
+    * replica, rebase and index apply one rule. */
+  private def newestPerKey(changes: DataFrame, key: Seq[String]): DataFrame = {
+    val rows = changes.filter(col("_op") =!= "update_pre")
+    rows.groupBy(key.map(col): _*)
+      .agg(max_by(struct(rows.columns.toSeq.map(col): _*),
+        struct(col(foldSeqCol), col("_op") =!= "delete")).as("r"))
+      .select("r.*").drop(foldSeqCol)
+  }
 
   /** The NET change of the published outbox partitions `run`: each
-    * partition read on its own, tagged with its batch id and unioned into
-    * one plan; the result is each key's newest `insert`/`update_post`/
-    * `delete` row, `_op` included. Within one batch an upsert row
-    * outranks a delete row (the order a batch-by-batch replay applied
-    * them in); `update_pre` rows carry nothing. A marked base in the run
+    * partition read on its own (with the schema of the newest one, so
+    * only that read infers it), tagged with its batch id and unioned
+    * into one plan; the result is each key's newest `insert`/
+    * `update_post`/`delete` row, `_op` included ([[newestPerKey]]). A
+    * marked base in the run
     * is a snapshot that supersedes every older partition, so the fold
     * starts at the newest one and says so (`fromBase`: the rows are a
     * full snapshot). Applying the net change leaves the table a
@@ -922,23 +975,20 @@ object BucketedMergeSink {
     val parts = run.drop(math.max(base, 0)).filter(b =>
       fs.listStatus(outboxPart(feedPath, b)).exists(s => s.isFile &&
         !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
-    val feed = Option.when(parts.nonEmpty)(parts.map { b =>
-      val part = spark.read.parquet(outboxPart(feedPath, b).toString)
-      require(!part.columns.contains(outboxBatchCol),
-        s"outbox at $feedPath has a '$outboxBatchCol' column, reserved for the fold")
-      part.withColumn(outboxBatchCol, lit(b))
-    }.reduce(_ unionByName _).filter(col("_op") =!= "update_pre"))
+    val feed = parts.lastOption.map { newest =>
+      val schema = spark.read.parquet(outboxPart(feedPath, newest).toString).schema
+      require(!schema.fieldNames.contains(foldSeqCol),
+        s"outbox at $feedPath has a '$foldSeqCol' column, reserved for the fold")
+      parts.map(b => spark.read.schema(schema).parquet(outboxPart(feedPath, b).toString)
+        .withColumn(foldSeqCol, lit(b))).reduce(_ unionByName _)
+    }
     for (f <- feed if key.size > 1;
-         del <- Option(f.filter(col("_op") === "delete").agg(min(outboxBatchCol)).head().get(0)))
+         del <- Option(f.filter(col("_op") === "delete").agg(min(foldSeqCol)).head().get(0)))
       throw new IllegalArgumentException(
         s"outbox at $feedPath carries delete ops in batch $del but " +
           s"the replica key is composite (${key.mkString(",")}) — deletes " +
           "route by a single identifier column")
-    val net = feed.map(f => f.groupBy(key.map(col): _*)
-      .agg(max_by(struct(f.columns.toSeq.map(col): _*),
-        struct(col(outboxBatchCol), col("_op") =!= "delete")).as("r"))
-      .select("r.*").drop(outboxBatchCol))
-    (net, base >= 0)
+    (feed.map(newestPerKey(_, key)), base >= 0)
   }
 
   /** Sibling dir holding one cursor-marker dir per REGISTERED consumer
@@ -1292,7 +1342,46 @@ object BucketedMergeSink {
       excluded: Seq[String] = Nil,
       numBuckets: Int = 64,
       retainVersions: Int = 0,
-      scd2Ts: String = ""): Unit = {
+      scd2Ts: String = ""): Unit =
+    write(spark, batch, None, path, loadType, key, identifier, excluded,
+      numBuckets, retainVersions, scd2Ts)
+
+  /** Apply a NET change to the bucketed target at `path` in ONE commit:
+    * the rows whose key is in `deletes` leave the touched slice, then
+    * `upserts` upsert into it. Validation, routing and creation are
+    * [[merge]]'s: the commit rewrites every bucket an upsert routes to
+    * and every existing bucket a delete key routes to, and an absent
+    * target is created from `upserts` alone (nothing to delete from).
+    * The delete keys match the single key column. */
+  private def applyNet(
+      spark: SparkSession,
+      upserts: DataFrame,
+      deletes: Option[DataFrame],
+      path: String,
+      key: Seq[String],
+      numBuckets: Int,
+      retainVersions: Int): Unit = {
+    require(deletes.isEmpty || key.size == 1,
+      s"deletes route by a single key column, got ${key.mkString(",")}")
+    write(spark, upserts, deletes, path, "upsert", key, key.head, Nil,
+      numBuckets, retainVersions, "")
+  }
+
+  /** [[merge]] of `batch`, and with `deletes` the delete keys of
+    * [[applyNet]]'s net change, dropped from the slice before the merge
+    * plan runs on it. */
+  private def write(
+      spark: SparkSession,
+      batch: DataFrame,
+      deletes: Option[DataFrame],
+      path: String,
+      loadType: String,
+      key: Seq[String],
+      identifier: String,
+      excluded: Seq[String],
+      numBuckets: Int,
+      retainVersions: Int,
+      scd2Ts: String): Unit = {
     require(Set("upsert", "update", "delete", "scd2")(loadType),
       s"unknown load type: $loadType")
     require(loadType != "scd2" || scd2Ts.nonEmpty,
@@ -1343,13 +1432,14 @@ object BucketedMergeSink {
     // must never be the thing that silently narrows a batch column
     if (loadType != "delete")
       MergeSink.validateBatchSchema(meta.schema, batch.schema, mergeKey)
-    else
-      // BEFORE bucket pruning: a mis-typed id column must fail loudly
-      // even when its (mis-cast) ids all route to absent buckets — the
-      // early returns below would otherwise turn it into a silent no-op,
-      // which the flat sink refuses
-      MergeSink.validateDeleteIds(meta.schema, batch.schema, identifier,
-        MergeSink.deleteIdColumn(batch, identifier))
+    // the delete ids — a delete batch, or a net change's delete keys —
+    // BEFORE bucket pruning: a mis-typed id column must fail loudly
+    // even when its (mis-cast) ids all route to absent buckets — the
+    // early return below would otherwise turn it into a silent no-op,
+    // which the flat sink refuses
+    val deleteIds = if (loadType == "delete") Some(batch) else deletes
+    deleteIds.foreach(ids => MergeSink.validateDeleteIds(meta.schema,
+      ids.schema, identifier, MergeSink.deleteIdColumn(ids, identifier)))
     if (loadType != "delete")
       require(key == meta.key,
         s"bucketed target $path is keyed on ${meta.key.mkString(",")} — " +
@@ -1358,7 +1448,6 @@ object BucketedMergeSink {
     // the optimistic-commit base and the mapping every read below
     // resolves through (object scaladoc "Concurrent writers")
     val (base, mapping) = snapshot(fs, path)
-    val existing = mapping.keys.toSeq
     // which buckets does this batch touch? a delete prunes when the
     // TARGET column it matches is the layout key (a target row with
     // key=v lives in bucket hash(v), whatever the id column in the
@@ -1369,13 +1458,13 @@ object BucketedMergeSink {
     // (MergeSink casts batch values to the target type on output) must
     // be cast BEFORE hashing or it routes to the wrong bucket
     val tType = meta.schema.fields.map(f => f.name -> f.dataType).toMap
-    val routeExprs: Seq[org.apache.spark.sql.Column] =
-      if (loadType != "delete") mergeKey.map(k => col(k).cast(tType(k)))
-      else {
-        val idc = if (batch.columns.contains(identifier)) identifier
-          else batch.columns.head // MergeSink.delete's id-column fallback
-        Seq(col(idc).cast(tType(identifier)))
-      }
+    // each frame the batch routes by, and whether it holds delete ids
+    // (those route by MergeSink.delete's id column)
+    def byId(df: DataFrame) =
+      (df, Seq(col(MergeSink.deleteIdColumn(df, identifier)).cast(tType(identifier))), true)
+    val routed: Seq[(DataFrame, Seq[org.apache.spark.sql.Column], Boolean)] =
+      if (loadType == "delete") Seq(byId(batch))
+      else (batch, mergeKey.map(k => col(k).cast(tType(k))), false) +: deletes.map(byId).toSeq
     // The touched-bucket scan below is an ACTION on the batch, and the
     // merge/route/write then executes it again; through Runner the batch
     // is the whole extract→transform chain, so without caching every
@@ -1385,16 +1474,22 @@ object BucketedMergeSink {
     val ownPersist = canPrune && batch.storageLevel == StorageLevel.NONE
     if (ownPersist) batch.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched: Seq[Int] =
-        if (!canPrune) existing
-        else batch.select(bucketOf(routeExprs, n).as(bucketCol))
-          .distinct().collect().map(_.getInt(0)).toSeq // ≤ numBuckets rows: driver-safe
-      val touchedExisting = touched.intersect(existing)
-      if (touched.isEmpty) return
-      if (loadType == "delete" && touchedExisting.isEmpty) return // nothing to delete
+      // (bucket, routed by delete ids) pairs: ≤ 2·numBuckets rows to collect
+      val touched: Seq[(Int, Boolean)] =
+        if (!canPrune) mapping.keys.toSeq.map(_ -> true)
+        else routed.map { case (df, exprs, del) =>
+          df.select(bucketOf(exprs, n).as(bucketCol), lit(del))
+        }.reduce(_ union _).distinct().collect().map(r => r.getInt(0) -> r.getBoolean(1)).toSeq
+      // an upsert rewrites every bucket it routes to (creating it if
+      // need be); a delete id only an existing one
+      val rewritten = touched.collect { case (b, del) if !del || mapping.contains(b) => b }.toSet
+      if (rewritten.isEmpty) return
 
-      // the touched slice of the target: only its leaf dirs are listed
-      val target = readDirs(spark, path, meta, mapping, touchedExisting)
+      // the touched slice of the target: only its leaf dirs are listed,
+      // less a net change's delete keys
+      val slice = readDirs(spark, path, meta, mapping, rewritten.toSeq)
+      val target = deletes.fold(slice)(d => MergeSink.delete(slice, d, identifier,
+        broadcastIds = MergeSink.fitsBroadcast(d)))
 
       val bcast = MergeSink.fitsBroadcast(batch)
       val merged = loadType match {
@@ -1407,12 +1502,10 @@ object BucketedMergeSink {
       }
       // re-derive each output row's bucket from the LAYOUT key (surviving
       // target rows keep their bucket; inserts hash to a touched one).
-      // Touched buckets move to the new commit (those merged to zero rows
-      // drop out); for a delete, buckets the batch hashes to but that
-      // never existed stay absent
+      // Rewritten buckets move to the new commit (those merged to zero
+      // rows drop out)
       rewriteBuckets(fs, path, merged.withColumn(bucketCol, bucketExpr(meta.key, n)),
-        (if (loadType == "delete") touchedExisting else touched).toSet,
-        base, mapping, meta.retainVersions)
+        rewritten, base, mapping, meta.retainVersions)
     } finally if (ownPersist) batch.unpersist(false)
   }
 

@@ -1083,6 +1083,162 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       .filter($"id" === 7L).count() == 8, "bands rows for the re-signed doc")
   }
 
+  /** One postings-index family for the fold-rule tests below: `rows`
+    * builds (id, sign value) target rows (a null value is a null sign
+    * column), `sync` catches the index at `idx` up with the target at
+    * `path`, `fresh` re-signs the target's current state, and `values`
+    * are three distinct sign values. */
+  private case class IndexFamily(
+      name: String,
+      idCol: String,
+      values: (AnyRef, AnyRef, AnyRef),
+      rows: Seq[(Long, AnyRef)] => DataFrame,
+      sync: (String, String) => Seq[Long],
+      fresh: String => Set[(Long, Int, Long)])
+
+  private def signRows(idCol: String, signCol: String,
+      signType: org.apache.spark.sql.types.DataType)(rs: Seq[(Long, AnyRef)]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rs.map(r => org.apache.spark.sql.Row(r._1, r._2)).asJava,
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+        StructField(signCol, signType, nullable = true))))
+  }
+
+  private val indexFamilies = Seq(
+    IndexFamily("syncMinhashIndex", "doc_id",
+      ("alpha beta gamma delta epsilon", "totally different words in here",
+        "zeta eta theta iota kappa"),
+      signRows("doc_id", "text", org.apache.spark.sql.types.StringType),
+      (path, idx) => BucketedMergeSink.syncMinhashIndex(spark, path,
+        Derived.MinhashIndex(idx)),
+      path => graft.ops.Dedup.minhashBandIndex(
+        BucketedMergeSink.read(spark, path), idCol = "doc_id")
+        .as[(Long, Int, Long)].collect().toSet),
+    IndexFamily("syncLshIndex", "vec_id",
+      (Seq(1.0, 0.0, 0.0, 0.0), Seq(-1.0, 0.0, 0.5, 0.0), Seq(0.0, 1.0, 0.0, 0.0)),
+      signRows("vec_id", "embedding", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType)),
+      (path, idx) => BucketedMergeSink.syncLshIndex(spark, path,
+        Derived.LshIndex(idx, tables = 4, bits = 6, dim = 4)),
+      path => graft.ops.Similarity.lshBucketIndex(
+        BucketedMergeSink.read(spark, path),
+        tables = 4, bits = 6, dim = 4, idCol = "vec_id")
+        .as[(Long, Int, Long)].collect().toSet))
+
+  private def storedPostings(idx: String): Set[(Long, Int, Long)] =
+    BucketedMergeSink.readPostings(spark, idx).select("id", "band", "bucket")
+      .as[(Long, Int, Long)].collect().toSet
+
+  for (f <- indexFamilies) {
+    import f.values.{_1 => a, _2 => b, _3 => x}
+    def upsert(path: String, rs: (Long, AnyRef)*): Unit =
+      BucketedMergeSink.merge(spark, f.rows(rs), path, "upsert", Seq(f.idCol),
+        numBuckets = 4, retainVersions = 4)
+
+    test(s"${f.name} folds per-version deltas: after a crash between the " +
+      "index commit and its marker, a load that reverts a doc (A→B→A) " +
+      "still leaves the fresh signing") {
+      val path = tmpTarget()
+      val idx = tmpTarget() + "-idx"
+      upsert(path, 1L -> a, 2L -> x) // v1
+      assert(f.sync(path, idx) == Seq(1L))
+      upsert(path, 1L -> b) // v2: doc 1 A→B
+      assert(f.sync(path, idx) == Seq(2L))
+      // crash between v2's commit and its marker: the index holds v2's
+      // postings, the marker still says v1
+      val applied = new File(idx + ".applied")
+      new File(applied, "v000000001").createNewFile()
+      new File(applied, "v000000002").delete()
+      upsert(path, 1L -> a) // v3: doc 1 B→A
+      // a single diff v1→v3 would see doc 1 unchanged and keep B's postings
+      assert(f.sync(path, idx) == Seq(2L, 3L))
+      assert(storedPostings(idx) == f.fresh(path))
+    }
+
+    test(s"${f.name} folds per-version deltas: a doc deleted and then " +
+      "re-inserted with a null sign column in one pending run keeps no " +
+      "postings") {
+      val path = tmpTarget()
+      val idx = tmpTarget() + "-idx"
+      upsert(path, 1L -> a, 2L -> x) // v1
+      assert(f.sync(path, idx) == Seq(1L))
+      BucketedMergeSink.merge(spark, Seq(1L).toDF(f.idCol), path, "delete",
+        identifier = f.idCol) // v2
+      upsert(path, 1L -> null) // v3: back, with a null sign column
+      assert(f.sync(path, idx) == Seq(2L, 3L))
+      assert(!storedPostings(idx).exists(_._1 == 1L),
+        "a null sign column unsigns, whatever the op")
+      assert(storedPostings(idx) == f.fresh(path))
+    }
+
+    test(s"${f.name}: a bootstrap that crashed before its marker is " +
+      "replaced whole by the next sync") {
+      val path = tmpTarget()
+      val idx = tmpTarget() + "-idx"
+      upsert(path, 1L -> a, 2L -> x, 3L -> b) // v1
+      assert(f.sync(path, idx) == Seq(1L))
+      // the bootstrap committed, its marker never landed
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(idx + ".applied"))
+      BucketedMergeSink.merge(spark, Seq(2L).toDF(f.idCol), path, "delete",
+        identifier = f.idCol) // v2
+      assert(f.sync(path, idx) == Seq(1L, 2L))
+      assert(!storedPostings(idx).exists(_._1 == 2L),
+        "a doc deleted since the crashed bootstrap keeps no postings")
+      assert(storedPostings(idx) == f.fresh(path))
+    }
+
+    test(s"${f.name}: one call over several pending versions commits " +
+      "exactly one index version, a fresh index's bootstrap included") {
+      val path = tmpTarget()
+      val idx = tmpTarget() + "-idx"
+      upsert(path, 1L -> a, 2L -> x, 3L -> b) // v1
+      upsert(path, 1L -> b) // v2
+      BucketedMergeSink.merge(spark, Seq(2L).toDF(f.idCol), path, "delete",
+        identifier = f.idCol) // v3
+      assert(f.sync(path, idx) == Seq(1L, 2L, 3L))
+      assert(BucketedMergeSink.manifestVersions(spark, idx) == Seq(1L),
+        "bootstrap and the pending run apply in one commit")
+      assert(storedPostings(idx) == f.fresh(path))
+      upsert(path, 4L -> a, 3L -> x) // v4
+      upsert(path, 3L -> null) // v5
+      BucketedMergeSink.merge(spark, Seq(1L).toDF(f.idCol), path, "delete",
+        identifier = f.idCol) // v6
+      assert(f.sync(path, idx) == Seq(4L, 5L, 6L))
+      assert(BucketedMergeSink.manifestVersions(spark, idx).last == 2L,
+        "three pending versions, one commit")
+      assert(storedPostings(idx) == f.fresh(path))
+    }
+  }
+
+  test("a load with a change feed and an index diffs each version pair " +
+    "once: the index sync reads the publish's shared deltas") {
+    val path = tmpTarget()
+    val feed = tmpTarget() + "-feed"
+    val idx = tmpTarget() + "-idx"
+    val load = Derived.Load("spec", path, Seq("id"), "id", "upsert", Nil,
+      numBuckets = 4, retainVersions = 3,
+      derived = Seq(Derived.ChangeFeed(feed), Derived.MinhashIndex(idx, textCol = "name")),
+      compactMaxFiles = Some(1))
+    val diffs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    BucketedMergeSink.onDiff = (p, a, b) => if (p == path) diffs += ((a, b))
+    try {
+      load.run(spark, seed(12).repartition(3))
+      load.run(spark, Seq((2L, "two words", 2L), (40L, "forty words", 4L))
+        .toDF("id", "name", "v").repartition(2))
+      load.run(spark, Seq((3L, "three words", 3L)).toDF("id", "name", "v"))
+    } finally BucketedMergeSink.onDiff = (_, _, _) => ()
+    assert(diffs.nonEmpty, "the catch-ups diffed nothing")
+    assert(diffs.distinct == diffs, s"a version pair was diffed twice: $diffs")
+    val vs = BucketedMergeSink.manifestVersions(spark, path)
+    assert(BucketedMergeSink.outboxBatches(
+      new org.apache.hadoop.fs.Path(feed).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), feed).last == vs.last)
+    assert(storedPostings(idx) == graft.ops.Dedup.minhashBandIndex(
+      BucketedMergeSink.read(spark, path), idCol = "id", textCol = "name")
+      .as[(Long, Int, Long)].collect().toSet)
+  }
+
   test("subscribeFeed: a replica built from the outbox alone equals the " +
     "target through inserts, updates, and deletes; idempotent; " +
     "crash-replay safe; refuses a pruned outbox") {
@@ -1584,8 +1740,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     (1L to 5L).foreach(b => assert(BucketedMergeSink.subscribeFeed(spark,
       feed, each, numBuckets = 4, upTo = b) == Seq(b)))
     assert(rows(each) == rows(path))
-    // the base, then the four pending deltas in one call: one delete
-    // merge (key 3) and one upsert merge (keys 2 and 100), not four rounds
+    // the base, then the four pending deltas in one call: one commit
+    // deletes key 3 and upserts keys 2 and 100, not four rounds
     val caught = rep("caught")
     assert(BucketedMergeSink.subscribeFeed(spark, feed, caught,
       numBuckets = 4, upTo = 1L) == Seq(1L))
@@ -1594,8 +1750,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(rows(caught) == rows(path))
     assert(rows(caught).contains((100L, "c", 3L)) &&
       rows(caught).contains((2L, "TWO", 22L)) && !rows(caught).exists(_._1 == 3L))
-    assert(BucketedMergeSink.manifestVersions(spark, caught).last == 3L,
-      "base + one delete merge + one upsert merge")
+    assert(BucketedMergeSink.manifestVersions(spark, caught).last == 2L,
+      "base + one net apply")
     // a composite-key replica with a pending delete still refuses
     val comp = rep("comp")
     BucketedMergeSink.subscribeFeed(spark, feed, comp, key = Seq("id", "name"),
