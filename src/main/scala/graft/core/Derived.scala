@@ -38,6 +38,10 @@ object Derived {
     * paired on ONE id column, and compact with the target. */
   sealed abstract class Index(stageKey: String) extends Derived(stageKey)
 
+  /** The per-version profiles: one summary of each target version's
+    * snapshot, kept by [[Profiling]]'s one catch-up. */
+  sealed abstract class ProfileTable(stageKey: String) extends Derived(stageKey)
+
   /** `change_feed:` — [[BucketedMergeSink.publishChangeFeed]].
     * `outboxKeep > 0` log-compacts the outbox after each load
     * ([[BucketedMergeSink.compactOutboxKeep]]). */
@@ -82,14 +86,14 @@ object Derived {
       probeCells: Int = 0) extends Index("semantic_index")
 
   /** `profile:` — [[Profiling.syncProfile]]. `maxPsi > 0` arms the PSI
-    * circuit breaker against the newest stored row. */
+    * circuit breaker against the newest non-empty stored row. */
   final case class Profile(
       path: String,
       column: String = "",
       lo: Double = 0.0,
       hi: Double = 0.0,
       nbins: Int = 64,
-      maxPsi: Double = 0.0) extends Derived("profile")
+      maxPsi: Double = 0.0) extends ProfileTable("profile")
 
   /** `kll_profile:` — [[Profiling.syncKllProfile]], the no-declared-range
     * quantile twin of `profile:`: it shares its shape contracts, with
@@ -100,7 +104,7 @@ object Derived {
       path: String,
       column: String = "",
       k: Int = graft.functions.KllSketch.DefaultK,
-      maxKs: Double = 0.0) extends Derived("kll_profile")
+      maxKs: Double = 0.0) extends ProfileTable("kll_profile")
 
   /** `exemplar_profile:` — [[Profiling.syncExemplarProfile]], the
     * drill-down sibling: per-version example ROWS rather than a
@@ -109,7 +113,12 @@ object Derived {
   final case class ExemplarProfile(
       path: String,
       keyCol: String = "",
-      k: Int = 20) extends Derived("exemplar_profile")
+      k: Int = 20) extends ProfileTable("exemplar_profile")
+
+  // an armed drift guard: the knob that arms it, the score it bounds,
+  // the bound and the profiled column
+  private final case class Gate(knob: String, score: String, bound: Double,
+      column: String)
 
   /** One load into the target at `path` and the derived list it
     * maintains. `who` names the load in refusals; `deleteWhere` is an
@@ -146,6 +155,8 @@ object Derived {
     def run(spark: SparkSession, batch: DataFrame): Option[Boolean] = {
       val wasBucketed = BucketedMergeSink.isBucketed(spark, path)
       check(spark, batch.columns.toSeq, wasBucketed)
+      // the guards and both catch-ups read each stored profile row once
+      val stored = new Profiling.Stored(spark)
       // CATCH UP BEFORE THE LOAD: versions left pending by a previous
       // run's crash between its load and its catch-up are
       // published/synced FIRST, while their predecessors are still
@@ -153,7 +164,7 @@ object Derived {
       // the retention window past the pending version, turning the
       // self-healing catch-up into a hard refusal (and leaving a
       // profile gap).
-      if (wasBucketed) catchUp(spark)
+      if (wasBucketed) catchUp(spark, stored)
       // the drift guards are opt-in because they evaluate the batch
       // plan once more than the merge alone — the batch is persisted
       // across the check + merge so the extract never runs twice;
@@ -162,7 +173,7 @@ object Derived {
       val guarded = derived.exists(armed)
       if (guarded) batch.persist()
       try {
-        derived.foreach(guard(spark, batch, _))
+        derived.foreach(guard(stored, batch, _))
         if (numBuckets > 0)
           BucketedMergeSink.merge(spark, batch, path, loadType, key,
             identifier, excluded, numBuckets = numBuckets,
@@ -207,7 +218,7 @@ object Derived {
       // marker / profile row gets one, so a crash anywhere in this pass
       // self-heals on the next load's catch-up-BEFORE-load. The
       // profiles snapshot this load's delete_where/compact versions too.
-      catchUp(spark)
+      catchUp(spark, stored)
       // `compact: true` extends to the postings indexes — their
       // per-version sync merges fragment index buckets exactly like
       // loads fragment the target's. AFTER the catch-up (compacting
@@ -358,11 +369,16 @@ object Derived {
 
     // an armed drift guard; delete batches carry ids, not a
     // distribution, and never trip
-    private def armed(d: Derived): Boolean = loadType != "delete" && (d match {
-      case p: Profile => p.maxPsi > 0.0
-      case p: KllProfile => p.maxKs > 0.0
-      case _ => false
-    })
+    private def gate(d: Derived): Option[Gate] =
+      if (loadType == "delete") None else d match {
+        case p: Profile if p.maxPsi > 0.0 =>
+          Some(Gate("profile_max_psi", "PSI", p.maxPsi, p.column))
+        case p: KllProfile if p.maxKs > 0.0 =>
+          Some(Gate("kll_profile_max_ks", "KS", p.maxKs, p.column))
+        case _ => None
+      }
+
+    private def armed(d: Derived): Boolean = gate(d).nonEmpty
 
     // (knob, column, why) of a batch column the load cannot do without.
     // A guarded load whose extract DROPPED the profiled column is
@@ -370,98 +386,63 @@ object Derived {
     // skipping the gate silently would wave it straight through; the
     // exemplar sync hashes its key from the TARGET snapshot, so an
     // extract that dropped it would fail AFTER the merge committed.
-    private def neededColumn(d: Derived): Option[(String, String, String)] = {
-      val disarm = "a drift guard must not silently disarm when the " +
-        "profiled column vanishes"
-      d match {
-        case p: Profile if armed(p) => Some(("profile_max_psi", p.column, disarm))
-        case p: KllProfile if armed(p) =>
-          Some(("kll_profile_max_ks", p.column, disarm))
-        case p: ExemplarProfile if loadType != "delete" => Some(("exemplar_profile",
-          p.keyCol, "the sample sync would fail after the merge"))
-        case _ => None
-      }
-    }
+    private def neededColumn(d: Derived): Option[(String, String, String)] =
+      gate(d).map(g => (g.knob, g.column, "a drift guard must not " +
+          "silently disarm when the profiled column vanishes"))
+        .orElse(d match {
+          case p: ExemplarProfile if loadType != "delete" => Some(("exemplar_profile",
+            p.keyCol, "the sample sync would fail after the merge"))
+          case _ => None
+        })
 
     // the bad-data circuit breakers (`profile_max_psi:`,
-    // `kll_profile_max_ks:`): refuse the load BEFORE any write when the
-    // batch's distribution drifts past the bound vs the NEWEST stored
-    // profile (a corrupted extract should not reach the table; the
-    // operator raises the bound or drops the key to override). A first
-    // load has no stored profile and never trips.
-    private def guard(spark: SparkSession, batch: DataFrame, d: Derived): Unit =
-      if (armed(d)) d match {
-        case p: Profile =>
-          // the gate bins the batch with the configured edges — refuse
-          // when the stored reference was built under a different binning
-          Profiling.requireBinningMatch(spark, p.path, p.lo, p.hi, p.nbins)
-          for ((refV, ref) <- Profiling.latestProfile(spark, p.path);
-               psi <- Profiling.batchDrift(batch, p.column, p.lo, p.hi,
-                 p.nbins, ref) if psi > p.maxPsi)
-            throw new IllegalStateException(
-              f"$who: incoming batch drifts PSI=$psi%.4f > " +
-                f"profile_max_psi=${p.maxPsi}%.4f vs stored profile " +
-                s"version $refV of ${p.path} (column ${p.column}) — " +
-                "refusing to load; inspect the extract, or raise/remove " +
-                "profile_max_psi")
-        case p: KllProfile =>
-          // the reference is the newest NON-EMPTY stored sketch: an
-          // empty profile version (purged snapshot, all-null first
-          // batch) must neither disarm the gate forever (null KS vs an
-          // empty CDF) nor brick the pipeline by refusing every load —
-          // drift is judged against the last distribution actually
-          // seen, and with no non-empty baseline ever the gate waits
-          // exactly like the first load
-          for ((refV, ref) <- Profiling.latestNonEmptyKllProfile(spark, p.path)) {
-            val (batchN, ks) = Profiling.batchKsDrift(batch, p.column, p.k, ref)
-            // null KS must not read as "nothing to judge" when the batch
-            // HAS rows: a profiled column that sketches to n=0 (every
-            // value null/NaN/cast-to-null) is the same corrupted-extract
-            // class the column-presence check refuses loudly — the
-            // breaker disarming silently here would wave it through (the
-            // reference side is non-empty by construction)
-            if (batchN == 0L && !batch.isEmpty)
-              throw new IllegalStateException(
-                s"$who: kll_profile_max_ks guards column ${p.column} but " +
-                  "the incoming batch has rows whose profiled values are " +
-                  "ALL null/NaN (sketch n=0) against a non-empty stored " +
-                  s"profile (version $refV of ${p.path}) — refusing to " +
-                  "load; inspect the extract, or remove kll_profile_max_ks")
-            ks.filter(_ > p.maxKs).foreach { ks =>
-              throw new IllegalStateException(
-                f"$who: incoming batch drifts KS=$ks%.4f > " +
-                  f"kll_profile_max_ks=${p.maxKs}%.4f vs stored profile " +
-                  s"version $refV of ${p.path} (column ${p.column}) — " +
-                  "refusing to load; inspect the extract, or " +
-                  "raise/remove kll_profile_max_ks")
-            }
-          }
-        case _ =>
+    // `kll_profile_max_ks:`), one rule for both: refuse the load BEFORE
+    // any write when the batch's distribution drifts past the bound vs
+    // the newest NON-EMPTY stored profile row (a corrupted extract
+    // should not reach the table; the operator raises the bound or
+    // drops the key to override). Judging against the last distribution
+    // actually seen keeps the gate armed across empty versions (a
+    // purged snapshot, an all-null first batch); with no non-empty row
+    // ever, the gate waits exactly like a first load.
+    private def guard(stored: Profiling.Stored, batch: DataFrame, d: Derived): Unit =
+      for (g <- gate(d); (refV, (batchN, score)) <- Profiling.drift(stored, batch, d)) {
+        val against = s"stored profile version $refV of ${d.path}"
+        // a null score must not read as "nothing to judge" when the
+        // batch HAS rows: a profiled column that sketches to n=0 (every
+        // value null/NaN/cast-to-null) is the same corrupted-extract
+        // class the column-presence check refuses loudly (the reference
+        // side is non-empty by construction)
+        if (batchN == 0L && !batch.isEmpty)
+          throw new IllegalStateException(
+            s"$who: ${g.knob} guards column ${g.column} but the incoming " +
+              "batch has rows whose profiled values are ALL null/NaN " +
+              s"(sketch n=0) against non-empty $against — refusing to " +
+              s"load; inspect the extract, or remove ${g.knob}")
+        score.filter(_ > g.bound).foreach { s =>
+          throw new IllegalStateException(
+            f"$who: incoming batch drifts ${g.score}=$s%.4f > " +
+              f"${g.knob}=${g.bound}%.4f vs $against (column " +
+              s"${g.column}) — refusing to load; inspect the extract, or " +
+              s"raise/remove ${g.knob}")
+        }
       }
 
     /** Every artifact's idempotent catch-up: each retained target
       * version it has not published/synced/profiled yet gets applied
       * ([[BucketedMergeSink]]'s publish/sync contract). The outbox and
       * the indexes read each version's delta from one shared, persisted
-      * diff, dropped when the pass ends. */
-    private def catchUp(spark: SparkSession): Unit =
+      * diff, dropped when the pass ends; the profiles read their stored
+      * rows through the load's `stored`. */
+    private def catchUp(spark: SparkSession, stored: Profiling.Stored): Unit =
       BucketedMergeSink.withDeltas(spark, path, feedKey) { deltas =>
-        derived.foreach(catchUp(spark, deltas, _))
+        derived.foreach {
+          case ChangeFeed(feed, _) =>
+            BucketedMergeSink.publishChangeFeed(spark, feed, deltas): Unit
+          // indexes refuse scd2 loads, so `feedKey` is empty whenever one
+          // is declared and the feed's diffs are the index's too
+          case i: Index => BucketedMergeSink.syncIndex(spark, deltas, i): Unit
+          case p: ProfileTable => Profiling.sync(stored, path, p): Unit
+        }
       }
-
-    private def catchUp(spark: SparkSession, deltas: BucketedMergeSink.Deltas,
-        d: Derived): Unit = d match {
-      case ChangeFeed(feed, _) =>
-        BucketedMergeSink.publishChangeFeed(spark, feed, deltas): Unit
-      // indexes refuse scd2 loads, so `feedKey` is empty whenever one is
-      // declared and the feed's diffs are the index's too
-      case i: Index => BucketedMergeSink.syncIndex(spark, deltas, i): Unit
-      case Profile(prof, column, lo, hi, nbins, _) =>
-        Profiling.syncProfile(spark, path, prof, column, lo, hi, nbins): Unit
-      case KllProfile(prof, column, k, _) =>
-        Profiling.syncKllProfile(spark, path, prof, column, k): Unit
-      case ExemplarProfile(prof, keyCol, k) =>
-        Profiling.syncExemplarProfile(spark, path, prof, keyCol, k): Unit
-    }
   }
 }

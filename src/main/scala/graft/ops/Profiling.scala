@@ -1,8 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, MapType, StructField, StructType}
+
+import graft.core.Derived
+import graft.functions.{Exemplar, KllKernel, KllSketch}
+import graft.sink.BucketedMergeSink
 
 /** Mergeable fixed-bin histogram sketches — the persisted-profile
   * warehouse pattern for DISTRIBUTIONS (the numeric sibling of the
@@ -107,17 +115,41 @@ object Profiling {
     when(ta === 0.0 || tb === 0.0, lit(null).cast("double")).otherwise(raw)
   }
 
+  // ------------------------------------------------ per-version profiles
+  //
+  // The `profile:`, `kll_profile:` and `exemplar_profile:` stage keys
+  // each keep a table of per-version summaries of a bucketed target:
+  // the rows of version v under `profilePath/version=<v>/`, whose
+  // `_SUCCESS` marker is the idempotency marker. One catch-up
+  // ([[catchUp]]) and one reader ([[readStored]]) serve all three; a
+  // family is only its stored row's schema, the closure that summarises
+  // one snapshot, and (for the two distributions) its drift score.
+
+  // each family's stored row, declared once: every read states it, so
+  // no read of a stored row launches a schema-inference job, and every
+  // write keeps the nullability the summary's columns have
+  private val histRow = StructType(Seq(
+    StructField("n", LongType),
+    StructField("hist", MapType(IntegerType, LongType, valueContainsNull = false),
+      nullable = false),
+    StructField("psi_prev", DoubleType),
+    StructField("lo", DoubleType, nullable = false),
+    StructField("hi", DoubleType, nullable = false),
+    StructField("nbins", IntegerType, nullable = false)))
+  private val kllRow = StructType.fromDDL("n BIGINT NOT NULL, sk BINARY, ks_prev DOUBLE")
+  private val exemplarRow = StructType.fromDDL("h STRING, payload STRING, n BIGINT NOT NULL")
+
   // the version ids a profile table holds (completed rows only — a torn
   // dir without _SUCCESS is invisible, same contract as the catch-up)
   private def profiledVersions(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       profilePath: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(profilePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.map(_.getPath)
       .filter(p => p.getName.startsWith("version=") &&
-        graft.sink.BucketedMergeSink.isPublished(fs, p))
+        BucketedMergeSink.isPublished(fs, p))
       .map(_.getName.stripPrefix("version=").toLong)
       .sorted
   }
@@ -130,37 +162,123 @@ object Profiling {
     * what it is FOR), so the baseline comes from the stored rows, not
     * the manifest. */
   private def pendingVersions(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       targetPath: String,
       profilePath: String): (Seq[Long], Option[Long]) = {
     val profiled = profiledVersions(spark, profilePath)
-    val pending = graft.sink.BucketedMergeSink
+    val pending = BucketedMergeSink
       .manifestVersions(spark, targetPath).sorted.filterNot(profiled.toSet)
     (pending, pending.headOption.flatMap(first => profiled.filter(_ < first).lastOption))
   }
 
-  // stored profile maps are tiny — <= nbins+2 entries
-  private def readStoredHist(
-      spark: org.apache.spark.sql.SparkSession,
+  // the one reader of stored profile rows: `versions` of the table at
+  // `profilePath` under the family's `schema`, each row tagged with its
+  // `version`
+  private def readStored(
+      spark: SparkSession,
       profilePath: String,
-      v: Long): Map[Int, Long] =
-    spark.read.parquet(s"$profilePath/version=$v")
-      .select(explode(col("hist")).as(Seq("bin", "cnt")))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      schema: StructType,
+      versions: Seq[Long]): DataFrame =
+    spark.read.schema(schema.add("version", LongType))
+      .option("basePath", profilePath)
+      .parquet(versions.map(v => s"$profilePath/version=$v"): _*)
 
-  // the binning a profile table's newest row was built with; None while
-  // the table is empty. Rows are always written with the stamp (see
-  // syncProfile), so an UNSTAMPED populated table predates the stamp
-  // and its binning is unknowable — refuse rather than skip (r15
-  // advice): silently no-op'ing here would let a binning change
-  // against a pre-stamp table compare bin indices from incompatible
-  // edges, the exact failure the stamp exists to refuse.
-  private def storedBinning(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String): Option[(Double, Double, Int)] =
-    profiledVersions(spark, profilePath).lastOption.flatMap { v =>
-      val df = spark.read.parquet(s"$profilePath/version=$v")
-      if (!Seq("lo", "hi", "nbins").forall(df.columns.contains))
+  /** The first stored row of each profile version, read at most once
+    * (published rows never change; a hist or KLL version holds exactly
+    * one row). [[graft.core.Derived.Load]] keeps one per load, so its
+    * drift guards and both catch-ups share every read; each public sync
+    * makes its own. */
+  private[graft] final class Stored(val spark: SparkSession) {
+    private val rows = scala.collection.mutable.Map.empty[(String, Long), Option[Row]]
+
+    def apply(profilePath: String, schema: StructType, v: Long): Option[Row] =
+      rows.getOrElseUpdate((profilePath, v),
+        readStored(spark, profilePath, schema, Seq(v)).collect().headOption)
+
+    private[Profiling] def wrote(profilePath: String, v: Long, row: Option[Row]): Unit =
+      rows((profilePath, v)) = row
+
+    /** The newest stored row with n > 0, and its version — the
+      * reference a drift gate judges a batch against. An empty row (a
+      * purged snapshot, an all-null first batch) has no distribution:
+      * judging against it would disarm the gate forever, and refusing
+      * on it would brick the pipeline with no in-band recovery. None
+      * while no stored row is non-empty. Reads newest-first and stops
+      * at the first non-empty row. */
+    def newestNonEmpty(profilePath: String, schema: StructType): Option[(Long, Row)] =
+      profiledVersions(spark, profilePath).reverseIterator
+        .flatMap(v => apply(profilePath, schema, v).map(v -> _))
+        .find(_._2.getAs[Long]("n") > 0L)
+  }
+
+  /** The catch-up every profile table shares: each retained target
+    * version without a stored row gets the rows `summary` makes of its
+    * snapshot in one Spark job, given the row of the previous profiled
+    * version (None for the first), written under
+    * `profilePath/version=<v>/`. The dir with its `_SUCCESS` marker IS
+    * the idempotency marker (same contract as the outbox/index
+    * catch-ups: overwrite-per-version, a crash mid-write leaves no
+    * `_SUCCESS` and re-profiles next run; already-profiled versions are
+    * never recomputed). Versions that fell out of retention before ever
+    * being profiled are a monitoring GAP, not an error — their rows
+    * cannot be computed and the catch-up moves on (unlike the index
+    * syncs, nothing downstream depends on per-version continuity).
+    * Returns the newly profiled version ids. */
+  private def catchUp(
+      stored: Stored,
+      targetPath: String,
+      profilePath: String,
+      schema: StructType)(
+      summary: (DataFrame, => Option[Row]) => Seq[Row]): Seq[Long] = {
+    val spark = stored.spark
+    val (pending, baseline) = pendingVersions(spark, targetPath, profilePath)
+    // a version's predecessor is the baseline, then the version this
+    // pass wrote before it, whose row `stored` holds since the write
+    pending.zip(baseline +: pending.map(Some(_))).foreach { case (v, before) =>
+      val rows = summary(BucketedMergeSink.readVersion(spark, targetPath, v),
+        before.flatMap(stored(profilePath, schema, _)))
+      spark.createDataFrame(rows.asJava, schema)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$profilePath/version=$v")
+      // held with its schema, so a column read by name works as on a read
+      stored.wrote(profilePath, v,
+        rows.headOption.map(r => new GenericRowWithSchema(r.toSeq.toArray, schema)))
+    }
+    pending
+  }
+
+  // a stored hist's entries in bin order — the order the sketch emits
+  // and the stored row keeps them
+  private def binOrder(hist: scala.collection.Map[Int, Long]): Seq[(Int, Long)] =
+    hist.toSeq.sortBy(_._1)
+
+  // a stored row's hist as a PSI reference. A PSI sums over the
+  // reference's bins in the map's iteration order, so the map is always
+  // built from the entries in bin order: the same hist then scores the
+  // same to the last bit wherever it was read from
+  private def histOf(r: Row): Map[Int, Long] =
+    binOrder(r.getMap[Int, Long](r.fieldIndex("hist"))).toMap
+
+  /** Refuse when the configured binning no longer matches the binning
+    * the stored profile rows were built with: bin indices from
+    * different edges are incomparable, so every PSI / quantile read
+    * against the stored reference would be silently meaningless.
+    * Checked against the newest stored row by the `profile:` catch-up
+    * and the `profile_max_psi` gate; a no-op while the table is empty.
+    * Rows are always written with the stamp, so an UNSTAMPED populated
+    * table predates the stamp and its binning is unknowable — refuse
+    * rather than skip: silently no-op'ing would let a binning change
+    * against a pre-stamp table compare bin indices from incompatible
+    * edges, the exact failure the stamp exists to refuse. */
+  private def requireBinningMatch(
+      stored: Stored,
+      profilePath: String,
+      lo: Double,
+      hi: Double,
+      nbins: Int): Unit =
+    for (v <- profiledVersions(stored.spark, profilePath).lastOption;
+         r <- stored(profilePath, histRow, v)) {
+      if (Seq("lo", "hi", "nbins").exists(c => r.isNullAt(r.fieldIndex(c))))
         throw new IllegalStateException(
           s"profile table $profilePath (version=$v) holds rows without " +
             "a lo/hi/nbins binning stamp — it predates the stamped " +
@@ -168,23 +286,8 @@ object Profiling {
             "cannot be verified; point profile: at a fresh path to " +
             "re-baseline (the unstamped history stays readable as " +
             "plain parquet)")
-      else df.select("lo", "hi", "nbins").collect().headOption
-        .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2)))
-    }
-
-  /** Refuse when the configured binning no longer matches the binning
-    * the stored profile rows were built with: bin indices from
-    * different edges are incomparable, so every PSI / quantile read
-    * against the stored reference would be silently meaningless.
-    * Called by [[syncProfile]] and the Runner's `profile_max_psi`
-    * gate; a no-op while the profile table is empty. */
-  def requireBinningMatch(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String,
-      lo: Double,
-      hi: Double,
-      nbins: Int): Unit =
-    storedBinning(spark, profilePath).foreach { case (slo, shi, sn) =>
+      val (slo, shi, sn) =
+        (r.getAs[Double]("lo"), r.getAs[Double]("hi"), r.getAs[Int]("nbins"))
       if (slo != lo || shi != hi || sn != nbins)
         throw new IllegalStateException(
           s"profile table $profilePath holds sketches binned " +
@@ -195,141 +298,37 @@ object Profiling {
             "point profile: at a fresh path to re-baseline")
     }
 
-  /** The NEWEST stored profile row, as (version, hist) — the reference
-    * a drift gate compares an incoming batch against. None while the
-    * profile table is empty (a first load has no baseline). */
-  def latestProfile(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String): Option[(Long, Map[Int, Long])] =
-    profiledVersions(spark, profilePath).lastOption
-      .map(v => v -> readStoredHist(spark, profilePath, v))
-
   /** PSI of a batch's `column` distribution against a stored reference
     * map — one aggregation over the batch (the global [[histSketch]])
     * plus the [[histPsi]] column kernel, so batch and stored-profile
-    * drift scores are the same arithmetic. None when the batch holds
-    * no non-null values (nothing to judge). */
+    * drift scores are the same arithmetic. Returns `(batchN, psi)`:
+    * batchN is the batch's count of non-null values, and psi is None
+    * when either side is empty (nothing to judge). */
   def batchDrift(
       batch: DataFrame,
       column: String,
       lo: Double,
       hi: Double,
       nbins: Int,
-      reference: Map[Int, Long]): Option[Double] = {
-    val rows = histSketch(batch, column, lo, hi, nbins, Seq.empty)
-      .select(histPsi(col("hist"),
-        typedLit(scala.collection.immutable.ListMap(
-          reference.toSeq.sortBy(_._1): _*))).as("psi"))
-      .collect()
-    rows.headOption.collect { case r if !r.isNullAt(0) => r.getDouble(0) }
+      reference: Map[Int, Long]): (Long, Option[Double]) = {
+    val row = histSketch(batch, column, lo, hi, nbins, Seq.empty)
+      .select(aggregate(map_values(col("hist")), lit(0L), (a, c) => a + c),
+        histPsi(col("hist"), typedLit(ListMap(binOrder(reference): _*))))
+      .head()
+    (row.getLong(0), if (row.isNullAt(1)) None else Some(row.getDouble(1)))
   }
-
-  /** Config-synced corpus profiling for a bucketed merge target (the
-    * `profile:` stage key; the monitoring sibling of the
-    * `minhash_index:`/`lsh_index:`/`semantic_index:` maintenance keys):
-    * after each load, every RETAINED target version without a profile
-    * row gets one — `(n, hist, psi_prev, lo, hi, nbins)` under
-    * `profilePath/version=<v>/` — where `hist` is the global [[histSketch]] of
-    * `column` over that snapshot and `psi_prev` is the [[histPsi]]
-    * drift vs the previous profiled version (null for the first). The
-    * version-partition dir with its `_SUCCESS` marker IS the
-    * idempotency marker (same contract as the outbox/index catch-ups:
-    * overwrite-per-version, a crash mid-write leaves no `_SUCCESS` and
-    * re-profiles next run; already-profiled versions are never
-    * recomputed). Versions that fell out of retention before ever
-    * being profiled are a monitoring GAP, not an error — their rows
-    * cannot be computed and the catch-up moves on (unlike the index
-    * syncs, nothing downstream depends on per-version continuity).
-    *
-    * Returns the newly profiled version ids. */
-  def syncProfile(
-      spark: org.apache.spark.sql.SparkSession,
-      targetPath: String,
-      profilePath: String,
-      column: String,
-      lo: Double,
-      hi: Double,
-      nbins: Int): Seq[Long] = {
-    import graft.sink.BucketedMergeSink
-    // a profile table is one binning's history — a silent edge change
-    // would splice incomparable bin indices into the same table
-    requireBinningMatch(spark, profilePath, lo, hi, nbins)
-    val (pending, baseline) = pendingVersions(spark, targetPath, profilePath)
-    def readHist(v: Long): Map[Int, Long] =
-      readStoredHist(spark, profilePath, v)
-    var prev: Option[Map[Int, Long]] = baseline.map(readHist)
-    pending.foreach { v =>
-      val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
-      val profile = histSketch(snap, column, lo, hi, nbins, Seq.empty)
-        .withColumn("n",
-          aggregate(map_values(col("hist")), lit(0L), (a, c) => a + c))
-      val withPsi = prev match {
-        case Some(pm) => profile.withColumn("psi_prev",
-          histPsi(col("hist"), typedLit(pm)))
-        case None => profile.withColumn("psi_prev",
-          lit(null).cast("double"))
-      }
-      // lo/hi/nbins ride every row so a future run under a CHANGED
-      // binning config is refused (requireBinningMatch) instead of
-      // comparing bin indices from incompatible edges
-      withPsi.select(col("n"), col("hist"), col("psi_prev"),
-          lit(lo).as("lo"), lit(hi).as("hi"), lit(nbins).as("nbins"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$profilePath/version=$v")
-      prev = Some(readHist(v))
-    }
-    pending
-  }
-
-  // the stored KLL profile row's fixed schema: a read that states it
-  // skips the schema-inference job a bare parquet read launches
-  private val storedKllSchema = StructType(Seq(
-    StructField("n", LongType), StructField("sk", BinaryType),
-    StructField("ks_prev", DoubleType)))
-
-  // the newest stored KLL profile row's sketch bytes (one tiny row)
-  private def readStoredKll(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String,
-      v: Long): Array[Byte] =
-    spark.read.schema(storedKllSchema).parquet(s"$profilePath/version=$v")
-      .select("sk").head().getAs[Array[Byte]](0)
-
-  /** The newest stored KLL profile row whose sketch is NON-EMPTY — the
-    * drift-gate reference. An empty stored sketch (a legitimately
-    * purged snapshot, an all-null first batch that had no baseline to
-    * trip on) has no CDF: comparing against it reads null forever, and
-    * refusing on it would BRICK the pipeline with no in-band recovery
-    * (re-baselining requires a load, which would refuse). Judging
-    * drift against the last NON-EMPTY distribution self-heals both
-    * ways: the gate stays armed across empty interludes, and when no
-    * non-empty baseline has ever existed the gate waits exactly like
-    * the first load. Bounded: one ≤1-row read per stored version,
-    * newest-first, stopping at the first non-empty. */
-  def latestNonEmptyKllProfile(
-      spark: org.apache.spark.sql.SparkSession,
-      profilePath: String): Option[(Long, Array[Byte])] =
-    profiledVersions(spark, profilePath).reverseIterator
-      .map(v => v -> readStoredKll(spark, profilePath, v))
-      .find { case (_, sk) => graft.functions.KllKernel.n(sk) > 0L }
 
   /** KS distance of a batch's `column` distribution vs a stored
     * reference sketch — one aggregation over the batch plus the
     * [[graft.functions.KllSketch.kllKs]] kernel, so batch and
     * stored-profile drift scores are the same arithmetic. Returns
-    * `(batchSketchN, ks)`: ks is None when either side is empty
-    * (matching [[batchDrift]]'s null-PSI contract), and the batch
-    * sketch's exact n rides along so a caller guarding a load can tell
-    * "empty batch, nothing to judge" apart from "batch HAS rows but the
-    * profiled column sketched to n=0 (all null/NaN/cast-to-null)" — the
-    * corrupted-extract class a KS circuit breaker must refuse, not
-    * silently disarm on (r16 advice). */
+    * `(batchN, ks)` like [[batchDrift]]: batchN is the batch sketch's
+    * exact n, and ks is None when either side is empty. */
   def batchKsDrift(
       batch: DataFrame,
       column: String,
       k: Int,
       reference: Array[Byte]): (Long, Option[Double]) = {
-    import graft.functions.KllSketch
     val row = batch
       .agg(KllSketch.kllSketch(col(column).cast("double"), k).as("sk"))
       .select(KllSketch.kllN(col("sk")).as("n"),
@@ -339,6 +338,51 @@ object Profiling {
       if (row.isNullAt(1)) None else Some(row.getDouble(1)))
   }
 
+  /** A drift gate's reading of `batch` against the newest NON-EMPTY
+    * stored row of the distribution profile `table`: the reference
+    * version, and the batch's sketched n with its PSI or KS score. None
+    * while no stored row is non-empty — the gate waits, like a first
+    * load — and for a table that profiles no distribution. The
+    * `profile:` gate bins the batch with the configured edges, so it
+    * first refuses a stored binning that differs. */
+  private[graft] def drift(
+      stored: Stored,
+      batch: DataFrame,
+      table: Derived): Option[(Long, (Long, Option[Double]))] = table match {
+    case Derived.Profile(path, column, lo, hi, nbins, _) =>
+      requireBinningMatch(stored, path, lo, hi, nbins)
+      for ((v, ref) <- stored.newestNonEmpty(path, histRow))
+        yield v -> batchDrift(batch, column, lo, hi, nbins, histOf(ref))
+    case Derived.KllProfile(path, column, k, _) =>
+      for ((v, ref) <- stored.newestNonEmpty(path, kllRow))
+        yield v -> batchKsDrift(batch, column, k, ref.getAs[Array[Byte]]("sk"))
+    case _ => None
+  }
+
+  /** Config-synced corpus profiling for a bucketed merge target (the
+    * `profile:` stage key; the monitoring sibling of the
+    * `minhash_index:`/`lsh_index:`/`semantic_index:` maintenance keys):
+    * after each load, every RETAINED target version without a profile
+    * row gets one — `(n, hist, psi_prev, lo, hi, nbins)` under
+    * `profilePath/version=<v>/` — where `hist` is the global
+    * [[histSketch]] of `column` over that snapshot and `psi_prev` is
+    * the [[histPsi]] drift vs the previous profiled version (null for
+    * the first). lo/hi/nbins ride every row, so a later run under a
+    * CHANGED binning refuses instead of splicing incomparable bin
+    * indices into the table. [[catchUp]]'s idempotency contract.
+    *
+    * Returns the newly profiled version ids. */
+  def syncProfile(
+      spark: SparkSession,
+      targetPath: String,
+      profilePath: String,
+      column: String,
+      lo: Double,
+      hi: Double,
+      nbins: Int): Seq[Long] =
+    sync(new Stored(spark), targetPath,
+      Derived.Profile(profilePath, column, lo, hi, nbins))
+
   /** [[syncProfile]]'s KLL twin (the `kll_profile:` stage key): corpus
     * quantile profiling for metrics with NO declared value range —
     * every retained target version without a profile row gets
@@ -346,8 +390,8 @@ object Profiling {
     * is the KLL sketch of `column` over that snapshot (n exact, read
     * from the sketch itself) and `ks_prev` is the Kolmogorov–Smirnov
     * distance (`kll_ks`) vs the previous profiled version (null
-    * for the first). Same `_SUCCESS`-marker idempotency contract as
-    * [[syncProfile]]. Deliberately NO binning-stamp analogue: KLL
+    * for the first). Same idempotency contract as [[syncProfile]].
+    * Deliberately NO binning-stamp analogue: KLL
     * bytes are self-describing and sketches built under different k
     * remain comparable (each side's rank error rides the KS
     * threshold), so a k change degrades accuracy visibly rather than
@@ -356,39 +400,54 @@ object Profiling {
     *
     * Returns the newly profiled version ids. */
   def syncKllProfile(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       targetPath: String,
       profilePath: String,
       column: String,
-      k: Int): Seq[Long] = {
-    import graft.functions.KllSketch
-    import graft.sink.BucketedMergeSink
-    val (pending, baseline) = pendingVersions(spark, targetPath, profilePath)
-    var prev: Option[Array[Byte]] =
-      baseline.map(readStoredKll(spark, profilePath, _))
-    pending.foreach { v =>
-      val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
-      // ONE aggregation job collects the sketch bytes; n, ks_prev, the
-      // parquet row, AND the next iteration's baseline all derive from
-      // those bytes on the driver via the same KllKernel arithmetic the
-      // column kernels use (r16 advice: the per-version parquet
-      // read-back this replaced was a whole extra job per version for
-      // bytes already in hand — and parquet stores them verbatim, so
-      // seeding `prev` from memory is identical)
-      val sk = snap
-        .agg(KllSketch.kllSketch(col(column).cast("double"), k).as("sk"))
-        .head().getAs[Array[Byte]](0)
-      val ksPrev: Option[Double] = prev.flatMap(pb =>
-        Option(graft.functions.KllKernel.ksDelta(sk, pb))
-          .map(_.asInstanceOf[java.lang.Double].doubleValue))
-      import spark.implicits._
-      Seq((graft.functions.KllKernel.n(sk), sk, ksPrev))
-        .toDF("n", "sk", "ks_prev")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$profilePath/version=$v")
-      prev = Some(sk)
-    }
-    pending
+      k: Int): Seq[Long] =
+    sync(new Stored(spark), targetPath, Derived.KllProfile(profilePath, column, k))
+
+  /** The catch-up of any profile table of the target at `targetPath` —
+    * the family's summary closure around [[catchUp]]. */
+  private[graft] def sync(
+      stored: Stored,
+      targetPath: String,
+      table: Derived.ProfileTable): Seq[Long] = table match {
+    case Derived.Profile(path, column, lo, hi, nbins, _) =>
+      // a profile table is one binning's history — a silent edge change
+      // would splice incomparable bin indices into the same table
+      requireBinningMatch(stored, path, lo, hi, nbins)
+      catchUp(stored, targetPath, path, histRow) { (snap, prev) =>
+        val psiPrev = prev.fold(lit(null).cast("double"))(p =>
+          histPsi(col("hist"), typedLit(histOf(p))))
+        val r = histSketch(snap, column, lo, hi, nbins, Seq.empty)
+          .select(aggregate(map_values(col("hist")), lit(0L), (a, c) => a + c),
+            col("hist"), psiPrev)
+          .head()
+        // the ListMap keeps the bin order the sketch emits into the row
+        Seq(Row(r.getLong(0), ListMap(binOrder(r.getMap[Int, Long](1)): _*),
+          r.get(2), lo, hi, nbins))
+      }
+    case Derived.KllProfile(path, column, k, _) =>
+      catchUp(stored, targetPath, path, kllRow) { (snap, prev) =>
+        // n and ks_prev derive from the collected bytes on the driver,
+        // by the same KllKernel arithmetic the column kernels use
+        val sk = snap.agg(KllSketch.kllSketch(col(column).cast("double"), k))
+          .head().getAs[Array[Byte]](0)
+        Seq(Row(KllKernel.n(sk), sk,
+          prev.map(p => KllKernel.ksDelta(sk, p.getAs[Array[Byte]]("sk"))).orNull))
+      }
+    case Derived.ExemplarProfile(path, keyCol, k) =>
+      catchUp(stored, targetPath, path, exemplarRow) { (snap, _) =>
+        // sample and exact count ride one aggregation pass
+        val row = snap.agg(
+          Exemplar.exemplarAgg(
+            md5(col(keyCol).cast("string")),
+            to_json(struct(snap.columns.map(col).toIndexedSeq: _*)),
+            k),
+          count(lit(1))).head()
+        row.getSeq[Row](0).map(r => Row(r.getString(0), r.getString(1), row.getLong(1)))
+      }
   }
 
   // ------------------------------------------------- exemplar samples
@@ -427,7 +486,6 @@ object Profiling {
       .orderBy("h", "payload")
       .limit(k)
   }
-
   /** [[syncProfile]]/[[syncKllProfile]]'s exemplar sibling (the
     * `exemplar_profile:` stage key): every retained target version
     * without a profile gets `k` exemplar rows `(h, payload, n)` under
@@ -435,38 +493,19 @@ object Profiling {
     * the snapshot's EXACT count (stamped on each row so any single
     * exemplar row sizes its snapshot). Sample + count ride ONE
     * aggregation pass (the exemplar_agg kernel + count(1)). Same
-    * `_SUCCESS`-marker idempotency contract as the siblings. Because
+    * idempotency contract as the siblings. Because
     * bottom-k-by-hash merges exactly (`bottomK(A ∪ B) =
     * bottomK(bottomK(A) ∪ bottomK(B))`), [[mergedExemplars]] answers
     * corpus-level "show me examples" from these stored rows alone.
     *
     * Returns the newly profiled version ids. */
   def syncExemplarProfile(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       targetPath: String,
       profilePath: String,
       keyCol: String,
-      k: Int): Seq[Long] = {
-    import graft.sink.BucketedMergeSink
-    val (pending, _) = pendingVersions(spark, targetPath, profilePath)
-    pending.foreach { v =>
-      val snap = BucketedMergeSink.readVersion(spark, targetPath, v)
-      val row = snap.agg(
-        graft.functions.Exemplar.exemplarAgg(
-          md5(col(keyCol).cast("string")),
-          to_json(struct(snap.columns.map(col).toIndexedSeq: _*)),
-          k).as("ex"),
-        count(lit(1)).as("n")).head()
-      val n = row.getLong(1)
-      val ex = row.getSeq[org.apache.spark.sql.Row](0)
-        .map(r => (r.getString(0), r.getString(1), n))
-      import spark.implicits._
-      ex.toDF("h", "payload", "n")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$profilePath/version=$v")
-    }
-    pending
-  }
+      k: Int): Seq[Long] =
+    sync(new Stored(spark), targetPath, Derived.ExemplarProfile(profilePath, keyCol, k))
 
   /** Corpus-level exemplars from STORED profile rows only: union every
     * version's bottom-k, re-take the k smallest — exact by the merge
@@ -483,7 +522,7 @@ object Profiling {
     * k and fewer than that version's exact key count (stored rows ==
     * n means the sample covers every key and any k is fine). */
   def mergedExemplars(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       profilePath: String,
       k: Int): DataFrame = {
     require(k >= 1, s"mergedExemplars k must be >= 1, got $k")
@@ -491,12 +530,13 @@ object Profiling {
     require(versions.nonEmpty,
       s"mergedExemplars: no profiled versions under $profilePath — " +
         "run the exemplar_profile: stage (or syncExemplarProfile) first")
+    val rows = readStored(spark, profilePath, exemplarRow, versions)
+    // one tiny read (≤ buildK rows per version) sizes every version:
+    // its stored row count and exact key count
+    val sized = rows.groupBy("version").agg(count(lit(1)), max("n")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     versions.foreach { v =>
-      // tiny read: ≤ buildK rows per version
-      val rows = spark.read.parquet(s"$profilePath/version=$v")
-        .select("n").collect()
-      val stored = rows.length.toLong
-      val n = if (rows.isEmpty) 0L else rows.head.getLong(0)
+      val (stored, n) = sized.getOrElse(v, (0L, 0L))
       require(stored >= k || stored == n,
         s"mergedExemplars: version $v stores only $stored exemplars for " +
           s"$n keys — built with a smaller k than the requested $k, so " +
@@ -504,9 +544,7 @@ object Profiling {
           "request k <= the build k, or re-sync the profile at the " +
           "larger k")
     }
-    spark.read.parquet(
-        versions.map(v => s"$profilePath/version=$v"): _*)
-      .select("h", "payload")
+    rows.select("h", "payload")
       // dedup BEFORE the limit: consecutive upsert snapshots repeat
       // surviving rows, and k duplicates would crowd out distinct
       // exemplars (the input here is versions × k rows — tiny)

@@ -738,7 +738,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       "a global sketch of nothing is the empty map, not a crash")
     assert(graft.ops.Profiling.batchDrift(
       noDocs.select(col("doc_id").cast("double").as("v")),
-      "v", 0, 10, 4, Map(0 -> 1L)).isEmpty,
+      "v", 0, 10, 4, Map(0 -> 1L)) == ((0L, None)),
       "no rows -> no distribution -> no drift verdict")
   }
 

@@ -688,6 +688,193 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
     failing("    buckets: 4\n    exemplar_key: id", "exemplar_profile:")
   }
 
+  // a profile_max_psi stage over `psirule_src` (id, v): v binned
+  // [0, 100) x 10, refusing PSI > 0.5
+  private def psiGated(root: String, table: String, pred: String,
+      select: String = "id, v", loadType: String = "upsert"): Unit = {
+    val y =
+      s"""pypelines:
+         |  p: [pr]
+         |pypes:
+         |  pr:
+         |    extract_query: "SELECT $select FROM psirule_src WHERE $pred"
+         |    target_table: $table
+         |    type: $loadType
+         |    key: [id]
+         |    buckets: 4
+         |    profile: ${table}_profile
+         |    profile_column: v
+         |    profile_lo: 0
+         |    profile_hi: 100
+         |    profile_bins: 10
+         |    profile_max_psi: 0.5
+         |""".stripMargin
+    new Runner(spark, PipelineSpec.fromYaml(y), Map.empty, root).run("p")
+  }
+
+  private def psiRuleSource(): String = {
+    Seq((1L, 10.0), (2L, 20.0), (3L, 30.0),
+      (11L, 500.0), (12L, 600.0), (13L, 700.0))
+      .toDF("id", "v").createOrReplaceTempView("psirule_src")
+    Files.createTempDirectory("graft-runner-psirule").toString
+  }
+
+  test("profile_max_psi: a batch whose profiled values are all null " +
+    "refuses BEFORE any write against a non-empty stored profile") {
+    val root = psiRuleSource()
+    psiGated(root, "tgt_psinull", "id <= 3")
+    // the column survives but every value is null, on a batch that HAS
+    // rows: a null PSI is not "nothing to judge" here (the
+    // kll_profile_max_ks rule)
+    val allNull = intercept[IllegalStateException](
+      psiGated(root, "tgt_psinull", "id <= 3", "id, CAST(NULL AS DOUBLE) AS v"))
+    assert(allNull.getMessage.contains("ALL null") &&
+      allNull.getMessage.contains("profile_max_psi") &&
+      allNull.getMessage.contains("refusing to load"), allNull.getMessage)
+    assert(graft.sink.BucketedMergeSink
+      .manifestVersions(spark, s"$root/tgt_psinull").max == 1,
+      "the all-null refusal must land before any write")
+  }
+
+  test("profile_max_psi: an empty stored version does not disarm the " +
+    "gate — a drifted batch is judged against the newest NON-EMPTY row") {
+    val root = psiRuleSource()
+    // a non-empty profiled version, then a version whose snapshot is
+    // empty (every row deleted; its stored hist is the empty map), then
+    // a drifted batch: judged against the empty row it would score null
+    // and load
+    psiGated(root, "tgt_psiempty", "id <= 3")
+    psiGated(root, "tgt_psiempty", "id <= 3", loadType = "delete")
+    val stored = spark.read.parquet(s"$root/tgt_psiempty_profile")
+      .select(col("version").cast("long"), col("n"))
+      .as[(Long, Long)].collect().toMap
+    assert(stored == Map(1L -> 3L, 2L -> 0L),
+      s"v1 profiled non-empty, v2 (everything deleted) empty: $stored")
+    val drifted = intercept[IllegalStateException](
+      psiGated(root, "tgt_psiempty", "id > 10"))
+    assert(drifted.getMessage.contains("profile_max_psi") &&
+      drifted.getMessage.contains("version 1 of") &&
+      drifted.getMessage.contains("refusing to load"), drifted.getMessage)
+    assert(graft.sink.BucketedMergeSink
+      .manifestVersions(spark, s"$root/tgt_psiempty").max == 2,
+      "the drifted batch must not have committed a version")
+  }
+
+  test("profile catch-up: a torn version dir (data, no _SUCCESS) is " +
+    "profiled again, and every family's chain equals a crash-free run's") {
+    val root = Files.createTempDirectory("graft-runner-torn").toString
+    val target = s"$root/tgt"
+    val batches = Seq(
+      (1 to 20).map(i => (i.toLong, i * 3.0)),
+      (15 to 30).map(i => (i.toLong, i * 7.0 % 130)),
+      (5 to 12).map(i => (i.toLong, 95.0 + i)))
+    // each family: (its sync, the stored columns compared; the KLL bytes
+    // are left out, their n and ks_prev chain compared instead)
+    val families: Seq[(String, String => Seq[Long], Seq[String])] = Seq(
+      ("hist", graft.ops.Profiling.syncProfile(spark, target, _, "v", 0,
+        100, 10), Seq("n", "hist", "psi_prev", "lo", "hi", "nbins")),
+      ("kll", graft.ops.Profiling.syncKllProfile(spark, target, _, "v", 200),
+        Seq("n", "ks_prev")),
+      ("exemplar", graft.ops.Profiling.syncExemplarProfile(spark, target, _,
+        "id", 4), Seq("h", "payload", "n")))
+    def rows(path: String, cols: Seq[String]): Seq[Seq[String]] =
+      canon(spark.read.parquet(path)
+        .select((col("version").cast("long") +: cols.map(col)): _*))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.sink.BucketedMergeSink.merge(spark, b.toDF("id", "v"), target,
+        "upsert", Seq("id"), numBuckets = 4, retainVersions = 5)
+      families.foreach { case (name, sync, _) =>
+        assert(sync(s"$root/$name-clean") == Seq(i + 1L))
+        // the next catch-up profiles the torn version again, then its own
+        assert(sync(s"$root/$name-torn") ==
+          (if (i == 2) Seq(2L, 3L) else Seq(i + 1L)))
+      }
+      // a crash after version 2's rows landed but before its marker
+      if (i == 1) families.foreach { case (name, _, _) =>
+        assert(new java.io.File(s"$root/$name-torn/version=2/_SUCCESS").delete())
+      }
+    }
+    families.foreach { case (name, sync, cols) =>
+      assert(sync(s"$root/$name-torn").isEmpty, name)
+      val (clean, torn) =
+        (rows(s"$root/$name-clean", cols), rows(s"$root/$name-torn", cols))
+      assert(clean.map(_.head).distinct == Seq("1", "2", "3"), s"$name: $clean")
+      assert(torn == clean, s"$name: the healed chain must equal a " +
+        s"crash-free run's:\n$torn\n$clean")
+    }
+  }
+
+  test("profile catch-up: a load with delete_where and compact catches up " +
+    "its pending versions in one pass, and the stored chain equals " +
+    "syncing after each commit") {
+    val src = (1 to 24).map(i => (i.toLong, (i * 11 % 97).toDouble))
+    val root = Files.createTempDirectory("graft-runner-chain").toString
+    val y =
+      s"""pypelines:
+         |  p: [ch]
+         |pypes:
+         |  ch:
+         |    extract_query: "SELECT id, v FROM chain_src"
+         |    target_table: tgt_chain
+         |    type: upsert
+         |    key: [id]
+         |    buckets: 2
+         |    retain_versions: 4
+         |    delete_where: "v > 80"
+         |    compact: true
+         |    profile: chain_hist
+         |    profile_column: v
+         |    profile_lo: 0
+         |    profile_hi: 100
+         |    profile_bins: 10
+         |    kll_profile: chain_kll
+         |    kll_profile_column: v
+         |    exemplar_profile: chain_ex
+         |    exemplar_key: id
+         |    exemplar_k: 5
+         |""".stripMargin
+    // the same commits, one at a time, each followed by all three syncs
+    val twin = s"$root/twin"
+    def syncTwin(): Unit = {
+      graft.ops.Profiling.syncProfile(spark, twin, s"$twin-hist", "v", 0, 100, 10)
+      graft.ops.Profiling.syncKllProfile(spark, twin, s"$twin-kll", "v",
+        graft.functions.KllSketch.DefaultK)
+      graft.ops.Profiling.syncExemplarProfile(spark, twin, s"$twin-ex", "id", 5)
+    }
+    val runVersions = Seq(src.take(12), src.drop(6)).map { batch =>
+      val before = graft.sink.BucketedMergeSink.manifestVersions(spark,
+        s"$root/tgt_chain").toSet
+      batch.toDF("id", "v").createOrReplaceTempView("chain_src")
+      new Runner(spark, PipelineSpec.fromYaml(y), Map.empty, root).run("p")
+      graft.sink.BucketedMergeSink.merge(spark, batch.toDF("id", "v"), twin,
+        "upsert", Seq("id"), numBuckets = 2, retainVersions = 4)
+      syncTwin()
+      graft.sink.MergeSink.deleteWhere(spark, twin, "v > 80")
+      syncTwin()
+      graft.sink.BucketedMergeSink.compact(spark, twin): Unit
+      syncTwin()
+      graft.sink.BucketedMergeSink.manifestVersions(spark,
+        s"$root/tgt_chain").toSet -- before
+    }
+    // run 2 commits a merge, a purge and a compaction, all profiled by
+    // its one post-load catch-up (its baseline: run 1's stored rows)
+    assert(runVersions(1).size == 3, s"versions per run: $runVersions")
+    assert(graft.sink.BucketedMergeSink.manifestVersions(spark, twin).toSet ==
+      graft.sink.BucketedMergeSink.manifestVersions(spark, s"$root/tgt_chain").toSet)
+    def rows(path: String, cols: String*): Seq[Seq[String]] =
+      canon(spark.read.parquet(path)
+        .select((col("version").cast("long") +: cols.map(col)): _*))
+    Seq(("chain_hist", "hist", Seq("n", "hist", "psi_prev", "lo", "hi", "nbins")),
+      ("chain_kll", "kll", Seq("n", "ks_prev")),
+      ("chain_ex", "ex", Seq("h", "payload", "n"))).foreach { case (t, s, cols) =>
+      val (loaded, synced) = (rows(s"$root/$t", cols: _*), rows(s"$twin-$s", cols: _*))
+      assert(loaded.map(_.head).distinct.size == runVersions.map(_.size).sum,
+        s"$t: $loaded")
+      assert(loaded == synced,
+        s"$t: one pass must store what per-commit syncs store:\n$loaded\n$synced")
+    }
+  }
+
   test("lsh_index and semantic_index: each run keeps the embedding " +
     "postings (and the frozen centroid model) in lockstep with the target") {
     val rows = Seq(
