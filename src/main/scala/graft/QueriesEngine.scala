@@ -671,11 +671,12 @@ object QueriesEngine {
     }),
 
     // -- CDC replication end-to-end from config: a PRODUCER stage loads
-    //    a growing orders slice, purges high-price rows (delete_where)
-    //    and publishes every version to its outbox (change_feed) which
-    //    outbox_keep log-compacts down to the newest 3 batches (the
-    //    second run rebases history into a marked base the consumer
-    //    must NOT re-apply); a CONSUMER stage (subscribe_feed) replays
+    //    a growing orders slice, purges high-price rows (delete_where,
+    //    in the load's one commit) and publishes every version to its
+    //    outbox (change_feed) which outbox_keep log-compacts down to the
+    //    newest batch (the second run rebases history into a marked base
+    //    the consumer, one batch behind, applies as a full
+    //    replacement); a CONSUMER stage (subscribe_feed) replays
     //    the outbox into a replica it never reads the producer target
     //    for. Two pipeline runs; the emitted rows are the REPLICA's
     //    final state, so the DuckDB oracle re-derives it from the
@@ -696,7 +697,7 @@ object QueriesEngine {
           |    buckets: 4
           |    retain_versions: 3
           |    change_feed: q122_outbox
-          |    outbox_keep: 3
+          |    outbox_keep: 1
           |    delete_where: "o_totalprice > 200000"
           |  consumer:
           |    subscribe_feed: q122_outbox

@@ -53,11 +53,12 @@ final case class StageSpec(
                                  // exemplar_profile: and their tuning
                                  // keys — graft.core.Derived), table
                                  // names as written: Runner resolves them
-    deleteWhere: String = "", // post-load predicate purge on the TARGET
-                              // (row-level TTL / GDPR erasure): every
-                              // target row matching this SQL boolean is
-                              // removed after the load (MergeSink
-                              // .deleteWhere; placeholders hydrate)
+    deleteWhere: String = "", // predicate purge on the TARGET (row-level
+                              // TTL / GDPR erasure): every target row
+                              // matching this SQL boolean is removed —
+                              // in the load's own commit on a bucketed
+                              // target, by a second write on a flat one
+                              // (Derived.Load; placeholders hydrate)
     subscribeFeed: String = "", // CONSUMER stage: instead of an extract→
                                 // transform→load, apply every not-yet-
                                 // applied batch of this CDC outbox to

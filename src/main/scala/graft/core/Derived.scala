@@ -147,11 +147,16 @@ object Derived {
     def validate(spark: SparkSession, columns: Seq[String]): Unit =
       check(spark, columns, BucketedMergeSink.isBucketed(spark, path))
 
-    /** Validate, catch up, guard, merge, purge, compact, catch up again
-      * and bound the outbox. Returns whether the target is bucketed
-      * after the load, or None when the load left no target (a delete
-      * against an absent one): then there is nothing to purge, compact
-      * or catch up. */
+    /** Validate, catch up, guard, load, catch up again and bound the
+      * outbox. A bucketed load is ONE planned write: the merge, the
+      * `delete_where:` purge and `compact: true` land in one version
+      * ([[BucketedMergeSink.write]]), so the state between the merge and
+      * the purge is never published — a row one load both inserts and
+      * purges shows in no target version and no outbox partition. A flat
+      * target merges, then purges in a second write. Returns whether the
+      * target is bucketed after the load, or None when the load left no
+      * target (a delete against an absent one): then there is nothing to
+      * purge, compact or catch up. */
     def run(spark: SparkSession, batch: DataFrame): Option[Boolean] = {
       val wasBucketed = BucketedMergeSink.isBucketed(spark, path)
       check(spark, batch.columns.toSeq, wasBucketed)
@@ -160,7 +165,7 @@ object Derived {
       // CATCH UP BEFORE THE LOAD: versions left pending by a previous
       // run's crash between its load and its catch-up are
       // published/synced FIRST, while their predecessors are still
-      // retained — committing this run's versions first could slide
+      // retained — committing this run's version first could slide
       // the retention window past the pending version, turning the
       // self-healing catch-up into a hard refusal (and leaving a
       // profile gap).
@@ -168,56 +173,44 @@ object Derived {
       // the drift guards are opt-in because they evaluate the batch
       // plan once more than the merge alone — the batch is persisted
       // across the check + merge so the extract never runs twice;
-      // try/finally so a merge/maintenance failure can't leak the
-      // persisted batch in the block manager
+      // try/finally so a merge failure can't leak the persisted batch in
+      // the block manager
       val guarded = derived.exists(armed)
+      // an existing bucketed layout takes the bucketed write even when
+      // the stage sets no `buckets:` (a flat write would flatten it)
+      val bucketed = numBuckets > 0 || wasBucketed
       if (guarded) batch.persist()
       try {
         derived.foreach(guard(stored, batch, _))
-        if (numBuckets > 0)
-          BucketedMergeSink.merge(spark, batch, path, loadType, key,
-            identifier, excluded, numBuckets = numBuckets,
-            // persisted into the layout at creation; on an existing
-            // target a non-zero value must match the layout's (sink
-            // contract)
-            retainVersions = retainVersions, scd2Ts = scd2Ts)
+        if (bucketed)
+          // `deleteWhere` arrives hydrated (a retention cutoff rides
+          // placeholders). `retainVersions` is persisted into the layout
+          // at creation; on an existing target a non-zero value must
+          // match the layout's
+          BucketedMergeSink.write(spark, path,
+            Some(BucketedMergeSink.Change(batch, loadType, key, identifier,
+              excluded, scd2Ts)),
+            purge = deleteWhere, compactMaxFiles = compactMaxFiles,
+            numBuckets = numBuckets, retainVersions = retainVersions): Unit
         else
-          // retention rides along: the target may already BE a bucketed
-          // layout (validated when retainVersions != 0), and
-          // mergeIntoParquet delegates to the bucketed sink in that case
-          // — dropping the value here would silently shrink the
-          // retention window the caller configured
           MergeSink.mergeIntoParquet(spark, batch, path, loadType, key,
-            identifier, excluded, retainVersions = retainVersions,
-            scd2Ts = scd2Ts)
+            identifier, excluded, scd2Ts = scd2Ts)
       } finally if (guarded) batch.unpersist()
       // a delete against an absent target creates none, and every step
       // below reads the target
-      val bucketed = numBuckets > 0 || wasBucketed
       val exists =
         if (bucketed) wasBucketed || BucketedMergeSink.isBucketed(spark, path)
         else new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(new Path(path))
       if (!exists) return None
-      // `delete_where:` purges matching target rows right after the
-      // load — row-level TTL / GDPR erasure as a load property (the
-      // hydrated predicate lets a retention cutoff ride placeholders).
-      // Runs BEFORE compaction and the catch-ups so the purge lands in
-      // the same maintenance pass and its version is fed/synced like
-      // any other — sound because the retention validation guarantees
-      // the window holds every version this load commits plus one.
-      if (deleteWhere.nonEmpty) MergeSink.deleteWhere(spark, path, deleteWhere)
-      // `compact: true` runs the bucketed layout's small-file
-      // maintenance after the load (validated before the merge — a flat
-      // target fails loudly BEFORE its write, not silently and not after)
-      compactMaxFiles.foreach(m =>
-        BucketedMergeSink.compact(spark, path, maxFiles = m): Unit)
-      // catch-up AFTER the load, delete_where and compaction (each
-      // commits a version; a compact's feed is an empty diff): every
-      // retained version without a published partition / applied
-      // marker / profile row gets one, so a crash anywhere in this pass
-      // self-heals on the next load's catch-up-BEFORE-load. The
-      // profiles snapshot this load's delete_where/compact versions too.
+      // `delete_where:` on a flat target: row-level TTL / GDPR erasure as
+      // a second atomic rewrite after the merge
+      if (!bucketed && deleteWhere.nonEmpty)
+        MergeSink.deleteWhere(spark, path, deleteWhere)
+      // catch-up AFTER the load: every retained version without a
+      // published partition / applied marker / profile row gets one, so a
+      // crash anywhere in this pass self-heals on the next load's
+      // catch-up-BEFORE-load
       catchUp(spark, stored)
       // `compact: true` extends to the postings indexes — their
       // per-version sync merges fragment index buckets exactly like
@@ -231,9 +224,10 @@ object Derived {
       // publishes: only the newest N batch partitions survive, the
       // oldest survivor rebased into a marked all-inserts base — the
       // outbox stays O(N) partitions for the life of the pipeline
-      // instead of one per version forever (validated: N covers this
-      // load's publishes). scd2 feeds carry no deletes, so their
-      // composite (key, valid_from) fold is fully supported.
+      // instead of one per version forever (a load publishes one batch,
+      // so a same-pipeline consumer lags at most one). scd2 feeds carry
+      // no deletes, so their composite (key, valid_from) fold is fully
+      // supported.
       derived.foreach {
         case ChangeFeed(feed, keep) if keep > 0 =>
           BucketedMergeSink.compactOutboxKeep(spark, feed, keep,
@@ -260,32 +254,25 @@ object Derived {
       if (compactMaxFiles.nonEmpty) needsBucketed("compact: true")
       if (retainVersions != 0) needsBucketed("retain_versions")
       // change_feed / *_index replay per-version snapshot diffs, so they
-      // need a bucketed layout AND a retention window covering every
-      // version this load commits PLUS its predecessor: the load commits
-      // one version for the merge and one more for each of delete_where
-      // and compact, and the feeds/indexes catch up once at the end. The
-      // index families also need a single-column merge key (postings
-      // pair on one id). Validate BEFORE the merge: a misconfigured
-      // outbox must not cost a write.
-      val commits = 1 + (if (deleteWhere.nonEmpty) 1 else 0) +
-        (if (compactMaxFiles.nonEmpty) 1 else 0)
-      // the retention this load runs under: a non-zero request must
+      // need a bucketed layout AND a retention window covering the one
+      // version this load commits PLUS its predecessor (the feeds/indexes
+      // catch up once at the end). The index families also need a
+      // single-column merge key (postings pair on one id). Validate
+      // BEFORE the merge: a misconfigured outbox must not cost a write.
+      // The retention this load runs under: a non-zero request must
       // equal the layout's (the sink refuses any other), 0 means the
       // layout's own
       lazy val retain =
         if (retainVersions != 0 || !wasBucketed) retainVersions
         else BucketedMergeSink.retention(spark, path)
-      // at a window of exactly `commits`, a delete_where load would GC
-      // the merge version's predecessor before the feed ever diffs it,
-      // silently losing that batch from the outbox
+      // at a window of 1 the load's commit would GC its predecessor
+      // before the feed ever diffs it, silently losing that batch from
+      // the outbox
       def retained(d: Derived): Unit =
-        require(retain >= commits + 1,
-          s"$who: ${d.stageKey} needs retain_versions >= ${commits + 1} " +
-            s"(this load commits up to $commits versions — the merge" +
-            (if (deleteWhere.nonEmpty) ", delete_where" else "") +
-            (if (compactMaxFiles.nonEmpty) ", compact" else "") +
-            " — and each one's predecessor must still be retained when " +
-            s"the feed/index catches up), got $retain")
+        require(retain >= 2,
+          s"$who: ${d.stageKey} needs retain_versions >= 2 (the load " +
+            "commits one version, and its predecessor must still be " +
+            s"retained when the feed/index catches up), got $retain")
       // scd2 history is fine for the feed (it pairs on (key,
       // valid_from)); an index is undefined over it (multiple versions
       // per key), and a profile would count CLOSED history rows
@@ -301,14 +288,6 @@ object Derived {
         d match {
           case ChangeFeed(_, keep) =>
             retained(d)
-            // a rebase window shallower than one load's own publishes
-            // would strand even a same-pipeline consumer running right
-            // after it (its cursor lags exactly `commits` batches)
-            require(keep == 0 || keep >= commits,
-              s"$who: outbox_keep must be >= $commits (this load " +
-                s"publishes up to $commits batches; a shallower window " +
-                "rebases past every consumer, including one in this very " +
-                s"pipeline), got $keep")
             // the rebase fold routes delete ops by a single identifier
             // column — an outbox_keep load that can EMIT deletes (type:
             // delete, or a delete_where purge) with a composite non-scd2

@@ -401,11 +401,10 @@ object BucketedMergeSink {
     * by publish time, so its delta can never be produced; feeds older
     * than the retention window are gone for the same reason
     * (publish-after-every-load with one commit per run and retention 2
-    * never hits this; a stage that ALSO runs `delete_where:` or
-    * `compact:` commits more versions per run and needs a
-    * correspondingly deeper window — the Runner validates exactly
-    * that). Cost per publish: O(buckets the batch touched), inherited
-    * from [[changesBetween]]'s manifest-diff pruning. `extraKey` as in
+    * never hits this; a [[graft.core.Derived.Load]] commits its merge,
+    * `delete_where:` purge and `compact:` as one version, and the Runner
+    * validates the window). Cost per publish: O(buckets the batch
+    * touched), inherited from [[changesBetween]]'s manifest-diff pruning. `extraKey` as in
     * [[changesBetween]] (SCD2 targets pass their version column).
     *
     * Bootstrap semantics: the FIRST publish into an empty feed emits
@@ -708,7 +707,7 @@ object BucketedMergeSink {
       val stale = Option.when(isBucketed(spark, indexPath))(
         read(spark, indexPath).select("id"))
       applyNet(spark, nest(bootstrap(readVersion(spark, path, vs.last), idCol)),
-        stale, indexPath, Seq("id"), meta.numBuckets, 0)
+        stale, indexPath, Seq("id"), meta.numBuckets, 0, cached = false)
       markApplied(fs, appliedDir, vs.last)
       return vs
     }
@@ -722,11 +721,13 @@ object BucketedMergeSink {
     val net = newestPerKey(pairs.map { case (a, b) =>
       deltas(a, b).withColumn(foldSeqCol, lit(b))
     }.reduce(_ unionByName _), Seq(idCol))
-    // the ids, the re-signing and the apply all read the fold
+    // the ids, the re-signing and the apply all read the fold: its one
+    // cache serves the whole apply
     net.persist(StorageLevel.MEMORY_AND_DISK)
     try applyNet(spark,
       nest(sign(net.filter(col("_op") =!= "delete" && col(signCol).isNotNull), idCol)),
-      Some(net.select(col(idCol).as("id"))), indexPath, Seq("id"), meta.numBuckets, 0)
+      Some(net.select(col(idCol).as("id"))), indexPath, Seq("id"), meta.numBuckets, 0,
+      cached = true)
     finally net.unpersist(false)
     markApplied(fs, appliedDir, pairs.last._2)
     pairs.map(_._2)
@@ -843,7 +844,8 @@ object BucketedMergeSink {
     if (pending.isEmpty) return Nil
     val (net, fromBase) = foldOutbox(spark, feedFs, feedPath, pending, key)
     net.foreach { rows =>
-      // the upserts and the delete keys both read the fold: compute it once
+      // the upserts and the delete keys both read the fold: its one cache
+      // serves the whole apply
       rows.persist(StorageLevel.MEMORY_AND_DISK)
       try {
         // a fold from a base is a full snapshot: it replaces the replica
@@ -853,7 +855,7 @@ object BucketedMergeSink {
         applyNet(spark, rows.filter(col("_op") =!= "delete").drop("_op"),
           Option.when(key.size == 1)(
             rows.filter(col("_op") === "delete").select(key.head)),
-          replicaPath, key, numBuckets, retainVersions)
+          replicaPath, key, numBuckets, retainVersions, cached = true)
       } finally rows.unpersist(false)
     }
     markApplied(fs, appliedDir, pending.last)
@@ -1343,8 +1345,8 @@ object BucketedMergeSink {
       numBuckets: Int = 64,
       retainVersions: Int = 0,
       scd2Ts: String = ""): Unit =
-    write(spark, batch, None, path, loadType, key, identifier, excluded,
-      numBuckets, retainVersions, scd2Ts)
+    write(spark, path, Some(Change(batch, loadType, key, identifier, excluded, scd2Ts)),
+      numBuckets = numBuckets, retainVersions = retainVersions): Unit
 
   /** Apply a NET change to the bucketed target at `path` in ONE commit:
     * the rows whose key is in `deletes` leave the touched slice, then
@@ -1352,7 +1354,8 @@ object BucketedMergeSink {
     * [[merge]]'s: the commit rewrites every bucket an upsert routes to
     * and every existing bucket a delete key routes to, and an absent
     * target is created from `upserts` alone (nothing to delete from).
-    * The delete keys match the single key column. */
+    * The delete keys match the single key column. `cached` as in
+    * [[Change]]. */
   private def applyNet(
       spark: SparkSession,
       upserts: DataFrame,
@@ -1360,64 +1363,130 @@ object BucketedMergeSink {
       path: String,
       key: Seq[String],
       numBuckets: Int,
-      retainVersions: Int): Unit = {
+      retainVersions: Int,
+      cached: Boolean): Unit = {
     require(deletes.isEmpty || key.size == 1,
       s"deletes route by a single key column, got ${key.mkString(",")}")
-    write(spark, upserts, deletes, path, "upsert", key, key.head, Nil,
-      numBuckets, retainVersions, "")
+    write(spark, path, Some(Change(upserts, "upsert", key, key.head,
+      deletes = deletes, cached = cached)), numBuckets = numBuckets,
+      retainVersions = retainVersions): Unit
   }
 
-  /** [[merge]] of `batch`, and with `deletes` the delete keys of
-    * [[applyNet]]'s net change, dropped from the slice before the merge
-    * plan runs on it. */
-  private def write(
-      spark: SparkSession,
-      batch: DataFrame,
-      deletes: Option[DataFrame],
-      path: String,
+  /** What one [[write]] merges: `rows` under `loadType`, [[merge]]'s
+    * semantics, and with `deletes` the delete keys of [[applyNet]]'s net
+    * change, dropped from the slice before the merge plan runs on it.
+    * `cached`: the caller persisted the frame `rows` and `deletes` derive
+    * from, so the write reads through that one cache instead of building
+    * a second copy of the same rows. */
+  private[graft] final case class Change(
+      rows: DataFrame,
       loadType: String,
       key: Seq[String],
       identifier: String,
-      excluded: Seq[String],
-      numBuckets: Int,
-      retainVersions: Int,
-      scd2Ts: String): Unit = {
-    require(Set("upsert", "update", "delete", "scd2")(loadType),
-      s"unknown load type: $loadType")
-    require(loadType != "scd2" || scd2Ts.nonEmpty,
-      "scd2 load needs an explicit batch timestamp (scd2_ts) — version " +
-        "bounds must be deterministic, never wall-clock")
+      excluded: Seq[String] = Nil,
+      scd2Ts: String = "",
+      deletes: Option[DataFrame] = None,
+      cached: Boolean = false) {
+    // the column the merge matches on: a delete's id, else the key
+    def mergeKey: Seq[String] = if (loadType == "delete") Seq(identifier) else key
+    // the delete ids — a delete batch, or a net change's delete keys
+    def deleteIds: Option[DataFrame] = if (loadType == "delete") Some(rows) else deletes
+  }
+
+  /** One planned write of the bucketed target at `path`: the `change`
+    * merge, the `purge` predicate (a SQL boolean over the target's
+    * columns; empty = none) and the `compactMaxFiles` bound land in ONE
+    * version through [[rewriteBuckets]]. Every version a merge,
+    * [[deleteWhere]], [[compact]] or a [[graft.core.Derived.Load]] makes
+    * is planned here, so there is one purge rule and one compaction rule.
+    *
+    * The commit rewrites the union of
+    *   - the buckets the change routes to: an upsert/update/scd2 row's
+    *     bucket (created if need be), a delete id's existing bucket, or
+    *     every live bucket when a delete's identifier is not the layout
+    *     key;
+    *   - the buckets holding rows the purge matches, found by a filtered
+    *     scan of the [[purgeDiscoveryBuckets]] — the same `distinct`
+    *     job as the routing, so discovery costs no job of its own;
+    *   - with a compaction bound, every other live bucket with more
+    *     than `compactMaxFiles` data files.
+    * It writes the merge of the rewritten slice less the rows where the
+    * purge holds (a null predicate is no match, SQL DELETE semantics).
+    * A write without a change, and a compacting one, shuffle by bucket
+    * so each rewritten bucket is one file. Creation filters its rows the
+    * same way. The state between the merge and the purge is never
+    * published. Returns the rewritten buckets (empty: nothing to do, no
+    * version committed). `numBuckets` is consulted at creation only. */
+  private[graft] def write(
+      spark: SparkSession,
+      path: String,
+      change: Option[Change],
+      purge: String = "",
+      compactMaxFiles: Option[Int] = None,
+      numBuckets: Int = 0,
+      retainVersions: Int = 0): Seq[Int] = {
+    change.foreach { c =>
+      require(Set("upsert", "update", "delete", "scd2")(c.loadType),
+        s"unknown load type: ${c.loadType}")
+      require(c.loadType != "scd2" || c.scd2Ts.nonEmpty,
+        "scd2 load needs an explicit batch timestamp (scd2_ts) — version " +
+          "bounds must be deterministic, never wall-clock")
+      require(!c.rows.columns.contains(bucketCol),
+        s"'$bucketCol' is the reserved bucket column of the layout — rename it in the batch")
+    }
     require(retainVersions >= 0,
       s"retainVersions must be >= 0 (0 = the layout's persisted value), got $retainVersions")
-    require(!batch.columns.contains(bucketCol),
-      s"'$bucketCol' is the reserved bucket column of the layout — rename it in the batch")
     val fs = fsOf(spark, path)
+    // the rows a commit writes: less the purge matches, tagged with their
+    // layout bucket, shuffled to one file per bucket where asked
+    def output(rows: DataFrame, pred: Option[org.apache.spark.sql.Column],
+        key: Seq[String], n: Int): DataFrame = {
+      val out = pred.fold(rows)(p => rows.filter(!p)).withColumn(bucketCol, bucketExpr(key, n))
+      if (change.isEmpty || compactMaxFiles.nonEmpty) out.repartition(col(bucketCol)) else out
+    }
 
     if (!isBucketed(spark, path)) {
+      val c = change.getOrElse(throw new IllegalArgumentException(
+        s"$path is not a bucketed target (no $metaFile)"))
       require(!fs.exists(new Path(path)) || fs.listStatus(new Path(path)).isEmpty,
         s"$path exists but is not a bucketed target (no $metaFile) — " +
           "refusing to overwrite a flat layout; use MergeSink.mergeIntoParquet there")
       require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-      val rows = loadType match {
-        case "delete" => return // nothing to delete from
+      val rows = c.loadType match {
+        case "delete" => return Nil // nothing to delete from
         // update-only against an absent target affects zero rows, but it
         // DOES establish the layout (schema + key), like
         // mergeIntoParquet's limit(0) write
-        case "update" => MergeSink.dedupeBatch(batch, key).limit(0)
-        case "upsert" => MergeSink.dedupeBatch(batch, key)
+        case "update" => MergeSink.dedupeBatch(c.rows, c.key).limit(0)
+        case "upsert" => MergeSink.dedupeBatch(c.rows, c.key)
         // SCD2 bootstrap (MergeSink.openVersions): the layout's schema
         // includes the sink-managed version columns from day one
-        case "scd2" => MergeSink.openVersions(batch, key, to_timestamp(lit(scd2Ts)))
+        case "scd2" => MergeSink.openVersions(c.rows, c.key, to_timestamp(lit(c.scd2Ts)))
       }
+      c.key.foreach(k => require(rows.columns.contains(k),
+        s"key column '$k' missing from batch (${rows.columns.mkString(",")})"))
+      val pred = purgeOf(spark, rows.schema, purge)
       // creation is where a retention request becomes the LAYOUT's
       // retention (0 = the historical default of 1)
-      createTarget(spark, rows, path, key, numBuckets, if (retainVersions == 0) 1 else retainVersions)
-      return
+      val retain = if (retainVersions == 0) 1 else retainVersions
+      // meta FIRST: from here the target exists (empty) and every later
+      // state is consistent — a crash before the manifest commit leaves an
+      // established empty layout plus an invisible orphan, and replaying
+      // the same batch converges (meta-last would instead strand a
+      // half-created path that the flat-layout guard then refuses forever)
+      writeMeta(spark, path, Meta(numBuckets, c.key, rows.schema, retain))
+      // creation commits v1 from an empty manifest: two processes racing to
+      // CREATE the same target tie-break on the v1 create — the loser gets
+      // the same retryable ConcurrentWriteException (and on retry converges,
+      // since the winner established the layout)
+      val all = (0 until numBuckets).toSet
+      rewriteBuckets(fs, path, output(rows, pred, c.key, numBuckets), all, 0L,
+        Map.empty, retain)
+      return all.toSeq.sorted
     }
 
     val meta = readMeta(spark, path)
     val n = meta.numBuckets
-    val mergeKey = if (loadType == "delete") Seq(identifier) else key
     // a conflicting retainVersions must fail HERE, not at commit time
     // after the whole extract→route→write job has run (same placement
     // rationale as the schema check below): silently honoring a
@@ -1427,87 +1496,140 @@ object BucketedMergeSink {
       s"retainVersions=$retainVersions conflicts with the layout's persisted " +
         s"retention ${meta.retainVersions} at $path — retention is a " +
         "layout property; change it with BucketedMergeSink.setRetention")
-    // schema-evolution contract (MergeSink.validateBatchSchema scaladoc):
-    // checked BEFORE any routing/persist work — the routing cast below
-    // must never be the thing that silently narrows a batch column
-    if (loadType != "delete")
-      MergeSink.validateBatchSchema(meta.schema, batch.schema, mergeKey)
-    // the delete ids — a delete batch, or a net change's delete keys —
-    // BEFORE bucket pruning: a mis-typed id column must fail loudly
-    // even when its (mis-cast) ids all route to absent buckets — the
-    // early return below would otherwise turn it into a silent no-op,
-    // which the flat sink refuses
-    val deleteIds = if (loadType == "delete") Some(batch) else deletes
-    deleteIds.foreach(ids => MergeSink.validateDeleteIds(meta.schema,
-      ids.schema, identifier, MergeSink.deleteIdColumn(ids, identifier)))
-    if (loadType != "delete")
-      require(key == meta.key,
-        s"bucketed target $path is keyed on ${meta.key.mkString(",")} — " +
-          s"cannot ${loadType} on ${key.mkString(",")} (rows are routed by the layout key)")
+    change.foreach { c =>
+      // schema-evolution contract (MergeSink.validateBatchSchema scaladoc):
+      // checked BEFORE any routing/persist work — the routing cast below
+      // must never be the thing that silently narrows a batch column
+      if (c.loadType != "delete")
+        MergeSink.validateBatchSchema(meta.schema, c.rows.schema, c.mergeKey)
+      // the delete ids BEFORE bucket pruning: a mis-typed id column must
+      // fail loudly even when its (mis-cast) ids all route to absent
+      // buckets — the early return below would otherwise turn it into a
+      // silent no-op, which the flat sink refuses
+      c.deleteIds.foreach(ids => MergeSink.validateDeleteIds(meta.schema,
+        ids.schema, c.identifier, MergeSink.deleteIdColumn(ids, c.identifier)))
+      if (c.loadType != "delete")
+        require(c.key == meta.key,
+          s"bucketed target $path is keyed on ${meta.key.mkString(",")} — " +
+            s"cannot ${c.loadType} on ${c.key.mkString(",")} (rows are routed by the layout key)")
+    }
+    val pred = purgeOf(spark, meta.schema, purge)
 
     // the optimistic-commit base and the mapping every read below
     // resolves through (object scaladoc "Concurrent writers")
     val (base, mapping) = snapshot(fs, path)
-    // which buckets does this batch touch? a delete prunes when the
+    // which buckets does this change touch? a delete prunes when the
     // TARGET column it matches is the layout key (a target row with
     // key=v lives in bucket hash(v), whatever the id column in the
     // batch is called); a foreign delete identifier can land anywhere →
     // all buckets, still correct, just full-cost
-    val canPrune = mergeKey == meta.key
+    val canPrune = change.forall(_.mergeKey == meta.key)
     // hash() is type-sensitive: a batch key narrower than the target's
     // (MergeSink casts batch values to the target type on output) must
     // be cast BEFORE hashing or it routes to the wrong bucket
     val tType = meta.schema.fields.map(f => f.name -> f.dataType).toMap
-    // each frame the batch routes by, and whether it holds delete ids
-    // (those route by MergeSink.delete's id column)
-    def byId(df: DataFrame) =
-      (df, Seq(col(MergeSink.deleteIdColumn(df, identifier)).cast(tType(identifier))), true)
-    val routed: Seq[(DataFrame, Seq[org.apache.spark.sql.Column], Boolean)] =
-      if (loadType == "delete") Seq(byId(batch))
-      else (batch, mergeKey.map(k => col(k).cast(tType(k))), false) +: deletes.map(byId).toSeq
+    // each frame that routes buckets, tagged whether the bucket must
+    // already exist (delete ids route by MergeSink.delete's id column; a
+    // purge match lives in a live bucket by construction)
+    def bucketsOf(df: DataFrame, exprs: Seq[org.apache.spark.sql.Column], existing: Boolean) =
+      df.select(bucketOf(exprs, n).as(bucketCol), lit(existing))
+    def byId(df: DataFrame, identifier: String) = bucketsOf(df,
+      Seq(col(MergeSink.deleteIdColumn(df, identifier)).cast(tType(identifier))), true)
+    val routed: Seq[DataFrame] = change.toSeq.flatMap { c =>
+      if (c.loadType == "delete") Seq(byId(c.rows, c.identifier))
+      else bucketsOf(c.rows, c.key.map(k => col(k).cast(tType(k))), false) +:
+        c.deletes.map(byId(_, c.identifier)).toSeq
+    }
+    // the purge's discovery: the filtered scan of every bucket that can
+    // hold a match — pruned to the key's buckets when the predicate pins
+    // the layout key (the GDPR `user_id = X` shape); arbitrary predicates
+    // (TTL cutoffs) scan every live bucket, with parquet row-group stats
+    // pruning inside where the predicate allows
+    lazy val found: Option[DataFrame] = for {
+      p <- pred
+      discovery = purgeDiscoveryBuckets(spark, meta, mapping.keys.toSeq, purge)
+      if discovery.nonEmpty
+    } yield bucketsOf(readDirs(spark, path, meta, mapping, discovery).filter(p),
+      meta.key.map(col), true)
     // The touched-bucket scan below is an ACTION on the batch, and the
     // merge/route/write then executes it again; through Runner the batch
     // is the whole extract→transform chain, so without caching every
     // bucketed incremental load pays that chain twice. Persist once and
-    // serve both from the cache; a caller who already persisted keeps
-    // ownership of their own cache.
-    val ownPersist = canPrune && batch.storageLevel == StorageLevel.NONE
-    if (ownPersist) batch.persist(StorageLevel.MEMORY_AND_DISK)
+    // serve both from the cache; a caller who already persisted — the
+    // batch itself or the frame it derives from — keeps ownership of
+    // their own cache.
+    val ownPersist = change.exists(c =>
+      canPrune && !c.cached && c.rows.storageLevel == StorageLevel.NONE)
+    if (ownPersist) change.get.rows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // (bucket, routed by delete ids) pairs: ≤ 2·numBuckets rows to collect
+      // (bucket, must exist) pairs: ≤ 2·numBuckets rows to collect, in
+      // one job for the routing and the purge discovery together
       val touched: Seq[(Int, Boolean)] =
         if (!canPrune) mapping.keys.toSeq.map(_ -> true)
-        else routed.map { case (df, exprs, del) =>
-          df.select(bucketOf(exprs, n).as(bucketCol), lit(del))
-        }.reduce(_ union _).distinct().collect().map(r => r.getInt(0) -> r.getBoolean(1)).toSeq
-      // an upsert rewrites every bucket it routes to (creating it if
-      // need be); a delete id only an existing one
-      val rewritten = touched.collect { case (b, del) if !del || mapping.contains(b) => b }.toSet
-      if (rewritten.isEmpty) return
+        else (routed ++ found).reduceOption(_ union _).toSeq
+          .flatMap(_.distinct().collect().map(r => r.getInt(0) -> r.getBoolean(1)))
+      val hit = touched.collect { case (b, existing) if !existing || mapping.contains(b) => b }.toSet
+      // `compact: true` folds the untouched fragmented buckets into the
+      // same commit; the touched ones are rewritten anyway
+      val rewritten = hit ++ compactMaxFiles.toSeq.flatMap(fragmented(fs, path, mapping -- hit, _))
+      if (rewritten.isEmpty) return Nil
 
-      // the touched slice of the target: only its leaf dirs are listed,
-      // less a net change's delete keys
+      // the rewritten slice of the target: only its leaf dirs are listed
       val slice = readDirs(spark, path, meta, mapping, rewritten.toSeq)
-      val target = deletes.fold(slice)(d => MergeSink.delete(slice, d, identifier,
-        broadcastIds = MergeSink.fitsBroadcast(d)))
-
-      val bcast = MergeSink.fitsBroadcast(batch)
-      val merged = loadType match {
-        case "upsert" => MergeSink.upsert(target, batch, key, excluded, broadcastBatch = bcast)
-        case "update" => MergeSink.update(target, batch, key, excluded, broadcastBatch = bcast)
-        case "delete" => MergeSink.delete(target, batch, identifier, broadcastIds = bcast)
-        case "scd2" =>
-          MergeSink.scd2(target, batch, to_timestamp(lit(scd2Ts)), key,
-            broadcastBatch = bcast)
+      val merged = change.fold(slice) { c =>
+        val target = c.deletes.fold(slice)(d => MergeSink.delete(slice, d,
+          c.identifier, broadcastIds = MergeSink.fitsBroadcast(d)))
+        val bcast = MergeSink.fitsBroadcast(c.rows)
+        c.loadType match {
+          case "upsert" => MergeSink.upsert(target, c.rows, c.key, c.excluded, broadcastBatch = bcast)
+          case "update" => MergeSink.update(target, c.rows, c.key, c.excluded, broadcastBatch = bcast)
+          case "delete" => MergeSink.delete(target, c.rows, c.identifier, broadcastIds = bcast)
+          case "scd2" =>
+            MergeSink.scd2(target, c.rows, to_timestamp(lit(c.scd2Ts)), c.key,
+              broadcastBatch = bcast)
+        }
       }
       // re-derive each output row's bucket from the LAYOUT key (surviving
       // target rows keep their bucket; inserts hash to a touched one).
-      // Rewritten buckets move to the new commit (those merged to zero
-      // rows drop out)
-      rewriteBuckets(fs, path, merged.withColumn(bucketCol, bucketExpr(meta.key, n)),
+      // Rewritten buckets move to the new commit (those merged or purged
+      // to zero rows drop out)
+      rewriteBuckets(fs, path, output(merged, pred, meta.key, n),
         rewritten, base, mapping, meta.retainVersions)
-    } finally if (ownPersist) batch.unpersist(false)
+      rewritten.toSeq.sorted
+    } finally if (ownPersist) change.get.rows.unpersist(false)
   }
+
+  /** `condition` as a purge predicate over rows of `schema` (None when
+    * empty): a row matches where it holds, and a null is no match.
+    * Resolved here, before any write, so a predicate naming a column the
+    * target lacks refuses up front. */
+  private def purgeOf(spark: SparkSession, schema: StructType,
+      condition: String): Option[org.apache.spark.sql.Column] =
+    Option.when(condition.nonEmpty) {
+      val pred = coalesce(expr(condition), lit(false))
+      try spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).filter(pred)
+      catch { case e: org.apache.spark.sql.AnalysisException =>
+        throw new IllegalArgumentException(s"purge predicate `$condition` does " +
+          s"not resolve against the target's columns " +
+          s"(${schema.fieldNames.mkString(", ")}) — refusing before any write: " +
+          e.getMessage, e)
+      }
+      pred
+    }
+
+  /** The buckets of `mapping` whose live dir holds more than `maxFiles`
+    * data files. Lists only referenced leaf dirs, in parallel across a
+    * bounded thread pool — one driver-side listing per bucket was a
+    * serial bottleneck at 1k+ buckets. */
+  private def fragmented(fs: FileSystem, path: String, mapping: Map[Int, String],
+      maxFiles: Int): Seq[Int] =
+    listParallel(mapping.toSeq) { case (b, c) =>
+      val files = fs.listStatus(leafDir(path, c, b))
+        .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith(".")) // "."-files: local-fs .crc checksums
+      Option.when(files > maxFiles)(b)
+    }.flatten.sorted
 
   // ------------------------------------------------------------ compact
 
@@ -1522,79 +1644,37 @@ object BucketedMergeSink {
     * the standard LSM split: fast fragmented writes, background
     * compaction.
     *
-    * Buckets with more than `maxFiles` data files are rewritten as ONE
-    * job into a fresh commit dir — `repartition($"gbucket")` so each
-    * bucket lands in exactly one task (→ exactly one output file per
-    * bucket) — and published by the same commit step as a merge,
-    * [[rewriteBuckets]]: readers see the target fully fragmented or
-    * fully compacted, never half. Content is row-identical.
-    * Fragmentation discovery lists only referenced leaf dirs, in
-    * parallel across a bounded thread pool — one driver-side listing
-    * per bucket was a serial bottleneck at 1k+ buckets. Returns the
-    * compacted bucket ids. */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Int] = {
-    val fs = fsOf(spark, path)
-    val meta = readMeta(spark, path)
-    val (base, mapping) = snapshot(fs, path)
-    val fragmented = listParallel(mapping.toSeq) { case (b, c) =>
-      val files = fs.listStatus(leafDir(path, c, b))
-        .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".")) // "."-files: local-fs .crc checksums
-      if (files > maxFiles) Some(b) else None
-    }.flatten.sorted
-    if (fragmented.isEmpty) return Nil
-    rewriteBuckets(fs, path,
-      readDirs(spark, path, meta, mapping, fragmented)
-        .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
-        .repartition(col(bucketCol)),
-      fragmented.toSet, base, mapping, meta.retainVersions)
-    fragmented
-  }
+    * A compaction-only [[write]]: buckets with more than `maxFiles` data
+    * files are rewritten as ONE job into a fresh commit dir —
+    * `repartition($"gbucket")` so each bucket lands in exactly one task
+    * (→ exactly one output file per bucket) — and published by the same
+    * commit step as a merge, [[rewriteBuckets]]: readers see the target
+    * fully fragmented or fully compacted, never half. Content is
+    * row-identical. A load with `compact: true` folds the same rule into
+    * its own commit. Returns the compacted bucket ids. */
+  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Int] =
+    write(spark, path, None, compactMaxFiles = Some(maxFiles))
 
   /** Predicate-based delete over a bucketed target — see
-    * [[MergeSink.deleteWhere]] for the semantics. Physical cost: ONE
-    * filtered scan locates the buckets holding matching rows — pruned
-    * to the key's own buckets when the predicate pins the layout key
-    * (the GDPR `user_id = X` shape, [[purgeDiscoveryBuckets]]); for
-    * arbitrary predicates (TTL) it covers every live bucket with
-    * parquet row-group statistics pruning inside — then
-    * only those buckets rewrite — O(touched buckets), the same
-    * asymmetry as the merge. Both scans read through one [[snapshot]],
-    * and the rewrite commits one version through [[rewriteBuckets]], the
-    * same commit step as merge/compact: a bucket the purge empties drops
-    * from the manifest (and its dir is GC'd) exactly like an id-based
-    * delete that empties it. Returns the rewritten bucket ids (empty =
-    * nothing matched, no version committed). */
-  def deleteWhere(spark: SparkSession, path: String, condition: String): Seq[Int] = {
-    val fs = fsOf(spark, path)
-    val meta = readMeta(spark, path)
-    val (base, mapping) = snapshot(fs, path)
-    if (mapping.isEmpty) return Nil
-    val pred = coalesce(expr(condition), lit(false))
-    // which buckets hold matching rows? re-derive the routing bucket on
-    // the filtered scan — bounded output (<= numBuckets distinct ids).
-    // The scan itself prunes to the key's buckets when the predicate
-    // pins the layout key (the GDPR `user_id = X` shape); arbitrary
-    // predicates (TTL cutoffs) scan every live bucket, with parquet
-    // row-group stats pruning inside where the predicate allows.
-    val discovery = purgeDiscoveryBuckets(
-      spark, meta, mapping.keys.toSeq, condition)
-    val touched = readDirs(spark, path, meta, mapping, discovery)
-      .filter(pred)
-      .select(bucketExpr(meta.key, meta.numBuckets).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Nil
-    // rewrite the touched buckets without their matching rows (null
-    // predicate = not a match = survives, SQL DELETE semantics)
-    rewriteBuckets(fs, path,
-      readDirs(spark, path, meta, mapping, touched).filter(!pred)
-        .withColumn(bucketCol, bucketExpr(meta.key, meta.numBuckets))
-        .repartition(col(bucketCol)),
-      touched.toSet, base, mapping, meta.retainVersions)
-    touched
-  }
+    * [[MergeSink.deleteWhere]] for the semantics. A purge-only
+    * [[write]]: ONE filtered scan locates the buckets holding matching
+    * rows — pruned to the key's own buckets when the predicate pins the
+    * layout key (the GDPR `user_id = X` shape, [[purgeDiscoveryBuckets]]);
+    * for arbitrary predicates (TTL) it covers every live bucket with
+    * parquet row-group statistics pruning inside — then only those
+    * buckets rewrite — O(touched buckets), the same asymmetry as the
+    * merge. Both scans read through one [[snapshot]], and the rewrite
+    * commits one version through [[rewriteBuckets]]: a bucket the purge
+    * empties drops from the manifest (and its dir is GC'd) exactly like
+    * an id-based delete that empties it. A load with `delete_where:`
+    * folds the same rule into its own commit. A predicate naming a
+    * column the target lacks refuses before any write. Returns the
+    * rewritten bucket ids (empty = nothing matched, no version
+    * committed). */
+  def deleteWhere(spark: SparkSession, path: String, condition: String): Seq[Int] =
+    write(spark, path, None, purge = condition)
 
-  /** The buckets [[deleteWhere]]'s DISCOVERY scan must read for
+  /** The buckets a purge's DISCOVERY scan ([[write]]) must read for
     * `condition`: when every layout-key column is pinned to literal
     * values by top-level equality / IN conjuncts (the GDPR purge shape
     * — `user_id = 123`, `id IN (7, 42) AND ts < ...`), only the buckets
@@ -1689,31 +1769,5 @@ object BucketedMergeSink {
         new java.util.concurrent.Callable[B] { def call(): B = f(a) }).asJava)
         .asScala.toSeq.map(_.get())
     } finally pool.shutdown()
-  }
-
-  // ------------------------------------------------------------- create
-
-  private def createTarget(
-      spark: SparkSession,
-      rows: DataFrame,
-      path: String,
-      key: Seq[String],
-      numBuckets: Int,
-      retainVersions: Int): Unit = {
-    key.foreach(k => require(rows.columns.contains(k),
-      s"key column '$k' missing from batch (${rows.columns.mkString(",")})"))
-    // meta FIRST: from here the target exists (empty) and every later
-    // state is consistent — a crash before the manifest commit leaves an
-    // established empty layout plus an invisible orphan, and replaying
-    // the same batch converges (meta-last would instead strand a
-    // half-created path that the flat-layout guard then refuses forever)
-    writeMeta(spark, path, Meta(numBuckets, key, rows.schema, retainVersions))
-    // creation commits v1 from an empty manifest: two processes racing to
-    // CREATE the same target tie-break on the v1 create — the loser gets
-    // the same retryable ConcurrentWriteException (and on retry converges,
-    // since the winner established the layout)
-    rewriteBuckets(fsOf(spark, path), path,
-      rows.withColumn(bucketCol, bucketExpr(key, numBuckets)),
-      (0 until numBuckets).toSet, 0L, Map.empty, retainVersions)
   }
 }

@@ -1239,6 +1239,108 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Int, Long)].collect().toSet)
   }
 
+  test("one commit per load: a bucket only the purge touches is rewritten, " +
+    "an untouched clean bucket keeps its dir, and an untouched fragmented " +
+    "bucket is compacted in the same commit") {
+    val path = tmpTarget()
+    val n = 4
+    val bucket: Map[Long, Int] = (1L to 120L).toDF("id")
+      .select(col("id"), BucketedMergeSink.bucketExpr(Seq("id"), n))
+      .as[(Long, Int)].collect().toMap
+    val byBucket = (1L to 40L).groupBy(bucket)
+    assert(byBucket.size == n, s"ids 1..40 should cover all $n buckets")
+    // routed: the batch; purged: the purge alone; clean: nothing;
+    // fragmented: nothing, but its dir holds several files
+    val Seq(routed, purged, clean, frag) = (0 until n)
+    val victim = byBucket(purged).head
+    // v = id * 10, and the victim alone gets v = 5000
+    val base = (1L to 40L).map(i => (i, s"name$i", if (i == victim) 5000L else i * 10))
+      .toDF("id", "name", "v")
+    BucketedMergeSink.merge(spark, base, path, "upsert", Seq("id"),
+      numBuckets = n, retainVersions = 2)
+    BucketedMergeSink.compact(spark, path): Unit
+    // fragment one bucket: AQE off + several shuffle partitions spread a
+    // merge of its rows over several tasks, one file each
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val sp = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      BucketedMergeSink.merge(spark, (41L to 120L).filter(bucket(_) == frag)
+        .map(i => (i, s"frag$i", i * 10)).toDF("id", "name", "v"), path, "upsert", Seq("id"))
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions", sp)
+    }
+    def dataFiles(b: Int): Int =
+      bucketState(path, b).count(f => !f._1.startsWith(".") && !f._1.startsWith("_"))
+    assert(dataFiles(frag) > 1, "the frag bucket should hold several files")
+    (0 until n).filterNot(_ == frag).foreach(b => assert(dataFiles(b) == 1))
+    val manBefore = BucketedMergeSink.manifest(spark, path)
+    val stateBefore = (0 until n).map(b => b -> bucketState(path, b)).toMap
+    val vBefore = BucketedMergeSink.manifestVersions(spark, path).last
+    val pre = localized(BucketedMergeSink.read(spark, path))
+    val hitId = byBucket(routed).head
+    val batch = Seq((hitId, "ROUTED", 1L)).toDF("id", "name", "v")
+    Derived.Load("spec", path, Seq("id"), "id", "upsert", Nil, numBuckets = n,
+      retainVersions = 2, derived = Nil, deleteWhere = "v > 4000",
+      compactMaxFiles = Some(1)).run(spark, batch)
+    assert(BucketedMergeSink.manifestVersions(spark, path).last == vBefore + 1,
+      "the merge, the purge and the compaction land in one version")
+    val man = BucketedMergeSink.manifest(spark, path)
+    Seq(routed, purged, frag).foreach { b =>
+      assert(man(b) != manBefore(b), s"bucket $b should be rewritten")
+      assert(dataFiles(b) == 1, s"rewritten bucket $b should be one file")
+    }
+    assert(man(routed) == man(purged) && man(purged) == man(frag), "one commit dir")
+    assert(man(clean) == manBefore(clean), "the clean bucket was remapped")
+    assert(bucketState(path, clean) == stateBefore(clean), "the clean bucket was rewritten")
+    assert(canon(BucketedMergeSink.read(spark, path)) ==
+      canon(MergeSink.upsert(pre, batch, Seq("id")).filter(col("v") <= 4000)))
+  }
+
+  test("a catch-up caches its net change once: the subscribeFeed apply and " +
+    "the index sync each hold exactly one persisted RDD at their commit") {
+    val path = tmpTarget()
+    val feed = tmpTarget() + "-feed"
+    val replica = tmpTarget() + "-rep"
+    val idx = tmpTarget() + "-idx"
+    BucketedMergeSink.merge(spark, seed(12), path, "upsert", Seq("id"),
+      numBuckets = 4, retainVersions = 3)
+    BucketedMergeSink.publishChangeFeed(spark, path, feed): Unit
+    BucketedMergeSink.subscribeFeed(spark, feed, replica, numBuckets = 4): Unit
+    BucketedMergeSink.syncMinhashIndex(spark, path,
+      Derived.MinhashIndex(idx, textCol = "name")): Unit
+    BucketedMergeSink.merge(spark, Seq((2L, "two new words", 2L), (40L, "forty more words", 4L))
+      .toDF("id", "name", "v"), path, "upsert", Seq("id"))
+    BucketedMergeSink.merge(spark, Seq(3L).toDF("id"), path, "delete")
+    BucketedMergeSink.publishChangeFeed(spark, path, feed): Unit
+    // the RDDs persisted since `before`, counted when the apply commits
+    def cachesAtCommit(before: Set[Int])(apply: => Any): Seq[Int] = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+      BucketedMergeSink.interleaveBeforeCommit = () =>
+        seen += (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).size
+      try apply finally BucketedMergeSink.interleaveBeforeCommit = () => ()
+      seen.toSeq
+    }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    assert(cachesAtCommit(persisted)(
+      BucketedMergeSink.subscribeFeed(spark, feed, replica, numBuckets = 4)) == Seq(1))
+    assert(BucketedMergeSink.read(spark, replica).collect().toSet ==
+      BucketedMergeSink.read(spark, path).collect().toSet)
+    // the load's shared diffs are built before the sync, as a load's
+    // outbox publish builds them
+    val vs = BucketedMergeSink.manifestVersions(spark, path)
+    BucketedMergeSink.withDeltas(spark, path, Nil) { deltas =>
+      vs.sliding(2).foreach { case Seq(a, b) => deltas(a, b).count(); case _ => }
+      assert(cachesAtCommit(persisted)(BucketedMergeSink.syncIndex(spark, deltas,
+        Derived.MinhashIndex(idx, textCol = "name"))) == Seq(1))
+    }
+    assert(storedPostings(idx) == graft.ops.Dedup.minhashBandIndex(
+      BucketedMergeSink.read(spark, path), idCol = "id", textCol = "name")
+      .as[(Long, Int, Long)].collect().toSet)
+  }
+
   test("subscribeFeed: a replica built from the outbox alone equals the " +
     "target through inserts, updates, and deletes; idempotent; " +
     "crash-replay safe; refuses a pruned outbox") {

@@ -165,13 +165,14 @@ class DerivedSpec extends AnyFunSuite with SparkTestBase {
     Row("outbox_keep without change_feed", "none",
       "outbox_keep bounds a change_feed", Seq("buckets: 4", "outbox_keep: 2"),
       None),
-    // a stream commits one version per load, so every positive window
-    // covers it: no stream side
-    Row("outbox_keep shallower than one load's publishes", "none",
-      "outbox_keep must be >=",
-      Seq("buckets: 4", "retain_versions: 3", "change_feed: bad",
-        "delete_where: \"v > 1000\"", "outbox_keep: 1"),
-      None),
+    // a bucketed load resolves its purge predicate before the write
+    // (streamingStage has no delete_where: no stream side)
+    Row("delete_where on a column the target lacks", "none",
+      "does not resolve against the target's columns",
+      Seq("buckets: 4", "delete_where: \"w > 1\""), None),
+    Row("delete_where on a column an existing target lacks", "none",
+      "does not resolve against the target's columns",
+      Seq("compact: true", "delete_where: \"w > 1\""), None, existing = true),
     // streamingStage refuses every composite-key delete stream first
     Row("outbox_keep on a composite key that can emit deletes", "none",
       "rebase fold",
@@ -225,6 +226,40 @@ class DerivedSpec extends AnyFunSuite with SparkTestBase {
       if (!row.existing)
         assert(!Files.exists(java.nio.file.Paths.get(target)))
     }
+  }
+
+  test("outbox_keep: 1 under delete_where loads: the load publishes one " +
+    "batch, so a consumer in the same pipeline replays the target") {
+    val root = Files.createTempDirectory("graft-keep1").toString
+    val yaml =
+      s"""pypelines:
+         |  p: [prod, cons]
+         |pypes:
+         |  prod:
+         |    extract_query: "SELECT id, text, v FROM keep1_src"
+         |    target_table: tgt
+         |    buckets: 4
+         |    retain_versions: 3
+         |    change_feed: outbox
+         |    delete_where: "v > 1000"
+         |    outbox_keep: 1
+         |  cons:
+         |    subscribe_feed: outbox
+         |    target_table: replica
+         |    key: [id]
+         |    buckets: 4
+         |""".stripMargin
+    val runner = new Runner(spark, PipelineSpec.fromYaml(yaml), Map.empty, root)
+    Seq(Seq((1L, "alpha beta", 10.0), (2L, "gamma delta", 20.0)),
+      Seq((2L, "gamma delta", 2000.0), (3L, "eps zeta", 30.0)),
+      Seq((3L, "eps zeta", 31.0), (4L, "eta theta", 5000.0))).foreach { b =>
+      b.toDF("id", "text", "v").createOrReplaceTempView("keep1_src")
+      runner.run("p")
+      def rows(t: String) = canon(graft.sink.BucketedMergeSink.read(spark, s"$root/$t"))
+      assert(rows("replica") == rows("tgt"))
+    }
+    assert(canon(graft.sink.BucketedMergeSink.read(spark, s"$root/tgt").select("id")) ==
+      Seq(Seq("1"), Seq("3")))
   }
 }
 

@@ -841,26 +841,42 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
         graft.functions.KllSketch.DefaultK)
       graft.ops.Profiling.syncExemplarProfile(spark, twin, s"$twin-ex", "id", 5)
     }
-    val runVersions = Seq(src.take(12), src.drop(6)).map { batch =>
+    val pending = (30 to 35).map(i => (i.toLong, (i * 7 % 97).toDouble))
+    val runVersions = Seq(src.take(12), src.drop(6)).zipWithIndex.map { case (batch, i) =>
+      if (i == 1) {
+        // two versions committed through the sink and profiled by no
+        // one: run 2's catch-up before its load profiles both in one pass
+        // (its baseline: run 1's stored rows)
+        graft.sink.BucketedMergeSink.merge(spark, pending.toDF("id", "v"),
+          s"$root/tgt_chain", "upsert", Seq("id"))
+        assert(graft.sink.BucketedMergeSink.deleteWhere(spark, s"$root/tgt_chain",
+          "v < 30").nonEmpty)
+        graft.sink.BucketedMergeSink.merge(spark, pending.toDF("id", "v"), twin,
+          "upsert", Seq("id"))
+        syncTwin()
+        assert(graft.sink.BucketedMergeSink.deleteWhere(spark, twin, "v < 30").nonEmpty)
+        syncTwin()
+      }
       val before = graft.sink.BucketedMergeSink.manifestVersions(spark,
         s"$root/tgt_chain").toSet
       batch.toDF("id", "v").createOrReplaceTempView("chain_src")
       new Runner(spark, PipelineSpec.fromYaml(y), Map.empty, root).run("p")
-      graft.sink.BucketedMergeSink.merge(spark, batch.toDF("id", "v"), twin,
-        "upsert", Seq("id"), numBuckets = 2, retainVersions = 4)
-      syncTwin()
-      graft.sink.MergeSink.deleteWhere(spark, twin, "v > 80")
-      syncTwin()
-      graft.sink.BucketedMergeSink.compact(spark, twin): Unit
+      // the load's one commit: merge, purge and compaction together
+      graft.sink.BucketedMergeSink.write(spark, twin,
+        Some(graft.sink.BucketedMergeSink.Change(batch.toDF("id", "v"), "upsert",
+          Seq("id"), "id")),
+        purge = "v > 80", compactMaxFiles = Some(1), numBuckets = 2,
+        retainVersions = 4): Unit
       syncTwin()
       graft.sink.BucketedMergeSink.manifestVersions(spark,
         s"$root/tgt_chain").toSet -- before
     }
-    // run 2 commits a merge, a purge and a compaction, all profiled by
-    // its one post-load catch-up (its baseline: run 1's stored rows)
-    assert(runVersions(1).size == 3, s"versions per run: $runVersions")
-    assert(graft.sink.BucketedMergeSink.manifestVersions(spark, twin).toSet ==
-      graft.sink.BucketedMergeSink.manifestVersions(spark, s"$root/tgt_chain").toSet)
+    // run 2 commits its merge, purge and compaction as one version
+    assert(runVersions(1).size == 1, s"versions per run: $runVersions")
+    val chainVersions =
+      graft.sink.BucketedMergeSink.manifestVersions(spark, s"$root/tgt_chain")
+    assert(chainVersions == Seq(1L, 2L, 3L, 4L), s"$chainVersions")
+    assert(graft.sink.BucketedMergeSink.manifestVersions(spark, twin) == chainVersions)
     def rows(path: String, cols: String*): Seq[Seq[String]] =
       canon(spark.read.parquet(path)
         .select((col("version").cast("long") +: cols.map(col)): _*))
@@ -868,7 +884,7 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       ("chain_kll", "kll", Seq("n", "ks_prev")),
       ("chain_ex", "ex", Seq("h", "payload", "n"))).foreach { case (t, s, cols) =>
       val (loaded, synced) = (rows(s"$root/$t", cols: _*), rows(s"$twin-$s", cols: _*))
-      assert(loaded.map(_.head).distinct.size == runVersions.map(_.size).sum,
+      assert(loaded.map(_.head).distinct.size == chainVersions.size,
         s"$t: $loaded")
       assert(loaded == synced,
         s"$t: one pass must store what per-commit syncs store:\n$loaded\n$synced")
@@ -938,13 +954,13 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       e.getMessage.contains("bucketed"), e.getMessage)
   }
 
-  test("change_feed + delete_where: the stage commits TWO versions per " +
-    "run, so retention 2 refuses up front and retention 3 keeps every " +
-    "batch's delta in the outbox (no silently skipped batch_id)") {
+  test("change_feed + delete_where: the stage commits ONE version per " +
+    "run, so retention 2 loads, the outbox's batch ids are contiguous, " +
+    "and a row one run both merges and purges reaches no partition") {
     Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 999L), (4L, "d", 998L))
       .toDF("id", "v", "score").createOrReplaceTempView("cfdw_src")
     val root = Files.createTempDirectory("graft-runner-cfdw").toString
-    def yaml(retain: Int) =
+    val y =
       s"""pypelines:
          |  p: [scd]
          |pypes:
@@ -954,39 +970,172 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
          |    type: upsert
          |    key: [id]
          |    buckets: 4
-         |    retain_versions: $retain
+         |    retain_versions: 2
          |    change_feed: tgt_cfdw_changes
          |    delete_where: "score > 900"
          |""".stripMargin
-    // the r11 ADVICE failure mode: at retention 2 each run's purge
-    // commit GCs the merge commit's predecessor, so the NEXT run's
-    // publish could never diff it — the batch would vanish from the
-    // outbox. The Runner now refuses that configuration up front.
-    val e = intercept[IllegalArgumentException](
-      new Runner(spark, PipelineSpec.fromYaml(yaml(2)),
-        Map("maxid" -> "3"), root).run("p"))
-    assert(e.getMessage.contains("change_feed") &&
-      e.getMessage.contains(">= 3") && e.getMessage.contains("delete_where"),
-      e.getMessage)
-    // retention 3: two full runs (merge v1 + purge v2, merge v3 + purge
-    // v4) and the outbox holds EVERY version's partition — batch ids
-    // are contiguous, nothing silently skipped
-    val runner = new Runner(spark, PipelineSpec.fromYaml(yaml(3)),
+    // the merge and the purge land in one version, so the r11 ADVICE
+    // failure mode (a second commit GC'ing the merge's predecessor
+    // before the publish diffs it) cannot arise at retention 2
+    val runner = new Runner(spark, PipelineSpec.fromYaml(y),
       placeholders = Map("maxid" -> "3"), targetRoot = root)
     runner.run("p")
+    // run 2 raises id 2's score past the cutoff: the purge of a row an
+    // earlier version holds still reaches the feed
+    Seq((1L, "a", 10L), (2L, "b", 950L), (3L, "c", 999L), (4L, "d", 998L))
+      .toDF("id", "v", "score").createOrReplaceTempView("cfdw_src")
     runner.run("p", Map("maxid" -> "4"))
-    import spark.implicits._
-    val batches = spark.read.parquet(s"$root/tgt_cfdw_changes")
-      .select("batch_id").distinct().as[Long].collect().sorted.toSeq
-    assert(batches == Seq(1L, 2L, 3L, 4L),
+    assert(graft.sink.BucketedMergeSink.manifestVersions(spark,
+      s"$root/tgt_cfdw") == Seq(1L, 2L), "one version per run")
+    val outbox = spark.read.parquet(s"$root/tgt_cfdw_changes")
+    val batches = outbox.select("batch_id").distinct().as[Long].collect().sorted.toSeq
+    assert(batches == Seq(1L, 2L),
       s"outbox must hold every committed version's feed, got $batches")
-    // and the feed's content is right: v2 purges id 3; run 2's merge
-    // RE-inserts id 3 from the source (it scored > 900 all along), so
-    // v4 purges both 3 and 4
-    val purged = spark.read.parquet(s"$root/tgt_cfdw_changes")
-      .filter($"_op" === "delete").select("batch_id", "id")
-      .as[(Long, Long)].collect().toSet
-    assert(purged == Set((2L, 3L), (4L, 3L), (4L, 4L)), s"got $purged")
+    // id 3 scored > 900 from the start: run 1 merges and purges it in one
+    // commit, so no published state ever held it — nor id 4, run 2's
+    val ops = outbox.select("batch_id", "_op", "id")
+      .as[(Long, String, Long)].collect().toSet
+    assert(ops == Set((1L, "insert", 1L), (1L, "insert", 2L), (2L, "delete", 2L)),
+      s"got $ops")
+    assert(graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_cfdw")
+      .select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  // a producer stage with every artifact a purge and a compaction feed
+  // (outbox, index, profile) and a consumer replaying its outbox, over
+  // the `fused_src` view
+  private def fusedYaml(retain: Int) =
+    s"""pypelines:
+       |  p: [prod, cons]
+       |pypes:
+       |  prod:
+       |    extract_query: "SELECT id, text, score FROM fused_src"
+       |    target_table: tgt_fused
+       |    type: upsert
+       |    key: [id]
+       |    buckets: 4
+       |    retain_versions: $retain
+       |    delete_where: "score > 900"
+       |    compact: true
+       |    change_feed: tgt_fused_outbox
+       |    minhash_index: tgt_fused_idx
+       |    kll_profile: tgt_fused_kll
+       |    kll_profile_column: score
+       |  cons:
+       |    subscribe_feed: tgt_fused_outbox
+       |    target_table: tgt_fused_replica
+       |    key: [id]
+       |    buckets: 4
+       |""".stripMargin
+
+  // run i's source: docs 1..6 at first, then updates, purges of loaded
+  // rows, and an insert each run purges in the same load
+  private def fusedSource(i: Int): DataFrame = {
+    val docs = (1 to 6).map(d => (d.toLong, s"doc $d says word$d and more words", d * 10.0)) ++
+      (if (i >= 1) Seq((7L, "seven is a new doc here", 70.0)) else Nil) ++
+      (if (i >= 2) Seq((8L, "eight arrives and leaves now", 990.0)) else Nil)
+    docs.map {
+      case (2L, _, v) if i >= 1 => (2L, "doc two was rewritten entirely here", v)
+      case (3L, t, _) if i >= 1 => (3L, t, 950.0) // purged from a loaded row
+      case (6L, t, _) => (6L, t, 999.0) // merged and purged by the first load
+      case (4L, t, v) if i >= 2 => (4L, t, v + 1)
+      case r => r
+    }.toDF("id", "text", "score")
+  }
+
+  private def fusedState(root: String) = {
+    def rows(t: String) = canon(graft.sink.BucketedMergeSink.read(spark, s"$root/$t"))
+    (rows("tgt_fused"), rows("tgt_fused_replica"),
+      graft.sink.BucketedMergeSink.readPostings(spark, s"$root/tgt_fused_idx")
+        .select("id", "band", "bucket").as[(Long, Int, Long)].collect().toSet,
+      canon(spark.read.parquet(s"$root/tgt_fused_kll")
+        .select(col("version").cast("long"), col("n"), col("ks_prev"))))
+  }
+
+  test("one commit per load: delete_where + compact + change_feed + " +
+    "minhash_index + kll_profile add exactly one version per run, and " +
+    "the outbox replay, the index and the profile follow it") {
+    val root = Files.createTempDirectory("graft-runner-fused").toString
+    val runner = new Runner(spark, PipelineSpec.fromYaml(fusedYaml(2)), Map.empty, root)
+    (0 until 3).foreach { i =>
+      fusedSource(i).createOrReplaceTempView("fused_src")
+      runner.run("p")
+      val target = graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_fused")
+      assert(graft.sink.BucketedMergeSink.manifestVersions(spark,
+        s"$root/tgt_fused").last == i + 1L, s"run $i committed more than one version")
+      val (t, replica, postings, kll) = fusedState(root)
+      assert(replica == t, s"run $i: the outbox replay must equal the target")
+      assert(postings == graft.ops.Dedup.minhashBandIndex(target, idCol = "id")
+        .as[(Long, Int, Long)].collect().toSet,
+        s"run $i: the index must equal a fresh signing of the target")
+      assert(kll.map(_.head) == (1 to i + 1).map(_.toString),
+        s"run $i: one KLL row per version, got $kll")
+      // every rewritten bucket is one file: compact folded into the commit
+      graft.sink.BucketedMergeSink.manifest(spark, s"$root/tgt_fused").keys.foreach { b =>
+        val dir = new java.io.File(graft.sink.BucketedMergeSink
+          .bucketDataDir(spark, s"$root/tgt_fused", b).get)
+        assert(dir.listFiles().count(f => f.getName.startsWith("part-")) == 1,
+          s"run $i: bucket $b is fragmented")
+      }
+    }
+    assert(graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_fused")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L, 7L))
+    // ids 6 and 8 were inserted and purged by one load each: no outbox
+    // partition ever carried them
+    assert(spark.read.parquet(s"$root/tgt_fused_outbox")
+      .filter(col("id").isin(6L, 8L)).isEmpty)
+  }
+
+  test("one commit per load: a crash at the fused commit leaves the " +
+    "target, outbox, index and profile unchanged, the next run's GC " +
+    "leaves no orphan, and the retry equals a crash-free run") {
+    val crashed = Files.createTempDirectory("graft-runner-fused-crash").toString
+    val clean = Files.createTempDirectory("graft-runner-fused-clean").toString
+    def run(root: String, i: Int): Unit = {
+      fusedSource(i).createOrReplaceTempView("fused_src")
+      new Runner(spark, PipelineSpec.fromYaml(fusedYaml(2)), Map.empty, root).run("p")
+    }
+    def listing(root: String): Set[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val r = java.nio.file.Paths.get(root)
+      Files.walk(r).iterator().asScala
+        .map(p => r.relativize(p).toString -> p.toFile.length()).toSet
+    }
+    def dataDirs(root: String): Set[String] =
+      new java.io.File(s"$root/tgt_fused/data").listFiles().map(_.getName).toSet
+    def referenced(root: String): Set[String] = {
+      val p = s"$root/tgt_fused"
+      graft.sink.BucketedMergeSink.manifestVersions(spark, p).flatMap { v =>
+        scala.io.Source.fromFile(f"$p/_graft_manifest/v$v%09d").getLines()
+          .filter(_.nonEmpty).map(_.split("\t")(1))
+      }.toSet
+    }
+    run(crashed, 0)
+    run(clean, 0)
+    val before = listing(crashed)
+    var fired = false
+    graft.sink.BucketedMergeSink.interleaveBeforeCommit = () =>
+      if (!fired) { fired = true; throw new RuntimeException("crash at the commit") }
+    try {
+      val e = intercept[RuntimeException](run(crashed, 1))
+      assert(e.getMessage == "crash at the commit", e.getMessage)
+    } finally graft.sink.BucketedMergeSink.interleaveBeforeCommit = () => ()
+    assert(fired)
+    // nothing but the crashed write's own data dir appeared, and nothing
+    // went: no version, outbox partition, index marker or profile row
+    val after = listing(crashed)
+    assert((before -- after).isEmpty, s"the crash removed ${before -- after}")
+    val orphans = dataDirs(crashed) -- referenced(crashed)
+    assert(orphans.size == 1, s"expected the crashed commit's dir, got $orphans")
+    assert((after -- before).forall(_._1.startsWith(s"tgt_fused/data/${orphans.head}")),
+      s"the crash published ${after -- before}")
+    // the retry GCs the orphan and lands what a crash-free run lands
+    run(crashed, 1)
+    run(clean, 1)
+    assert(dataDirs(crashed) == referenced(crashed), "the retry left an orphan")
+    assert(fusedState(crashed) == fusedState(clean))
+    assert(graft.sink.BucketedMergeSink.manifestVersions(spark, s"$crashed/tgt_fused") ==
+      graft.sink.BucketedMergeSink.manifestVersions(spark, s"$clean/tgt_fused"))
   }
 
   test("minhash_index self-heal at minimum retention: a crash between a " +
