@@ -69,6 +69,12 @@ object GraftSession {
       // fixed overhead, so the right value does not depend on data
       // size.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // ...and keyed on the generated code alone: by default each
+      // whole-stage class name carries its stage id, so an identical
+      // stage that lands at another position of another plan (the same
+      // scan-and-join feeding a different join, or an AQE replan that
+      // numbers stages differently) misses the cache and compiles again
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // Catalyst constraint propagation OFF (r17 optimization): the
       // documented planning-cost knob ("computationally expensive for
       // plans with a large number of predicates and aliases" — Spark

@@ -35,7 +35,8 @@ sealed abstract class Derived(val stageKey: String) {
 object Derived {
 
   /** The postings indexes: they replay per-version snapshot diffs
-    * paired on ONE id column, and compact with the target. */
+    * paired on ONE id column, and compact with the target in their
+    * sync's commit. */
   sealed abstract class Index(stageKey: String) extends Derived(stageKey)
 
   /** The per-version profiles: one summary of each target version's
@@ -212,14 +213,6 @@ object Derived {
       // crash anywhere in this pass self-heals on the next load's
       // catch-up-BEFORE-load
       catchUp(spark, stored)
-      // `compact: true` extends to the postings indexes — their
-      // per-version sync merges fragment index buckets exactly like
-      // loads fragment the target's. AFTER the catch-up (compacting
-      // first would miss the sync's own fragments); compacting an index
-      // commits a version on the INDEX layout only, so the target
-      // retention math is untouched
-      for (m <- compactMaxFiles; i <- derived.collect { case i: Index => i })
-        BucketedMergeSink.compact(spark, i.path, maxFiles = m): Unit
       // `outbox_keep: N` log-compacts the outbox after this load's
       // publishes: only the newest N batch partitions survive, the
       // oldest survivor rebased into a marked all-inserts base — the
@@ -418,8 +411,12 @@ object Derived {
           case ChangeFeed(feed, _) =>
             BucketedMergeSink.publishChangeFeed(spark, feed, deltas): Unit
           // indexes refuse scd2 loads, so `feedKey` is empty whenever one
-          // is declared and the feed's diffs are the index's too
-          case i: Index => BucketedMergeSink.syncIndex(spark, deltas, i): Unit
+          // is declared and the feed's diffs are the index's too.
+          // `compact: true` extends to the postings indexes: the sync's
+          // own commit writes one file per dir and folds fragmented
+          // bases, so compacting an index costs no commit of its own
+          case i: Index =>
+            BucketedMergeSink.syncIndex(spark, deltas, i, compactMaxFiles): Unit
           case p: ProfileTable => Profiling.sync(stored, path, p): Unit
         }
       }

@@ -205,8 +205,9 @@ final class Runner(
     * ([[graft.sink.BucketedMergeSink.subscribeFeed]]). Downstream
     * replication from config: the producer pipeline ships feeds, the
     * consumer pipeline replays them — never snapshots. `compact: true`
-    * is honored (per-batch merges fragment the replica exactly like any
-    * other incremental load); the extract and every producer-side
+    * is honored in the apply's own commit (one file per written dir,
+    * fragmented bases folded), exactly like any other incremental load;
+    * the extract and every producer-side
     * stage key are refused when the stage is parsed — a replica derives
     * its own feeds/indexes from its OWN pipeline stage if needed,
     * pointed at the replica as a target. Returns the replica's row
@@ -218,10 +219,8 @@ final class Runner(
       key = stage.key,
       numBuckets = if (stage.buckets > 0) stage.buckets else 64,
       retainVersions = stage.retainVersions,
-      consumerName = stage.consumerName): Unit
-    if (stage.compact)
-      graft.sink.BucketedMergeSink.compact(spark, replica,
-        maxFiles = stage.compactMaxFiles)
+      consumerName = stage.consumerName,
+      compactMaxFiles = Option.when(stage.compact)(stage.compactMaxFiles)): Unit
     register(stage, bucketed = true)
   }
 

@@ -6,7 +6,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Derived
@@ -29,19 +29,36 @@ import graft.core.Derived
   *
   * {{{
   *   path/_graft_buckets                    <- bucket count, key, schema
-  *   path/_graft_manifest/v000000001        <- bucket -> data-dir map, versioned
+  *   path/_graft_manifest/v000000001        <- bucket -> chain map, versioned
   *   path/data/c<commit>/gbucket=0/ part-*.parquet
   *   path/data/c<commit>/gbucket=7/ ...
   * }}}
   *
+  * A manifest entry is a CHAIN ([[Chain]]): the bucket's base dir plus
+  * the delta dirs appended since, oldest first, each with the rows it
+  * holds (`3 <TAB> c1:5000 <TAB> c7:152`; a pre-chain one-dir line
+  * `3 <TAB> c1` still reads, as a base of unknown size). A delta holds
+  * one commit's net change of its bucket — the new rows of every key the
+  * commit changed and a key-only tombstone for every key it removed,
+  * tagged with the commit's version — so a small load writes O(batch),
+  * not O(bucket): the LSM-tree's small appends with bounded merges
+  * (O'Neil et al., Acta Informatica 1996). Readers fold a chain under
+  * the newest-op rule: a key any delta names takes the rows of the
+  * newest delta naming it (none for a tombstone), and the base rows of
+  * every such key drop out by an anti-join against the deltas' keys —
+  * the base is never shuffled. [[write]] decides per bucket whether a
+  * commit appends a delta or FOLDS the chain into a new base. The rule
+  * assumes one row per key: a layout holding SCD2 history has several,
+  * so each of its writes folds.
+  *
   * Data directories are IMMUTABLE once written. Every version — a
   * creation, merge, compaction or predicate delete — is made by ONE
-  * commit step, [[rewriteBuckets]]: it writes the rewritten buckets
+  * commit step, [[rewriteBuckets]]: it writes every new base and delta
   * under a fresh `data/c<uuid>/` dir, then creates the next manifest
   * version (`fs.create(..., overwrite = false)` — one atomic file
-  * creation, [[commitManifest]]) that remaps those buckets to the new
-  * dir. Readers resolve the highest manifest version into explicit
-  * leaf-dir paths, so
+  * creation, [[commitManifest]]) whose entries name them. Readers
+  * resolve the highest manifest version into explicit leaf-dir paths,
+  * so
   *
   *   - a batch is ALL-OR-NOTHING visible: before the manifest file
   *     exists, readers resolve the old mapping (the new data dir is an
@@ -53,9 +70,10 @@ import graft.core.Derived
   *     ([[Meta]], [[setRetention]]): with 1 a concurrent reader holding
   *     a superseded manifest may find its dirs GC'd and fail loudly,
   *     never read mixed data; with N the last N manifests AND every dir
-  *     any of them references are kept, so readers get N-deep snapshot
-  *     isolation ([[readVersion]] time travel) at the cost of retained
-  *     storage;
+  *     of every chain any of them references are kept, so readers get
+  *     N-deep snapshot isolation ([[readVersion]] time travel) at the
+  *     cost of retained storage — retained versions whose chains share
+  *     a base share its bytes;
   *   - bucket pruning is PATH-level: a touched-slice or keyed read
   *     simply never lists the other buckets' directories — stronger
   *     than a partition filter, which still enumerates the layout.
@@ -208,10 +226,30 @@ object BucketedMergeSink {
 
   // ----------------------------------------------------------- manifest
 
-  /** Current bucket -> commit-dir name mapping of the target (e.g. 3 ->
-    * "c1f2..."), empty for an empty target — one read of the newest
-    * manifest file. */
-  def manifest(spark: SparkSession, path: String): Map[Int, String] = {
+  /** One immutable leaf dir of a bucket: the commit dir holding it and
+    * the rows written there (-1: not recorded, a pre-chain manifest). */
+  final case class Dir(commit: String, rows: Long)
+
+  /** A bucket's manifest entry: its base dir, then the delta dirs
+    * appended since, oldest first (object scaladoc, "Physical
+    * layout"). */
+  final case class Chain(base: Dir, deltas: Seq[Dir] = Nil) {
+    def dirs: Seq[Dir] = base +: deltas
+    def commits: Seq[String] = dirs.map(_.commit)
+  }
+
+  /** A delta appends while its chain stays under this many deltas; the
+    * commit that would make it this deep folds the chain instead. */
+  private val maxDeltas = 8
+
+  /** Delta-only columns: the version that wrote the row, and whether
+    * it is a key-only tombstone. Reserved in inputs, like [[bucketCol]]. */
+  private val seqCol = "__graft_seq"
+  private val tombCol = "__graft_tomb"
+
+  /** Current bucket -> chain mapping of the target, empty for an empty
+    * target — one read of the newest manifest file. */
+  def manifest(spark: SparkSession, path: String): Map[Int, Chain] = {
     val fs = fsOf(spark, path)
     currentManifestFile(fs, path) match {
       case None => Map.empty
@@ -219,15 +257,20 @@ object BucketedMergeSink {
     }
   }
 
-  /** Absolute path of the live data dir for `bucket`, if it holds rows. */
-  def bucketDataDir(spark: SparkSession, path: String, bucket: Int): Option[String] =
-    manifest(spark, path).get(bucket)
-      .map(c => leafDir(path, c, bucket).toString)
+  /** Absolute paths of the live dirs of `bucket`, base first then its
+    * deltas oldest first; empty when the bucket holds no chain. */
+  def bucketDataDirs(spark: SparkSession, path: String, bucket: Int): Seq[String] =
+    manifest(spark, path).get(bucket).toSeq
+      .flatMap(_.commits.map(c => leafDir(path, c, bucket).toString))
 
-  private def parseManifest(fs: FileSystem, p: Path): Map[Int, String] =
+  private def parseManifest(fs: FileSystem, p: Path): Map[Int, Chain] =
     readSmallFile(fs, p).linesIterator.filter(_.nonEmpty).map { l =>
-      val Array(b, d) = l.split("\t", 2)
-      b.toInt -> d
+      val fields = l.split("\t").toSeq
+      val dirs = fields.tail.map(_.split(":", 2) match {
+        case Array(c, n) => Dir(c, n.toLong)
+        case Array(c) => Dir(c, -1L)
+      })
+      fields.head.toInt -> Chain(dirs.head, dirs.tail)
     }.toMap
 
   private def manifestFiles(fs: FileSystem, path: String): Seq[Path] = {
@@ -262,12 +305,12 @@ object BucketedMergeSink {
   /** Every bucket `mapping` holds: one manifest version's rows, with
     * buckets and dirs from that one parsed file. */
   private def readMapping(
-      spark: SparkSession, path: String, mapping: Map[Int, String]): DataFrame =
+      spark: SparkSession, path: String, mapping: Map[Int, Chain]): DataFrame =
     readDirs(spark, path, readMeta(spark, path), mapping, mapping.keys.toSeq)
 
-  /** The bucket -> commit-dir mapping of retained manifest `version`. */
+  /** The bucket -> chain mapping of retained manifest `version`. */
   private def retainedManifest(
-      spark: SparkSession, path: String, version: Long): Map[Int, String] = {
+      spark: SparkSession, path: String, version: Long): Map[Int, Chain] = {
     val fs = fsOf(spark, path)
     val p = new Path(new Path(path, manifestDir), f"v$version%09d")
     require(fs.exists(p),
@@ -277,14 +320,58 @@ object BucketedMergeSink {
   }
 
   /** The rows of `buckets` under `mapping`, read with the layout schema
-    * from their leaf dirs alone (an empty frame when none holds rows). */
+    * from their leaf dirs alone (an empty frame when none holds rows):
+    * the bases, with each chain's deltas folded in ([[foldChains]]). */
   private def readDirs(spark: SparkSession, path: String, meta: Meta,
-      mapping: Map[Int, String], buckets: Seq[Int]): DataFrame = {
-    val dirs = buckets.distinct.sorted.flatMap(b =>
-      mapping.get(b).map(c => leafDir(path, c, b).toString))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    else spark.read.schema(meta.schema).parquet(dirs: _*)
+      mapping: Map[Int, Chain], buckets: Seq[Int]): DataFrame = {
+    val chains = buckets.distinct.sorted.flatMap(b => mapping.get(b).map(b -> _))
+    if (chains.isEmpty) return emptyOf(spark, meta.schema)
+    val base = spark.read.schema(meta.schema)
+      .parquet(chains.map { case (b, c) => leafDir(path, c.base.commit, b).toString }: _*)
+    val deltas = chains.flatMap { case (b, c) => c.deltas.map(d => leafDir(path, d.commit, b).toString) }
+    if (deltas.isEmpty) base
+    else foldChains(base, readDeltas(spark, meta, deltas), meta.key)
+  }
+
+  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The rows of delta leaf dirs: the layout's columns plus [[seqCol]]
+    * and [[tombCol]]. */
+  private def readDeltas(spark: SparkSession, meta: Meta, dirs: Seq[String]): DataFrame =
+    spark.read.schema(meta.schema.add(seqCol, LongType).add(tombCol, BooleanType))
+      .parquet(dirs: _*)
+
+  /** Null-safe equality of `key` between the frames aliased `l` and `r`. */
+  private def keyEq(key: Seq[String], l: String, r: String) =
+    key.map(k => col(s"$l.$k") <=> col(s"$r.$k")).reduce(_ && _)
+
+  /** `df` under a broadcast hint when it fits the broadcast threshold
+    * ([[MergeSink.fitsBroadcast]]); a larger frame is left to the
+    * planner. */
+  private def broadcastIfSmall(df: DataFrame): DataFrame =
+    if (MergeSink.fitsBroadcast(df)) broadcast(df) else df
+
+  /** The delta rows no newer delta of the same key supersedes,
+    * tombstones included: the newest-op rule over a chain, where a
+    * delta holds every row of each key it names. One broadcast of the
+    * deltas' (key, version) pairs serves this anti-join and
+    * [[foldChains]]'s, so neither shuffles. */
+  private def newestDeltaRows(deltas: DataFrame, key: Seq[String]): DataFrame = {
+    val newer = broadcastIfSmall(deltas.select((key :+ seqCol).map(col): _*)).alias("n")
+    deltas.alias("d").join(newer,
+      keyEq(key, "d", "n") && col(s"n.$seqCol") > col(s"d.$seqCol"), "left_anti")
+  }
+
+  /** A chain fold: the `base` rows of keys no delta names, and for every
+    * key a delta names, the rows of the newest delta naming it (none
+    * when that is a tombstone). The base is anti-joined against the
+    * deltas' keys and never shuffled. */
+  private def foldChains(base: DataFrame, deltas: DataFrame, key: Seq[String]): DataFrame = {
+    val named = broadcastIfSmall(deltas.select((key :+ seqCol).map(col): _*)).alias("n")
+    base.alias("t").join(named, keyEq(key, "t", "n"), "left_anti")
+      .unionByName(newestDeltaRows(deltas, key).filter(!col(tombCol))
+        .select(base.columns.toSeq.map(col): _*))
   }
 
   private def versionOf(p: Path): Long = p.getName.stripPrefix("v").toLong
@@ -307,6 +394,8 @@ object BucketedMergeSink {
     * joined slices shuffle at most those buckets' rows on the key.
     * (A bucket rewritten byte-identically — compaction — is read but
     * emits nothing: the row diff, not the dir diff, is authoritative.)
+    * A chain that only appended deltas is a changed entry too: both
+    * slices fold it and join in full.
     *
     * Requires the layout key (plus `extraKey`) to be unique per row in
     * both snapshots — true for upsert/update/delete targets by
@@ -331,7 +420,7 @@ object BucketedMergeSink {
     // manifest-diff prune: same commit dir ⇒ same bytes ⇒ no changes
     val touched = (mFrom.keySet ++ mTo.keySet).toSeq
       .filter(b => mFrom.get(b) != mTo.get(b))
-    def slice(m: Map[Int, String]) = readDirs(spark, path, meta, m, touched)
+    def slice(m: Map[Int, Chain]) = readDirs(spark, path, meta, m, touched)
     val k = meta.key ++ extraKey
     val t = slice(mFrom).withColumn("__t", lit(true)).alias("t")
     val b = slice(mTo).withColumn("__b", lit(true)).alias("b")
@@ -539,8 +628,9 @@ object BucketedMergeSink {
     * The index is itself a [[BucketedMergeSink]] layout, keyed on `id`
     * and bucketed like its target, holding ONE nested row per doc
     * (`id, postings: array<struct<band,bucket>>`, read back flat via
-    * [[readPostings]]) — so each sync rewrites O(touched buckets) of
-    * postings and replaces a doc's whole signature atomically. A flat
+    * [[readPostings]]) — so each sync appends O(changed docs) of
+    * postings (or folds a touched bucket) and replaces a doc's whole
+    * signature atomically. A flat
     * posting-per-row index would pay a full-index rewrite on EVERY sync
     * (the flat sink's atomic-swap shape), which dominates at corpus
     * scale. */
@@ -593,25 +683,25 @@ object BucketedMergeSink {
 
   /** The sync of any postings index of `deltas.path` — the family's
     * bootstrap and signing closures around [[syncIndexCore]]. */
-  private[graft] def syncIndex(
-      spark: SparkSession, deltas: Deltas, index: Derived.Index): Seq[Long] =
+  private[graft] def syncIndex(spark: SparkSession, deltas: Deltas,
+      index: Derived.Index, compactMaxFiles: Option[Int] = None): Seq[Long] =
     index match {
       case i: Derived.MinhashIndex =>
         import i.{bands, charGrams, k, rowsPerBand, textCol}
         def sign(df: DataFrame, id: String) = graft.ops.Dedup.minhashBandIndex(
           df, k, bands, rowsPerBand, id, textCol, charGrams)
         syncIndexCore(spark, deltas, i.path, "minhash index", textCol,
-          bootstrap = sign, sign = sign)
+          compactMaxFiles, bootstrap = sign, sign = sign)
       case i: Derived.LshIndex =>
         import i.{bits, dim, tables, vecCol}
         def sign(df: DataFrame, id: String) = graft.ops.Similarity.lshBucketIndex(
           df, tables, bits, dim, id, vecCol)
         syncIndexCore(spark, deltas, i.path, "lsh index", vecCol,
-          bootstrap = sign, sign = sign)
+          compactMaxFiles, bootstrap = sign, sign = sign)
       case i: Derived.SemanticIndex =>
         import i.{iters, nlist, probeCells, trainPerCell, vecCol}
         val centsPath = i.path.stripSuffix("/") + ".centroids"
-        syncIndexCore(spark, deltas, i.path, "semantic index", vecCol,
+        syncIndexCore(spark, deltas, i.path, "semantic index", vecCol, compactMaxFiles,
           bootstrap = (df, id) => {
             val (postings, cents) = graft.ops.Similarity.semanticCellIndex(
               df, nlist, iters, trainPerCell, probeCells, id, vecCol)
@@ -658,8 +748,9 @@ object BucketedMergeSink {
     *     unsigns, whatever the op. A posting key set that changes between
     *     signings (the semantic cells) thus never strands stale rows.
     *   - the bootstrap or the net change applies in ONE commit
-    *     ([[applyNet]]) and ONE marker, for the last version, lands
-    *     after it; a crash in between refolds the same run, and applying
+    *     ([[applyNet]]: the net change is the delta of every index
+    *     bucket it appends to; `compactMaxFiles` compacts in that same
+    *     commit) and ONE marker, for the last version, lands after it; a crash in between refolds the same run, and applying
     *     a net change again is idempotent. An index that fell more than
     *     the retention window behind refuses loudly rather than silently
     *     resyncing from a gapped feed — and the Runner's
@@ -672,6 +763,7 @@ object BucketedMergeSink {
       indexPath: String,
       family: String,
       signCol: String,
+      compactMaxFiles: Option[Int],
       bootstrap: (DataFrame, String) => DataFrame,
       sign: (DataFrame, String) => DataFrame): Seq[Long] = {
     val path = deltas.path
@@ -707,7 +799,8 @@ object BucketedMergeSink {
       val stale = Option.when(isBucketed(spark, indexPath))(
         read(spark, indexPath).select("id"))
       applyNet(spark, nest(bootstrap(readVersion(spark, path, vs.last), idCol)),
-        stale, indexPath, Seq("id"), meta.numBuckets, 0, cached = false)
+        stale, indexPath, Seq("id"), meta.numBuckets, 0, cached = false,
+        compactMaxFiles = compactMaxFiles)
       markApplied(fs, appliedDir, vs.last)
       return vs
     }
@@ -722,13 +815,17 @@ object BucketedMergeSink {
       deltas(a, b).withColumn(foldSeqCol, lit(b))
     }.reduce(_ unionByName _), Seq(idCol))
     // the ids, the re-signing and the apply all read the fold: its one
-    // cache serves the whole apply
+    // cache serves the whole apply. The net ids drop every changed
+    // doc's postings and, a superset of the re-signed ids, route the
+    // apply, so the signing runs once: in the write
     net.persist(StorageLevel.MEMORY_AND_DISK)
-    try applyNet(spark,
-      nest(sign(net.filter(col("_op") =!= "delete" && col(signCol).isNotNull), idCol)),
-      Some(net.select(col(idCol).as("id"))), indexPath, Seq("id"), meta.numBuckets, 0,
-      cached = true)
-    finally net.unpersist(false)
+    try {
+      val ids = net.select(col(idCol).as("id"))
+      applyNet(spark,
+        nest(sign(net.filter(col("_op") =!= "delete" && col(signCol).isNotNull), idCol)),
+        Some(ids), indexPath, Seq("id"), meta.numBuckets, 0, cached = true,
+        compactMaxFiles = compactMaxFiles, routeBy = Some(ids))
+    } finally net.unpersist(false)
     markApplied(fs, appliedDir, pairs.last._2)
     pairs.map(_._2)
   }
@@ -815,7 +912,11 @@ object BucketedMergeSink {
     * the laggiest registered cursor + 1, so a registered consumer can
     * never be rebased past and forced into a rebuild. Unregistered
     * consumers keep the unclamped contract: size `outbox_keep` above
-    * their worst lag yourself. */
+    * their worst lag yourself.
+    *
+    * `compactMaxFiles` compacts in the apply's own commit, as
+    * [[write]]'s bound: each written dir is one file, and a replica
+    * bucket whose base holds more files folds. */
   def subscribeFeed(
       spark: SparkSession,
       feedPath: String,
@@ -824,7 +925,8 @@ object BucketedMergeSink {
       numBuckets: Int = 64,
       retainVersions: Int = 0,
       upTo: Long = Long.MaxValue,
-      consumerName: String = ""): Seq[Long] = {
+      consumerName: String = "",
+      compactMaxFiles: Option[Int] = None): Seq[Long] = {
     val feedFs = fsOf(spark, feedPath)
     require(feedFs.exists(new Path(feedPath)),
       s"no outbox at $feedPath — publish a change feed there first")
@@ -855,7 +957,8 @@ object BucketedMergeSink {
         applyNet(spark, rows.filter(col("_op") =!= "delete").drop("_op"),
           Option.when(key.size == 1)(
             rows.filter(col("_op") === "delete").select(key.head)),
-          replicaPath, key, numBuckets, retainVersions, cached = true)
+          replicaPath, key, numBuckets, retainVersions, cached = true,
+          compactMaxFiles = compactMaxFiles)
       } finally rows.unpersist(false)
     }
     markApplied(fs, appliedDir, pending.last)
@@ -1153,39 +1256,74 @@ object BucketedMergeSink {
     * version (0 for an empty target) and the mapping parsed from THAT
     * file — not a re-listed current, so base and mapping cannot straddle
     * an interleaved commit — after GC'ing a previous crash's orphans. */
-  private def snapshot(fs: FileSystem, path: String): (Long, Map[Int, String]) = {
+  private def snapshot(fs: FileSystem, path: String): (Long, Map[Int, Chain]) = {
     val baseFile = currentManifestFile(fs, path)
-    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, String])
+    val mapping = baseFile.map(parseManifest(fs, _)).getOrElse(Map.empty[Int, Chain])
     gcUnreferenced(fs, path)
     (baseFile.map(versionOf).getOrElse(0L), mapping)
   }
 
+  /** Rows per bucket of one commit's write, counted by the write job as
+    * it emits them, so a dir's row count costs no job of its own. */
+  private final class BucketRows
+      extends org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]] {
+    private val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+    def isZero: Boolean = counts.isEmpty
+    def copy(): BucketRows = { val c = new BucketRows; c.counts ++= counts; c }
+    def reset(): Unit = counts.clear()
+    def add(b: Int): Unit = counts(b) = counts.getOrElse(b, 0L) + 1
+    def merge(other: org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]]): Unit =
+      other.value.foreach { case (b, n) => counts(b) = counts.getOrElse(b, 0L) + n }
+    def value: Map[Int, Long] = counts.toMap
+  }
+
   /** The one commit step: every version of a bucketed target is made
-    * here. Writes `rows` (already carrying [[bucketCol]]) under a fresh
-    * `data/c<uuid>/` dir and commits `(mapping -- rewritten) ++ produced`
-    * as `v(base+1)` — a rewritten bucket that produced no rows drops out
-    * of the manifest. Rows in a bucket outside `rewritten` are a routing
-    * bug and refused. The dir is deleted when the write fails, on that
-    * refusal and on a lost commit race ([[ConcurrentWriteException]]),
-    * so a failed write leaves nothing beyond what a crash would; after
-    * the commit, dirs no retained manifest references are GC'd. */
+    * here. Writes `rows` (already carrying [[bucketCol]]; one file per
+    * bucket when `oneFilePerDir`) under a fresh `data/c<uuid>/` dir and
+    * commits `v(base+1)`: a bucket of `appended` gains its leaf dir as
+    * the newest delta of its chain (no rows: the chain stays as it was),
+    * and every other bucket of `rewritten` gets it as a new base (no
+    * rows: the bucket drops out of the manifest). Each new entry records
+    * the rows its dir holds. Rows in a bucket outside `rewritten` are a
+    * routing bug and refused. The dir is deleted when the write fails,
+    * on that refusal and on a lost commit race
+    * ([[ConcurrentWriteException]]), so a failed write leaves nothing
+    * beyond what a crash would; after the commit, dirs no retained
+    * manifest references are GC'd. */
   private def rewriteBuckets(fs: FileSystem, path: String, rows: DataFrame,
-      rewritten: Set[Int], base: Long, mapping: Map[Int, String], retain: Int): Unit = {
+      rewritten: Set[Int], appended: Set[Int], oneFilePerDir: Boolean, base: Long,
+      mapping: Map[Int, Chain], retain: Int): Unit = {
     val commit = "c" + UUID.randomUUID().toString
     val commitPath = new Path(new Path(path, dataDir), commit)
-    try rows.write.partitionBy(bucketCol).parquet(commitPath.toString)
+    val counts = new BucketRows
+    rows.sparkSession.sparkContext.register(counts)
+    val counted = udf((b: Int) => { counts.add(b); b }).asNondeterministic()
+    // counted after the shuffle, in the write's own (result) stage, where
+    // each task's count merges once
+    val out = if (oneFilePerDir) rows.repartition(col(bucketCol)) else rows
+    try out.withColumn(bucketCol, counted(col(bucketCol)))
+      .write.partitionBy(bucketCol).parquet(commitPath.toString)
     catch { case e: Throwable => fs.delete(commitPath, true); throw e }
     val produced = fs.listStatus(commitPath).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(bucketCol + "="))
-      .map(_.stripPrefix(bucketCol + "=").toInt)
+      .map(_.stripPrefix(bucketCol + "=").toInt).toSet
     val stray = produced.filterNot(rewritten)
     if (stray.nonEmpty) {
       fs.delete(commitPath, true)
       throw new IllegalStateException(
         s"merge produced rows in untouched buckets ${stray.mkString(",")} — routing bug")
     }
-    try commitManifest(fs, path, (mapping -- rewritten) ++ produced.map(_ -> commit),
-      retain, expectedBase = base)
+    val written = counts.value
+    val next = rewritten.foldLeft(mapping) { (m, b) =>
+      val dir = Option.when(produced(b))(Dir(commit, written.getOrElse(b, 0L)))
+      (dir, m.get(b)) match {
+        case (Some(d), Some(c)) if appended(b) => m.updated(b, c.copy(deltas = c.deltas :+ d))
+        case (None, Some(_)) if appended(b) => m
+        case (Some(d), _) => m.updated(b, Chain(d))
+        case (None, _) => m - b
+      }
+    }
+    try commitManifest(fs, path, next, retain, expectedBase = base)
     catch { case e: ConcurrentWriteException => fs.delete(commitPath, true); throw e }
     gcUnreferenced(fs, path)
   }
@@ -1223,7 +1361,7 @@ object BucketedMergeSink {
     * remove, so leaving them listed would trade "old snapshot" for
     * "failing snapshot". */
   private def commitManifest(
-      fs: FileSystem, path: String, mapping: Map[Int, String], retain: Int,
+      fs: FileSystem, path: String, mapping: Map[Int, Chain], retain: Int,
       expectedBase: Long): Unit = {
     interleaveBeforeCommit()
     val dir = new Path(path, manifestDir)
@@ -1236,8 +1374,9 @@ object BucketedMergeSink {
           "target is single-writer; retry the merge — it will re-read the " +
           "new state and re-merge.")
     val p = new Path(dir, f"v${expectedBase + 1}%09d")
-    val body = mapping.toSeq.sorted
-      .map { case (b, d) => s"$b\t$d" }.mkString("", "\n", "\n")
+    val body = mapping.toSeq.sortBy(_._1)
+      .map { case (b, c) => (b.toString +: c.dirs.map(d => s"${d.commit}:${d.rows}")).mkString("\t") }
+      .mkString("", "\n", "\n")
     // atomic commit: the fs admits exactly one creator of this version
     val out =
       try fs.create(p, false)
@@ -1252,20 +1391,20 @@ object BucketedMergeSink {
     files.dropRight(math.max(1, retain)).foreach(fs.delete(_, false))
   }
 
-  /** Remove data dirs not referenced by ANY retained manifest: leftovers
-    * of a crash between data write and manifest commit, and bucket dirs
-    * superseded past the retention window. Runs at the START of each
+  /** Remove data dirs not referenced by ANY retained manifest — as a
+    * chain's base or one of its deltas: leftovers of a crash between
+    * data write and manifest commit, and bucket dirs superseded past the
+    * retention window. Runs at the START of each
     * write (so a crashed batch's orphans die on replay) and after each
     * commit (so superseded data doesn't accumulate). Single-writer
     * contract. */
   private def gcUnreferenced(fs: FileSystem, path: String): Unit = {
     val dd = new Path(path, dataDir)
     if (!fs.exists(dd)) return
-    val retained: Seq[Map[Int, String]] =
-      manifestFiles(fs, path).map(p => parseManifest(fs, p))
-    val live: Map[String, Set[Int]] = retained
-      .flatMap(_.toSeq)
-      .groupBy(_._2).map { case (d, m) => d -> m.map(_._1).toSet }
+    // every dir of every chain of every retained version
+    val live: Map[String, Set[Int]] = manifestFiles(fs, path)
+      .flatMap(p => parseManifest(fs, p).toSeq.flatMap { case (b, c) => c.commits.map(_ -> b) })
+      .groupBy(_._1).map { case (d, m) => d -> m.map(_._2).toSet }
     fs.listStatus(dd).toSeq.filter(_.isDirectory).foreach { c =>
       val name = c.getPath.getName
       live.get(name) match {
@@ -1324,8 +1463,9 @@ object BucketedMergeSink {
     * [[MergeSink.mergeIntoParquet]] (it routes through the same
     * upsert/update/delete), different physical cost: only the buckets
     * the batch's keys hash to are read (through the [[snapshot]]'s
-    * mapping) and rewritten, and the batch becomes visible atomically at
-    * the one commit step, [[rewriteBuckets]] — creation included.
+    * mapping) and changed — each gains a delta or folds ([[write]]) —
+    * and the batch becomes visible atomically at the one commit step,
+    * [[rewriteBuckets]] — creation included.
     *
     * `numBuckets` is only consulted at creation; later calls read it
     * from the layout metadata. Upsert/update must use the layout's key
@@ -1351,11 +1491,13 @@ object BucketedMergeSink {
   /** Apply a NET change to the bucketed target at `path` in ONE commit:
     * the rows whose key is in `deletes` leave the touched slice, then
     * `upserts` upsert into it. Validation, routing and creation are
-    * [[merge]]'s: the commit rewrites every bucket an upsert routes to
-    * and every existing bucket a delete key routes to, and an absent
-    * target is created from `upserts` alone (nothing to delete from).
-    * The delete keys match the single key column. `cached` as in
-    * [[Change]]. */
+    * [[merge]]'s: the commit covers every bucket an upsert routes to and
+    * every existing bucket a delete key routes to, and an absent target
+    * is created from `upserts` alone (nothing to delete from). The
+    * delete keys match the single key column. When `upserts` carries
+    * every layout column, the net change IS the delta of each bucket the
+    * commit appends to, so those buckets are not read. `cached` and
+    * `routeBy` as in [[Change]], `compactMaxFiles` as in [[write]]. */
   private def applyNet(
       spark: SparkSession,
       upserts: DataFrame,
@@ -1364,11 +1506,14 @@ object BucketedMergeSink {
       key: Seq[String],
       numBuckets: Int,
       retainVersions: Int,
-      cached: Boolean): Unit = {
+      cached: Boolean,
+      compactMaxFiles: Option[Int] = None,
+      routeBy: Option[DataFrame] = None): Unit = {
     require(deletes.isEmpty || key.size == 1,
       s"deletes route by a single key column, got ${key.mkString(",")}")
     write(spark, path, Some(Change(upserts, "upsert", key, key.head,
-      deletes = deletes, cached = cached)), numBuckets = numBuckets,
+      deletes = deletes, cached = cached, net = true, routeBy = routeBy)),
+      compactMaxFiles = compactMaxFiles, numBuckets = numBuckets,
       retainVersions = retainVersions): Unit
   }
 
@@ -1377,7 +1522,10 @@ object BucketedMergeSink {
     * change, dropped from the slice before the merge plan runs on it.
     * `cached`: the caller persisted the frame `rows` and `deletes` derive
     * from, so the write reads through that one cache instead of building
-    * a second copy of the same rows. */
+    * a second copy of the same rows. `net`: the change is
+    * [[applyNet]]'s. `routeBy`: a frame of layout keys covering every key
+    * of `rows` and `deletes`, routed instead of them — so the routing
+    * job need not evaluate `rows`. */
   private[graft] final case class Change(
       rows: DataFrame,
       loadType: String,
@@ -1386,7 +1534,9 @@ object BucketedMergeSink {
       excluded: Seq[String] = Nil,
       scd2Ts: String = "",
       deletes: Option[DataFrame] = None,
-      cached: Boolean = false) {
+      cached: Boolean = false,
+      net: Boolean = false,
+      routeBy: Option[DataFrame] = None) {
     // the column the merge matches on: a delete's id, else the key
     def mergeKey: Seq[String] = if (loadType == "delete") Seq(identifier) else key
     // the delete ids — a delete batch, or a net change's delete keys
@@ -1398,25 +1548,44 @@ object BucketedMergeSink {
     * columns; empty = none) and the `compactMaxFiles` bound land in ONE
     * version through [[rewriteBuckets]]. Every version a merge,
     * [[deleteWhere]], [[compact]] or a [[graft.core.Derived.Load]] makes
-    * is planned here, so there is one purge rule and one compaction rule.
+    * is planned here, so there is one purge rule, one compaction rule and
+    * one fold rule.
     *
-    * The commit rewrites the union of
+    * The commit covers the union of
     *   - the buckets the change routes to: an upsert/update/scd2 row's
     *     bucket (created if need be), a delete id's existing bucket, or
     *     every live bucket when a delete's identifier is not the layout
     *     key;
     *   - the buckets holding rows the purge matches, found by a filtered
-    *     scan of the [[purgeDiscoveryBuckets]] — the same `distinct`
-    *     job as the routing, so discovery costs no job of its own;
-    *   - with a compaction bound, every other live bucket with more
-    *     than `compactMaxFiles` data files.
-    * It writes the merge of the rewritten slice less the rows where the
-    * purge holds (a null predicate is no match, SQL DELETE semantics).
+    *     scan of the [[purgeDiscoveryBuckets]] — the same counting job as
+    *     the routing, so discovery costs no job of its own;
+    *   - with a compaction bound, every live bucket whose base dir holds
+    *     more than `compactMaxFiles` data files; a bare [[compact]] also
+    *     takes every bucket whose chain holds deltas.
+    *
+    * Each covered bucket either appends a DELTA to its chain or FOLDS:
+    * it is rewritten as a new base, the merge of its whole folded slice.
+    * A bucket folds when the load is scd2, the layout holds scd2 history
+    * ([[holdsVersions]]: several rows per key), or the write is a
+    * creation or a bare [[compact]]; when its chain's delta rows plus
+    * the rows this change routes to it reach half its base's rows, or it
+    * would hold [[maxDeltas]] deltas; when it is new, its base's row
+    * count is not recorded, its base is fragmented past the compaction
+    * bound, or the change cannot route (a foreign delete identifier).
+    * Otherwise it appends the commit's net change: the merged rows of
+    * every key the change names (so `excluded` and partial-column
+    * batches keep [[MergeSink]] semantics) and a key-only tombstone for
+    * every key a delete or the purge removes. An [[applyNet]] change
+    * that carries every layout column is itself those rows, so the
+    * buckets it appends to are not read at all. The purge removes the
+    * rows where it holds (a null predicate is no match, SQL DELETE
+    * semantics); the state between the merge and the purge is never
+    * published.
+    *
     * A write without a change, and a compacting one, shuffle by bucket
-    * so each rewritten bucket is one file. Creation filters its rows the
-    * same way. The state between the merge and the purge is never
-    * published. Returns the rewritten buckets (empty: nothing to do, no
-    * version committed). `numBuckets` is consulted at creation only. */
+    * so each written dir is one file. Returns the covered buckets (empty:
+    * nothing to do, no version committed). `numBuckets` is consulted at
+    * creation only. */
   private[graft] def write(
       spark: SparkSession,
       path: String,
@@ -1433,17 +1602,13 @@ object BucketedMergeSink {
           "bounds must be deterministic, never wall-clock")
       require(!c.rows.columns.contains(bucketCol),
         s"'$bucketCol' is the reserved bucket column of the layout — rename it in the batch")
+      require(!c.rows.columns.exists(Set(seqCol, tombCol)),
+        s"'$seqCol' and '$tombCol' are reserved delta columns of the layout — rename them in the batch")
     }
     require(retainVersions >= 0,
       s"retainVersions must be >= 0 (0 = the layout's persisted value), got $retainVersions")
     val fs = fsOf(spark, path)
-    // the rows a commit writes: less the purge matches, tagged with their
-    // layout bucket, shuffled to one file per bucket where asked
-    def output(rows: DataFrame, pred: Option[org.apache.spark.sql.Column],
-        key: Seq[String], n: Int): DataFrame = {
-      val out = pred.fold(rows)(p => rows.filter(!p)).withColumn(bucketCol, bucketExpr(key, n))
-      if (change.isEmpty || compactMaxFiles.nonEmpty) out.repartition(col(bucketCol)) else out
-    }
+    val oneFilePerDir = change.isEmpty || compactMaxFiles.nonEmpty
 
     if (!isBucketed(spark, path)) {
       val c = change.getOrElse(throw new IllegalArgumentException(
@@ -1480,8 +1645,9 @@ object BucketedMergeSink {
       // the same retryable ConcurrentWriteException (and on retry converges,
       // since the winner established the layout)
       val all = (0 until numBuckets).toSet
-      rewriteBuckets(fs, path, output(rows, pred, c.key, numBuckets), all, 0L,
-        Map.empty, retain)
+      rewriteBuckets(fs, path,
+        pred.fold(rows)(p => rows.filter(!p)).withColumn(bucketCol, bucketExpr(c.key, numBuckets)),
+        all, Set.empty, oneFilePerDir, 0L, Map.empty, retain)
       return all.toSeq.sorted
     }
 
@@ -1528,17 +1694,25 @@ object BucketedMergeSink {
     // (MergeSink casts batch values to the target type on output) must
     // be cast BEFORE hashing or it routes to the wrong bucket
     val tType = meta.schema.fields.map(f => f.name -> f.dataType).toMap
+    def keysOf(df: DataFrame) = df.select(meta.key.map(k => col(k).cast(tType(k)).as(k)): _*)
+    // the single key column of a frame of delete ids, cast and non-null
+    def idsOf(ids: DataFrame, identifier: String) = {
+      val k = meta.key.head
+      ids.select(col(MergeSink.deleteIdColumn(ids, identifier)).cast(tType(k)).as(k))
+        .filter(col(k).isNotNull)
+    }
     // each frame that routes buckets, tagged whether the bucket must
     // already exist (delete ids route by MergeSink.delete's id column; a
     // purge match lives in a live bucket by construction)
     def bucketsOf(df: DataFrame, exprs: Seq[org.apache.spark.sql.Column], existing: Boolean) =
-      df.select(bucketOf(exprs, n).as(bucketCol), lit(existing))
+      df.select(bucketOf(exprs, n).as(bucketCol), lit(existing).as("existing"))
     def byId(df: DataFrame, identifier: String) = bucketsOf(df,
       Seq(col(MergeSink.deleteIdColumn(df, identifier)).cast(tType(identifier))), true)
     val routed: Seq[DataFrame] = change.toSeq.flatMap { c =>
-      if (c.loadType == "delete") Seq(byId(c.rows, c.identifier))
-      else bucketsOf(c.rows, c.key.map(k => col(k).cast(tType(k))), false) +:
-        c.deletes.map(byId(_, c.identifier)).toSeq
+      c.routeBy.map(r => Seq(bucketsOf(keysOf(r), meta.key.map(col), false))).getOrElse(
+        if (c.loadType == "delete") Seq(byId(c.rows, c.identifier))
+        else bucketsOf(c.rows, c.key.map(k => col(k).cast(tType(k))), false) +:
+          c.deletes.map(byId(_, c.identifier)).toSeq)
     }
     // the purge's discovery: the filtered scan of every bucket that can
     // hold a match — pruned to the key's buckets when the predicate pins
@@ -1562,20 +1736,41 @@ object BucketedMergeSink {
       canPrune && !c.cached && c.rows.storageLevel == StorageLevel.NONE)
     if (ownPersist) change.get.rows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // (bucket, must exist) pairs: ≤ 2·numBuckets rows to collect, in
-      // one job for the routing and the purge discovery together
-      val touched: Seq[(Int, Boolean)] =
-        if (!canPrune) mapping.keys.toSeq.map(_ -> true)
+      // the rows the change and the purge route to each bucket: ≤
+      // 2·numBuckets counts to collect, in one job for the routing and
+      // the purge discovery together
+      val routedRows: Map[Int, Long] =
+        if (!canPrune) mapping.keys.map(_ -> 0L).toMap
         else (routed ++ found).reduceOption(_ union _).toSeq
-          .flatMap(_.distinct().collect().map(r => r.getInt(0) -> r.getBoolean(1)))
-      val hit = touched.collect { case (b, existing) if !existing || mapping.contains(b) => b }.toSet
-      // `compact: true` folds the untouched fragmented buckets into the
-      // same commit; the touched ones are rewritten anyway
-      val rewritten = hit ++ compactMaxFiles.toSeq.flatMap(fragmented(fs, path, mapping -- hit, _))
+          .flatMap(_.groupBy(bucketCol, "existing").count().collect()
+            .map(r => (r.getInt(0), r.getBoolean(1), r.getLong(2))))
+          .collect { case (b, existing, k) if !existing || mapping.contains(b) => b -> k }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+      val bareCompact = change.isEmpty && compactMaxFiles.nonEmpty
+      val history = change.exists(_.loadType == "scd2") || holdsVersions(meta)
+      // the fold rule (scaladoc above), before the compaction bound
+      def folds(b: Int): Boolean = !canPrune || history || (mapping.get(b) match {
+        case None => true
+        case Some(c) => c.base.rows < 0 || c.deltas.size + 1 >= maxDeltas ||
+          2 * (c.deltas.map(_.rows).sum + routedRows(b)) >= c.base.rows
+      })
+      val ruleFolds = routedRows.keySet.filter(folds)
+      // a bare compact folds every chain; any compaction folds the
+      // buckets whose base is fragmented
+      val compacted = compactMaxFiles.toSeq.flatMap(fragmented(fs, path, mapping -- ruleFolds, _)) ++
+        (if (bareCompact) mapping.collect { case (b, c) if c.deltas.nonEmpty => b } else Nil)
+      val rewritten = routedRows.keySet ++ compacted
       if (rewritten.isEmpty) return Nil
+      val folded = ruleFolds ++ compacted
+      val appended = rewritten -- folded
+      def in(bs: Set[Int]) = col(bucketCol).isin(bs.toSeq: _*)
 
-      // the rewritten slice of the target: only its leaf dirs are listed
-      val slice = readDirs(spark, path, meta, mapping, rewritten.toSeq)
+      // an applyNet change with every layout column is its own delta:
+      // only the folding buckets are read and merged
+      val direct = change.exists(c => c.net && pred.isEmpty &&
+        meta.schema.fieldNames.forall(c.rows.columns.contains))
+      // the read slice of the target: only its leaf dirs are listed
+      val slice = readDirs(spark, path, meta, mapping, (if (direct) folded else rewritten).toSeq)
       val merged = change.fold(slice) { c =>
         val target = c.deletes.fold(slice)(d => MergeSink.delete(slice, d,
           c.identifier, broadcastIds = MergeSink.fitsBroadcast(d)))
@@ -1589,15 +1784,63 @@ object BucketedMergeSink {
               broadcastBatch = bcast)
         }
       }
-      // re-derive each output row's bucket from the LAYOUT key (surviving
-      // target rows keep their bucket; inserts hash to a touched one).
-      // Rewritten buckets move to the new commit (those merged or purged
-      // to zero rows drop out)
-      rewriteBuckets(fs, path, output(merged, pred, meta.key, n),
-        rewritten, base, mapping, meta.retainVersions)
+      // re-derive each merged row's bucket from the LAYOUT key (surviving
+      // target rows keep their bucket; inserts hash to a covered one)
+      val tagged = merged.withColumn(bucketCol, bucketExpr(meta.key, n))
+      val kept = pred.fold(tagged)(p => tagged.filter(!p))
+      val rows =
+        if (appended.isEmpty) kept
+        else {
+          // key-only rows marking a removed key
+          def tombstones(keys: DataFrame) = keys.select(meta.schema.fields.toSeq.map(f =>
+            if (meta.key.contains(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)) :+ lit(true).as(tombCol): _*)
+          val after = tagged.filter(in(appended))
+          // the new rows of every key the batch names: an applyNet change
+          // with every layout column is them (cast to the layout, as the
+          // merge casts it), else the merged rows of the batch's keys
+          val restated = change.filter(_.loadType != "delete").map { c =>
+            if (direct) MergeSink.dedupeBatch(c.rows, meta.key).select(
+              meta.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+            else pred.fold(after)(p => after.filter(!p)).alias("a")
+              .join(broadcastIfSmall(keysOf(c.rows)).alias("k"), keyEq(meta.key, "a", "k"), "left_semi")
+          }
+          val deleted = change.flatMap(c => c.deleteIds.map(ids => idsOf(ids, c.identifier).distinct()))
+          // a delete key no restated row names becomes a tombstone; one
+          // pass over the restated rows (a signing, for an index)
+          val named = (restated, deleted) match {
+            case (Some(r), Some(d)) =>
+              val k = meta.key.head
+              Some(d.alias("d").join(r.withColumn("__u", lit(true)).alias("u"),
+                col(s"d.$k") === col(s"u.$k"), "full_outer")
+                .select(meta.schema.fieldNames.toSeq.map(f =>
+                  (if (f == k) coalesce(col(s"u.$f"), col(s"d.$f")) else col(s"u.$f")).as(f)) :+
+                  col("__u").isNull.as(tombCol): _*))
+            case _ => restated.map(_.withColumn(tombCol, lit(false))).orElse(deleted.map(tombstones))
+          }
+          // and a tombstone for every key the purge removes
+          val purged = pred.map(p => tombstones(keysOf(after.filter(p))))
+          val delta = (named ++ purged).map(_.withColumn(bucketCol, bucketExpr(meta.key, n)))
+            .reduce(_ unionByName _)
+            .filter(in(appended)).withColumn(seqCol, lit(base + 1))
+          if (folded.isEmpty) delta
+          else kept.filter(in(folded))
+            .withColumn(tombCol, lit(null).cast(BooleanType))
+            .withColumn(seqCol, lit(null).cast(LongType))
+            .unionByName(delta)
+        }
+      rewriteBuckets(fs, path, rows, rewritten, appended, oneFilePerDir, base, mapping,
+        meta.retainVersions)
       rewritten.toSeq.sorted
     } finally if (ownPersist) change.get.rows.unpersist(false)
   }
+
+  /** True when the layout carries [[MergeSink.scd2]]'s version columns:
+    * it may hold several rows of one key, so a key-only tombstone or a
+    * delta naming a key cannot stand for the key's rows, and every write
+    * folds. */
+  private def holdsVersions(meta: Meta): Boolean =
+    Seq("valid_from", "valid_to", "is_current").forall(meta.schema.fieldNames.contains)
 
   /** `condition` as a purge predicate over rows of `schema` (None when
     * empty): a row matches where it holds, and a null is no match.
@@ -1618,14 +1861,14 @@ object BucketedMergeSink {
       pred
     }
 
-  /** The buckets of `mapping` whose live dir holds more than `maxFiles`
+  /** The buckets of `mapping` whose base dir holds more than `maxFiles`
     * data files. Lists only referenced leaf dirs, in parallel across a
     * bounded thread pool — one driver-side listing per bucket was a
     * serial bottleneck at 1k+ buckets. */
-  private def fragmented(fs: FileSystem, path: String, mapping: Map[Int, String],
+  private def fragmented(fs: FileSystem, path: String, mapping: Map[Int, Chain],
       maxFiles: Int): Seq[Int] =
     listParallel(mapping.toSeq) { case (b, c) =>
-      val files = fs.listStatus(leafDir(path, c, b))
+      val files = fs.listStatus(leafDir(path, c.base.commit, b))
         .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith(".")) // "."-files: local-fs .crc checksums
       Option.when(files > maxFiles)(b)
@@ -1633,25 +1876,28 @@ object BucketedMergeSink {
 
   // ------------------------------------------------------------ compact
 
-  /** Compact fragmented bucket directories down to one file each.
+  /** Fold every chain and compact fragmented bases down to one file
+    * each.
     *
-    * Each merge rewrites a touched bucket with the write parallelism of
-    * the merge job, so a bucket directory holds up to
-    * `spark.sql.shuffle.partitions` part files per rewrite — cheap at
+    * Each merge writes a bucket's new base or delta with the write
+    * parallelism of the merge job, so a dir holds up to
+    * `spark.sql.shuffle.partitions` part files per write — cheap at
     * merge time (no extra shuffle on the latency-sensitive load path),
     * but after many micro-batches the small files tax every later scan
-    * (file-listing + per-file open cost dominates at 100 TB). This is
-    * the standard LSM split: fast fragmented writes, background
-    * compaction.
+    * (file-listing + per-file open cost dominates at 100 TB), and every
+    * delta a chain holds is folded on every read. This is the standard
+    * LSM split: fast small writes, background compaction.
     *
-    * A compaction-only [[write]]: buckets with more than `maxFiles` data
-    * files are rewritten as ONE job into a fresh commit dir —
+    * A compaction-only [[write]]: every bucket whose chain holds deltas,
+    * and every bucket whose base holds more than `maxFiles` data files,
+    * folds into a new base, as ONE job into a fresh commit dir —
     * `repartition($"gbucket")` so each bucket lands in exactly one task
     * (→ exactly one output file per bucket) — and published by the same
     * commit step as a merge, [[rewriteBuckets]]: readers see the target
-    * fully fragmented or fully compacted, never half. Content is
-    * row-identical. A load with `compact: true` folds the same rule into
-    * its own commit. Returns the compacted bucket ids. */
+    * fully chained or fully compacted, never half. Content is
+    * row-identical. A load with `compact: true` writes every dir as one
+    * file and folds its fragmented bases in its own commit, but leaves
+    * short chains be. Returns the compacted bucket ids. */
   def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Int] =
     write(spark, path, None, compactMaxFiles = Some(maxFiles))
 
@@ -1662,11 +1908,12 @@ object BucketedMergeSink {
     * layout key (the GDPR `user_id = X` shape, [[purgeDiscoveryBuckets]]);
     * for arbitrary predicates (TTL) it covers every live bucket with
     * parquet row-group statistics pruning inside — then only those
-    * buckets rewrite — O(touched buckets), the same asymmetry as the
-    * merge. Both scans read through one [[snapshot]], and the rewrite
-    * commits one version through [[rewriteBuckets]]: a bucket the purge
-    * empties drops from the manifest (and its dir is GC'd) exactly like
-    * an id-based delete that empties it. A load with `delete_where:`
+    * buckets change — each appends a delta of tombstones or folds,
+    * [[write]]'s rule — O(touched buckets), the same asymmetry as the
+    * merge. Both scans read through one [[snapshot]], and the commit
+    * is one version through [[rewriteBuckets]]: a folded bucket the
+    * purge empties drops from the manifest (and its dir is GC'd) exactly
+    * like an id-based delete that empties it. A load with `delete_where:`
     * folds the same rule into its own commit. A predicate naming a
     * column the target lacks refuses before any write. Returns the
     * rewritten bucket ids (empty = nothing matched, no version

@@ -23,14 +23,14 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
   private def tmpTarget(): String =
     Files.createTempDirectory("graft-bms").toString + "/t"
 
-  /** Every data file of a bucket's LIVE dir as name -> (size, mtime). */
+  /** Every data file of a bucket's LIVE dirs (its chain's base and
+    * deltas) as commit/name -> (size, mtime). */
   private def bucketState(path: String, bucket: Int): Map[String, (Long, Long)] =
-    BucketedMergeSink.bucketDataDir(spark, path, bucket) match {
-      case None => Map.empty
-      case Some(d) =>
-        new File(d).listFiles().filter(_.isFile)
-          .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    }
+    BucketedMergeSink.bucketDataDirs(spark, path, bucket).flatMap { d =>
+      val dir = new File(d)
+      dir.listFiles().filter(_.isFile).map(f =>
+        s"${dir.getParentFile.getName}/${f.getName}" -> (f.length(), f.lastModified()))
+    }.toMap
 
   private def seed(n: Int): DataFrame =
     (1 to n).map(i => (i.toLong, s"name$i", i * 10L)).toDF("id", "name", "v")
@@ -473,7 +473,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set("spark.sql.shuffle.partitions", sp)
     }
     def dataFiles(b: Int): Int =
-      bucketState(path, b).count(f => !f._1.startsWith(".") && !f._1.startsWith("_"))
+      bucketState(path, b).keys.map(_.split('/').last)
+        .count(f => !f.startsWith(".") && !f.startsWith("_"))
     val pre = (0 until 4).map(b => b -> bucketState(path, b)).toMap
     val fragmented = (0 until 4).filter(b => dataFiles(b) > 1)
     assert(fragmented.nonEmpty, s"merge should fragment, got ${pre.view.mapValues(_.size).toMap}")
@@ -543,7 +544,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       BucketedMergeSink.read(spark, path).orderBy("id"), afterB.orderBy("id"))
     // the loser's data dir was rolled back on the spot: data/ holds only
     // manifest-referenced commit dirs
-    val live = BucketedMergeSink.manifest(spark, path).values.toSet
+    val live = BucketedMergeSink.manifest(spark, path).values.flatMap(_.commits).toSet
     val dirs = new File(path, "data").listFiles().filter(_.isDirectory)
       .map(_.getName).toSet
     assert(dirs == live, s"loser left a data dir behind: $dirs vs live $live")
@@ -607,7 +608,7 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     // merge alone, and data/ holds only manifest-referenced commit dirs
     val afterMerge = localized(MergeSink.upsert(pre, batch, Seq("id")))
     assert(canon(BucketedMergeSink.read(spark, path)) == canon(afterMerge))
-    val live = BucketedMergeSink.manifest(spark, path).values.toSet
+    val live = BucketedMergeSink.manifest(spark, path).values.flatMap(_.commits).toSet
     val dirs = new File(path, "data").listFiles().filter(_.isDirectory)
       .map(_.getName).toSet
     assert(dirs == live, s"the purge left a data dir behind: $dirs vs live $live")
@@ -1273,7 +1274,8 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set("spark.sql.shuffle.partitions", sp)
     }
     def dataFiles(b: Int): Int =
-      bucketState(path, b).count(f => !f._1.startsWith(".") && !f._1.startsWith("_"))
+      bucketState(path, b).keys.map(_.split('/').last)
+        .count(f => !f.startsWith(".") && !f.startsWith("_"))
     assert(dataFiles(frag) > 1, "the frag bucket should hold several files")
     (0 until n).filterNot(_ == frag).foreach(b => assert(dataFiles(b) == 1))
     val manBefore = BucketedMergeSink.manifest(spark, path)
@@ -1288,11 +1290,17 @@ class BucketedMergeSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(BucketedMergeSink.manifestVersions(spark, path).last == vBefore + 1,
       "the merge, the purge and the compaction land in one version")
     val man = BucketedMergeSink.manifest(spark, path)
+    // every dir of a changed entry is one file; each entry's newest dir
+    // is the one commit's
+    def filesPerDir(b: Int): Seq[Int] =
+      BucketedMergeSink.bucketDataDirs(spark, path, b).map(d => new File(d).listFiles()
+        .count(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_")))
     Seq(routed, purged, frag).foreach { b =>
       assert(man(b) != manBefore(b), s"bucket $b should be rewritten")
-      assert(dataFiles(b) == 1, s"rewritten bucket $b should be one file")
+      assert(filesPerDir(b).forall(_ == 1), s"rewritten bucket $b should be one file per dir")
     }
-    assert(man(routed) == man(purged) && man(purged) == man(frag), "one commit dir")
+    assert(Seq(routed, purged, frag).map(b => man(b).dirs.last.commit).distinct.size == 1,
+      "one commit dir")
     assert(man(clean) == manBefore(clean), "the clean bucket was remapped")
     assert(bucketState(path, clean) == stateBefore(clean), "the clean bucket was rewritten")
     assert(canon(BucketedMergeSink.read(spark, path)) ==

@@ -79,7 +79,8 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
     // the registered target view reads the LOGICAL relation (no gbucket)
     assert(spark.table("tgt_bkt").columns.toSeq == Seq("id", "v"))
     // second, incremental run: one new id — only its bucket is remapped
-    def state: Map[Int, String] = graft.sink.BucketedMergeSink.manifest(spark, path)
+    def state: Map[Int, graft.sink.BucketedMergeSink.Chain] =
+      graft.sink.BucketedMergeSink.manifest(spark, path)
     runner.run("p", Map("maxid" -> "4")) // ids 1-3 unchanged, 4 is new...
     // but upsert re-merges ids 1-4: touched = buckets of 1,2,3,4. To pin
     // the one-bucket claim through the YAML surface, run a delete stage
@@ -1070,12 +1071,13 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
         s"run $i: the index must equal a fresh signing of the target")
       assert(kll.map(_.head) == (1 to i + 1).map(_.toString),
         s"run $i: one KLL row per version, got $kll")
-      // every rewritten bucket is one file: compact folded into the commit
+      // every dir of every entry is one file: compact folded into the commit
       graft.sink.BucketedMergeSink.manifest(spark, s"$root/tgt_fused").keys.foreach { b =>
-        val dir = new java.io.File(graft.sink.BucketedMergeSink
-          .bucketDataDir(spark, s"$root/tgt_fused", b).get)
-        assert(dir.listFiles().count(f => f.getName.startsWith("part-")) == 1,
-          s"run $i: bucket $b is fragmented")
+        graft.sink.BucketedMergeSink.bucketDataDirs(spark, s"$root/tgt_fused", b).foreach { d =>
+          val dir = new java.io.File(d)
+          assert(dir.listFiles().count(f => f.getName.startsWith("part-")) == 1,
+            s"run $i: bucket $b is fragmented")
+        }
       }
     }
     assert(graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_fused")
@@ -1106,8 +1108,9 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
     def referenced(root: String): Set[String] = {
       val p = s"$root/tgt_fused"
       graft.sink.BucketedMergeSink.manifestVersions(spark, p).flatMap { v =>
+        // every dir of each entry's chain: `bucket <TAB> commit:rows ...`
         scala.io.Source.fromFile(f"$p/_graft_manifest/v$v%09d").getLines()
-          .filter(_.nonEmpty).map(_.split("\t")(1))
+          .filter(_.nonEmpty).flatMap(_.split("\t").tail.map(_.split(":").head))
       }.toSet
     }
     run(crashed, 0)
@@ -1272,11 +1275,11 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
     val man = graft.sink.BucketedMergeSink.manifest(spark, s"$root/tgt_cmp")
     assert(man.nonEmpty)
     man.keys.foreach { b =>
-      val d = graft.sink.BucketedMergeSink
-        .bucketDataDir(spark, s"$root/tgt_cmp", b).get
-      val n = new java.io.File(d).listFiles().count(f => f.isFile &&
-        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      assert(n == 1, s"bucket $b: expected one data file after compact, got $n")
+      graft.sink.BucketedMergeSink.bucketDataDirs(spark, s"$root/tgt_cmp", b).foreach { d =>
+        val n = new java.io.File(d).listFiles().count(f => f.isFile &&
+          !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+        assert(n == 1, s"bucket $b: expected one data file per dir after compact, got $n")
+      }
     }
     assert(spark.table("tgt_cmp").count() == 199)
     // compact on a FLAT target is a config error, not a silent no-op —
@@ -1867,11 +1870,12 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
     // three runs of merge-per-sync would fragment the index; lockstep
     // compaction must leave every live index bucket at one data file
     graft.sink.BucketedMergeSink.manifest(spark, idx).keys.foreach { b =>
-      val dir = graft.sink.BucketedMergeSink.bucketDataDir(spark, idx, b).get
-      val files = new java.io.File(dir).listFiles()
-        .count(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))
-      assert(files == 1, s"index bucket $b has $files data files after compact")
+      graft.sink.BucketedMergeSink.bucketDataDirs(spark, idx, b).foreach { dir =>
+        val files = new java.io.File(dir).listFiles()
+          .count(f => f.isFile && !f.getName.startsWith(".") &&
+            !f.getName.startsWith("_"))
+        assert(files == 1, s"index bucket $b has $files data files in a dir after compact")
+      }
     }
     import spark.implicits._
     val stored = graft.sink.BucketedMergeSink.readPostings(spark, idx)
@@ -1880,5 +1884,60 @@ class RunnerSpec extends AnyFunSuite with SparkTestBase {
       graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_ci"), idCol = "doc_id")
       .as[(Long, Int, Long)].collect().toSet
     assert(stored == expected, "compaction must not change index contents")
+  }
+
+  test("compact: true + minhash_index: the index compacts in its sync's own " +
+    "commit — exactly one index version per run, equal to a fresh signing") {
+    Seq((1L, "alpha beta gamma one"), (2L, "delta epsilon zeta two"),
+      (3L, "eta theta iota three"), (4L, "kappa lambda mu four"),
+      (5L, "nu xi omicron five"), (6L, "pi rho sigma six"))
+      .toDF("doc_id", "text").createOrReplaceTempView("cx_src")
+    val root = Files.createTempDirectory("graft-runner-cx").toString
+    val ry =
+      s"""pypelines:
+         |  p: [scx]
+         |pypes:
+         |  scx:
+         |    extract_query: "SELECT doc_id, text FROM cx_src WHERE doc_id <= {maxid}"
+         |    target_table: tgt_cx
+         |    type: upsert
+         |    key: [doc_id]
+         |    buckets: 2
+         |    retain_versions: 3
+         |    minhash_index: tgt_cx_minhash
+         |    compact: true
+         |""".stripMargin
+    val runner = new Runner(spark, PipelineSpec.fromYaml(ry),
+      placeholders = Map("maxid" -> "2"), targetRoot = root)
+    val idx = s"$root/tgt_cx_minhash"
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val sp = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      // AQE off + several shuffle partitions: an uncompacted index write
+      // fragments its buckets, so a separate compaction would commit
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "6")
+      Seq("2", "4", "6").zipWithIndex.foreach { case (maxid, i) =>
+        runner.run("p", Map("maxid" -> maxid))
+        assert(graft.sink.BucketedMergeSink.manifestVersions(spark, idx).last == i + 1L,
+          s"run $i must add exactly one index version")
+        val stored = graft.sink.BucketedMergeSink.readPostings(spark, idx)
+          .select("id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
+        val fresh = graft.ops.Dedup.minhashBandIndex(
+          graft.sink.BucketedMergeSink.read(spark, s"$root/tgt_cx"), idCol = "doc_id")
+          .as[(Long, Int, Long)].collect().toSet
+        assert(stored == fresh, s"run $i: the index must equal a fresh signing")
+        graft.sink.BucketedMergeSink.manifest(spark, idx).keys.foreach { b =>
+          graft.sink.BucketedMergeSink.bucketDataDirs(spark, idx, b).foreach { d =>
+            val files = new java.io.File(d).listFiles().count(f => f.isFile &&
+              !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+            assert(files == 1, s"run $i: index bucket $b has a dir of $files files")
+          }
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions", sp)
+    }
   }
 }

@@ -1205,7 +1205,7 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     val man = graft.sink.BucketedMergeSink.manifest(spark, target)
     assert(man.nonEmpty)
     man.keys.foreach { b =>
-      val d = graft.sink.BucketedMergeSink.bucketDataDir(spark, target, b).get
+      val Seq(d) = graft.sink.BucketedMergeSink.bucketDataDirs(spark, target, b)
       val n = new java.io.File(d).listFiles()
         .count(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
       assert(n == 1, s"bucket $b should be compacted to one data file, has $n")
