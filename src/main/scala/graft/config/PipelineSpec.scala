@@ -39,7 +39,8 @@ final case class StageSpec(
     buckets: Int = 0, // >0: hash-bucketed target (BucketedMergeSink) — each
                       // load rewrites only the bucket dirs the batch touches
     compact: Boolean = false, // bucketed targets only: collapse fragmented
-                              // bucket dirs to one file after the load
+                              // bucket dirs to one file in the load's
+                              // own commit
     compactMaxFiles: Int = 1, // compact buckets exceeding this many data
                               // files (the LSM threshold: higher = less
                               // write amplification, more small files)

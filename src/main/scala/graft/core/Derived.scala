@@ -12,7 +12,7 @@ import graft.sink.{BucketedMergeSink, MergeSink}
   * catch-up; [[Derived.Load]] holds every rule about WHEN those
   * catch-ups run and what a load must satisfy first, once for all
   * seven — `Runner.load` (the stage keys) and
-  * `Streams.streamingStage` (one load per micro-batch) both go
+  * `Streams.streamingMerge` (one load per micro-batch) both go
   * through it. `stageKey` names the YAML key that declares the case;
   * `PipelineSpec` parses that key and its tuning keys straight into
   * the case, so each default below is the YAML default too. */

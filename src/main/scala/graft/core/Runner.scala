@@ -244,10 +244,10 @@ final class Runner(
     // the merge key (graft.sink.BucketedMergeSink): an incremental load
     // reads and rewrites only the bucket dirs its keys touch instead of
     // the whole target — the config-level switch for the 100 TB load
-    // shape. Without it, mergeIntoParquet still auto-delegates when the
-    // path already holds a bucketed layout, so a stage can't silently
-    // flatten a target created with buckets. Every derived artifact,
-    // refusal and guard rides the shared load path (Derived.Load).
+    // shape. Without it, Derived.Load still takes the bucketed write
+    // when the path already holds a bucketed layout, so a stage can't
+    // silently flatten a target created with buckets. Every derived
+    // artifact, refusal and guard rides that shared load path.
     Derived.Load(s"stage ${stage.name}", path, stage.key,
       stage.identifier, stage.loadType, stage.fieldsExcludedFromUpdate,
       stage.buckets, stage.retainVersions, stage.derived.map(_.at(tablePath(ph))),

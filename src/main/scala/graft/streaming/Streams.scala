@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+
+import graft.core.Derived
+import graft.sink.{BucketedMergeSink, MergeSink}
 
 /** Structured Streaming surface (SURVEY §2 Layer B "Streaming").
   *
@@ -370,23 +374,51 @@ object Streams {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
-  /** Streaming merge: the reference's batch loop (extract → merge)
-    * as a Structured Streaming sink. `foreachBatch` hands every
-    * micro-batch to the SAME [[graft.sink.MergeSink.mergeIntoParquet]]
-    * the batch pipeline uses, so a streaming deployment gets identical
-    * merge semantics — batch dedupe, column exclusions, atomic
-    * temp-swap commit. Re-delivery safe: upserting/updating the same
-    * batch twice converges to the same target, so at-least-once
-    * micro-batch replay (after a checkpoint recovery) is idempotent.
-    * Caller starts the returned writer with its own
-    * `checkpointLocation`.
+  /** Streaming merge: the reference's batch loop (extract → merge) as
+    * a Structured Streaming sink. Every micro-batch is ONE load of the
+    * code path a pipeline stage runs ([[graft.core.Derived.Load]]):
+    * catch-up, drift guards, merge, catch-up again, `outboxKeep`
+    * compaction. A streaming deployment therefore gets the stage's
+    * merge semantics (batch dedupe, column exclusions, atomic commit),
+    * its refusals and its derived artifacts, and a micro-batch into a
+    * bucketed target commits exactly one version. Caller starts the
+    * returned writer with its own `checkpointLocation`.
     *
-    * `numBuckets > 0` stores the target hash-bucketed on the key
+    * Layout: with `numBuckets = 0` and no layout at `path` the target
+    * is flat parquet and every batch is a full read-merge-write (fine
+    * for modest targets / coarse cadences). `numBuckets > 0`, or an
+    * existing bucketed layout, stores it hash-bucketed on the key
     * ([[graft.sink.BucketedMergeSink]]): each micro-batch then reads
-    * and rewrites ONLY the buckets it touches instead of the whole
-    * target — the shape that holds when the target dwarfs the batch.
-    * With the default 0 the target is flat parquet and every batch is a
-    * full read-merge-write (fine for modest targets / coarse cadences).
+    * and rewrites ONLY the buckets it touches — the shape that holds
+    * when the target dwarfs the batch. `retainVersions` is persisted
+    * into the layout when the first micro-batch creates it (0: the
+    * layout's own, 1 at creation).
+    *
+    * `derived` keeps any combination of derived artifacts — change
+    * feed, postings indexes, profiles ([[graft.core.Derived]]) — in
+    * lockstep per micro-batch: continuous ingest whose corpus stays
+    * incrementally near-dup-queryable, profiled and replicable without
+    * ever re-signing or re-scanning it. The feed here is version-keyed
+    * (`batch_id=<version>`), unlike [[streamingMergeWithFeed]]'s
+    * micro-batch-keyed one; an scd2 stream's feed pairs rows on (key,
+    * `valid_from`), as a YAML stage's does.
+    *
+    * Exactly-once under at-least-once foreachBatch, with no extra
+    * machinery: upserting/updating the same batch twice converges to
+    * the same target, and every catch-up is keyed on the TARGET's
+    * deterministic manifest versions, not on batchId — a replayed
+    * micro-batch re-merges idempotently (content-identical new
+    * version), its snapshot diff is empty, and versions already
+    * applied are marker-skipped. A crash between a trigger's merge and
+    * its catch-up self-heals at the next trigger, BEFORE that trigger's
+    * merge can slide the retention window past the pending version.
+    *
+    * Refusals land at construction, far from the first micro-batch:
+    * the stream needs a key, a known load type, `scd2TsOf` for scd2 and
+    * one key column for deletes; everything else is the YAML stage's
+    * rule — artifacts and `compactEvery` need a bucketed target, feeds
+    * and indexes `retainVersions >= 2`, indexes a single-column key,
+    * indexes and profiles no scd2.
     *
     * Backlog sizing: the first micro-batch after a fresh checkpoint is
     * the WHOLE backlog unless the source is throttled — set
@@ -403,6 +435,8 @@ object Streams {
       loadType: String = "upsert",
       excluded: Seq[String] = Nil,
       numBuckets: Int = 0,
+      retainVersions: Int = 0,
+      derived: Seq[Derived] = Nil,
       // scd2 only: batchId -> the batch's version timestamp (parsed by
       // to_timestamp). MUST be a pure deterministic function so an
       // at-least-once micro-batch replay stamps the SAME version bound
@@ -411,18 +445,37 @@ object Streams {
       // recovery. Typically batchId -> the batch's source watermark or
       // an external batch-metadata timestamp.
       scd2TsOf: Long => String = null,
-      // OPT-IN (default off): compactEvery = N runs BucketedMergeSink
-      // .compact inside foreachBatch on every Nth micro-batch — a
-      // synchronous whole-target small-file pass, i.e. a deliberate
-      // latency cliff on that one trigger in exchange for bounded
-      // files-per-bucket. Leave 0 and compact out-of-band if the
+      // OPT-IN (default off): compactEvery = N makes every Nth
+      // micro-batch a `compact: true` load — its one commit writes one
+      // file per written dir and folds the fragmented bases, bounding
+      // files-per-bucket at the cost of a latency cliff on that one
+      // trigger. Keyed on batchId (stable across replays): a replayed
+      // compacting batch compacts again, which is idempotent. Needs a
+      // bucketed target. Leave 0 and compact out-of-band if the
       // stream's latency SLO can't absorb the periodic spike.
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // fail at construction, not inside the first micro-batch: key.head
-    // on Nil, an unknown loadType, or a silently-partial composite
-    // delete key would otherwise surface as an obscure streaming-query
-    // death far from the call site
-    require(key.nonEmpty, "streamingMerge needs at least one key column")
+      compactEvery: Int = 0): DataStreamWriter[Row] = {
+    val load = streamLoad("streamingMerge", stream, path, key, loadType,
+      excluded, numBuckets, retainVersions, derived, scd2TsOf,
+      compacts = compactEvery > 0)
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      load.copy(scd2Ts = Option(scd2TsOf).fold("")(_(batchId)),
+        compactMaxFiles = Option.when(
+          compactEvery > 0 && batchId % compactEvery == compactEvery - 1)(1))
+        .run(batch.sparkSession, batch): Unit
+    }
+  }
+
+  /** The one load a streaming merge runs per micro-batch, refused at
+    * construction: key, load type, scd2 timestamp and delete key are
+    * the stream's own rules (a bad one would otherwise surface as an
+    * obscure streaming-query death far from the call site); the rest
+    * is [[graft.core.Derived.Load]]'s `validate` against the target as
+    * it is now. `compacts` validates `compact: true`'s rule. */
+  private def streamLoad(who: String, stream: DataFrame, path: String,
+      key: Seq[String], loadType: String, excluded: Seq[String],
+      numBuckets: Int, retainVersions: Int, derived: Seq[Derived],
+      scd2TsOf: Long => String, compacts: Boolean): Derived.Load = {
+    require(key.nonEmpty, s"$who needs at least one key column")
     require(Set("upsert", "update", "delete", "scd2")(loadType),
       s"unknown load type: $loadType (expected upsert/update/delete/scd2)")
     require(loadType != "scd2" || scd2TsOf != null,
@@ -431,29 +484,11 @@ object Streams {
     require(loadType != "delete" || key.size == 1,
       "delete streams key on exactly ONE identifier column " +
         s"(MergeSink.delete matches a single id), got ${key.mkString(", ")}")
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (numBuckets > 0) {
-          graft.sink.BucketedMergeSink.merge(
-            batch.sparkSession, batch, path, loadType, key,
-            identifier = key.head, excluded = excluded, numBuckets = numBuckets,
-            scd2Ts = if (loadType == "scd2") scd2TsOf(batchId) else "")
-          // inline small-file maintenance: each merge leaves up to
-          // write-parallelism files in every touched bucket, so a
-          // long-running stream fragments its target; compacting every
-          // N micro-batches bounds files-per-bucket at ~N×parallelism
-          // without paying a compaction on the per-batch latency path
-          // every trigger. Keyed on batchId (stable across replays):
-          // at-least-once replay of a compacting batch just re-compacts,
-          // which is idempotent. 0 disables.
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            graft.sink.BucketedMergeSink.compact(batch.sparkSession, path): Unit
-        } else
-          graft.sink.MergeSink.mergeIntoParquet(
-            batch.sparkSession, batch, path, loadType, key,
-            identifier = key.head, excluded = excluded,
-            scd2Ts = if (loadType == "scd2") scd2TsOf(batchId) else "")
-    }
+    val load = Derived.Load(who, path, key, identifier = key.head, loadType,
+      excluded, numBuckets, retainVersions, derived,
+      compactMaxFiles = Option.when(compacts)(1))
+    load.validate(stream.sparkSession, stream.columns.toSeq)
+    load
   }
 
   /** [[streamingMerge]] that ALSO materializes each micro-batch's CDC
@@ -461,7 +496,8 @@ object Streams {
     * insert / update_pre / update_post / delete) under
     * `feedPath/batch_id=<id>/` — the continuously-maintained input of
     * an incremental downstream consumer (a replicated table, a running
-    * aggregate, an audit trail).
+    * aggregate, an audit trail). The merge itself is the same one load
+    * per micro-batch (no derived artifacts, no compaction).
     *
     * Exactly-once feed under at-least-once foreachBatch, with no
     * transaction layer: the feed for a batch id is computed against the
@@ -503,28 +539,24 @@ object Streams {
       key: Seq[String],
       loadType: String = "upsert",
       excluded: Seq[String] = Nil,
-      numBuckets: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(key.nonEmpty, "streamingMergeWithFeed needs at least one key column")
-    require(Set("upsert", "update", "delete")(loadType),
-      s"unknown load type: $loadType (expected upsert/update/delete; " +
-        "an scd2 target carries its own history — read it with scd2AsOf)")
-    require(loadType != "delete" || key.size == 1,
-      "delete streams key on exactly ONE identifier column")
+      numBuckets: Int = 0): DataStreamWriter[Row] = {
+    require(loadType != "scd2", "streamingMergeWithFeed: an scd2 target " +
+      "carries its own history — read it with scd2AsOf")
+    val load = streamLoad("streamingMergeWithFeed", stream, path, key,
+      loadType, excluded, numBuckets, retainVersions = 0, derived = Nil,
+      scd2TsOf = null, compacts = false)
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val sink = graft.sink.BucketedMergeSink
       // epoch N's delta is batch_id=N+2; batch_id=1 is the bootstrap base
-      val dir = new org.apache.hadoop.fs.Path(feedPath, s"batch_id=${batchId + 2}")
+      val dir = new Path(feedPath, s"batch_id=${batchId + 2}")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def readTarget: Option[DataFrame] =
-        if (sink.isBucketed(spark, path)) {
-          val meta = sink.readMeta(spark, path)
-          if (meta.key.forall(batch.columns.contains))
-            Some(sink.readForKeys(spark, path, batch))
-          else Some(sink.read(spark, path))
-        } else if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-          Some(spark.read.parquet(path))
-        else None
+      val bucketed = BucketedMergeSink.isBucketed(spark, path)
+      // the whole pre-merge target, None when the stream creates it
+      def whole: Option[DataFrame] =
+        if (bucketed) Some(BucketedMergeSink.read(spark, path))
+        else Option.when(fs.exists(new Path(path)))(spark.read.parquet(path))
+      def inserts(df: DataFrame): DataFrame =
+        df.select((lit("insert").as("_op") +: df.columns.toSeq.map(col)): _*)
       // bootstrap: the first micro-batch into an EMPTY outbox bases the
       // feed at batch_id=1 — a marked all-inserts snapshot of the
       // pre-attach target (zero rows when the stream creates it), the
@@ -532,45 +564,35 @@ object Streams {
       // feed. Gated on "no batch partitions at all", so a later
       // compactOutbox pruning batch 1 never re-triggers it; atomic via
       // the shared stage-and-rename.
-      if (sink.outboxBatches(fs, feedPath).isEmpty) {
-        // base needs the WHOLE pre-attach target, not the keyed slice
-        val pre =
-          if (sink.isBucketed(spark, path)) sink.read(spark, path)
-          else if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-            spark.read.parquet(path)
-          else batch.limit(0)
-        sink.writeFeedBase(fs,
-          new org.apache.hadoop.fs.Path(feedPath, "batch_id=1")) { staged =>
-          pre.select((lit("insert").as("_op") +: pre.columns.toSeq.map(col)): _*)
+      if (BucketedMergeSink.outboxBatches(fs, feedPath).isEmpty)
+        BucketedMergeSink.writeFeedBase(fs, new Path(feedPath, "batch_id=1")) {
+          staged => inserts(whole.getOrElse(batch.limit(0)))
             .write.mode("overwrite").parquet(staged)
         }: Unit
-      }
-      if (!sink.isPublished(fs, dir)) {
-        val feed: DataFrame = (readTarget, loadType) match {
+      if (!BucketedMergeSink.isPublished(fs, dir)) {
+        // the feed diffs against the batch's own buckets when it carries
+        // the layout key
+        val target =
+          if (bucketed && BucketedMergeSink.readMeta(spark, path).key
+              .forall(batch.columns.contains))
+            Some(BucketedMergeSink.readForKeys(spark, path, batch))
+          else whole
+        val feed: DataFrame = (target, loadType) match {
           case (None, "upsert") => // bootstrap: the whole batch inserts
-            graft.sink.MergeSink.dedupeBatch(batch, key)
-              .select((lit("insert").as("_op") +: batch.columns.toSeq.map(col)): _*)
-          case (None, _) =>
-            // update/delete against nothing affect nothing — but the
-            // partition must still exist (empty), or the outbox's batch
-            // ids would gap and subscribeFeed would refuse the feed
-            batch.limit(0)
-              .select((lit("insert").as("_op") +: batch.columns.toSeq.map(col)): _*)
-          case (Some(t), "delete") =>
-            graft.sink.MergeSink.deleteFeed(t, batch, key.head)
+            inserts(MergeSink.dedupeBatch(batch, key))
+          // update/delete against nothing affect nothing — but the
+          // partition must still exist (empty), or the outbox's batch
+          // ids would gap and subscribeFeed would refuse the feed
+          case (None, _) => inserts(batch.limit(0))
+          case (Some(t), "delete") => MergeSink.deleteFeed(t, batch, key.head)
           case (Some(t), lt) =>
-            val f = graft.sink.MergeSink.changeFeed(t, batch, key, excluded)
+            val f = MergeSink.changeFeed(t, batch, key, excluded)
             // update-only never inserts unmatched batch rows
             if (lt == "update") f.filter(col("_op") =!= "insert") else f
         }
         feed.write.mode("overwrite").parquet(dir.toString)
       }
-      if (numBuckets > 0)
-        graft.sink.BucketedMergeSink.merge(spark, batch, path, loadType, key,
-          identifier = key.head, excluded = excluded, numBuckets = numBuckets)
-      else
-        graft.sink.MergeSink.mergeIntoParquet(spark, batch, path, loadType,
-          key, identifier = key.head, excluded = excluded)
+      load.run(spark, batch): Unit
     }
   }
 
@@ -591,65 +613,13 @@ object Streams {
       key: Seq[String] = Seq("id"),
       numBuckets: Int = 64,
       retainVersions: Int = 0,
-      consumerName: String = ""): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      consumerName: String = ""): DataStreamWriter[Row] =
     spark.readStream.format("rate").option("rowsPerSecond", 1).load()
       .writeStream.foreachBatch { (_: DataFrame, _: Long) =>
-        graft.sink.BucketedMergeSink.subscribeFeed(
+        BucketedMergeSink.subscribeFeed(
           spark, feedPath, replicaPath, key, numBuckets, retainVersions,
           consumerName = consumerName): Unit
       }
-
-  /** [[streamingMerge]] into a BUCKETED target that keeps any
-    * combination of derived artifacts — change feed, postings indexes,
-    * profiles ([[graft.core.Derived]]) — in lockstep per micro-batch:
-    * continuous ingest whose corpus stays incrementally
-    * near-dup-queryable, profiled and replicable without ever
-    * re-signing or re-scanning it. Each micro-batch is one load of the
-    * same code path a pipeline stage runs (`Derived.Load`): catch-up,
-    * drift guards, merge, catch-up again, `outboxKeep` compaction — so
-    * it commits exactly one target version.
-    *
-    * Exactly-once application under at-least-once foreachBatch, with
-    * no extra machinery: every catch-up is keyed on the TARGET's
-    * deterministic manifest versions, not on batchId — a replayed
-    * micro-batch re-merges idempotently (content-identical new
-    * version), its snapshot diff is empty, and versions already
-    * applied are marker-skipped. A crash between a trigger's merge and
-    * its catch-up self-heals at the next trigger, BEFORE that
-    * trigger's merge can slide the retention window past the pending
-    * version. The feed here is version-keyed (`batch_id=<version>`),
-    * unlike [[streamingMergeWithFeed]]'s micro-batch-keyed one.
-    *
-    * Refusals land at construction, far from the first micro-batch:
-    * the target must be bucketed (`numBuckets > 0`, or an existing
-    * layout), feeds and indexes need `retainVersions >= 2`, indexes a
-    * single-column key, and scd2 streams are refused (no deterministic
-    * version timestamp). `retainVersions` is persisted into the layout
-    * when the first micro-batch creates it. */
-  def streamingStage(
-      stream: DataFrame,
-      path: String,
-      key: Seq[String],
-      derived: Seq[graft.core.Derived],
-      loadType: String = "upsert",
-      excluded: Seq[String] = Nil,
-      numBuckets: Int = 64,
-      retainVersions: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(key.nonEmpty, "streamingStage needs at least one key column")
-    require(Set("upsert", "update", "delete")(loadType),
-      s"unknown load type: $loadType (expected upsert/update/delete; " +
-        "scd2 streams need a replay-stable version timestamp — use streamingMerge)")
-    require(loadType != "delete" || key.size == 1,
-      "delete streams key on exactly ONE identifier column " +
-        s"(MergeSink.delete matches a single id), got ${key.mkString(", ")}")
-    val load = graft.core.Derived.Load("streamingStage", path, key,
-      identifier = key.head, loadType, excluded, numBuckets, retainVersions,
-      derived)
-    load.validate(stream.sparkSession, stream.columns.toSeq)
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      load.run(batch.sparkSession, batch): Unit
-    }
-  }
 
   /** Corpus-backed streaming exact dedup: the complement of
     * [[dedupStream]]. That one bounds state with the watermark and
@@ -674,14 +644,16 @@ object Streams {
     * semantics are identical in both layouts
     * (BucketedMergeSinkSpec pins it). Bucketed targets self-compact
     * every 32 micro-batches (passed explicitly to streamingMerge, whose
-    * own default leaves compaction opt-in), bounding small-file growth
-    * for the life of the stream at the cost of a periodic latency
-    * spike on the compacting trigger. */
+    * own default leaves compaction opt-in, and only with
+    * `numBuckets > 0`: a flat target has nothing to compact, and
+    * streamingMerge refuses compactEvery on one), bounding small-file
+    * growth for the life of the stream at the cost of a periodic
+    * latency spike on the compacting trigger. */
   def dedupCorpusStream(
       stream: DataFrame,
       path: String,
       textCol: String = "text",
-      numBuckets: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      numBuckets: Int = 64): DataStreamWriter[Row] = {
     require(!stream.columns.contains("norm_text"),
       "dedupCorpusStream derives its merge key as a new norm_text column; " +
         "the input stream already has one — rename it (silently replacing " +
@@ -691,7 +663,7 @@ object Streams {
     streamingMerge(withNorm, path, key = Seq("norm_text"),
       loadType = "upsert",
       excluded = withNorm.columns.filterNot(_ == "norm_text").toSeq,
-      numBuckets = numBuckets, compactEvery = 32)
+      numBuckets = numBuckets, compactEvery = if (numBuckets > 0) 32 else 0)
   }
 
   /** Watermarked stream-stream interval join: each left row matches

@@ -586,7 +586,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   // the six per-artifact tests below keep the names of the stream
-  // functions `streamingStage` replaced; each runs its artifact alone
+  // functions one `streamingMerge(derived = …)` replaced; each runs its
+  // artifact alone
   test("streamingMergeWithIndex: the near-dup postings index tracks the " +
     "target across micro-batches (insert, text update, delete)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-smi-src").toString
@@ -605,8 +606,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("doc_id"),
-      Seq(Derived.MinhashIndex(idx)), numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("doc_id"),
+      derived = Seq(Derived.MinhashIndex(idx)), numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -629,8 +630,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       target, "upsert", Seq("doc_id"))
     writeSourceBatch(dir,
       Seq((6L, "post crash batch words")).toDF("doc_id", "text"), 2)
-    val q2 = Streams.streamingStage(stream, target, Seq("doc_id"),
-      Seq(Derived.MinhashIndex(idx)), numBuckets = 4)
+    val q2 = Streams.streamingMerge(stream, target, Seq("doc_id"),
+      derived = Seq(Derived.MinhashIndex(idx)), numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -662,8 +663,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, v DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.Profile(prof, "v", 0, 100, 10)), numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.Profile(prof, "v", 0, 100, 10)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -694,8 +696,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, 50.0)).toDF("id", "v"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, 60.0)).toDF("id", "v"), 2)
-    val q2 = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.Profile(prof, "v", 0, 100, 10)), numBuckets = 4)
+    val q2 = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.Profile(prof, "v", 0, 100, 10)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -726,8 +729,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, v DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.KllProfile(prof, "v")), numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.KllProfile(prof, "v")),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -762,8 +766,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, 50.0)).toDF("id", "v"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, 60.0)).toDF("id", "v"), 2)
-    val q2 = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.KllProfile(prof, "v")), numBuckets = 4)
+    val q2 = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.KllProfile(prof, "v")),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -793,8 +798,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("id LONG, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.ExemplarProfile(prof, "id", k = 2)), numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.ExemplarProfile(prof, "id", k = 2)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -821,8 +827,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     graft.sink.BucketedMergeSink.merge(spark,
       Seq((5L, "e")).toDF("id", "text"), target, "upsert", Seq("id"))
     writeSourceBatch(dir, Seq((6L, "f")).toDF("id", "text"), 2)
-    val q2 = Streams.streamingStage(stream, target, Seq("id"),
-      Seq(Derived.ExemplarProfile(prof, "id", k = 2)), numBuckets = 4)
+    val q2 = Streams.streamingMerge(stream, target, Seq("id"),
+      derived = Seq(Derived.ExemplarProfile(prof, "id", k = 2)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q2.processAllAvailable() finally q2.stop()
@@ -887,9 +894,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("vec_id"),
-      Seq(Derived.LshIndex(idx, tables = 4, bits = 6, dim = 4)),
-      numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("vec_id"),
+      derived = Seq(Derived.LshIndex(idx, tables = 4, bits = 6, dim = 4)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -928,9 +935,9 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("vec_id"),
-      Seq(Derived.SemanticIndex(idx, nlist = 2, probeCells = 1)),
-      numBuckets = 4)
+    val q = Streams.streamingMerge(stream, target, Seq("vec_id"),
+      derived = Seq(Derived.SemanticIndex(idx, nlist = 2, probeCells = 1)),
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", ckpt)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -950,6 +957,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     assert(stored.exists(_._1 == 5L))
   }
 
+  // titled by the entry point's former name, `streamingStage`, so the
+  // test keeps its id
   test("streamingStage: one stream keeps a change feed, a MinHash index " +
     "and a KLL profile in lockstep with the target across micro-batches") {
     import graft.functions.KllSketch
@@ -975,10 +984,10 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       .schema("doc_id LONG, text STRING, v DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val q = Streams.streamingStage(stream, target, Seq("doc_id"),
-      Seq(Derived.ChangeFeed(feed), Derived.MinhashIndex(idx),
+    val q = Streams.streamingMerge(stream, target, Seq("doc_id"),
+      derived = Seq(Derived.ChangeFeed(feed), Derived.MinhashIndex(idx),
         Derived.KllProfile(prof, "v")),
-      numBuckets = 4)
+      numBuckets = 4, retainVersions = 2)
       .option("checkpointLocation", tmp("graft-ss-ck"))
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -1211,6 +1220,123 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
       assert(n == 1, s"bucket $b should be compacted to one data file, has $n")
     }
     assert(graft.sink.BucketedMergeSink.read(spark, target).count() == 61)
+  }
+
+  // the data files of each dir of each bucket of a bucketed target
+  private def filesPerDir(target: String): Seq[Int] =
+    graft.sink.BucketedMergeSink.manifest(spark, target).keys.toSeq.flatMap { b =>
+      graft.sink.BucketedMergeSink.bucketDataDirs(spark, target, b).map { d =>
+        new java.io.File(d).listFiles().count(f => f.isFile &&
+          !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      }
+    }
+
+  test("streamingMerge: compactEvery compacts an existing bucketed layout " +
+    "streamed with numBuckets = 0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-smx-src").toString
+    val target = java.nio.file.Files.createTempDirectory("graft-smx-tgt").toString + "/t"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-smx-ck").toString
+    writeSourceBatch(dir, Seq((100L, "x", 1L)).toDF("id", "name", "v"), 0)
+    val stream = spark.readStream
+      .schema("id LONG, name STRING, v LONG")
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val sp = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      // AQE off + several shuffle partitions: the create-write fragments
+      // the layout's buckets
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "5")
+      graft.sink.BucketedMergeSink.merge(spark,
+        Seq.tabulate(60)(i => (i.toLong, s"n$i", i.toLong)).toDF("id", "name", "v"),
+        target, "upsert", Seq("id"), numBuckets = 4)
+      assert(filesPerDir(target).exists(_ > 1), "the layout starts fragmented")
+      // no numBuckets: the stream loads the layout that is there, and
+      // compacts it on its first (batchId 0) micro-batch
+      val q = Streams.streamingMerge(stream, target, Seq("id"), compactEvery = 1)
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions", sp)
+    }
+    assert(filesPerDir(target).forall(_ == 1),
+      s"every dir compacted to one data file: ${filesPerDir(target)}")
+    assert(graft.sink.BucketedMergeSink.read(spark, target).count() == 61)
+  }
+
+  test("streamingMerge: compactEvery on a flat target refuses before any write") {
+    val target = java.nio.file.Files.createTempDirectory("graft-smy-tgt").toString + "/t"
+    Seq((1L, "a", 10L)).toDF("id", "name", "v").write.parquet(target)
+    def listing = java.nio.file.Files.walk(java.nio.file.Paths.get(target))
+      .toArray.map(_.toString).sorted.toSeq
+    val before = listing
+    val stream = spark.readStream
+      .schema("id LONG, name STRING, v LONG")
+      .parquet(java.nio.file.Files.createTempDirectory("graft-smy-src").toString)
+    val e = intercept[IllegalArgumentException](
+      Streams.streamingMerge(stream, target, Seq("id"), compactEvery = 2))
+    assert(e.getMessage.contains("compact: true needs a bucketed target"),
+      e.getMessage)
+    assert(listing == before, "the refusal must land before any write")
+  }
+
+  test("dedupCorpusStream: numBuckets = 0 falls back to a flat target") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dcf-src").toString
+    val target = java.nio.file.Files.createTempDirectory("graft-dcf-tgt").toString + "/t"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-dcf-ck").toString
+    writeSourceBatch(dir,
+      Seq((1L, "Hello  World"), (2L, "hello world")).toDF("doc_id", "text"), 0)
+    val stream = spark.readStream
+      .schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val q = Streams.dedupCorpusStream(stream, target, numBuckets = 0)
+      .option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(!graft.sink.BucketedMergeSink.isBucketed(spark, target))
+    assert(spark.read.parquet(target).select("doc_id", "norm_text")
+      .as[(Long, String)].collect().toSeq == Seq((1L, "hello world")))
+  }
+
+  test("streamingMerge scd2 with a change feed: one target version per " +
+    "micro-batch, and the outbox replays the history on (id, valid_from)") {
+    import graft.sink.BucketedMergeSink
+    import org.apache.spark.sql.functions.{col, date_format}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val dir = tmp("graft-scf-src")
+    val target = tmp("graft-scf-tgt") + "/t"
+    val feed = tmp("graft-scf-feed") + "/f"
+    // b0 bootstraps keys 1,2; b1 changes key 2 and inserts key 3
+    Seq(Seq((1L, "a"), (2L, "b")), Seq((2L, "B"), (3L, "c")))
+      .zipWithIndex.foreach { case (rows, i) =>
+        writeSourceBatch(dir, rows.toDF("id", "name"), i)
+      }
+    val stream = spark.readStream
+      .schema("id LONG, name STRING")
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+    val q = Streams.streamingMerge(stream, target, Seq("id"),
+        loadType = "scd2", numBuckets = 4, retainVersions = 2,
+        derived = Seq(Derived.ChangeFeed(feed)),
+        scd2TsOf = b => f"2024-0${b + 1}%d-01 00:00:00")
+      .option("checkpointLocation", tmp("graft-scf-ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val versions = BucketedMergeSink.manifestVersions(spark, target).sorted
+    assert(versions == Seq(1L, 2L), s"one version per micro-batch: $versions")
+    val replica = tmp("graft-scf-rep") + "/r"
+    BucketedMergeSink.subscribeFeed(spark, feed, replica,
+      key = Seq("id", "valid_from"), numBuckets = 4): Unit
+    def hist(p: String) = BucketedMergeSink.read(spark, p)
+      .select(col("id"), col("name"),
+        date_format(col("valid_from"), "yyyy-MM").as("vf"),
+        col("valid_to").isNull.as("open"))
+      .as[(Long, String, String, Boolean)].collect().toSet
+    assert(hist(target) == Set((1L, "a", "2024-01", true),
+      (2L, "b", "2024-01", false), (2L, "B", "2024-02", true),
+      (3L, "c", "2024-02", true)))
+    assert(hist(replica) == hist(target),
+      "the outbox replays the target's full history, closed rows too")
   }
 
   test("streamingMerge: update and delete load types keep batch semantics") {
